@@ -2,8 +2,8 @@
 
 ``entry(spark)`` runs the flagship record-linkage pipeline end-to-end on
 sf0.001 testdata; ``queries()`` / ``oracle_sql()`` expose every
-implemented operator from SURVEY.md §2 (plus the training-data dedup /
-text-stats / ANN operators) for the driver's DuckDB cross-check.
+implemented operator from SURVEY.md §2, each with a DuckDB oracle to
+cross-check it against.
 """
 
 from __future__ import annotations

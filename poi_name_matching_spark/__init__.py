@@ -10,7 +10,7 @@ embedding cosine) as the vectorized scoring kernel.
 Layout:
     functions/  pure-Python + numpy kernels and their pandas-UDF wrappers
     operators/  DataFrame-level pipeline stages (signatures, blocking,
-                scoring, clustering, evaluation, dedup, text stats, ANN)
+                scoring, clustering, evaluation, text stats)
     sources/    readers & checkpointed sinks (parquet manifests)
     plans/      end-to-end resumable pipeline driver
     streaming/  Structured Streaming ingest of the transcripts table

@@ -4,7 +4,7 @@ Two tiers, chosen per SURVEY.md §2.7:
 
 * **Native Column expressions** where Catalyst has a built-in — these stay
   inside WholeStageCodegen (levenshtein, token-set jaccard, haversine,
-  threshold classify, token counts). Used on the hot path.
+  threshold classify). Used on the hot path.
 * **Arrow-vectorized pandas UDFs** for kernels with no JVM builtin
   (canonical tokenizer with stemming, jaro/jaro-winkler, tf-idf /
   soft-TFIDF family, embeddings). No per-row Python UDFs anywhere.
@@ -96,21 +96,6 @@ def classify(score: Column, threshold: float) -> Column:
     """K20: pred = 1 iff score >= threshold (``evaluation_metrics.py:28-33``),
     as a pure expression instead of the reference's in-place mutation."""
     return (score >= F.lit(float(threshold))).cast("int")
-
-
-def hyperplane_coeff(d: Column, *salt: int) -> Column:
-    """Fast-family random hyperplane coefficient in ±[0,1):
-    ``pmod(xxhash64(*salt, d), 10000)/5000 - 1``. Shared by the
-    embedding-LSH tables (salt = seed, table, plane) and the ANN sign
-    sketch (salt = seed, plane) so the quantization lives in ONE place;
-    the SQL-portable twin is ``portable_hash.plane_coeff_col``."""
-    return (
-        F.pmod(F.xxhash64(*[F.lit(s) for s in salt], d), F.lit(10000)).cast(
-            "double"
-        )
-        / 5000.0
-        - 1.0
-    )
 
 
 def cosine_array(a: Column, b: Column) -> Column:
@@ -383,23 +368,6 @@ def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
 
 
 @pandas_udf(DoubleType())
-def jaro_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-    j = kernels.jaro_similarity
-    return pd.Series(
-        [j(a, b) if a is not None and b is not None else None for a, b in zip(s1, s2)],
-        dtype="float64",
-    )
-
-
-@pandas_udf(DoubleType())
-def levenshtein_sim_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-    """Parity-oracle twin of :func:`levenshtein_sim` (tests compare the
-    two); hot path uses the native expression."""
-    lev = kernels.levenshtein_similarity
-    return pd.Series([lev(a, b) for a, b in zip(s1, s2)], dtype="float64")
-
-
-@pandas_udf(DoubleType())
 def cosine_count_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     cc = kernels.cosine_count_similarity
     return pd.Series([cc(a, b) for a, b in zip(s1, s2)], dtype="float64")
@@ -565,7 +533,7 @@ def make_sim_scores_udf(
 
 
 # --------------------------------------------------------------------------
-# MinHash signatures (for LSH blocking / near-dup detection)
+# MinHash signatures (for LSH blocking)
 # --------------------------------------------------------------------------
 
 _MAX_HASH = (1 << 63) - 1
@@ -630,15 +598,3 @@ def embedding_deltas(a: Column, b: Column) -> Column:
     (``ml_similarity_metrics.py:438-468``) as a native zip_with — feed to
     VectorAssembler / explode into dim columns for the ML ensemble."""
     return F.zip_with(b, a, lambda y, x: y - x)
-
-
-def token_count(tokens: Column) -> Column:
-    """K17: tlen = size(tokens)."""
-    return F.size(tokens)
-
-
-def token_len_ratio(tlen_l: Column, tlen_r: Column) -> Column:
-    """K17: ratio = max/min (``ml_similarity_metrics.py:413-431``)."""
-    return F.greatest(tlen_l, tlen_r).cast("double") / F.when(
-        F.least(tlen_l, tlen_r) == 0, F.lit(None)
-    ).otherwise(F.least(tlen_l, tlen_r).cast("double"))

@@ -100,8 +100,9 @@ def text_vectors_to_npz(src_path: str, out_path: str) -> str:
     Duplicated words keep their FIRST vector (gensim's behavior).
     Returns the (``.npz``-normalized) output path; load the result with
     :class:`~poi_name_matching_spark.functions.embedding.VocabEmbedder.from_weights`
-    and pass it anywhere an embedder goes (scoring, dedup, ANN) — no
-    code change, which is the point of the seam."""
+    and pass it anywhere an embedder goes (the ``emb_cosine`` and
+    semantic soft-TFIDF scoring kernels) — no code change, which is the
+    point of the seam."""
     vocab: list[str] = []
     rows: list[np.ndarray] = []
     seen: set[str] = set()
@@ -149,9 +150,8 @@ def embed_corpus(
     text_col: str = "text",
     tokens_col: str | None = None,
 ) -> DataFrame:
-    """(vec_id, embedding array<double>) — the input relation the dedup
-    (``embedding_near_dup``) and ANN operators consume, computed once per
-    document with the given embedder (Arrow-batched UDF, narrow stage).
+    """(vec_id, embedding array<double>) — one vector per document,
+    computed with the given embedder (Arrow-batched UDF, narrow stage).
     Tokenization defaults to lowercase whitespace split unless a
     pre-tokenized column is named."""
     from .spark_udfs import make_embed_udf, whitespace_tokens

@@ -5,9 +5,7 @@
     scoring     — candidate pairs → full similarity-feature struct + score
     clustering  — thresholded edges → connected components (entity clusters)
     evaluation  — (label, score) → confusion counts, P/R/F1/MCC
-    dedup       — document-level dedup family (exact, minhash-LSH, simhash,
-                  n-gram jaccard, embedding cosine)
     textstats   — language-ID, quality scoring, token counts, fingerprints
-    ann         — approximate nearest neighbour over embedding columns
-    multimodal  — opaque binary columns + typed metadata plumbing
+    restricted  — restricted soft-TFIDF over a per-pair gathered corpus
+    ml          — ML ensemble over the similarity feature matrix
 """

@@ -143,38 +143,32 @@ def block_keys(signatures: DataFrame, cfg: BlockingConfig = BlockingConfig()) ->
     return out
 
 
-def salt_oversized(
-    blocks: DataFrame,
-    max_block_size: int,
-    id_col: str = "conv_id",
-    key_col: str = "block_key",
-) -> DataFrame:
+def salt_oversized(blocks: DataFrame, max_block_size: int) -> DataFrame:
     """Split blocks larger than ``max_block_size`` into deterministic
-    salted sub-blocks: ``key#<salt>`` with ``salt = xxhash64(id) mod
-    ceil(size / max_block_size)``. Normal blocks pass through unchanged
-    (salt suffix omitted), so the common case costs one broadcast join
-    against the (tiny) oversized-key list. All other columns (shingle
-    payloads etc.) are preserved — the dedup family routes its bucket
-    relations through here with ``id_col='id', key_col='bucket'``."""
+    salted sub-blocks: ``block_key#<salt>`` with ``salt =
+    xxhash64(conv_id) mod ceil(size / max_block_size)``. Normal blocks
+    pass through unchanged (salt suffix omitted), so the common case
+    costs one broadcast join against the (tiny) oversized-key list. All
+    other columns are preserved."""
     out_cols = list(blocks.columns)
-    sizes = blocks.groupBy(key_col).agg(F.count("*").alias("block_size"))
+    sizes = blocks.groupBy("block_key").agg(F.count("*").alias("block_size"))
     hot = sizes.filter(F.col("block_size") > max_block_size).withColumn(
         "n_salt", F.ceil(F.col("block_size") / max_block_size).cast("int")
     )
     salted = (
-        blocks.join(F.broadcast(hot), key_col, "inner")
+        blocks.join(F.broadcast(hot), "block_key", "inner")
         .withColumn(
-            key_col,
+            "block_key",
             F.concat(
-                F.col(key_col),
+                F.col("block_key"),
                 F.lit("#"),
-                F.pmod(F.xxhash64(id_col), F.col("n_salt")),
+                F.pmod(F.xxhash64("conv_id"), F.col("n_salt")),
             ),
         )
         .select(*out_cols)
     )
     normal = blocks.join(
-        F.broadcast(hot.select(key_col)), key_col, "left_anti"
+        F.broadcast(hot.select("block_key")), "block_key", "left_anti"
     ).select(*out_cols)
     return normal.unionByName(salted)
 

@@ -68,8 +68,7 @@ DF_MAP_KERNELS = frozenset({"tfidf", "softtfidf", "semantic_softtfidf"})
 #: document frequency). 2^22 tokens ≈ a few hundred MB broadcast at
 #: worst — safe on any driver; tokens beyond the cap get the reference's
 #: missing-token kernel semantics. Pass ``max_vocab=None`` to opt out
-#: when the vocabulary is known-bounded, or use the fully relational df
-#: path (operators/softtfidf_join.py) when even the cap is too big.
+#: when the vocabulary is known-bounded.
 DEFAULT_MAX_VOCAB = 1 << 22
 
 
@@ -177,8 +176,7 @@ def broadcast_df_map(
                 "df-map vocabulary exceeds max_vocab=%d — keeping the "
                 "top-%d tokens by document frequency; dropped tokens get "
                 "missing-token kernel semantics (skipped in numerator "
-                "and denominator). Raise max_vocab or switch to the "
-                "relational df path (operators/softtfidf_join.py) if "
+                "and denominator). Raise max_vocab (or pass None) if "
                 "full-vocabulary weighting is required.",
                 int(max_vocab),
                 int(max_vocab),

@@ -14,6 +14,12 @@ from pyspark.sql import functions as F
 from ..functions.spark_udfs import whitespace_tokens
 from ..functions.tokenize import WS_CLASS
 
+#: Horner polynomial constants of the portable k-gram hash
+#: ``h = (h*B1 + code) % M1`` (M1 = 2^31-1, a Mersenne prime): every
+#: product stays below 2^62, so DuckDB's BIGINT arithmetic reproduces it
+M1 = 2_147_483_647
+B1 = 131
+
 # Tiny frozen stopword profiles for the n-gram language heuristic: the
 # relative frequency of these extremely common function words separates
 # major Latin-script languages without a model. (Public-knowledge lists.)
@@ -127,14 +133,12 @@ def winnow_fingerprints(
     ``xxhash64`` — the production mixer, pure Column expression.
     ``'portable'`` swaps in the SQL-reproducible Horner polynomial over
     code points mod 2^31-1 as an Arrow-batched pandas UDF
-    (``functions/portable_hash.make_portable_winnow_udf`` — the nested
+    (:func:`make_portable_winnow_udf` — the nested
     Column spelling re-evaluates the normalized string per gram
     character, O(len²·k) per row), so an independent ANSI-SQL engine
     reproduces the full windowed-min pipeline bit-for-bit (the driver's
     DuckDB oracle uses this)."""
     if hash_family == "portable":
-        from ..functions.portable_hash import make_portable_winnow_udf
-
         return make_portable_winnow_udf(k=k, window=window)(text)
     if hash_family != "fast":
         raise ValueError(f"unknown hash_family {hash_family!r}")
@@ -152,3 +156,56 @@ def winnow_fingerprints(
     return F.when(n_grams > 0, F.array_distinct(mins)).otherwise(
         F.array().cast("array<long>")
     )
+
+
+def make_portable_winnow_udf(k: int = 8, window: int = 4):
+    """winnow(text) -> array<long>: winnowing fingerprints (Schleimer et
+    al., SIGMOD'03) over the portable family — gram hash = Horner
+    polynomial ``(h*B1 + code) % M1`` over the k code points, then
+    sliding-window min + distinct. Vectorized per row: Horner runs as k
+    shifted numpy ops over the code array (mod applied each step, so
+    arbitrary code points can't overflow int64). Whitespace is
+    normalized with the SAME explicit class both engines split on.
+
+    This is the oracle-parity twin of the HOF path in
+    :func:`winnow_fingerprints`: the nested Column expression
+    re-evaluates the normalized string per gram character (O(len²·k)
+    per row in codegen), so the portable variant ships as an
+    Arrow-batched UDF."""
+    import re
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, LongType
+
+    ws_re = re.compile(WS_CLASS + "+")
+
+    @pandas_udf(ArrayType(LongType()))
+    def portable_winnow_udf(texts):
+        out = []
+        for s in texts:
+            if s is None:
+                out.append([])
+                continue
+            norm = ws_re.sub(" ", s.lower())
+            n = len(norm)
+            n_grams = n - (k - 1)
+            if n_grams <= 0:
+                out.append([])
+                continue
+            codes = np.fromiter((ord(c) for c in norm), dtype=np.int64, count=n)
+            h = np.zeros(n_grams, dtype=np.int64)
+            for j in range(k):
+                h = (h * B1 + codes[j : j + n_grams]) % M1
+            n_windows = max(n_grams - (window - 1), 1)
+            win = min(window, n_grams)
+            mins = np.lib.stride_tricks.sliding_window_view(
+                h[: n_windows + win - 1], win
+            ).min(axis=1)
+            # preserve first-appearance order like array_distinct
+            seen: dict[int, None] = dict.fromkeys(mins.tolist())
+            out.append(list(seen))
+        return pd.Series(out)
+
+    return portable_winnow_udf

@@ -20,14 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.spark_udfs import (
-    cosine_array,
     haversine_meters,
     jaro_winkler_udf,
     levenshtein_sim,
     whitespace_tokens,
 )
 from .functions.tokenize import WS_CLASS
-from .operators import ann, dedup, textstats
+from .operators import textstats
 from .operators.signatures import build_signatures
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -669,257 +668,16 @@ def k20_classify(spark, sf_dir):
 
 
 # =====================================================================
-# Training-data operators: dedup family / text stats / ANN
+# Text statistics over the documents table
 # =====================================================================
-
-
-@_q(
-    "dedup_exact",
-    """SELECT md5(text) AS content_key, min(doc_id) AS doc_id, count(*) AS dup_count
-       FROM documents GROUP BY md5(text)""",
-)
-def dedup_exact(spark, sf_dir):
-    """Exact dedup by content hash (SURVEY training-data ops)."""
-    out = dedup.exact_dedup(_t(spark, sf_dir, "documents"))
-    return out.select("content_key", "doc_id", "dup_count")
-
-
-def _minhash_oracle_sql() -> str:
-    """DuckDB replica of the ENTIRE portable MinHash-LSH pipeline —
-    shingles → 64 affine double-hashes → 16 band keys → bucket join →
-    exact-Jaccard verify. Bit-identical to the Spark side because the
-    portable hash family is pure modular arithmetic both engines
-    evaluate exactly (functions/portable_hash.py)."""
-    from .functions import portable_hash as _ph
-
-    h1 = _ph.sql_poly_hash("sh", _ph.B1, _ph.M1)
-    h2 = _ph.sql_poly_hash("sh", _ph.B2, _ph.M2)
-    return f"""
-WITH docs AS (
-  SELECT doc_id, toks FROM (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '') AS toks
-    FROM documents
-  ) WHERE len(toks) >= 3
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(toks) - 1),
-             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-  FROM docs
-),
-shh AS (
-  SELECT doc_id, {h1} AS h1, {h2} AS h2
-  FROM (SELECT doc_id, unnest(shingles) AS sh FROM sh)
-),
-mh AS (
-  SELECT doc_id, j, min({_ph.sql_affine('h1', 'h2', 'j')}) AS mh
-  FROM shh CROSS JOIN range(64) t(j) GROUP BY doc_id, j
-),
-bands AS (
-  SELECT doc_id, 'b' || (j // 4) || ':' || string_agg(mh, ':' ORDER BY j) AS bucket
-  FROM mh GROUP BY doc_id, (j // 4)
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
-  FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-)
-SELECT left_id, right_id, round(jacc, 6) AS jaccard FROM (
-  SELECT c.left_id, c.right_id,
-         len(list_intersect(x.shingles, y.shingles)) * 1.0 /
-         len(list_distinct(list_concat(x.shingles, y.shingles))) AS jacc
-  FROM cand c
-  JOIN sh x ON x.doc_id = c.left_id
-  JOIN sh y ON y.doc_id = c.right_id
-) WHERE jacc >= 0.5"""
-
-
-@_q("dedup_minhash_lsh", _minhash_oracle_sql())
-def dedup_minhash_lsh(spark, sf_dir):
-    """MinHash-LSH near-dup with the full banding pipeline replicated in
-    the DuckDB oracle via ``hash_family='portable'`` (64 hashes / 16
-    bands of 4 / exact verify). Salting off at this scale so banding
-    semantics are exact; docs with <3 tokens excluded on both sides
-    (mirrors dedup_ngram_jaccard's contract)."""
-    docs = _t(spark, sf_dir, "documents")
-    out = dedup.minhash_lsh_pairs(
-        docs, threshold=0.5, hash_family="portable", max_bucket_size=0,
-        min_tokens=3,
-    )
-    return out.select("left_id", "right_id", _r6(F.col("jaccard")).alias("jaccard"))
-
-
-def _simhash_oracle_sql() -> str:
-    """Brute-force DuckDB recomputation of the portable 60-bit SimHash:
-    all doc pairs within hamming<=3. The Spark side generates candidates
-    by the Manku pigeonhole join, which is EXHAUSTIVE when unsalted —
-    equality against brute force therefore also proves the pigeonhole
-    recall guarantee on this data."""
-    from .functions import portable_hash as _ph
-
-    h1 = _ph.sql_poly_hash("tok", _ph.B1, _ph.M1)
-    h2 = _ph.sql_poly_hash("tok", _ph.B2, _ph.M2)
-    bit = f"{_ph.sql_affine('h1', 'h2', 'j')} >= {_ph.HALF}"
-    return f"""
-WITH docs AS (
-  SELECT doc_id, toks FROM (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '') AS toks
-    FROM documents
-  ) WHERE len(toks) > 0
-),
-tokh AS (
-  SELECT doc_id, tok, count(*) AS cnt, {h1} AS h1, {h2} AS h2
-  FROM (SELECT doc_id, unnest(toks) AS tok FROM docs) GROUP BY doc_id, tok
-),
-votes AS (
-  SELECT doc_id, j, sum(CASE WHEN {bit} THEN cnt ELSE -cnt END) AS v
-  FROM tokh CROSS JOIN range(60) t(j) GROUP BY doc_id, j
-),
-fp AS (
-  SELECT doc_id, sum(CASE WHEN v > 0 THEN (1::BIGINT << j::INT) ELSE 0 END)::BIGINT AS fp
-  FROM votes GROUP BY doc_id
-)
-SELECT a.doc_id AS left_id, b.doc_id AS right_id,
-       bit_count(xor(a.fp, b.fp))::INT AS hamming
-FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.fp, b.fp)) <= 3"""
-
-
-@_q("dedup_simhash", _simhash_oracle_sql())
-def dedup_simhash(spark, sf_dir):
-    """Portable 60-bit SimHash near-dup; unsalted pigeonhole candidates
-    == DuckDB brute force (the oracle proves both the fingerprint math
-    and the candidate-generation recall)."""
-    out = dedup.simhash_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=3, hash_family="portable"
-    )
-    return out.select(
-        "left_id", "right_id", F.col("hamming").cast("int").alias("hamming")
-    )
-
-
-@_q(
-    "dedup_ngram_jaccard",
-    """WITH sh AS (
-         SELECT doc_id,
-                list_distinct(list_transform(range(1, len(toks) - 1),
-                    i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2])) AS shingles,
-                toks[1] || ' ' || coalesce(toks[2], '') AS bkey
-         FROM (
-           SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '') AS toks
-           FROM documents WHERE length(trim(text)) > 0
-         ) WHERE len(toks) >= 3
-       )
-       SELECT a.doc_id AS left_id, b.doc_id AS right_id,
-              round(len(list_intersect(a.shingles, b.shingles)) * 1.0 /
-                    len(list_distinct(list_concat(a.shingles, b.shingles))), 6) AS jaccard
-       FROM sh a JOIN sh b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-       WHERE len(list_intersect(a.shingles, b.shingles)) * 1.0 /
-             len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.2""",
-)
-def dedup_ngram_jaccard(spark, sf_dir):
-    """Word-3-gram jaccard near-dup pairs, blocked on the 2-token prefix.
-    Docs with <3 tokens are excluded on both sides (no full shingle)."""
-    docs = _t(spark, sf_dir, "documents")
-    out = dedup.ngram_jaccard_pairs(
-        docs, threshold=0.2, n=3, band_tokens=2, min_tokens=3
-    )
-    return out.select("left_id", "right_id", _r6(F.col("jaccard")).alias("jaccard"))
-
-
-@_q(
-    "dedup_embedding_cosine",
-    """SELECT a.vec_id AS left_id, b.vec_id AS right_id,
-              round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cosine
-       FROM embeddings a JOIN embeddings b
-         ON a.label = b.label AND b.vec_id - a.vec_id BETWEEN 1 AND 25
-       WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.2""",
-)
-def dedup_embedding_cosine(spark, sf_dir):
-    """Embedding-cosine near-dup over a banded same-label self-join
-    (band keeps the comparison count linear; the unbanded scale path is
-    dedup.embedding_near_dup's LSH buckets, exercised rows-only)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    a = emb.select(
-        F.col("vec_id").alias("left_id"),
-        F.col("label").alias("la"),
-        F.col("embedding").alias("ea"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("right_id"),
-        F.col("label").alias("lb"),
-        F.col("embedding").alias("eb"),
-    )
-    joined = a.join(
-        b,
-        (F.col("la") == F.col("lb"))
-        & (F.col("right_id") - F.col("left_id") >= 1)
-        & (F.col("right_id") - F.col("left_id") <= 25),
-    )
-    cos = cosine_array(
-        F.col("ea").cast("array<double>"), F.col("eb").cast("array<double>")
-    )
-    return (
-        joined.withColumn("cosine", cos)
-        .filter(F.col("cosine") >= 0.2)
-        .select("left_id", "right_id", _r6(F.col("cosine")).alias("cosine"))
-    )
-
-
-def _embedding_lsh_oracle_sql() -> str:
-    """DuckDB replica of the portable hyperplane-LSH pipeline: 8 tables
-    × 8 planes of affine-PRNG coefficients, sequential-fold dot products
-    (same IEEE association order as Spark's F.aggregate → identical
-    signs), bucket join, exact-cosine verify."""
-    from .functions import portable_hash as _ph
-
-    dot = _ph.sql_plane_dot("v", "t", "p")
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-signs AS (
-  SELECT vec_id, t, p, CASE WHEN ({dot}) >= 0 THEN '1' ELSE '0' END AS s
-  FROM e CROSS JOIN range(8) tt(t) CROSS JOIN range(8) pp(p)
-),
-keys AS (
-  SELECT vec_id, 'e' || t || ':' || string_agg(s, '' ORDER BY p) AS bucket
-  FROM signs GROUP BY vec_id, t
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS left_id, b.vec_id AS right_id
-  FROM keys a JOIN keys b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-)
-SELECT left_id, right_id, round(cos, 6) AS cosine FROM (
-  SELECT c.left_id, c.right_id, list_cosine_similarity(x.v, y.v) AS cos
-  FROM cand c JOIN e x ON x.vec_id = c.left_id JOIN e y ON y.vec_id = c.right_id
-) WHERE cos >= 0.3"""
-
-
-@_q("dedup_embedding_lsh", _embedding_lsh_oracle_sql())
-def dedup_embedding_lsh(spark, sf_dir):
-    """Hyperplane-LSH near-dup (8 tables × 8 planes OR-construction)
-    with ``hash_family='portable'`` so the DuckDB oracle re-derives the
-    buckets exactly. Threshold 0.3 on this data so the check is
-    non-vacuous (the testdata embeddings have no ground-truth pairs
-    above 0.9 — verified by brute force); recall vs brute force is
-    additionally pinned by tests/test_dedup_textstats_ann.py on a
-    planted near-dup fixture."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    return dedup.embedding_near_dup(
-        emb, threshold=0.3, hash_family="portable", max_bucket_size=0
-    ).select("left_id", "right_id", _r6(F.col("cosine")).alias("cosine"))
 
 
 def text_token_counts(spark, sf_dir):
     """Token counting, both flavors in one scan: whitespace token count
     (K17-style) and the BPE-ish subword count (letter/digit runs charged
     ceil(len/4), punctuation one each). NOT registered as a driver
-    oracle row since round 5: its token math duplicates
-    ``text_quality_score``'s oracled expressions, and the 50-query
-    budget slot went to ``ann_kmeans_topk`` (the one computed operator
-    that had no DuckDB row). Still pinned by
+    oracle row: its token math duplicates ``text_quality_score``'s
+    oracled expressions. Still pinned by
     tests/test_oracle_parity.py::test_text_token_counts_oracle with the
     identical DuckDB SQL."""
     return _t(spark, sf_dir, "documents").select(
@@ -1029,178 +787,6 @@ def text_quality_score(spark, sf_dir):
 def text_lang_id(spark, sf_dir):
     return _t(spark, sf_dir, "documents").select(
         "doc_id", textstats.lang_id(F.col("text")).alias("lang")
-    )
-
-
-@_q(
-    "ann_brute_topk",
-    """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 3),
-       scored AS (
-         SELECT q.query_id, c.vec_id,
-                list_cosine_similarity(c.embedding::DOUBLE[], q.qv) AS cos_raw
-         FROM embeddings c, q
-       ),
-       ranked AS (
-         SELECT query_id, vec_id, round(cos_raw, 6) AS cosine,
-                row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, vec_id ASC) AS rank
-         FROM scored
-       )
-       SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= 5""",
-)
-def ann_brute_topk(spark, sf_dir):
-    """Brute-force cosine top-k (queries = first 3 vectors)."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = ann.brute_force_topk(emb, queries, k=5)
-    return out.select(
-        "query_id", "vec_id", _r6(F.col("cosine")).alias("cosine"), "rank"
-    )
-
-
-def _ann_ivf_oracle_sql() -> str:
-    """DuckDB replica of the portable LSH-IVF search: 4-plane sign
-    bucket per point, probes = own bucket + first single-bit flip
-    (multiprobe=1), candidates ranked by raw cosine with vec_id
-    tie-break (same ordering as ann._ranked_topk / ann_brute_topk)."""
-    from .functions import portable_hash as _ph
-    from .operators.ann import ANN_PLANE_FAMILY
-
-    bits = " || ".join(
-        f"(CASE WHEN ({_ph.sql_plane_dot('v', str(ANN_PLANE_FAMILY), str(p))}) >= 0"
-        " THEN '1' ELSE '0' END)"
-        for p in range(4)
-    )
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-ck AS (SELECT vec_id, v, {bits} AS bucket FROM e),
-q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM ck WHERE vec_id < 3),
-probes AS (
-  SELECT query_id, qv, bucket FROM q
-  UNION ALL
-  SELECT query_id, qv,
-         (CASE WHEN substr(bucket, 1, 1) = '1' THEN '0' ELSE '1' END) ||
-         substr(bucket, 2) AS bucket
-  FROM q
-),
-cand AS (
-  SELECT DISTINCT p.query_id, c.vec_id, p.qv, c.v
-  FROM ck c JOIN probes p ON c.bucket = p.bucket
-),
-ranked AS (
-  SELECT query_id, vec_id, round(cos_raw, 6) AS cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, vec_id ASC) AS rank
-  FROM (SELECT query_id, vec_id, list_cosine_similarity(v, qv) AS cos_raw FROM cand)
-)
-SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= 5"""
-
-
-@_q("ann_ivf_topk", _ann_ivf_oracle_sql())
-def ann_ivf_topk(spark, sf_dir):
-    """LSH-IVF top-k with ``hash_family='portable'`` — the oracle
-    replicates bucket assignment, multiprobe flips, and ranking exactly
-    (not just a recall bound)."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = ann.ivf_topk(
-        emb, queries, k=5, planes=4, multiprobe=1, hash_family="portable"
-    )
-    return out.select(
-        "query_id", "vec_id", _r6(F.col("cosine")).alias("cosine"), "rank"
-    )
-
-
-def _sql_sq_dist(a: str, b: str) -> str:
-    """Sequential left fold of Σ (a[d]-b[d])² — the same association
-    order as ann._cell_dists' F.aggregate, so the IEEE distance (and
-    therefore the argmin cell choice) is bit-identical across engines
-    (same pattern as portable_hash.sql_plane_dot)."""
-    term = f"(({a})[d+1] - ({b})[d+1]) * (({a})[d+1] - ({b})[d+1])"
-    return (
-        f"list_reduce(list_prepend(0.0, "
-        f"list_transform(range(len({a})), d -> {term})), "
-        "(acc, x) -> acc + x)"
-    )
-
-
-def _ann_kmeans_oracle_sql() -> str:
-    """DuckDB replica of the IVF centroid search (ann.ivf_centroid_topk,
-    the search path of the spark.ml k-means ANN) under a deterministic
-    coarse quantizer: centroids = the first 8 corpus embeddings.
-    Assignment = argmin squared euclidean (tie-break lowest cell),
-    probes = 2 nearest cells per query, candidates ranked by raw cosine
-    with vec_id tie-break — bucket choice, probe choice, and ranking all
-    replicated exactly, not just a recall bound."""
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT CAST(vec_id AS INT) AS cell, v AS cv FROM e WHERE vec_id < 8),
-ad AS (
-  SELECT e.vec_id, e.v, c.cell, {_sql_sq_dist('e.v', 'c.cv')} AS dist
-  FROM e CROSS JOIN cent c
-),
-assigned AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT vec_id, v, cell,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dist ASC, cell ASC) AS rn
-    FROM ad
-  ) WHERE rn = 1
-),
-q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 3),
-qd AS (
-  SELECT q.query_id, q.qv, c.cell, {_sql_sq_dist('q.qv', 'c.cv')} AS dist
-  FROM q CROSS JOIN cent c
-),
-probes AS (
-  SELECT query_id, qv, cell FROM (
-    SELECT query_id, qv, cell,
-           row_number() OVER (PARTITION BY query_id ORDER BY dist ASC, cell ASC) AS rn
-    FROM qd
-  ) WHERE rn <= 2
-),
-cand AS (
-  SELECT p.query_id, a.vec_id, p.qv, a.v
-  FROM assigned a JOIN probes p ON a.cell = p.cell
-),
-ranked AS (
-  SELECT query_id, vec_id, round(cos_raw, 6) AS cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, vec_id ASC) AS rank
-  FROM (SELECT query_id, vec_id, list_cosine_similarity(v, qv) AS cos_raw FROM cand)
-)
-SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= 5"""
-
-
-@_q("ann_kmeans_topk", _ann_kmeans_oracle_sql())
-def ann_kmeans_topk(spark, sf_dir):
-    """IVF search path of the k-means ANN (ann.ivf_kmeans_topk) under a
-    deterministic coarse quantizer: centroids = the first 8 corpus
-    embeddings (a 0-iteration k-means with deterministic seeding), so
-    the oracle re-derives cell assignment, probe choice, and ranking
-    exactly. The spark.ml-fitted quantizer feeds the SAME search
-    (ann.ivf_centroid_topk); fitted-vs-explicit parity and recall vs
-    brute force are pinned by tests/test_dedup_textstats_ann.py."""
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    centers = [
-        list(r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 8)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    ]
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = ann.ivf_centroid_topk(emb, queries, centers, k=5, n_probe=2)
-    return out.select(
-        "query_id", "vec_id", _r6(F.col("cosine")).alias("cosine"), "rank"
     )
 
 
@@ -1535,9 +1121,8 @@ def k8_softtfidf_pairs(spark, sf_dir):
     # CONTRACT-HARNESS ONLY: collect() mirrors the oracle's driver-side
     # df-map over this 64-name corpus so both engines weight identically.
     # The production path NEVER does this — it builds the map with
-    # scoring.broadcast_df_map (min_df/max_vocab caps) or keeps df as a
-    # relation (operators/softtfidf_join.py); do not copy this shape
-    # into a pipeline.
+    # scoring.broadcast_df_map (min_df/max_vocab caps); do not copy
+    # this shape into a pipeline.
     rows = names.collect()
     corpus = {r["name"]: list(r["toks"]) for r in rows}
     df_map = build_document_frequency(list(corpus.values()))
@@ -1878,9 +1463,8 @@ def k10_semantic_softtfidf_pairs(spark, sf_dir):
     # CONTRACT-HARNESS ONLY: collect() mirrors the oracle's driver-side
     # df-map over this 64-name corpus so both engines weight identically.
     # The production path NEVER does this — it builds the map with
-    # scoring.broadcast_df_map (min_df/max_vocab caps) or keeps df as a
-    # relation (operators/softtfidf_join.py); do not copy this shape
-    # into a pipeline.
+    # scoring.broadcast_df_map (min_df/max_vocab caps); do not copy
+    # this shape into a pipeline.
     rows = names.collect()
     corpus = {r["name"]: list(r["toks"]) for r in rows}
     sc = spark.sparkContext
@@ -2039,59 +1623,6 @@ def text_winnowing(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     fps = textstats.winnow_fingerprints(F.col("text"), hash_family="portable")
     return docs.select("doc_id", F.explode(fps).alias("fp"))
-
-
-@_q(
-    "multimodal_features",
-    """WITH m AS (
-         SELECT doc_id AS media_id,
-                CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
-                     WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-                octet_length(encode(text)) AS n_bytes,
-                sha256(text) AS h
-         FROM documents
-       )
-       SELECT media_id, kind, n_bytes,
-              d.i - 1 AS dim,
-              round(CAST(CAST(CAST((strpos('0123456789abcdef', substr(h, 2*d.i-1, 1)) - 1) * 16
-                    + (strpos('0123456789abcdef', substr(h, 2*d.i, 1)) - 1) AS DOUBLE)
-                    / 255.0 AS REAL) AS DOUBLE), 6) AS fval
-       FROM m CROSS JOIN (SELECT unnest(generate_series(1, 32)) AS i) d""",
-)
-def multimodal_features(spark, sf_dir):
-    """Multimodal feature extraction (operators/multimodal.py
-    extract_features, mapInPandas over binary payloads): media rows are
-    derived deterministically from documents (payload = UTF-8 text
-    bytes, kind cycles image/audio/video), the stub decode is
-    sha256-digest floats, so DuckDB rebuilds every feature dimension
-    from its own sha256. byte/255 is double-rounding-safe for all 256
-    byte values (verified exhaustively), so the oracle's
-    double-divide-then-REAL-cast equals numpy's float32 divide; the
-    REAL is widened back to DOUBLE before round() so both engines
-    round (and hash) the same float64 value — round(REAL) would return
-    a float32 whose widened repr differs from Spark's double."""
-    from .operators.multimodal import extract_features
-
-    docs = _t(spark, sf_dir, "documents")
-    kinds = F.array(F.lit("image"), F.lit("audio"), F.lit("video"))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.element_at(kinds, (F.col("doc_id") % 3).cast("int") + 1).alias("kind"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-    )
-    feats = extract_features(media, feature_dim=32)
-    return feats.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        F.posexplode(F.col("feature")).alias("dim", "fval"),
-    ).select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        F.col("dim").cast("long").alias("dim"),
-        _r6(F.col("fval").cast("double")).alias("fval"),
-    )
 
 
 # =====================================================================

@@ -30,7 +30,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import SCORING_KERNELS, _ensure_fixture, _force, _mk_spark  # noqa: E402
+from _common import SCORING_KERNELS, _ensure_fixture, _force, _mk_spark  # noqa: E402
 
 
 def truth_pairs(spark, n_convs: int, seed: int = 42):

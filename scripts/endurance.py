@@ -25,7 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import SCORING_KERNELS, _ensure_fixture  # noqa: E402
+from _common import SCORING_KERNELS, _ensure_fixture  # noqa: E402
 
 
 def main() -> int:

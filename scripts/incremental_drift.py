@@ -39,7 +39,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import SCORING_KERNELS  # noqa: E402
+from _common import SCORING_KERNELS  # noqa: E402
 
 
 def _score_drift(a, b):
@@ -108,7 +108,7 @@ def main() -> int:
         .getOrCreate()
     )
 
-    from bench import _ensure_fixture
+    from _common import _ensure_fixture
 
     from poi_name_matching_spark.data.transcripts import truth_df
     from poi_name_matching_spark.operators.evaluation import pairwise_cluster_f1

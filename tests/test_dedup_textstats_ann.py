@@ -1,11 +1,11 @@
-"""Training-data operators: dedup family, text stats, ANN, multimodal."""
-
-import math
+"""Text statistics (``operators/textstats``), the Spark whitespace
+tokenizer, embedding deltas and hot-block salting."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from poi_name_matching_spark.operators import ann, dedup, multimodal, textstats
+from poi_name_matching_spark.operators import textstats
+
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -22,98 +22,6 @@ DOCS = [
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string").cache()
-
-
-def test_exact_dedup(spark, docs):
-    out = dedup.exact_dedup(docs).collect()
-    by_id = {r["doc_id"]: r["dup_count"] for r in out}
-    assert by_id[1] == 2  # doc 2 collapsed into doc 1 (min id wins)
-    assert 2 not in by_id
-    assert by_id[3] == 1
-    assert len(out) == len(DOCS) - 1
-
-
-def test_ngram_jaccard_pairs(spark, docs):
-    pairs = {
-        (r["left_id"], r["right_id"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5, n=3).collect()
-    }
-    assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
-    assert (1, 3) in pairs
-    assert (4, 5) not in pairs
-
-
-def test_minhash_lsh_pairs(spark, docs):
-    # bands=32/rows=2: S-curve threshold ~(1/32)^(1/2)=0.18, so jaccard
-    # >=0.5 pairs collide with prob ~1
-    pairs = {
-        (r["left_id"], r["right_id"]): r["jaccard"]
-        for r in dedup.minhash_lsh_pairs(
-            docs, threshold=0.5, ngram=3, num_hashes=64, bands=32
-        ).collect()
-    }
-    assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
-    assert (1, 3) in pairs  # high shingle overlap
-    assert all(v >= 0.5 for v in pairs.values())
-    assert (4, 5) not in pairs
-
-
-def test_simhash_pairs(spark, docs):
-    got = {
-        (r["left_id"], r["right_id"]): r["hamming"]
-        for r in dedup.simhash_pairs(docs, max_hamming=3).collect()
-    }
-    assert got[(1, 2)] == 0  # identical text → identical fingerprint
-    assert (4, 5) not in got
-
-
-def test_simhash64_matches_python_oracle(spark, docs):
-    """JVM simhash == independent Python implementation (xxhash via Spark)."""
-    rows = docs.select(
-        "doc_id",
-        dedup.simhash64(F.split(F.trim("text"), r"\s+")).alias("sh"),
-        F.split(F.trim("text"), r"\s+").alias("toks"),
-    ).collect()
-    # oracle: recompute votes from per-token xxhash64 obtained from Spark
-    tok_rows = docs.select(
-        F.explode(F.split(F.trim("text"), r"\s+")).alias("t")
-    ).distinct()
-    tok_hash = {
-        r["t"]: r["h"]
-        for r in tok_rows.withColumn("h", F.xxhash64("t")).collect()
-    }
-    for r in rows:
-        if r["toks"] == [""]:
-            continue
-        votes = [0] * 64
-        for t in r["toks"]:
-            h = tok_hash[t]
-            for b in range(64):
-                votes[b] += 1 if (h >> b) & 1 else -1
-        expected = 0
-        for b in range(64):
-            if votes[b] > 0:
-                expected |= 1 << b
-        # python ints are unbounded; spark long is signed 64-bit
-        if expected >= 1 << 63:
-            expected -= 1 << 64
-        assert r["sh"] == expected, r["doc_id"]
-
-
-def test_embedding_near_dup(spark):
-    vecs = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.999, 0.01, 0.0, 0.0]),   # near dup of 1
-        (3, [0.0, 1.0, 0.0, 0.0]),
-        (4, [-1.0, 0.0, 0.0, 0.0]),
-    ]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    got = {
-        (r["left_id"], r["right_id"]): r["cosine"]
-        for r in dedup.embedding_near_dup(df, threshold=0.95).collect()
-    }
-    assert (1, 2) in got and got[(1, 2)] > 0.99
-    assert (1, 3) not in got and (1, 4) not in got
 
 
 def test_lang_id(spark):
@@ -177,8 +85,8 @@ def test_winnowing_portable_matches_python_reference(spark, docs):
     Horner/mod constants — including the short-text edge cases."""
     import re
 
-    from poi_name_matching_spark.functions.portable_hash import B1, M1
     from poi_name_matching_spark.functions.tokenize import WS_CLASS
+    from poi_name_matching_spark.operators.textstats import B1, M1
 
     k, window = 8, 4
 
@@ -219,72 +127,6 @@ def test_winnowing_portable_matches_python_reference(spark, docs):
         assert list(r["wf"]) == ref_winnow(r["text"]), r["doc_id"]
 
 
-def test_brute_force_ann_topk(spark):
-    dim = 8
-    corpus = [(i, [math.cos(i * 0.3 + d) for d in range(dim)]) for i in range(50)]
-    cdf = spark.createDataFrame(corpus, "vec_id long, embedding array<double>")
-    queries = spark.createDataFrame(
-        [(100, corpus[7][1]), (101, corpus[23][1])],
-        "query_id long, query_vec array<double>",
-    )
-    got = ann.brute_force_topk(cdf, queries, k=3).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append((r["rank"], r["vec_id"], r["cosine"]))
-    assert sorted(by_q[100])[0][1] == 7 and sorted(by_q[100])[0][2] == pytest.approx(1.0)
-    assert sorted(by_q[101])[0][1] == 23
-    assert len(by_q[100]) == 3
-
-
-def test_ivf_topk_recall_vs_brute_force(spark):
-    import random
-
-    rng = random.Random(5)
-    dim = 16
-    corpus = [
-        (i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(300)
-    ]
-    cdf = spark.createDataFrame(corpus, "vec_id long, embedding array<double>")
-    queries = spark.createDataFrame(
-        [(1000 + i, corpus[i * 29][1]) for i in range(5)],
-        "query_id long, query_vec array<double>",
-    )
-    exact = ann.brute_force_topk(cdf, queries, k=5).collect()
-    approx = ann.ivf_topk(cdf, queries, k=5, planes=4, multiprobe=1).collect()
-    exact_at1 = {r["query_id"]: r["vec_id"] for r in exact if r["rank"] == 1}
-    approx_by_q = {}
-    for r in approx:
-        approx_by_q.setdefault(r["query_id"], set()).add(r["vec_id"])
-    # the identical vector must be found (same bucket by construction)
-    hits = sum(1 for q, v in exact_at1.items() if v in approx_by_q.get(q, set()))
-    assert hits == len(exact_at1)
-
-
-def test_multimodal_features(spark):
-    media = multimodal.synthetic_media_df(spark, n=30)
-    feats = multimodal.extract_features(media, feature_dim=16).collect()
-    assert len(feats) == 30
-    for r in feats:
-        assert len(r["feature"]) == 16
-        assert r["n_bytes"] > 0
-    # deterministic across runs
-    feats2 = multimodal.extract_features(
-        multimodal.synthetic_media_df(spark, n=30), feature_dim=16
-    ).collect()
-    assert {r["media_id"]: r["feature"] for r in feats} == {
-        r["media_id"]: r["feature"] for r in feats2
-    }
-
-
-def test_frame_sample_plan(spark):
-    media = multimodal.synthetic_media_df(spark, n=30)
-    plan = multimodal.frame_sample_plan(media, every_ms=1000)
-    rows = plan.collect()
-    assert all(r["frame_ms"] % 1000 == 0 for r in rows)
-    vids = media.filter("kind = 'video' and duration_ms > 0").count()
-    assert plan.select("media_id").distinct().count() >= vids
-
-
 def test_embedding_deltas(spark):
     from poi_name_matching_spark.functions.spark_udfs import embedding_deltas
 
@@ -293,11 +135,6 @@ def test_embedding_deltas(spark):
     )
     r = df.select(embedding_deltas(F.col("a"), F.col("b")).alias("d")).first()
     assert r["d"] == [0.5, -1.0, 0.0]
-
-
-# ---------------------------------------------------------------------------
-# Scale guards: salted buckets, degenerate-doc drop, LSH OR-construction
-# ---------------------------------------------------------------------------
 
 
 def _hot_fixture(spark):
@@ -316,321 +153,21 @@ def _hot_fixture(spark):
     return spark.createDataFrame(rows, "doc_id long, text string"), planted
 
 
-def test_minhash_hot_bucket_salted(spark):
-    docs, planted = _hot_fixture(spark)
-    pairs = dedup.minhash_lsh_pairs(
-        docs, threshold=0.5, ngram=3, num_hashes=64, bands=32, max_bucket_size=20
-    )
-    got = {(r["left_id"], r["right_id"]) for r in pairs.collect()}
-    # planted near-dups live in cold buckets — salting the hot bucket
-    # must not lose them
-    for p in planted:
-        assert p in got, p
-    # every returned pair is verified >= threshold (candidate inflation
-    # from salting can never corrupt output)
-    verified = dedup.minhash_lsh_pairs(
-        docs, threshold=0.5, ngram=3, num_hashes=64, bands=32, max_bucket_size=0
-    )
-    unsalted = {(r["left_id"], r["right_id"]) for r in verified.collect()}
-    assert got <= unsalted
-
-
 def test_ngram_hot_bucket_salted_bounds(spark):
     docs, planted = _hot_fixture(spark)
     from poi_name_matching_spark.operators.blocking import salt_oversized
 
     toks = F.split(F.trim("text"), r"\s+")
     buckets = docs.select(
-        F.col("doc_id").alias("id"),
-        F.concat_ws(" ", F.slice(toks, 1, 2)).alias("bucket"),
+        F.col("doc_id").alias("conv_id"),
+        F.concat_ws(" ", F.slice(toks, 1, 2)).alias("block_key"),
     )
-    salted = salt_oversized(buckets, 20, id_col="id", key_col="bucket")
-    sizes = salted.groupBy("bucket").count().collect()
+    salted = salt_oversized(buckets, 20)
+    sizes = salted.groupBy("block_key").count().collect()
     # ceil(200/20)=10 salts → expected ~20/bucket; hash unevenness bounded
     assert max(r["count"] for r in sizes) <= 40
     # membership preserved: salting moves rows, never drops them
     assert salted.count() == buckets.count()
-
-
-def test_token_less_docs_dropped(spark):
-    rows = [(1, "real document with several tokens here"),
-            (2, "real document with several tokens here"),
-            (3, ""), (4, "   "), (5, "\t\n")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    mh = dedup.minhash_lsh_pairs(docs, threshold=0.5)
-    ids = {i for r in mh.collect() for i in (r["left_id"], r["right_id"])}
-    assert ids <= {1, 2}
-    sh = dedup.simhash_pairs(docs, max_hamming=3)
-    ids = {i for r in sh.collect() for i in (r["left_id"], r["right_id"])}
-    assert ids <= {1, 2}
-    ng = dedup.ngram_jaccard_pairs(docs, threshold=0.5)
-    ids = {i for r in ng.collect() for i in (r["left_id"], r["right_id"])}
-    assert ids <= {1, 2}
-
-
-def test_embedding_lsh_or_construction_recall(spark):
-    """8 tables × 8 planes must recover >= 0.9 of brute-force pairs at
-    cosine >= 0.9 on a planted near-dup fixture (the old single 12-plane
-    AND sketch sat at ~0.15 recall by construction)."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    base = rng.normal(size=(50, 16))
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
-    rows = []
-    vid = 0
-    vecs = []
-    for i in range(50):
-        rows.append((vid, base[i].tolist())); vecs.append(base[i]); vid += 1
-    for i in range(20):  # perturbed copies: cosine ~0.97-0.999
-        v = base[i] + rng.normal(scale=0.08, size=16)
-        v /= np.linalg.norm(v)
-        rows.append((vid, v.tolist())); vecs.append(v); vid += 1
-    V = np.stack(vecs)
-    sims = V @ V.T
-    truth = {
-        (i, j)
-        for i in range(len(vecs))
-        for j in range(i + 1, len(vecs))
-        if sims[i, j] >= 0.9
-    }
-    assert len(truth) >= 15  # fixture is non-vacuous
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {
-        (r["left_id"], r["right_id"])
-        for r in dedup.embedding_near_dup(
-            df, threshold=0.9, planes=8, tables=8
-        ).collect()
-    }
-    assert got <= truth  # exact verification: no false positives
-    recall = len(got & truth) / len(truth)
-    assert recall >= 0.9, (recall, len(truth))
-
-
-def test_resize_images_real_pixel_math(spark):
-    """raw-gray fake codec: resize runs REAL numpy pixel resampling
-    through mapInPandas binary round-trip; metadata updated, non-images
-    passed through; real codecs raise NotImplementedError."""
-    import numpy as np
-
-    media = multimodal.synthetic_media_df(spark, n=12, seed=5)
-    out = multimodal.resize_images(media, 16, 8).collect()
-    src = {r["media_id"]: r for r in media.collect()}
-    for r in out:
-        s = src[r["media_id"]]
-        if r["kind"] == "image":
-            assert (r["width"], r["height"]) == (16, 8)
-            assert len(r["payload"]) == 16 * 8
-            # pixel values verified against driver-side numpy resample
-            img = multimodal.decode_raw_gray(s["payload"], s["width"], s["height"])
-            rows = (np.arange(8) * img.shape[0]) // 8
-            cols = (np.arange(16) * img.shape[1]) // 16
-            assert bytes(r["payload"]) == img[rows][:, cols].tobytes()
-        else:
-            assert bytes(r["payload"] or b"") == bytes(s["payload"] or b"")
-    with pytest.raises(NotImplementedError):
-        multimodal.resize_images(media, 16, 8, codec="image/png")
-
-
-def test_ivf_kmeans_topk_recall_vs_brute_force(spark):
-    """k-means IVF with n_probe=4/16 cells recovers >= 0.8 of brute-force
-    top-5 on a clustered fixture (and n_probe=16 == exhaustive == exact)."""
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    centers = rng.normal(size=(6, 12)) * 3
-    rows = []
-    vid = 0
-    for c in range(6):
-        for _ in range(40):
-            v = centers[c] + rng.normal(size=12)
-            rows.append((vid, v.tolist())); vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = df.limit(4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    brute = {
-        (r["query_id"], r["vec_id"])
-        for r in ann.brute_force_topk(df, queries, k=5).collect()
-    }
-    got = {
-        (r["query_id"], r["vec_id"])
-        for r in ann.ivf_kmeans_topk(
-            df, queries, k=5, n_clusters=16, n_probe=4
-        ).collect()
-    }
-    recall = len(got & brute) / len(brute)
-    assert recall >= 0.8, recall
-    exhaustive = {
-        (r["query_id"], r["vec_id"])
-        for r in ann.ivf_kmeans_topk(
-            df, queries, k=5, n_clusters=16, n_probe=16
-        ).collect()
-    }
-    assert exhaustive == brute
-
-
-def test_ivf_kmeans_equals_centroid_search_on_fitted_centers(spark):
-    """ivf_kmeans_topk == ivf_centroid_topk given the model's centers:
-    the fitted path routes through the SAME oracle-able search, so the
-    only un-oracled piece is spark.ml's Lloyd's iterations themselves
-    (the ann_kmeans_topk driver row oracles the search exactly)."""
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    rng = np.random.default_rng(7)
-    rows = [(i, (rng.normal(size=10) * (1 + i % 3)).tolist()) for i in range(150)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = df.limit(3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-
-    c = df.withColumn("_fv", array_to_vector(F.col("embedding")))
-    model = KMeans(
-        k=8, seed=42, maxIter=20, featuresCol="_fv", predictionCol="cell"
-    ).fit(c)
-    centers = [list(map(float, v)) for v in model.clusterCenters()]
-
-    fitted = ann.ivf_kmeans_topk(
-        df, queries, k=5, n_clusters=8, n_probe=2, seed=42, max_iter=20
-    )
-    explicit = ann.ivf_centroid_topk(df, queries, centers, k=5, n_probe=2)
-    as_set = lambda d: {  # noqa: E731
-        (r["query_id"], r["vec_id"], r["rank"], round(r["cosine"], 9))
-        for r in d.collect()
-    }
-    assert as_set(fitted) == as_set(explicit)
-
-
-# ---------------------------------------------------------------------------
-# portable hash family (SQL-reproducible LSH variants)
-# ---------------------------------------------------------------------------
-
-
-def test_portable_minhash_matches_python_reference(spark, docs):
-    """Spark portable-minhash UDF == pure-python poly/affine reference."""
-    from poi_name_matching_spark.functions import portable_hash as ph
-
-    rows = (
-        docs.filter(F.length(F.trim("text")) > 0)
-        .select(
-            "doc_id",
-            F.split(F.trim("text"), r"\s+").alias("toks"),
-        )
-        .withColumn("mh", ph.make_portable_minhash_udf(16)(F.col("toks")))
-        .collect()
-    )
-    assert rows
-    for r in rows:
-        hs = [ph.poly_hashes(t) for t in set(r["toks"])]
-        for j in range(16):
-            expected = min(ph.affine(h1, h2, j) for h1, h2 in hs)
-            assert r["mh"][j] == expected
-
-
-def test_portable_simhash_matches_python_reference(spark, docs):
-    from collections import Counter
-
-    from poi_name_matching_spark.functions import portable_hash as ph
-
-    rows = (
-        docs.filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.trim("text"), r"\s+").alias("toks"))
-        .withColumn("fp", ph.make_portable_simhash_udf(60)(F.col("toks")))
-        .collect()
-    )
-    assert rows
-    for r in rows:
-        cnt = Counter(r["toks"])
-        fp = 0
-        for j in range(60):
-            vote = 0
-            for t, c in cnt.items():
-                h1, h2 = ph.poly_hashes(t)
-                vote += c if ph.affine(h1, h2, j) >= ph.HALF else -c
-            if vote > 0:
-                fp |= 1 << j
-        assert r["fp"] == fp
-        assert r["fp"] >= 0  # 60 bits: strictly positive in signed 64
-
-
-def test_portable_simhash_pairs_match_fast_family_semantics(spark, docs):
-    """Portable pigeonhole results must satisfy the same contract as the
-    fast family: every returned pair verified <= max_hamming, exact dups
-    at hamming 0, and the unsalted candidate set is exhaustive (equals a
-    brute-force recomputation of the portable fingerprints)."""
-    from collections import Counter
-
-    from poi_name_matching_spark.functions import portable_hash as ph
-
-    out = {
-        (r["left_id"], r["right_id"]): r["hamming"]
-        for r in dedup.simhash_pairs(
-            docs, max_hamming=3, hash_family="portable"
-        ).collect()
-    }
-    assert out[(1, 2)] == 0  # exact dup
-    # brute force over the same fingerprints
-    rows = (
-        docs.filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.trim("text"), r"\s+").alias("toks"))
-        .collect()
-    )
-    fps = {}
-    for r in rows:
-        cnt = Counter(r["toks"])
-        fp = 0
-        for j in range(60):
-            vote = sum(
-                (c if ph.affine(*ph.poly_hashes(t), j) >= ph.HALF else -c)
-                for t, c in cnt.items()
-            )
-            if vote > 0:
-                fp |= 1 << j
-        fps[r["doc_id"]] = fp
-    brute = {
-        (a, b): bin(fps[a] ^ fps[b]).count("1")
-        for a in fps
-        for b in fps
-        if a < b and bin(fps[a] ^ fps[b]).count("1") <= 3
-    }
-    assert out == brute
-
-
-def test_ivf_multiprobe_recall_monotone(spark):
-    """multiprobe = number of extra buckets probed; recall of the exact
-    nearest neighbour must be non-decreasing in it."""
-    import random
-
-    rng = random.Random(11)
-    dim = 12
-    corpus = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(400)]
-    cdf = spark.createDataFrame(corpus, "vec_id long, embedding array<double>")
-    # queries = slightly perturbed corpus points (their true NN is known)
-    queries = spark.createDataFrame(
-        [
-            (1000 + i, [x + rng.gauss(0, 0.05) for x in corpus[i * 37][1]])
-            for i in range(10)
-        ],
-        "query_id long, query_vec array<double>",
-    )
-    exact = {
-        r["query_id"]: r["vec_id"]
-        for r in ann.brute_force_topk(cdf, queries, k=1).collect()
-    }
-    recalls = []
-    for mp in (0, 1, 2, 4):
-        got = ann.ivf_topk(cdf, queries, k=5, planes=4, multiprobe=mp)
-        by_q = {}
-        for r in got.collect():
-            by_q.setdefault(r["query_id"], set()).add(r["vec_id"])
-        recalls.append(
-            sum(1 for q, v in exact.items() if v in by_q.get(q, set()))
-            / len(exact)
-        )
-    assert recalls == sorted(recalls), recalls
-    assert recalls[-1] >= recalls[0]
 
 
 def test_whitespace_tokens_matches_re_findall(spark):
@@ -667,126 +204,3 @@ def test_whitespace_tokens_matches_re_findall(spark):
     }
     for i, s in rows:
         assert got[i] == re.findall(r"\S+", s), (i, got[i])
-
-
-def test_unsalted_hot_bucket_warns(spark, caplog):
-    """The strict max_bucket_size=0 default logs a discoverability
-    warning when a bucket exceeds the diagnostic bound — and stays
-    silent below it / when disabled."""
-    import logging
-
-    from poi_name_matching_spark.operators import dedup
-
-    rows = [(i, "shared prefix filler %d" % i) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    saved = dedup.WARN_UNSALTED_BUCKET_BOUND
-    logger = "poi_name_matching_spark.operators.dedup"
-    try:
-        dedup.WARN_UNSALTED_BUCKET_BOUND = 10  # 40 docs share the bucket
-        with caplog.at_level(logging.WARNING, logger=logger):
-            dedup.ngram_jaccard_pairs(df, threshold=0.99).count()
-        assert any("max_bucket_size" in r.message for r in caplog.records)
-        caplog.clear()
-        same = spark.createDataFrame(
-            [(i, "identical text body") for i in range(40)],
-            "doc_id long, text string",
-        )  # identical fingerprints → every 16-bit block bucket holds 40
-        with caplog.at_level(logging.WARNING, logger=logger):
-            dedup.simhash_pairs(same, max_hamming=0).count()
-        assert any("simhash_pairs" in r.message for r in caplog.records)
-        caplog.clear()
-        dedup.WARN_UNSALTED_BUCKET_BOUND = 10_000  # bound not exceeded
-        with caplog.at_level(logging.WARNING, logger=logger):
-            dedup.ngram_jaccard_pairs(df, threshold=0.99).count()
-        assert not caplog.records
-        dedup.WARN_UNSALTED_BUCKET_BOUND = None  # diagnostic off
-        with caplog.at_level(logging.WARNING, logger=logger):
-            dedup.simhash_pairs(df, max_hamming=0).count()
-        assert not caplog.records
-    finally:
-        dedup.WARN_UNSALTED_BUCKET_BOUND = saved
-
-
-def test_ivf_multiprobe_change_warns_once(spark):
-    """The round-3 multiprobe semantics change surfaces as a ONE-TIME
-    warning for the shrunk default combination (multiprobe=1, planes>1)."""
-    import warnings as _warnings
-
-    import numpy as np
-
-    from poi_name_matching_spark.operators import ann
-
-    rng = np.random.default_rng(5)
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "vec_id": range(8),
-            "embedding": [rng.standard_normal(4).tolist() for _ in range(8)],
-        }
-    )
-    corpus = spark.createDataFrame(pdf)
-    queries = corpus.limit(1).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    saved = ann._MULTIPROBE_CHANGE_WARNED
-    try:
-        ann._MULTIPROBE_CHANGE_WARNED = False
-        with pytest.warns(UserWarning, match="multiprobe semantics changed"):
-            ann.ivf_topk(corpus, queries, k=2, multiprobe=1).count()
-        with _warnings.catch_warnings():
-            _warnings.simplefilter("error")  # second call: no warning
-            ann.ivf_topk(corpus, queries, k=2, multiprobe=1).count()
-    finally:
-        ann._MULTIPROBE_CHANGE_WARNED = saved
-
-
-def test_simhash_pairs_leaves_no_cache_entry(spark, docs):
-    """persist() inside simhash_pairs pinned one CacheManager entry per
-    call for the session lifetime (no handle returned to unpersist — an
-    unbounded leak for a long-lived driver calling it per batch); the
-    localCheckpoint replacement is ContextCleaner-managed. Pin: after
-    materializing both branches, the session cache holds nothing beyond
-    what the caller cached."""
-    spark.catalog.clearCache()
-    try:
-        cm = spark._jsparkSession.sharedState().cacheManager()
-        dedup.simhash_pairs(docs, max_hamming=3).count()  # strict + diag
-        dedup.simhash_pairs(docs, max_hamming=3, max_bucket_size=2).count()
-        assert cm.isEmpty()
-    finally:
-        docs.cache()  # restore the module fixture's cached state
-
-
-def test_strict_dedup_diagnostics_opt_out_is_lazy(spark, docs, monkeypatch):
-    """diagnostics=False (or WARN_UNSALTED_BUCKET_BOUND=None) must keep
-    plan construction fully lazy: no Spark job may run before the caller
-    acts. Pinned by counting jobs via the status tracker."""
-    tracker = spark.sparkContext.statusTracker()
-
-    def n_jobs():
-        return len(tracker.getJobIdsForGroup(None) or [])
-
-    before = n_jobs()
-    plan1 = dedup.simhash_pairs(docs, max_hamming=3, diagnostics=False)
-    plan2 = dedup.ngram_jaccard_pairs(docs, threshold=0.5, diagnostics=False)
-    assert n_jobs() == before  # construction ran no jobs
-    assert plan1.count() >= 0 and plan2.count() >= 0  # still executable
-
-
-def test_diagnostics_true_overrides_silenced_bound(
-    spark, docs, monkeypatch, caplog
-):
-    """Explicit diagnostics=True must actually warn even when the module
-    switch is silenced (the documented deployment-wide off switch): the
-    bound falls back to DEFAULT_MAX_BUCKET — here shrunk so the fixture
-    trips it."""
-    import logging
-
-    monkeypatch.setattr(dedup, "WARN_UNSALTED_BUCKET_BOUND", None)
-    monkeypatch.setattr(dedup, "DEFAULT_MAX_BUCKET", 1)
-    with caplog.at_level(
-        logging.WARNING, logger="poi_name_matching_spark.operators.dedup"
-    ):
-        dedup.simhash_pairs(docs, max_hamming=3, diagnostics=True).count()
-    assert "largest candidate bucket" in caplog.text

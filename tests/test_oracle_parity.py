@@ -84,9 +84,9 @@ def test_rows_only_queries_run(spark, name):
 
 
 def test_text_token_counts_oracle(spark, ddb):
-    """text_token_counts was rotated OUT of the driver registry in round
-    5 (its slot went to ann_kmeans_topk); this pins the identical DuckDB
-    parity locally so the operator keeps full oracle-grade coverage."""
+    """text_token_counts is not in the driver registry; this pins the
+    identical DuckDB parity locally so the operator keeps full
+    oracle-grade coverage."""
     from poi_name_matching_spark.queries import text_token_counts
 
     sql = r"""SELECT doc_id,
@@ -122,7 +122,8 @@ def test_registry_over_cap_raises_with_explicit_drop_list():
     exactly which tail queries would fall outside the driver's
     evaluation window — never silently evict an oracle row. (The
     eviction order is registration order: the tail past the cap, after
-    the deterministic k8-family reorder.)"""
+    the deterministic k8-family reorder.) The registry is first padded
+    to the cap, so the check holds however many queries exist."""
     import pytest
 
     from poi_name_matching_spark import queries as qmod
@@ -130,6 +131,8 @@ def test_registry_over_cap_raises_with_explicit_drop_list():
     snapshot_q = dict(qmod.QUERIES)
     snapshot_o = dict(qmod.ORACLE)
     try:
+        for i in range(qmod._DRIVER_QUERY_CAP - len(snapshot_q)):
+            qmod.QUERIES[f"zz_pad_{i:02d}"] = lambda spark, sf_dir: None
         qmod.QUERIES["zz_one_past_the_cap"] = lambda spark, sf_dir: None
         qmod.ORACLE["zz_one_past_the_cap"] = "SELECT 1 AS x"
         with pytest.raises(RuntimeError, match="zz_one_past_the_cap"):

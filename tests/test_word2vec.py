@@ -1,6 +1,6 @@
 """K14 end-to-end: a REAL word2vec model trained in-Spark, exported
-through the npz vocab seam, and consumed by the scoring / dedup / ANN
-paths (reference ``load_data/word_embeddings.py:73-91``: per-token
+through the npz vocab seam, and consumed by the scoring path
+(reference ``load_data/word_embeddings.py:73-91``: per-token
 ``get_vector`` → ``mean(axis=0)``)."""
 
 import pickle
@@ -153,30 +153,6 @@ class TestTrainedVectorsDriveOperators:
         cos = {(r["left_id"], r["right_id"]): r["emb_cosine"] for r in out}
         assert cos[("0", "1")] > 0.5  # shares 2 of 3 trained tokens
 
-    def test_dedup_and_ann_on_trained_vectors(self, spark, trained):
-        """The trained-embedding relation feeds embedding_near_dup and
-        brute-force ANN unchanged — duplicate texts embed identically and
-        surface as cosine-1 near-dups / top-1 neighbors."""
-        from poi_name_matching_spark.operators import ann, dedup
-
-        emb, _, _ = trained
-        texts = CORPUS + [CORPUS[0]]  # plant an exact duplicate of doc 0
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        vecs = embed_corpus(df, emb)
-        dup = dedup.embedding_near_dup(vecs, threshold=0.999).collect()
-        assert any(
-            {r["left_id"], r["right_id"]} == {0, len(texts) - 1} for r in dup
-        )
-        queries = vecs.filter(F.col("vec_id") == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        )
-        top = ann.brute_force_topk(vecs, queries, k=2).collect()
-        assert {r["vec_id"] for r in top} == {0, len(texts) - 1}
-
-
 class TestTextVectorsToNpz:
     """Converter for published GloVe / word2vec-text model files → the
     npz seam (the dependency-free stand-in for gensim loading,
@@ -246,9 +222,9 @@ class TestTextVectorsToNpz:
 class TestPublishedModelFileDrop:
     """A published-format model file drops into the FULL pipeline with
     zero code changes (K11–K13 hygiene): a GloVe-text file → converter →
-    real signatures/blocking/scoring and the embedding dedup path, every
-    embedding-derived number re-derived driver-side from the RAW text
-    file (an independent parse, not the converter under test)."""
+    real signatures/blocking/scoring, every embedding-derived number
+    re-derived driver-side from the RAW text file (an independent parse,
+    not the converter under test)."""
 
     @pytest.fixture(scope="class")
     def dropped(self, spark, tmp_path_factory):
@@ -326,34 +302,3 @@ class TestPublishedModelFileDrop:
                 pool(toks[r["left_id"]]), pool(toks[r["right_id"]])
             )
             assert r["emb_cosine"] == pytest.approx(expected, abs=1e-6)
-
-    def test_embedding_dedup_parity_vs_raw_file(self, spark, dropped):
-        from itertools import combinations
-
-        from poi_name_matching_spark.functions import kernels
-        from poi_name_matching_spark.operators import dedup
-        from poi_name_matching_spark.operators.scoring import (
-            attach_embeddings,
-        )
-
-        emb, sigs, pool = dropped
-        vecs = attach_embeddings(sigs, emb).select(
-            F.col("conv_id").alias("vec_id"),
-            F.col("emb").cast("array<double>").alias("embedding"),
-        )
-        got = {
-            frozenset((r["left_id"], r["right_id"]))
-            for r in dedup.embedding_near_dup(
-                vecs, threshold=0.9, id_col="vec_id", tables=16
-            ).collect()
-        }
-        toks = {r["conv_id"]: r["tokens"] for r in sigs.collect()}
-        brute = {
-            frozenset((a, b))
-            for a, b in combinations(sorted(toks), 2)
-            if kernels.cosine_vec(pool(toks[a]), pool(toks[b])) >= 0.9
-        }
-        # exact-verify stage makes candidates ⊆ brute always; 16 OR-ed
-        # tables at cosine ≥ 0.9 puts expected recall ≈ 1 at this size
-        assert got <= brute
-        assert got == brute
