@@ -11,9 +11,10 @@ checkpoint (``plans/pipeline.py``) with a batch of new transcripts:
   the salt-size scan over the id-only block relation, the df-map
   aggregate over tokens, and the connected-components rounds over
   id-only edges;
-* every updated stage checkpoint archives its previous version first
-  (the snapshot mechanism in ``sources/checkpoint.py``), so an
-  increment is rollback-able like an Iceberg table commit;
+* every updated stage is committed as a new immutable version (the
+  versioned store in ``sources/checkpoint.py``), so the previous one
+  stays retained and an increment is rollback-able like an Iceberg
+  table commit;
 * stage commits are FAST APPENDS (``StageCheckpoint.append``): only
   the increment's rows are written as new files — O(increment) bytes
   per commit, never a rewrite of history. Only ``rescore_all`` (full
@@ -38,15 +39,14 @@ Semantics vs a from-scratch batch run (documented, pinned by tests):
 * Conversations whose conv_id already exists in the checkpoint are
   dropped (at-least-once redelivery safety), counted in
   ``stats["n_redelivered_dropped"]``.
-* **Crash atomicity (WAL)**: the multi-stage commit sequence is fenced
-  by a pending marker (``_incr_pending.json``). A crash anywhere
-  between the first stage commit and the components write leaves the
-  checkpoint mid-increment; the next ``incremental_update`` rolls the
-  partially-committed stages back to their pre-increment snapshots
-  before doing anything else (``_recover_pending``), so a failed
-  commit leaves no trace — redelivery then re-applies the batch
-  exactly once (no duplicate score/block rows, no conversations
-  stranded outside the components stage).
+* **Crash atomicity (head-pointer commit)**: the five stage commits
+  run inside one ``StageCheckpoint.commit()``, so they become visible
+  together in a single atomic swap of ``_head.json``. A crash anywhere
+  before the swap leaves the pre-increment head valid (the new version
+  directories are orphans that retention sweeps) — a failed commit
+  leaves no trace, and redelivery re-applies the batch exactly once (no
+  duplicate score/block rows, no conversations stranded outside the
+  components stage).
 * **Components staleness guard**: each components commit records the
   scores-stage fingerprint it was derived from; incremental CC (the
   contraction path) runs only when that linkage matches the current
@@ -62,7 +62,6 @@ from __future__ import annotations
 
 import json
 import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,134 +70,8 @@ from ..operators.blocking import block_keys, salt_oversized
 from ..operators.clustering import components, incremental_components
 from ..operators.scoring import edges_from_scores, score_pairs
 from ..operators.signatures import build_signatures
-from ..sources.checkpoint import (
-    StageCheckpoint,
-    stage_fingerprint,
-    write_json_atomic,
-)
-from .pipeline import (
-    PENDING_MARKER_NAME,
-    STAGES,
-    PipelineConfig,
-    PipelineResult,
-)
-
-
-#: all pipeline stages, in the order recovery inspects them — the batch
-#: pipeline's list is the single source of truth
-_STAGES = tuple(STAGES)
-
-#: WAL marker for an in-flight increment (checkpoint-root-level):
-#: written before the first stage commit, removed after the last
-#: (components). Present on entry ⇒ the previous increment crashed
-#: mid-commit-sequence and MUST be rolled back before anything else —
-#: a partially-committed increment breaks the cross-stage invariants
-#: every later batch relies on (e.g. a scores append whose pairs never
-#: landed double-scores those pairs on redelivery; an increment whose
-#: components write never ran leaves clusters that a later contraction
-#: would silently drop conversations from).
-#: (Name lives in plans/pipeline.py so run_pipeline can clear a stale
-#: marker when a batch rebuild supersedes the pending increment.)
-_PENDING_MARKER = PENDING_MARKER_NAME
-
-
-def _recover_pending(spark: SparkSession, ckpt: StageCheckpoint) -> dict | None:
-    """Roll back a partially-committed increment (Iceberg semantics: a
-    failed commit leaves no trace). The marker recorded every stage's
-    ``output_fingerprint`` at increment start; any stage whose current
-    fingerprint differs — plus any stage left manifest-less by a crash
-    inside a commit's archive step — was mutated by the crashed run and
-    is rolled back to the snapshot whose recorded fingerprint IS the
-    pre-increment one (never "the newest": after an interleaved crashed
-    run_pipeline rebuild the newest snapshot can be the half-committed
-    state itself), and the restore is verified against the marker
-    before the marker is cleared. Matching on the CONTENT
-    fingerprint, not the manifest's ``input_fingerprint``, is what makes
-    redelivery-after-completion safe: a crashed re-run of an
-    already-applied batch re-commits zero-row appends whose fingerprints
-    are unchanged, so recovery correctly leaves those stages alone
-    instead of rolling them back past the first (successful) run.
-    Idempotent: a crash mid-recovery leaves the marker in place and
-    already-rolled-back stages match the recorded fingerprints again, so
-    the next entry finishes the job. The rolled-back batch's data is
-    dropped entirely; the at-least-once upstream redelivers it (in any
-    order relative to other batches — the redelivery anti-joins merge
-    overlapping batches idempotently)."""
-    marker = Path(str(ckpt.root)) / _PENDING_MARKER
-    # a crash between writing and renaming the marker tmp leaves debris
-    # no other path reaps (the rename never happened ⇒ nothing started)
-    marker.with_name(marker.name + ".tmp").unlink(missing_ok=True)
-    if not marker.exists():
-        return None
-    try:
-        pending = json.loads(marker.read_text())
-    except (json.JSONDecodeError, UnicodeDecodeError):
-        # the marker is written tmp-then-rename (atomic), so an
-        # unparseable marker can only be debris from a crash mid-write
-        # under a pre-atomic version — and the marker is always fully
-        # written BEFORE the first stage commit, so a torn marker
-        # provably means zero commits happened: nothing to roll back
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "discarding unparseable pending marker %s (torn write "
-            "before any commit — no rollback needed)",
-            marker,
-        )
-        marker.unlink(missing_ok=True)
-        return None
-    rolled: list[str] = []
-    for stage, fp_before in pending["stage_fps"].items():
-        m = ckpt.read_manifest(stage)
-        if m is None and ckpt.heal_half_archive(stage, spark=spark):
-            # a crash inside the commit's archive step left the
-            # manifest in the snapshot slot and the data in place —
-            # healed back to the exact pre-commit version, no rollback
-            # needed if the fingerprint now matches
-            m = ckpt.read_manifest(stage)
-            rolled.append(stage)
-        if m is not None and m.get("output_fingerprint") == fp_before:
-            continue  # untouched by the crashed run (or zero-row append)
-        # roll back to the snapshot that IS the pre-increment version —
-        # never "the newest snapshot": after an interleaved (and itself
-        # crashed) run_pipeline rebuild, the newest snapshot can be the
-        # half-committed state being recovered FROM, and restoring it
-        # would resurrect the partial increment recovery exists to erase
-        v = ckpt.snapshot_by_fingerprint(stage, fp_before)
-        err = (
-            f"crash recovery cannot restore stage {stage!r} to its "
-            f"pre-increment version (fingerprint {fp_before}): "
-            "{why} — re-run run_pipeline to rebuild the checkpoint "
-            "(a completed batch run clears the pending marker "
-            f"{_PENDING_MARKER}). Recovery must not guess: restoring "
-            "any other version would leave a half-applied increment "
-            "that double-scores pairs on redelivery."
-        )
-        if v is None:
-            # nothing trustworthy to restore: recovery must NOT
-            # silently skip (clearing the marker would report a
-            # half-applied increment as recovered). Leave the marker so
-            # the error repeats until the operator intervenes.
-            raise RuntimeError(
-                err.format(why="no complete snapshot records it")
-            )
-        try:
-            ckpt.rollback(stage, v, spark=spark)
-        except FileNotFoundError as ex:
-            # append-snapshot rollback needs every pre-append file still
-            # live; an interleaved full rewrite moved them
-            raise RuntimeError(
-                err.format(why=f"snapshot v{v} is not restorable ({ex})")
-            ) from ex
-        restored = ckpt.read_manifest(stage)
-        if restored is None or restored.get("output_fingerprint") != fp_before:
-            raise RuntimeError(
-                err.format(why=f"rollback to v{v} restored a different version")
-            )
-        if stage not in rolled:  # heal + rollback is still ONE recovery
-            rolled.append(stage)
-    marker.unlink(missing_ok=True)
-    return {"in_fp": pending["in_fp"], "rolled_back": rolled}
+from ..sources.checkpoint import StageCheckpoint, stage_fingerprint
+from .pipeline import STAGES, PipelineConfig, PipelineResult
 
 
 #: sentinel: retention follows cfg.expire_keep_last unless the caller
@@ -220,37 +93,20 @@ def incremental_update(
     ``run_pipeline`` at ``cfg.checkpoint_dir``.
 
     ``expire_keep_last``: snapshot retention — after the commit, keep at
-    most this many archived versions per stage. Defaults to the
+    most this many retained versions per stage. Defaults to the
     checkpoint-wide policy ``cfg.expire_keep_last``; pass a value to
-    override for this increment only. Fast-append archives
-    (the default path) are tiny (manifest + file listing — the appended
-    data files stay live), but full-rewrite archives (``rescore_all``,
-    and the components stage every increment) are corpus-sized copies,
-    so unbounded retention would grow the checkpoint dir by O(corpus)
-    per increment. ``None`` keeps everything."""
+    override for this increment only. Fast-append versions (the default
+    path) share their data files by hard link, but full rewrites
+    (``rescore_all``, and the components stage every increment) are
+    corpus-sized, so unbounded retention would grow the checkpoint dir
+    by O(corpus) per increment. ``None`` keeps everything."""
     if cfg.shuffle_partitions:
         spark.conf.set(
             "spark.sql.shuffle.partitions", str(cfg.shuffle_partitions)
         )
     ckpt = StageCheckpoint(cfg.checkpoint_dir)
-    # crash recovery BEFORE the completeness check: a crash inside a
-    # commit's archive step leaves a stage manifest-less, which recovery
-    # repairs and the check would reject
-    recovered = _recover_pending(spark, ckpt)
-    for stage in _STAGES:
+    for stage in STAGES:
         if ckpt.read_manifest(stage) is None:
-            # two zero-recompute repairs before demanding a rebuild: a
-            # compaction that crashed mid-swap (marker-fenced; restores
-            # the content-identical archived version) and a plain
-            # half-archive (manifest stranded in the snapshot slot,
-            # data intact — the same fingerprint-verified heal the
-            # batch resume path applies). Only an unmarked manifest-
-            # less stage with its data gone (a crashed batch rewrite)
-            # still needs run_pipeline.
-            if ckpt.heal_crashed_compaction(
-                stage, spark=spark
-            ) or ckpt.heal_half_archive(stage, spark=spark):
-                continue
             raise FileNotFoundError(
                 f"incremental_update needs a completed pipeline checkpoint; "
                 f"stage {stage!r} is missing at {cfg.checkpoint_dir} — run "
@@ -314,8 +170,6 @@ def incremental_update(
         )
 
     stats: dict = {}
-    if recovered is not None:
-        stats["recovered_rollback"] = recovered
     phases: dict[str, float] = {}
     stats["phase_wall_s"] = phases
     _t0 = time.monotonic()
@@ -328,34 +182,11 @@ def incremental_update(
 
     from ..operators.scoring import udf_stage_parallelism
 
-    # WAL marker: increment input fingerprint + every stage's current
-    # output fingerprint, written BEFORE any commit and removed after
-    # the last (components). A crash anywhere between leaves the marker
-    # for _recover_pending to act on at the next entry.
+    # the increment's identity, recorded as every commit's input key
     in_fp = stage_fingerprint(new_transcripts)
-    marker = Path(str(ckpt.root)) / _PENDING_MARKER
-    # tmp-then-fsync-then-rename: the marker must be durably complete
-    # before any commit — recovery's "torn marker ⇒ zero commits"
-    # inference relies on it. Without the fsync, delayed allocation can
-    # persist the rename before the contents, and a power loss would
-    # leave a garbage marker AFTER stage commits reached disk.
-    write_json_atomic(
-        marker,
-        {
-            "in_fp": in_fp,
-            "started_at_unix": int(time.time()),
-            "stage_fps": {
-                s: (ckpt.read_manifest(s) or {}).get("output_fingerprint")
-                for s in _STAGES
-            },
-        },
-    )
-    _mark("wal")
-
     old_sigs = ckpt.load(spark, "signatures")
     old_blocks = ckpt.load(spark, "blocks")
     old_pairs = ckpt.load(spark, "candidate_pairs")
-    old_scores = ckpt.load(spark, "scores")
     # captured BEFORE the scores commit replaces the manifest: decides
     # whether the historical edge set is reusable for incremental CC
     old_scores_meta = ckpt.read_manifest("scores")
@@ -438,216 +269,183 @@ def incremental_update(
         _mark("blocking")
 
         # ---- scoring + commit ----------------------------------------------
-        import shutil
-
-        staging = Path(str(ckpt.root)) / "_incr_staging"
         score_extra = {
             "score_kernel": cfg.scoring.score_kernel,
             "threshold": cfg.scoring.threshold,
             "scoring_config": scoring_now,
             "rescore_all": bool(rescore_all),
         }
-        if rescore_all:
-            # full-rewrite path: every pair is rescored under the updated
-            # df-map, so every stage is a full overwrite. Stage the unions
-            # to scratch BEFORE touching the checkpoint: the union plans
-            # still READ the current stage files, and ckpt.write archives
-            # (renames) those files before writing — a direct write would
-            # pull its own input out from under itself.
-            with udf_stage_parallelism(spark):
-                scores_all = score_pairs(spark, pairs_all, all_sigs, cfg.scoring)
-                shutil.rmtree(staging, ignore_errors=True)
-
-                def _stage(name: str, df: DataFrame) -> DataFrame:
-                    p = str(staging / name)
-                    df.write.parquet(p)
-                    _mark(f"stage_{name}")
-                    return spark.read.parquet(p)
-
-                all_sigs = _stage("signatures", all_sigs)
-                blocks_all = _stage("blocks", blocks_all)
-                pairs_all = _stage("candidate_pairs", pairs_all)
-                # the scores staging write is where the scoring kernels (and
-                # the df-map build over the updated corpus) actually EXECUTE
-                scores_all = _stage("scores", scores_all)
-
-                sigs = ckpt.write(
-                    "signatures",
-                    all_sigs,
+        # the five stage commits below become visible in ONE head swap at
+        # the end of this block; an exception anywhere inside leaves the
+        # pre-increment head in place
+        with ckpt.commit():
+            if rescore_all:
+                # full-rewrite path: every pair is rescored under the
+                # updated df-map, so every stage is a full rewrite. Each
+                # write goes to a new version directory, so the union
+                # plans keep reading the versions they were built on.
+                with udf_stage_parallelism(spark):
+                    scores_all = score_pairs(spark, pairs_all, all_sigs, cfg.scoring)
+                    sigs = ckpt.write(
+                        "signatures",
+                        all_sigs,
+                        input_fingerprint=f"incr:{in_fp}",
+                        bucket_by="conv_id" if cfg.bucket_signatures else None,
+                        n_buckets=cfg.bucket_signatures or 32,
+                    )
+                    _mark("commit_signatures")
+                    blocks = ckpt.write(
+                        "blocks",
+                        blocks_all,
+                        input_fingerprint=f"incr:{in_fp}",
+                        extra={"blocking_config": blocking_now},
+                    )
+                    _mark("commit_blocks")
+                    pairs = ckpt.write(
+                        "candidate_pairs", pairs_all, input_fingerprint=f"incr:{in_fp}"
+                    )
+                    _mark("commit_candidate_pairs")
+                    # the scores write is where the scoring kernels (and the
+                    # df-map build over the updated corpus) actually EXECUTE
+                    scores = ckpt.write(
+                        "scores",
+                        scores_all,
+                        input_fingerprint=f"incr:{in_fp}",
+                        extra=score_extra,
+                    )
+                    _mark("commit_scores")
+            else:
+                # fast-append path (the default, and the 100 TB shape): each
+                # stage commits ONLY the increment's rows as new files —
+                # O(increment) bytes written per commit, history untouched.
+                #
+                # Commit order (leaf-first) is kept for the expect_rows
+                # guards: each stage is committed before any stage its
+                # increment's lineage reads, so a persisted increment that
+                # re-evaluated at write time would fail its row-count check
+                # instead of landing silently:
+                #   scores          (reads signatures + new_pairs)   first,
+                #   candidate_pairs (reads blocks/pairs/signatures)  second,
+                #   blocks          (reads signatures via new_sigs)  third,
+                #   signatures      (reads the signatures stage)     last.
+                with udf_stage_parallelism(spark):
+                    new_scores = score_pairs(spark, new_pairs, all_sigs, cfg.scoring)
+                    scores = ckpt.append(
+                        "scores",
+                        new_scores,
+                        input_fingerprint=f"incr:{in_fp}",
+                        extra=score_extra,
+                        expect_rows=stats["n_new_pairs"],
+                    )
+                    _mark("commit_scores")
+                pairs = ckpt.append(
+                    "candidate_pairs",
+                    new_pairs,
                     input_fingerprint=f"incr:{in_fp}",
-                    bucket_by="conv_id" if cfg.bucket_signatures else None,
-                    n_buckets=cfg.bucket_signatures or 32,
-                )
-                _mark("commit_signatures")
-                blocks = ckpt.write(
-                    "blocks",
-                    blocks_all,
-                    input_fingerprint=f"incr:{in_fp}",
-                    extra={"blocking_config": blocking_now},
-                )
-                _mark("commit_blocks")
-            pairs = ckpt.write(
-                "candidate_pairs", pairs_all, input_fingerprint=f"incr:{in_fp}"
-            )
-            _mark("commit_candidate_pairs")
-            scores = ckpt.write(
-                "scores",
-                scores_all,
-                input_fingerprint=f"incr:{in_fp}",
-                extra=score_extra,
-            )
-            _mark("commit_scores")
-        else:
-            # fast-append path (the default, and the 100 TB shape): each
-            # stage commits ONLY the increment's rows as new files —
-            # O(increment) bytes written per commit, history untouched,
-            # rollback-able (ckpt.append archives manifest + file listing).
-            #
-            # COMMIT ORDER IS LOAD-BEARING (leaf-first): every parquet/table
-            # append fires Spark's refreshByPath / table-cache invalidation,
-            # which RE-COMPILES any cached DataFrame whose lineage reads the
-            # mutated stage — the persisted new_sigs/new_blocks/new_pairs
-            # would silently re-evaluate against the already-appended stage
-            # (the redelivery anti-join then yields EMPTY increments). So
-            # each stage is committed strictly before any stage its
-            # increment's lineage reads is mutated:
-            #   scores          (reads signatures + new_pairs)   first,
-            #   candidate_pairs (reads blocks/pairs/signatures)  second,
-            #   blocks          (reads signatures via new_sigs)  third,
-            #   signatures      (reads the signatures stage)     last.
-            # Leaf-first means the redelivery-dedup stages (signatures,
-            # candidate_pairs) commit AFTER the stages keyed off them — a
-            # crash mid-sequence would double-apply the increment on
-            # redelivery if the partial commit survived. It does not: the
-            # WAL marker + _recover_pending roll the partial commit back
-            # before the redelivered batch is processed.
-            with udf_stage_parallelism(spark):
-                new_scores = score_pairs(spark, new_pairs, all_sigs, cfg.scoring)
-                scores = ckpt.append(
-                    "scores",
-                    new_scores,
-                    input_fingerprint=f"incr:{in_fp}",
-                    extra=score_extra,
                     expect_rows=stats["n_new_pairs"],
                 )
-                _mark("commit_scores")
-            pairs = ckpt.append(
-                "candidate_pairs",
-                new_pairs,
-                input_fingerprint=f"incr:{in_fp}",
-                expect_rows=stats["n_new_pairs"],
-            )
-            _mark("commit_candidate_pairs")
-            with udf_stage_parallelism(spark):
-                n_new_blocks = new_blocks.count()  # cached; cheap
-                blocks = ckpt.append(
-                    "blocks",
-                    new_blocks,
-                    input_fingerprint=f"incr:{in_fp}",
-                    expect_rows=n_new_blocks,
-                    extra={"blocking_config": blocking_now},
-                )
-                _mark("commit_blocks")
-                sigs = ckpt.append(
-                    "signatures",
-                    new_sigs,
-                    input_fingerprint=f"incr:{in_fp}",
-                    expect_rows=n_new,
-                )
-                _mark("commit_signatures")
+                _mark("commit_candidate_pairs")
+                with udf_stage_parallelism(spark):
+                    n_new_blocks = new_blocks.count()  # cached; cheap
+                    blocks = ckpt.append(
+                        "blocks",
+                        new_blocks,
+                        input_fingerprint=f"incr:{in_fp}",
+                        expect_rows=n_new_blocks,
+                        extra={"blocking_config": blocking_now},
+                    )
+                    _mark("commit_blocks")
+                    sigs = ckpt.append(
+                        "signatures",
+                        new_sigs,
+                        input_fingerprint=f"incr:{in_fp}",
+                        expect_rows=n_new,
+                    )
+                    _mark("commit_signatures")
 
-        # ---- clustering -----------------------------------------------------
-        # Default path: CONTRACTION — old components become supernodes and
-        # CC runs only over the increment's edges (O(increment), identical
-        # output to a full run because old edges are unchanged and labels
-        # are min-composable; see operators/clustering.py). Inputs come
-        # from the appended FILES (not the persisted increment plans, whose
-        # caches the appends above may have invalidated-and-recompiled
-        # against the mutated stages) plus the not-yet-touched components
-        # stage. Falls back to full CC when the historical edge set is not
-        # reusable: rescore_all, or a changed threshold/kernel.
-        # the threshold is compared against the COMPONENTS manifest — the
-        # stage the threshold actually shaped — never the scores manifest:
-        # a batch threshold retune cache-HITs scores (their extras keep the
-        # original threshold) while rebuilding components at the new one, so
-        # the scores-side record goes stale exactly when it matters. A
-        # pre-upgrade components manifest (no threshold recorded) fails the
-        # comparison and self-heals via one full CC.
-        same_operating_point = (
-            old_scores_meta is not None
-            and old_comps_meta is not None
-            and old_comps_meta.get("threshold") == cfg.scoring.threshold
-            and old_scores_meta.get("score_kernel") == cfg.scoring.score_kernel
-        )
-        # staleness guard: incremental CC is only sound if the stored
-        # components actually reflect the PRE-append scores state. The batch
-        # pipeline keys the components stage on the scores output fingerprint
-        # (input_fingerprint); incremental commits record it explicitly
-        # (scores_fingerprint). A break in that linkage (older-format
-        # checkpoint, manual stage surgery) self-heals via one full CC.
-        comps_linked = (
-            old_comps_meta is not None
-            and old_scores_meta is not None
-            and (
-                old_comps_meta.get("scores_fingerprint")
-                or old_comps_meta.get("input_fingerprint")
+            # ---- clustering -------------------------------------------------
+            # Default path: CONTRACTION — old components become supernodes
+            # and CC runs only over the increment's edges (O(increment),
+            # identical output to a full run because old edges are unchanged
+            # and labels are min-composable; see operators/clustering.py).
+            # Inputs come from the appended FILES of the pending versions plus
+            # the not-yet-touched components stage. Falls back to full CC
+            # when the historical edge set is not reusable: rescore_all, or a
+            # changed threshold/kernel.
+            # the threshold is compared against the COMPONENTS manifest — the
+            # stage the threshold actually shaped — never the scores manifest:
+            # a batch threshold retune cache-HITs scores (their extras keep the
+            # original threshold) while rebuilding components at the new one,
+            # so the scores-side record goes stale exactly when it matters. A
+            # pre-upgrade components manifest (no threshold recorded) fails
+            # the comparison and self-heals via one full CC.
+            same_operating_point = (
+                old_scores_meta is not None
+                and old_comps_meta is not None
+                and old_comps_meta.get("threshold") == cfg.scoring.threshold
+                and old_scores_meta.get("score_kernel") == cfg.scoring.score_kernel
             )
-            == old_scores_meta.get("output_fingerprint")
-        )
-        if rescore_all or not same_operating_point or not comps_linked:
-            stats["components_mode"] = "full"
-            stats["components_full_reason"] = (
-                "rescore_all"
-                if rescore_all
-                else (
-                    "operating_point_changed"
-                    if not same_operating_point
-                    else "components_scores_linkage_broken"
+            # staleness guard: incremental CC is only sound if the stored
+            # components actually reflect the PRE-append scores state. The
+            # batch pipeline keys the components stage on the scores output
+            # fingerprint (input_fingerprint); incremental commits record it
+            # explicitly (scores_fingerprint). A break in that linkage
+            # (older-format checkpoint, manual stage surgery) self-heals via
+            # one full CC.
+            comps_linked = (
+                old_comps_meta is not None
+                and old_scores_meta is not None
+                and (
+                    old_comps_meta.get("scores_fingerprint")
+                    or old_comps_meta.get("input_fingerprint")
                 )
+                == old_scores_meta.get("output_fingerprint")
             )
-            comps_df = components(
-                sigs.select("conv_id"),
-                edges_from_scores(scores, cfg.scoring.threshold),
+            if rescore_all or not same_operating_point or not comps_linked:
+                stats["components_mode"] = "full"
+                stats["components_full_reason"] = (
+                    "rescore_all"
+                    if rescore_all
+                    else (
+                        "operating_point_changed"
+                        if not same_operating_point
+                        else "components_scores_linkage_broken"
+                    )
+                )
+                comps_df = components(
+                    sigs.select("conv_id"),
+                    edges_from_scores(scores, cfg.scoring.threshold),
+                )
+            else:
+                stats["components_mode"] = "incremental"
+                comps_df = incremental_components(
+                    ckpt.load(spark, "components"),
+                    ckpt.load_appended(spark, "signatures").select("conv_id"),
+                    edges_from_scores(
+                        ckpt.load_appended(spark, "scores"), cfg.scoring.threshold
+                    ),
+                )
+            comps = ckpt.write(
+                "components",
+                comps_df,
+                input_fingerprint=f"incr:{in_fp}",
+                # linkage for the NEXT increment's staleness guard: the
+                # scores state (post-commit, read from the pending version)
+                # these components were derived from, and the threshold they
+                # were built at (the operating-point check reads it from
+                # here — see same_operating_point above)
+                extra={
+                    "scores_fingerprint": ckpt.read_manifest("scores")[
+                        "output_fingerprint"
+                    ],
+                    "threshold": cfg.scoring.threshold,
+                },
             )
-        else:
-            stats["components_mode"] = "incremental"
-            old_comps = ckpt.load(spark, "components")
-            comps_df = incremental_components(
-                old_comps,
-                ckpt.load_appended(spark, "signatures").select("conv_id"),
-                edges_from_scores(
-                    ckpt.load_appended(spark, "scores"), cfg.scoring.threshold
-                ),
-            # materialize BEFORE ckpt.write archives (renames) the current
-            # components files this plan reads — same self-read hazard as
-            # the rescore staging
-            ).localCheckpoint(eager=True)
-        comps = ckpt.write(
-            "components",
-            comps_df,
-            input_fingerprint=f"incr:{in_fp}",
-            # linkage for the NEXT increment's staleness guard: the scores
-            # state (post-commit) these components were derived from, and
-            # the threshold they were built at (the operating-point check
-            # reads it from here — see same_operating_point above)
-            extra={
-                "scores_fingerprint": ckpt.read_manifest("scores")[
-                    "output_fingerprint"
-                ],
-                "threshold": cfg.scoring.threshold,
-            },
-        )
-        # the increment is fully committed — clear the WAL marker (retention
-        # below may expire the pre-commit snapshots recovery would have used)
-        marker.unlink(missing_ok=True)
         _mark("components")
         # persisted increment handles are released by the enclosing finally
         # (success AND failure paths — a retried failed increment must not
-        # pin cached copies in executor storage)
-        shutil.rmtree(staging, ignore_errors=True)
-        # maintenance runs AFTER the WAL marker is cleared: a crash in
-        # here cannot be mistaken for a crashed increment (compaction is
-        # fingerprint-preserving, so recovery sees nothing to roll back)
+        # pin cached copies in executor storage). Maintenance runs after
+        # the commit; each compaction is its own content-preserving commit.
         if cfg.compact_above_files is not None:
             compactions = {}
             # Stages FULLY REWRITTEN this increment are exempt: their next
@@ -657,10 +455,8 @@ def incremental_update(
             # more than compact_above_files part files (shuffle_partitions >
             # bound), EVERY increment would pay that tax. components is
             # rewritten every increment; under rescore_all, all stages are.
-            rewritten = (
-                set(_STAGES) if rescore_all else {"components"}
-            )
-            for stage in _STAGES:
+            rewritten = set(STAGES) if rescore_all else {"components"}
+            for stage in STAGES:
                 if stage in rewritten:
                     continue
                 if len(ckpt._data_files(stage)) > cfg.compact_above_files:
@@ -672,25 +468,22 @@ def incremental_update(
                         compactions[stage] = res
             if compactions:
                 stats["compactions"] = compactions
-                # the stage handles resolved above hold pre-compaction
-                # file listings; re-load any compacted stage so the
-                # returned plans (and the stats counts below) read the
-                # live files
+                # the stage handles resolved above read the pre-compaction
+                # versions, which retention may expire; re-load any
+                # compacted stage so the returned plans read the live one
                 if "signatures" in compactions:
                     sigs = ckpt.load(spark, "signatures")
                 if "candidate_pairs" in compactions:
                     pairs = ckpt.load(spark, "candidate_pairs")
                 if "scores" in compactions:
                     scores = ckpt.load(spark, "scores")
-                if "components" in compactions:
-                    comps = ckpt.load(spark, "components")
         keep = (
             cfg.expire_keep_last
             if expire_keep_last is _RETENTION_FROM_CFG
             else expire_keep_last
         )
         if keep is not None:
-            for stage in _STAGES:
+            for stage in STAGES:
                 ckpt.expire_snapshots(stage, keep_last=keep)
         _mark("retention")
 

@@ -38,15 +38,6 @@ from ..sources.checkpoint import StageCheckpoint, stage_fingerprint
 
 STAGES = ["signatures", "blocks", "candidate_pairs", "scores", "components"]
 
-#: WAL marker an incremental_update leaves while its multi-stage commit
-#: is in flight (see plans/incremental.py). A COMPLETED batch run
-#: supersedes any pending increment — run_pipeline clears a stale
-#: marker on success so the prescribed recovery remediation ("re-run
-#: run_pipeline") cannot leave a marker that would make the next
-#: incremental_update roll the fresh rebuild back to pre-crash
-#: snapshots.
-PENDING_MARKER_NAME = "_incr_pending.json"
-
 
 def _output_fp(ckpt: StageCheckpoint, stage: str, df: DataFrame) -> str:
     """Output fingerprint of a completed stage: fast path reads the
@@ -70,10 +61,11 @@ class PipelineConfig:
     #: plain parquet. Size to the scoring shuffle parallelism.
     bucket_signatures: int | None = None
     #: snapshot retention for BATCH runs: after a completed run, keep at
-    #: most this many archived versions per stage. Every stage overwrite
-    #: archives a corpus-sized full snapshot (rename, no copy) — without
-    #: retention, daily rebuilds grow the checkpoint dir by O(corpus)
-    #: per run forever. ``None`` keeps everything (scratch/debug).
+    #: most this many retained versions per stage (and sweep the orphan
+    #: versions of crashed writes). Every stage rewrite is a new
+    #: corpus-sized version — without retention, daily rebuilds grow the
+    #: checkpoint dir by O(corpus) per run forever. ``None`` keeps
+    #: everything (scratch/debug).
     expire_keep_last: int | None = 3
     #: small-file maintenance for the INCREMENTAL path: after each
     #: committed increment, any stage whose data-file count exceeds this
@@ -286,10 +278,6 @@ def run_pipeline(
     stats["n_signatures"] = ckpt.read_manifest("signatures")["rows"]
     stats["n_candidate_pairs"] = ckpt.read_manifest("candidate_pairs")["rows"]
     stats["n_components"] = comps.select("component_id").distinct().count()
-    # a completed batch run supersedes any in-flight increment: clear a
-    # stale WAL marker so it cannot trigger a bogus rollback of this
-    # rebuild at the next incremental_update
-    (Path(cfg.checkpoint_dir) / PENDING_MARKER_NAME).unlink(missing_ok=True)
     if cfg.expire_keep_last is not None:
         for stage in STAGES:
             ckpt.expire_snapshots(stage, keep_last=cfg.expire_keep_last)

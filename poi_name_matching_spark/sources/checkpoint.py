@@ -1,42 +1,56 @@
-"""Stage checkpoints: parquet data + `_manifest.json` lineage/metrics.
+"""Stage checkpoints: immutable stage versions behind one head pointer.
 
 FIXTURES.md §6 layout:
 
-    out/<stage>/data.parquet
-    out/<stage>/_manifest.json   {stage, seed/input_fingerprint,
-                                  partitions: [{id, rows}], rows, wall_ms}
+    out/_head.json                     {<stage>: {live, versions, last}}
+    out/<stage>/v<N>/data.parquet/
+    out/<stage>/v<N>/_manifest.json    {stage, input_fingerprint,
+                                        output_fingerprint, rows,
+                                        partitions: [{id, rows}], wall_ms}
 
 Resumability contract (north rule): rerunning the pipeline skips any stage
 whose manifest exists AND whose recorded ``input_fingerprint`` matches the
 fingerprint of the current inputs; deleting one stage directory recomputes
 that stage and everything downstream, nothing upstream.
 
-At 100 TB the same structure maps onto Iceberg snapshots (manifest ≙
-snapshot summary + partition stats); the JSON file keeps the sandbox
-dependency-free while exercising identical control flow.
+Commit protocol (the Iceberg metadata-pointer commit): every ``write``,
+``append`` and ``compact`` creates a NEW version directory and never
+touches an existing one. ``_head.json`` names each stage's live version
+plus its retained committed versions (most recently replaced last), and
+is only ever replaced whole with ``write_json_atomic``. A version is
+committed exactly when the head names it, so a crash at any point before
+the head swap leaves the previous head valid plus an orphan directory
+that ``expire_snapshots`` sweeps — a restart needs no repair step. The
+head stores version numbers, never paths, so a copied checkpoint
+directory is a working checkpoint. Version numbers are never reused
+(``last`` records the highest one allocated or swept).
 
-Snapshots (Iceberg time-travel analog): overwriting a stage ARCHIVES
-the previous version by rename into ``<stage>/_snapshots/v<N>/`` —
-cheap (no data copy) and it makes stage overwrite non-destructive: a
-crash mid-write leaves no current manifest (stage recomputes) while
-every previous version survives. ``history`` lists versions,
-``rollback`` restores one, ``expire_snapshots`` prunes — the same
-operations Iceberg exposes as snapshot metadata / rollback / expire.
+``commit()`` groups several stage commits into ONE head swap (the
+incremental path's five-stage commit); outside it each call swaps the
+head for its own stage right away, which keeps the batch resume
+contract (a crash after ``signatures`` keeps ``signatures``).
 
-Fast append (Iceberg ``fast_append`` analog): ``append`` commits ONLY
-the new rows as additional parquet files in the stage directory —
-no rewrite of history, O(increment) instead of O(corpus) per commit.
-The archived snapshot for an append holds the pre-append manifest
-plus the pre-append FILE LISTING (``_files.json``) instead of moved
-data; rolling back an append deletes exactly the files later commits
-added. The output fingerprint composes exactly (xor of row hashes /
-sum of counts), so resume keys stay consistent with a full rescan.
+Snapshots (Iceberg time-travel analog): ``history`` lists the retained
+versions, ``load_snapshot`` reads one, ``rollback`` points the head back
+at one (undoable: the replaced live version is retained), and
+``expire_snapshots`` trims the retained list and deletes every version
+directory the head does not name.
+
+Fast append (Iceberg ``fast_append`` analog): ``append``'s new version
+hard-links the live version's data files and writes ONLY the new rows
+next to them — O(increment) bytes per commit, and every version stays one
+self-contained directory. The output fingerprint composes exactly (xor of
+row hashes / sum of counts), so resume keys stay consistent with a full
+rescan.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import time
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,14 +58,11 @@ from pyspark.sql import functions as F
 
 
 def write_json_atomic(path: Path, payload: dict) -> None:
-    """Write a small JSON marker durably-complete-or-absent: tmp file,
+    """Write a small JSON file durably-complete-or-absent: tmp file,
     fsync the contents, rename into place, fsync the directory (makes
-    the rename itself durable). Crash-recovery inferences of the form
-    "torn marker ⇒ the fenced work never started" are only sound with
-    this ordering — without the fsync, delayed allocation can persist
-    the rename before the contents."""
-    import os
-
+    the rename itself durable). Without the fsync, delayed allocation
+    can persist the rename before the contents — a head swap must never
+    be observable torn."""
     tmp = path.with_name(path.name + ".tmp")
     with open(tmp, "w") as f:
         f.write(json.dumps(payload, indent=2))
@@ -98,9 +109,9 @@ def _scan_partition_stats(df: DataFrame) -> tuple[list, int, int]:
     visibility for the manifest) plus the driver-side xor-fold of the
     per-partition ``xxhash64`` hashes, wrapped to signed 64-bit so the
     result formats identically to ``stage_fingerprint``. Shared by
-    ``write`` and ``append`` — the 'composed fingerprint == full rescan'
-    contract depends on every caller using the same scan and wrap rule.
-    Returns ``(part_rows, n, h)``."""
+    ``write``, ``append`` and ``compact`` — the 'composed fingerprint ==
+    full rescan' contract depends on every caller using the same scan
+    and wrap rule. Returns ``(part_rows, n, h)``."""
     part_rows = (
         df.withColumn("_pid", F.spark_partition_id())
         .groupBy("_pid")
@@ -134,24 +145,132 @@ def _fp_combine(a: str, b: str) -> str:
     return _fp_format(na + nb, h)
 
 
+def _partitions(part_rows, base: int = 0) -> list[dict]:
+    return sorted(
+        [{"id": base + int(r["_pid"]), "rows": int(r["count"])} for r in part_rows],
+        key=lambda d: d["id"],
+    )
+
+
+def _part_files(path: Path) -> list[str]:
+    """Names of the data files in one version's parquet directory
+    (metadata/hidden/marker files excluded)."""
+    if not path.exists():
+        return []
+    return sorted(
+        p.name for p in path.iterdir() if p.is_file() and p.name.startswith("part-")
+    )
+
+
 class StageCheckpoint:
-    """Directory-per-stage checkpoint manager."""
+    """Versioned stage store: one directory per stage version, one head."""
 
     def __init__(self, root: str | Path):
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
+        #: head entries staged by an open ``commit()`` (None outside one)
+        self._pending: dict | None = None
+
+    # ------------------------------------------------------------------
+    # head pointer
+    # ------------------------------------------------------------------
+
+    def _head_path(self) -> Path:
+        return self.root / "_head.json"
+
+    def _entry(self, stage: str) -> dict:
+        """The stage's head entry, as an open ``commit()`` will leave it."""
+        e = (self._pending or {}).get(stage)
+        if e is None:
+            p = self._head_path()
+            e = json.loads(p.read_text()).get(stage) if p.exists() else None
+        return e or {"live": None, "versions": [], "last": 0}
+
+    def _swap(self, updates: dict) -> None:
+        """Replace the head entries of ``updates``' stages — deferred to
+        the end of an open ``commit()``, else one atomic head write."""
+        if self._pending is not None:
+            self._pending.update(updates)
+            return
+        p = self._head_path()
+        head = json.loads(p.read_text()) if p.exists() else {}
+        write_json_atomic(p, {**head, **updates})
+
+    @contextmanager
+    def commit(self):
+        """Group every stage commit made inside the block into ONE head
+        swap at exit. Inside the block, ``read_manifest``, ``load`` and
+        ``load_appended`` already resolve the pending versions; an
+        exception leaves the head untouched (the pending versions become
+        orphans for ``expire_snapshots``). Not reentrant; do not expire
+        inside the block."""
+        self._pending = {}
+        try:
+            yield self
+            pending = self._pending
+        finally:
+            self._pending = None
+        if pending:
+            self._swap(pending)
+
+    def _new_version(self, stage: str) -> int:
+        """Allocate and create the next (never reused) version directory."""
+        v = 1 + max([self._entry(stage)["last"], *self._version_dirs(stage)])
+        self._version_dir(stage, v).mkdir(parents=True)
+        return v
+
+    def _commit(self, stage: str, v: int, manifest: dict) -> None:
+        """Write version ``v``'s manifest, then make it the live version
+        (the replaced live version joins the retained list)."""
+        write_json_atomic(self._version_dir(stage, v) / "_manifest.json", manifest)
+        e = self._entry(stage)
+        retained = e["versions"] + ([e["live"]] if e["live"] is not None else [])
+        self._swap(
+            {stage: {"live": v, "versions": retained, "last": max(e["last"], v)}}
+        )
+
+    # ------------------------------------------------------------------
+    # layout
+    # ------------------------------------------------------------------
 
     def _dir(self, stage: str) -> Path:
         return self.root / stage
 
+    def _version_dir(self, stage: str, v: int) -> Path:
+        return self._dir(stage) / f"v{v}"
+
+    def _version_dirs(self, stage: str) -> list[int]:
+        d = self._dir(stage)
+        if not d.exists():
+            return []
+        return sorted(
+            int(p.name[1:])
+            for p in d.iterdir()
+            if p.is_dir() and p.name.startswith("v") and p.name[1:].isdigit()
+        )
+
+    def _data_path(self, stage: str, v: int | None = None) -> Path:
+        if v is None:
+            v = self._entry(stage)["live"]
+            if v is None:
+                raise FileNotFoundError(f"stage {stage!r} has no committed version")
+        return self._version_dir(stage, v) / "data.parquet"
+
+    def _data_files(self, stage: str) -> list[str]:
+        """Names of the data files making up the live version."""
+        return _part_files(self._data_path(stage))
+
     def manifest_path(self, stage: str) -> Path:
-        return self._dir(stage) / "_manifest.json"
+        return self._data_path(stage).parent / "_manifest.json"
+
+    def _manifest(self, stage: str, v: int | None) -> dict | None:
+        p = None if v is None else self._version_dir(stage, v) / "_manifest.json"
+        return json.loads(p.read_text()) if p is not None and p.exists() else None
 
     def read_manifest(self, stage: str) -> dict | None:
-        p = self.manifest_path(stage)
-        if not p.exists():
-            return None
-        return json.loads(p.read_text())
+        """The live version's manifest; ``None`` when the head names no
+        version of ``stage`` or names one whose directory is gone."""
+        return self._manifest(stage, self._entry(stage)["live"])
 
     def is_complete(self, stage: str, input_fingerprint: str | None = None) -> bool:
         m = self.read_manifest(stage)
@@ -161,666 +280,128 @@ class StageCheckpoint:
             return False
         return True
 
-    def _table_name(self, stage: str) -> str:
+    def _table_name(self, stage: str, v: int) -> str:
         import hashlib
         import re
 
         # slug for readability + absolute-path hash for collision proofing:
         # the slug alone collapses 'out-a' and 'out_a' to one name, and a
         # stale catalog table whose bucket metadata no longer matches the
-        # files would silently mis-join (Spark trusts bucket metadata)
+        # files would silently mis-join (Spark trusts bucket metadata).
+        # One table per version: a version's files never change, so its
+        # table's cached listing never goes stale.
         root = str(self.root.resolve())
         slug = re.sub(r"[^A-Za-z0-9_]", "_", root).strip("_").lower()[-48:]
         tag = hashlib.sha256(root.encode()).hexdigest()[:8]
-        return f"ckpt_{slug}_{tag}_{stage}"
+        return f"ckpt_{slug}_{tag}_{stage}_v{v}"
+
+    def _bucketed_table(
+        self, spark: SparkSession, stage: str, v: int, bucket_by: str, n_buckets: int
+    ) -> str:
+        """Register version ``v`` of a bucketed stage as a catalog table
+        unless this session already has it. saveAsTable registers only in
+        the writing session's (in-memory) catalog; a fresh process must
+        re-register from the manifest so the resume contract survives
+        restarts WITH the bucket metadata intact (plain read.parquet
+        would lose the Exchange elision)."""
+        table = self._table_name(stage, v)
+        if not spark.catalog.tableExists(table):
+            path = self._data_path(stage, v)
+            schema_ddl = spark.read.parquet(str(path)).schema.toDDL()
+            spark.sql(
+                f"CREATE TABLE {table} ({schema_ddl}) USING parquet "
+                f"CLUSTERED BY ({bucket_by}) SORTED BY ({bucket_by}) "
+                f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+            )
+        return table
 
     def load(self, spark: SparkSession, stage: str) -> DataFrame:
-        m = self.read_manifest(stage) or {}
-        path = self._dir(stage) / "data.parquet"
+        v = self._entry(stage)["live"]
+        path = self._data_path(stage, v)
+        m = self._manifest(stage, v) or {}
         if m.get("bucket_by"):
-            table = self._table_name(stage)
-            if not spark.catalog.tableExists(table):
-                # saveAsTable registered the table in the writing
-                # session's catalog only (in-memory catalog by default);
-                # a fresh process must re-register it from the manifest
-                # so the resume contract survives restarts WITH the
-                # bucket metadata intact (plain read.parquet would lose
-                # the Exchange elision)
-                schema_ddl = spark.read.parquet(str(path)).schema.toDDL()
-                bucket_by = m["bucket_by"]
-                n_buckets = int(m.get("n_buckets", 32))
-                spark.sql(
-                    f"CREATE TABLE {table} ({schema_ddl}) USING parquet "
-                    f"CLUSTERED BY ({bucket_by}) SORTED BY ({bucket_by}) "
-                    f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+            return spark.table(
+                self._bucketed_table(
+                    spark, stage, v, m["bucket_by"], int(m.get("n_buckets", 32))
                 )
-            return spark.table(table)
+            )
         return spark.read.parquet(str(path))
 
     # ------------------------------------------------------------------
     # snapshots — Iceberg time-travel/rollback/expire analog
     # ------------------------------------------------------------------
 
-    def _snapshots_dir(self, stage: str) -> Path:
-        return self._dir(stage) / "_snapshots"
-
     def snapshot_versions(self, stage: str) -> list[int]:
-        d = self._snapshots_dir(stage)
-        if not d.exists():
-            return []
-        return sorted(
-            int(p.name[1:])
-            for p in d.iterdir()
-            if p.is_dir() and p.name.startswith("v") and p.name[1:].isdigit()
-        )
-
-    def latest_snapshot(self, stage: str) -> int | None:
-        """Newest COMPLETE snapshot version of ``stage`` (``None`` if the
-        stage has none) — what crash recovery rolls back to."""
-        for v in reversed(self.snapshot_versions(stage)):
-            if self._snapshot_complete(stage, v):
-                return v
-        return None
-
-    def snapshot_by_fingerprint(self, stage: str, fp: str | None) -> int | None:
-        """Newest COMPLETE snapshot whose manifest records exactly this
-        ``output_fingerprint`` (``None`` if none). Crash recovery uses
-        this instead of ``latest_snapshot``: rolling back to "the newest
-        snapshot" restores whatever was archived LAST — which after an
-        interleaved batch rebuild can be the half-committed state being
-        recovered FROM, not the pre-increment state being recovered TO.
-        Matching on the recorded fingerprint restores the exact version
-        the caller means or nothing."""
-        if not fp:
-            return None
-        for v in reversed(self.snapshot_versions(stage)):
-            if not self._snapshot_complete(stage, v):
-                continue
-            p = self._snapshots_dir(stage) / f"v{v}" / "_manifest.json"
-            if json.loads(p.read_text()).get("output_fingerprint") == fp:
-                return v
-        return None
-
-    def _snapshot_complete(self, stage: str, version: int) -> bool:
-        d = self._snapshots_dir(stage) / f"v{version}"
-        if not (d / "_manifest.json").exists():
-            return False
-        # full-write snapshot (moved data) or append snapshot (file list)
-        return (d / "data.parquet").exists() or (d / "_files.json").exists()
+        """Retained committed versions of ``stage`` (the live one excluded)."""
+        return list(self._entry(stage)["versions"])
 
     def history(self, stage: str) -> list[dict]:
-        """Manifests of every COMPLETE archived version plus the current
-        one (current last), each tagged with its ``version`` (``None`` =
-        current) — Iceberg's snapshot-history listing. Manifest-only
-        slots (the archive crash window) are excluded: they have no
-        data to travel to."""
+        """Manifests of every retained version plus the live one (live
+        last), each tagged with its ``version`` (``None`` = live) —
+        Iceberg's snapshot-history listing."""
         out = []
         for v in self.snapshot_versions(stage):
-            if self._snapshot_complete(stage, v):
-                p = self._snapshots_dir(stage) / f"v{v}" / "_manifest.json"
-                out.append({"version": v, **json.loads(p.read_text())})
+            m = self._manifest(stage, v)
+            if m is not None:
+                out.append({"version": v, **m})
         cur = self.read_manifest(stage)
         if cur is not None:
             out.append({"version": None, **cur})
         return out
 
+    def _check_snapshot(self, stage: str, version: int) -> dict:
+        e = self._entry(stage)
+        if version not in e["versions"] or self._manifest(stage, version) is None:
+            raise FileNotFoundError(
+                f"stage {stage!r} has no complete snapshot v{version}; "
+                f"available: {e['versions']}"
+            )
+        return e
+
     def load_snapshot(
         self, spark: SparkSession, stage: str, version: int | None
     ) -> DataFrame:
         """Time-travel READ (Iceberg ``VERSION AS OF`` analog): the
-        stage's rows as of archived snapshot ``version``, without
-        mutating anything — unlike ``rollback``, the current version
-        stays current. ``None`` reads the current version (= ``load``).
-
-        Full snapshots read their own moved data files; append
-        snapshots read exactly the file listing they recorded, which
-        works only while every listed file is still live in the stage
-        directory (a later full rewrite or compaction moves them —
-        read the full snapshot that rewrite archived instead, same
-        rule ``rollback`` enforces). Bucketed stages time-travel as
-        plain parquet: bucket metadata describes the CURRENT catalog
-        table, so historical reads don't get the Exchange elision."""
+        stage's rows as of retained ``version``, without mutating
+        anything. ``None`` reads the live version (= ``load``). Bucketed
+        stages time-travel as plain parquet (no Exchange elision)."""
         if version is None:
             return self.load(spark, stage)
-        src = self._snapshots_dir(stage) / f"v{version}"
-        if not self._snapshot_complete(stage, version):
-            raise FileNotFoundError(
-                f"stage {stage!r} has no complete snapshot v{version}; "
-                "available: "
-                f"{[v for v in self.snapshot_versions(stage) if self._snapshot_complete(stage, v)]}"
-            )
-        if (src / "data.parquet").exists():
-            return spark.read.parquet(str(src / "data.parquet"))
-        listed = json.loads((src / "_files.json").read_text())
-        data_dir = self._dir(stage) / "data.parquet"
-        missing = [f for f in listed if not (data_dir / f).exists()]
-        if missing:
-            raise FileNotFoundError(
-                f"cannot time-travel stage {stage!r} to append snapshot "
-                f"v{version}: {len(missing)} of its data files were moved "
-                "by a later full rewrite — read that rewrite's full "
-                "snapshot instead"
-            )
-        if not listed:
-            # an append point with zero pre-existing files cannot occur
-            # (append requires a complete stage), but guard the
-            # zero-file read anyway
-            return self.load(spark, stage).limit(0)
-        return spark.read.parquet(*(str(data_dir / f) for f in listed))
+        self._check_snapshot(stage, version)
+        return spark.read.parquet(str(self._data_path(stage, version)))
 
-    def _archive_current(self, stage: str) -> int | None:
-        """Move the current version (data + manifest) into the next
-        ``_snapshots/v<N>`` slot. Rename-based: no data copy. The
-        MANIFEST moves first: a crash between the two renames then
-        leaves the stage with data but no manifest (``is_complete`` is
-        false → the stage recomputes, honoring the module contract)
-        instead of a manifest pointing at missing data that resume
-        would trust and ``load`` would crash on."""
-        if self.read_manifest(stage) is None:
-            return None
-        versions = self.snapshot_versions(stage)
-        v = (versions[-1] + 1) if versions else 1
-        dst = self._snapshots_dir(stage) / f"v{v}"
-        dst.mkdir(parents=True, exist_ok=True)
-        for name in ("_manifest.json", "data.parquet"):
-            src = self._dir(stage) / name
-            if src.exists():
-                src.rename(dst / name)
-        return v
-
-    def _data_files(self, stage: str) -> list[str]:
-        """Names of the data files currently making up the stage (flat
-        parquet layout; metadata/hidden/marker files excluded)."""
-        d = self._dir(stage) / "data.parquet"
-        if not d.exists():
-            return []
-        return sorted(
-            p.name
-            for p in d.iterdir()
-            if p.is_file() and p.name.startswith("part-")
-        )
-
-    def _archive_append_point(self, stage: str) -> int | None:
-        """Archive the CURRENT version as an append-style snapshot:
-        manifest moved + the current data-file listing recorded — no
-        data move (the files stay live in the stage directory; later
-        commits only ADD files). Manifest-first, same crash contract
-        as ``_archive_current``: a crash mid-append leaves the stage
-        manifest-less → it recomputes."""
-        m = self.read_manifest(stage)
-        if m is None:
-            return None
-        versions = self.snapshot_versions(stage)
-        v = (versions[-1] + 1) if versions else 1
-        dst = self._snapshots_dir(stage) / f"v{v}"
-        dst.mkdir(parents=True, exist_ok=True)
-        (dst / "_files.json").write_text(
-            json.dumps(self._data_files(stage))
-        )
-        self.manifest_path(stage).rename(dst / "_manifest.json")
-        return v
-
-    def heal_half_archive(
-        self,
-        stage: str,
-        spark: SparkSession | None = None,
-        expect_fp: str | None = None,
-    ) -> bool:
-        """Undo a half-completed ``_archive_current``: a crash between
-        its two renames leaves the stage manifest-less with its data
-        still in place and the manifest alone in a snapshot slot. Move
-        the manifest back so the current version is complete again (the
-        exact pre-crash state — nothing is lost). Returns True if a
-        heal was performed. Callers that find a manifest-less stage
-        should try this BEFORE rolling back or overwriting: rolling
-        back jumps to an older version, overwriting destroys the
-        still-intact previous data — healing restores the current one.
-
-        The in-place data must actually BE the version the stranded
-        manifest describes (a second crash mid-rewrite could have
-        replaced it with junk): structurally, an interrupted write
-        leaves a ``_temporary`` dir and no ``_SUCCESS`` marker, both
-        rejected here; when ``spark`` is passed the pairing is verified
-        exactly by recomputing the content fingerprint against the
-        manifest's recorded one before reuniting. Without ``spark``
-        only the NEWEST slot is considered (structure alone cannot
-        disambiguate); with it, all manifest-only slots are tried
-        newest-first — a crash inside ``rollback``'s restore strands
-        the manifest in a MID-list slot, which exact pairing still
-        identifies. ``expect_fp`` additionally requires the stranded
-        manifest (or, for a pre-upgrade fingerprint-less one, the
-        rescanned data) to carry that fingerprint — the compaction
-        heal passes its marker's."""
-        if self.read_manifest(stage) is not None:
-            return False
-        versions = self.snapshot_versions(stage)
-        if not versions:
-            return False
-        data = self._dir(stage) / "data.parquet"
-        if not data.exists():
-            return False
-        if (data / "_temporary").exists() or not (data / "_SUCCESS").exists():
-            return False  # interrupted rewrite debris, not the old data
-        actual: str | None = None  # lazy: one rescan shared by all slots
-        candidates = (
-            [versions[-1]] if spark is None else list(reversed(versions))
-        )
-        for v in candidates:
-            d = self._snapshots_dir(stage) / f"v{v}"
-            if not (
-                (d / "_manifest.json").exists()
-                and not (d / "data.parquet").exists()
-                and not (d / "_files.json").exists()
-            ):
-                continue
-            m = json.loads((d / "_manifest.json").read_text())
-            recorded = m.get("output_fingerprint")
-            if v != versions[-1] and recorded is None and expect_fp is None:
-                # a MID-list slot with no recorded fingerprint and no
-                # caller expectation cannot be verified at all — claiming
-                # it could pair the data with the wrong version's
-                # manifest; only the newest slot keeps the historical
-                # structural-trust behavior
-                continue
-            if (
-                expect_fp is not None
-                and recorded is not None
-                and recorded != expect_fp
-            ):
-                continue  # not the version the caller is restoring
-            if expect_fp is not None and recorded is None and spark is None:
-                # a fingerprint-less (pre-upgrade) stranded manifest
-                # cannot be checked against the caller's expectation
-                # without a rescan; healing it unverified could reunite
-                # the data with a wrong manifest — leave the slot for a
-                # later spark-ful heal (mirrors the full-snapshot
-                # branch's keep-the-marker conservatism)
-                continue
-            if spark is not None:
-                if actual is None:
-                    actual = stage_fingerprint(spark.read.parquet(str(data)))
-                if recorded is not None and actual != recorded:
-                    continue  # data is not the version this manifest describes
-                if (
-                    recorded is None
-                    and expect_fp is not None
-                    and actual != expect_fp
-                ):
-                    continue
-            (d / "_manifest.json").rename(self.manifest_path(stage))
-            d.rmdir()
-            return True
-        return False
-
-    def rollback(
-        self, stage: str, version: int, spark: SparkSession | None = None
-    ) -> None:
-        """Make snapshot ``version`` the current stage version. The
-        replaced current version is itself archived first (rollback is
-        undoable — Iceberg's rollback keeps the abandoned snapshot
-        reachable too). Pass ``spark`` when the stage was written
-        bucketed so the stale catalog-table registration is dropped and
-        ``load`` re-registers from the restored manifest.
-
-        Rolling back to an APPEND snapshot (``_files.json``) deletes
-        exactly the data files later commits added and restores the
-        archived manifest — possible only while every pre-append file
-        is still live (a full rewrite in between moves them; roll back
-        to that full snapshot instead). Unlike full-snapshot rollback,
-        this is DESTRUCTIVE for the rolled-off increments: their files
-        are removed (they cannot stay — ``load`` reads the whole stage
-        directory), so the abandoned version is not re-archived."""
-        src = self._snapshots_dir(stage) / f"v{version}"
-        if not self._snapshot_complete(stage, version):
-            raise FileNotFoundError(
-                f"stage {stage!r} has no complete snapshot v{version} "
-                "(manifest + data); available: "
-                f"{[v for v in self.snapshot_versions(stage) if self._snapshot_complete(stage, v)]}"
-            )
-        if (src / "data.parquet").exists():
-            # a manifest-less current version is crash debris from an
-            # interrupted commit: either a half-archive (manifest in the
-            # newest snapshot slot, data still here — reunite them so
-            # the archive below preserves the real previous version) or
-            # a partial rewrite after a COMPLETED archive (junk — the
-            # manifest-first archive ordering guarantees the authentic
-            # previous version is safe in a snapshot, so clear it; the
-            # restore rename below would otherwise hit ENOTEMPTY)
-            self.heal_half_archive(stage, spark=spark)
-            self._archive_current(stage)
-            leftover = self._dir(stage) / "data.parquet"
-            if leftover.exists() and self.read_manifest(stage) is None:
-                import shutil
-
-                shutil.rmtree(leftover)
-            for name in ("data.parquet", "_manifest.json"):
-                p = src / name
-                if p.exists():
-                    p.rename(self._dir(stage) / name)
-            src.rmdir()
-        else:
-            files_then = set(json.loads((src / "_files.json").read_text()))
-            files_now = set(self._data_files(stage))
-            missing = files_then - files_now
-            if missing:
-                raise FileNotFoundError(
-                    f"cannot roll back stage {stage!r} to append snapshot "
-                    f"v{version}: {len(missing)} of its data files were "
-                    "moved by a later full rewrite — roll back to a full "
-                    "snapshot instead"
-                )
-            data_dir = self._dir(stage) / "data.parquet"
-            for name in files_now - files_then:
-                (data_dir / name).unlink()
-                crc = data_dir / f".{name}.crc"
-                if crc.exists():
-                    crc.unlink()
-            (src / "_manifest.json").rename(self.manifest_path(stage))
-            (src / "_files.json").unlink()
-            src.rmdir()
-            # later append snapshots that referenced the deleted files
-            # are now unreachable — prune them rather than leave history
-            # entries rollback would fail on
-            import shutil
-
-            for v in self.snapshot_versions(stage):
-                if v <= version:
-                    continue
-                d = self._snapshots_dir(stage) / f"v{v}"
-                fl = d / "_files.json"
-                if fl.exists():
-                    listed = set(json.loads(fl.read_text()))
-                    if not listed <= files_then:
-                        shutil.rmtree(d)
-        # a COMPLETED rollback supersedes any pending-compaction claim
-        # (cleared only here, after every validation raise: a failed
-        # no-op call must not destroy a legitimately pending heal)
-        self._compact_marker(stage).unlink(missing_ok=True)
-        if spark is not None:
-            spark.sql(f"DROP TABLE IF EXISTS {self._table_name(stage)}")
-            # the session-shared FileStatusCache may still list the files
-            # this rollback deleted/renamed; a later read of the stage
-            # path would FAIL_READ_FILE on them without this
-            spark.catalog.refreshByPath(str(self._dir(stage) / "data.parquet"))
+    def rollback(self, stage: str, version: int) -> None:
+        """Point the head back at retained ``version``. Undoable: the
+        replaced live version joins the retained list (Iceberg's rollback
+        keeps the abandoned snapshot reachable too)."""
+        e = self._check_snapshot(stage, version)
+        retained = [v for v in e["versions"] if v != version] + [e["live"]]
+        self._swap({stage: {**e, "live": version, "versions": retained}})
 
     def expire_snapshots(self, stage: str, keep_last: int = 3) -> list[int]:
-        """Delete all but the newest ``keep_last`` snapshots (the current
-        version is never touched); returns the expired version numbers —
-        Iceberg's ``expireSnapshots`` retention maintenance."""
-        import shutil
-
-        versions = self.snapshot_versions(stage)
-        expired = versions[: max(0, len(versions) - max(0, int(keep_last)))]
-        for v in expired:
-            shutil.rmtree(self._snapshots_dir(stage) / f"v{v}")
+        """Keep only the newest ``keep_last`` retained versions, then
+        delete every version directory of ``stage`` the head does not
+        name — expired versions and the orphans of uncommitted writes
+        alike. The live version is never touched. Returns the expired
+        version numbers — Iceberg's ``expireSnapshots``. Call outside
+        ``commit()``."""
+        e = self._entry(stage)
+        n_expired = max(0, len(e["versions"]) - max(0, int(keep_last)))
+        expired, kept = e["versions"][:n_expired], e["versions"][n_expired:]
+        named = {e["live"], *kept}
+        doomed = [v for v in self._version_dirs(stage) if v not in named]
+        if expired or doomed:
+            # head first: a crash mid-sweep leaves only unnamed directories
+            self._swap(
+                {stage: {**e, "versions": kept, "last": max([e["last"], *doomed])}}
+            )
+        for v in doomed:
+            shutil.rmtree(self._version_dir(stage, v))
         return expired
 
-    def compact(
-        self,
-        spark: SparkSession,
-        stage: str,
-        target_file_bytes: int = 128 << 20,
-        min_files: int = 2,
-    ) -> dict:
-        """Rewrite the stage's accumulated data files into ~target-sized
-        ones (Iceberg ``rewrite_data_files`` / binpack analog). Fast
-        appends write O(increment) files per commit — after enough
-        increments a stage is thousands of KB-scale files, and at 100 TB
-        the per-file open/footer cost dominates every scan. Compaction
-        is CONTENT- and FINGERPRINT-PRESERVING: rows, ``rows``,
-        ``output_fingerprint``, ``input_fingerprint``, bucket spec, and
-        every config key in the manifest are carried through unchanged,
-        so it is invisible to resume keys, WAL recovery, and the
-        config-drift guards — only the file layout changes.
-
-        Ordering is verify-before-swap: the compacted copy is written to
-        a temp dir and its content fingerprint checked against the
-        manifest BEFORE anything moves, so the stage stays complete and
-        readable for the whole rewrite job; the vulnerable window is two
-        renames, manifest-first like ``write`` — a crash inside it
-        leaves the stage manifest-less (never a manifest trusting
-        missing data) and is SELF-HEALING: the swap is fenced by
-        ``_compact_pending.json``, so ``heal_crashed_compaction``
-        (invoked here, by resume, and by ``incremental_update``)
-        restores the archived pre-compaction version in O(1) renames
-        and reaps the temp copy. The
-        pre-compaction version is archived as a FULL snapshot (rename,
-        no copy) — rollback-able like any rewrite; append snapshots
-        older than the compaction become unrestorable, which
-        ``rollback`` already reports with a clear error.
-
-        Bucketed stages are rewritten through the same bucket spec,
-        pre-partitioned on the bucket column so each bucket lands in
-        ~one file; Exchange elision is preserved. No-op (returns
-        ``{"compacted": False, ...}``) when the stage already has fewer
-        than ``min_files`` files or no more than the target layout's
-        file count — sized by TOTAL BYTES, so calling this after every
-        increment is cheap and idempotent."""
-        import math
-        import shutil
-
-        self.heal_crashed_compaction(stage, spark=spark)  # finish a crashed prior run
-        m = self.read_manifest(stage)
-        if m is None:
-            raise FileNotFoundError(
-                f"compact needs a complete stage {stage!r}; write() it first"
-            )
-        data_dir = self._dir(stage) / "data.parquet"
-        files = self._data_files(stage)
-        bucket_by = m.get("bucket_by")
-        n_buckets = int(m.get("n_buckets", 32))
-        total_bytes = sum((data_dir / f).stat().st_size for f in files)
-        if bucket_by:
-            n_out = n_buckets
-        else:
-            n_out = max(1, math.ceil(total_bytes / max(1, int(target_file_bytes))))
-        if len(files) < max(int(min_files), n_out + 1):
-            return {
-                "compacted": False,
-                "files": len(files),
-                "target_files": n_out,
-            }
-
-        t0 = time.monotonic()
-        tmp = self._dir(stage) / "_compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)  # reap debris from a crash
-        current = spark.read.parquet(str(data_dir))
-        tmp_table = None
-        if bucket_by:
-            # pre-partition on the bucket column with the SAME hash family
-            # bucketBy uses, so each writer task holds one bucket → ~one
-            # file per bucket; registered under a temp name, dropped after
-            tmp_table = self._table_name(stage) + "_compact_tmp"
-            spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-            (
-                current.repartition(n_buckets, F.col(bucket_by))
-                .write.bucketBy(n_buckets, bucket_by)
-                .sortBy(bucket_by)
-                .option("path", str(tmp))
-                .mode("overwrite")
-                .format("parquet")
-                .saveAsTable(tmp_table)
-            )
-            spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        else:
-            current.coalesce(n_out).write.mode("overwrite").parquet(str(tmp))
-        # verify BEFORE the swap: the stage is untouched until the copy
-        # is proven bit-identical (count + xor content fingerprint).
-        # Pre-upgrade manifests may lack output_fingerprint (same
-        # tolerance append() has) — rescan the live files for it
-        recorded = m.get("output_fingerprint") or stage_fingerprint(current)
-        part_rows, n, h = _scan_partition_stats(spark.read.parquet(str(tmp)))
-        out_fp = _fp_format(n, h)
-        if out_fp != recorded:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(
-                f"compaction of stage {stage!r} produced fingerprint "
-                f"{out_fp} != recorded {recorded}; stage left untouched"
-            )
-        # pending marker: makes a manifest-less stage unambiguously "a
-        # compaction crashed mid-swap" (vs a crashed full rewrite, which
-        # must recompute) so heal_crashed_compaction can restore the
-        # archived version instead of demanding a rebuild
-        write_json_atomic(
-            self._compact_marker(stage), {"stage": stage, "fp": recorded}
-        )
-        v = self._archive_current(stage)
-        tmp.rename(data_dir)
-        manifest = {k: val for k, val in m.items() if k != "appended"}
-        manifest["output_fingerprint"] = out_fp  # backfills pre-upgrade
-        manifest["partitions"] = sorted(
-            [{"id": int(r["_pid"]), "rows": int(r["count"])} for r in part_rows],
-            key=lambda d: d["id"],
-        )
-        manifest["wall_ms"] = int((time.monotonic() - t0) * 1000)
-        manifest["written_at_unix"] = int(time.time())
-        result = {
-            "compacted": True,
-            "files_before": len(files),
-            "files_after": len(self._data_files(stage)),
-            "bytes": total_bytes,
-            "snapshot": v,
-        }
-        manifest["compaction"] = result
-        # atomic: a crash mid-write must leave the previous state
-        # inferable (manifest absent), never a torn JSON that wedges
-        # read_manifest at every entry point
-        write_json_atomic(self.manifest_path(stage), manifest)
-        # the session-shared FileStatusCache still lists the replaced
-        # files; any cached plan over the old listing would FAIL_READ_FILE
-        spark.catalog.refreshByPath(str(data_dir))
-        if bucket_by:
-            # bucketed stages resolve through the catalog table, whose
-            # relation cache holds its own (now stale) file listing
-            table = self._table_name(stage)
-            if spark.catalog.tableExists(table):
-                spark.catalog.refreshTable(table)
-        self._compact_marker(stage).unlink(missing_ok=True)
-        return result
-
-    def _compact_marker(self, stage: str) -> Path:
-        return self._dir(stage) / "_compact_pending.json"
-
-    def _fp_less_half_archive_slot(self, stage: str) -> bool:
-        """True if the stage has in-place data plus some manifest-only
-        archive slot with no recorded fingerprint (pre-upgrade) — a
-        half-archive candidate that only a spark-ful rescan can verify."""
-        data = self._dir(stage) / "data.parquet"
-        if not data.exists():
-            return False
-        for v in self.snapshot_versions(stage):
-            d = self._snapshots_dir(stage) / f"v{v}"
-            if (
-                (d / "_manifest.json").exists()
-                and not (d / "data.parquet").exists()
-                and not (d / "_files.json").exists()
-                and json.loads((d / "_manifest.json").read_text()).get(
-                    "output_fingerprint"
-                )
-                is None
-            ):
-                return True
-        return False
-
-    def heal_crashed_compaction(
-        self, stage: str, spark: SparkSession | None = None
-    ) -> bool:
-        """Recover from a compaction crash. The marker written before
-        ``compact``'s swap makes the resulting manifest-less stage
-        unambiguous (a crashed FULL REWRITE must recompute instead —
-        restoring a snapshot there would silently desynchronize the
-        stage from the rest of the checkpoint). Recovery discards the
-        swap and restores the archived pre-compaction version — safe
-        because compaction is content-preserving, so nothing is lost and
-        the compaction simply reruns later. Idempotent; returns True if
-        the stage was restored. Call on any manifest-less stage before
-        concluding it needs a rebuild (``incremental_update`` does).
-        Pass ``spark`` to also refresh the (now stale) file-listing
-        caches after a restore."""
-        import shutil
-
-        marker = self._compact_marker(stage)
-        if not marker.exists():
-            return False
-        if self.read_manifest(stage) is not None:
-            # crash AFTER the manifest write: the compaction completed;
-            # only the marker cleanup was lost
-            marker.unlink(missing_ok=True)
-            return False
-        # the marker records the fingerprint the compaction preserved;
-        # restore ONLY a snapshot carrying that exact fingerprint. A
-        # stale marker (cleared defensively by write/append/rollback,
-        # but belt-and-braces here) must not let the debris of some
-        # LATER crashed rewrite restore an unrelated version and
-        # desynchronize the checkpoint.
-        marker_fp = json.loads(marker.read_text()).get("fp")
-        restored = False
-        keep_marker = False
-        versions = self.snapshot_versions(stage)
-        data_dir = self._dir(stage) / "data.parquet"
-        if versions and self._snapshot_complete(stage, versions[-1]):
-            src = self._snapshots_dir(stage) / f"v{versions[-1]}"
-            slot_fp = json.loads(
-                (src / "_manifest.json").read_text()
-            ).get("output_fingerprint")
-            match = False
-            if (src / "data.parquet").exists():
-                if slot_fp == marker_fp:
-                    match = True
-                elif slot_fp is None:
-                    # pre-upgrade manifest (no recorded fingerprint):
-                    # verify by rescanning the archived data when a
-                    # session is available; without one, leave the
-                    # marker so a spark-ful caller can decide later
-                    if spark is not None:
-                        match = (
-                            stage_fingerprint(
-                                spark.read.parquet(str(src / "data.parquet"))
-                            )
-                            == marker_fp
-                        )
-                    else:
-                        keep_marker = True
-            if match:
-                # discard the (possibly half-renamed) compacted copy and
-                # any temp debris, then undo the archive
-                shutil.rmtree(data_dir, ignore_errors=True)
-                shutil.rmtree(
-                    self._dir(stage) / "_compact_tmp", ignore_errors=True
-                )
-                (src / "data.parquet").rename(data_dir)
-                (src / "_manifest.json").rename(self.manifest_path(stage))
-                src.rmdir()
-                restored = True
-        elif self.heal_half_archive(stage, spark=spark, expect_fp=marker_fp):
-            # crash INSIDE _archive_current (manifest renamed into the
-            # slot, data not yet): the half-archive heal reunites
-            # manifest and data, requiring the marker's fingerprint —
-            # the exact pre-compaction version, nothing to discard but
-            # the temp copy
-            shutil.rmtree(
-                self._dir(stage) / "_compact_tmp", ignore_errors=True
-            )
-            restored = True
-        elif spark is None and self._fp_less_half_archive_slot(stage):
-            # the only candidate is a pre-upgrade fingerprint-less
-            # stranded manifest: unverifiable without a session — keep
-            # the marker so a spark-ful caller can finish the heal
-            # instead of healing blind
-            keep_marker = True
-        # not restored ⇒ marker debris with neither a restorable snapshot
-        # nor a healable half-archive (a crash between marker write and
-        # archive start leaves the manifest in place and is caught
-        # above); clear the marker unless an fp-less slot awaits a
-        # spark-ful verification
-        if not keep_marker:
-            marker.unlink(missing_ok=True)
-        if restored and spark is not None:
-            spark.catalog.refreshByPath(str(data_dir))
-            table = self._table_name(stage)
-            if spark.catalog.tableExists(table):
-                spark.catalog.refreshTable(table)
-        return restored
+    # ------------------------------------------------------------------
+    # commits
+    # ------------------------------------------------------------------
 
     def write(
         self,
@@ -830,11 +411,11 @@ class StageCheckpoint:
         extra: dict | None = None,
         bucket_by: str | None = None,
         n_buckets: int = 32,
-        keep_snapshots: bool = True,
     ) -> DataFrame:
-        """Materialize ``df``, record per-partition row counts (lineage +
-        skew visibility) and wall time, return the reloaded DataFrame so
-        downstream stages read the checkpoint, not the lineage.
+        """Materialize ``df`` as a new version, record per-partition row
+        counts (lineage + skew visibility) and wall time, commit it, and
+        return the reloaded DataFrame so downstream stages read the
+        checkpoint, not the lineage.
 
         ``bucket_by``: write as a BUCKETED external table instead of
         plain parquet (``bucketBy(n_buckets).sortBy``). Downstream
@@ -842,31 +423,13 @@ class StageCheckpoint:
         the table metadata and skip the checkpoint side's Exchange
         entirely — at 100 TB the scores stage's two signature joins
         shuffle only the (small, id-only) pair relation. Size
-        ``n_buckets`` to the scoring stage's shuffle parallelism.
-
-        ``keep_snapshots``: archive any existing version of this stage
-        into ``_snapshots/`` (rename, no copy) before writing, instead
-        of destroying it in place. On by default; pass False for
-        scratch runs where retention is unwanted."""
+        ``n_buckets`` to the scoring stage's shuffle parallelism."""
         t0 = time.monotonic()
         spark = df.sparkSession
-        # a rewrite supersedes any pending-compaction claim: a stale
-        # marker (compaction crashed after its manifest write) must not
-        # survive into this commit's crash windows, where it could
-        # misclassify THIS write's debris as a healable compaction
-        self._compact_marker(stage).unlink(missing_ok=True)
-        if keep_snapshots:
-            # a crash inside a previous commit's archive step leaves the
-            # stage manifest-less with its data intact — reunite them
-            # first so the archive below preserves that version instead
-            # of overwriting the only copy (the stranded manifest would
-            # otherwise sit in an incomplete snapshot slot forever)
-            self.heal_half_archive(stage, spark=spark)
-            self._archive_current(stage)
-        path = self._dir(stage) / "data.parquet"
+        v = self._new_version(stage)
+        path = self._data_path(stage, v)
         if bucket_by:
-            table = self._table_name(stage)
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
+            table = self._table_name(stage, v)
             (
                 df.write.bucketBy(int(n_buckets), bucket_by)
                 .sortBy(bucket_by)
@@ -878,37 +441,25 @@ class StageCheckpoint:
             reloaded = spark.table(table)
             extra = {**(extra or {}), "bucket_by": bucket_by, "n_buckets": int(n_buckets)}
         else:
-            # a previous BUCKETED write to this stage/root leaves a
-            # catalog table pointing at these files; overwriting them
-            # with unbucketed data would let a later load() return stale
-            # bucket metadata — drop it
-            spark.sql(f"DROP TABLE IF EXISTS {self._table_name(stage)}")
-            df.write.mode("overwrite").parquet(str(path))
+            df.write.parquet(str(path))
             reloaded = spark.read.parquet(str(path))
         # one scan: per-partition rows (skew visibility) + per-partition
         # xxhash64 xor, combined driver-side into the same format as
         # stage_fingerprint — downstream stages key off this without
         # re-scanning the checkpoint
         part_rows, n, h = _scan_partition_stats(reloaded)
-        out_fp = _fp_format(n, h)
         manifest = {
             "stage": stage,
             "input_fingerprint": input_fingerprint,
-            "output_fingerprint": out_fp,
+            "output_fingerprint": _fp_format(n, h),
             "rows": n,
-            "partitions": sorted(
-                [{"id": int(r["_pid"]), "rows": int(r["count"])} for r in part_rows],
-                key=lambda d: d["id"],
-            ),
+            "partitions": _partitions(part_rows),
             "wall_ms": int((time.monotonic() - t0) * 1000),
             "written_at_unix": int(time.time()),
         }
         if extra:
             manifest.update(extra)
-        # atomic: a crash mid-write must leave the previous state
-        # inferable (manifest absent), never a torn JSON that wedges
-        # read_manifest at every entry point
-        write_json_atomic(self.manifest_path(stage), manifest)
+        self._commit(stage, v, manifest)
         return reloaded
 
     def append(
@@ -919,47 +470,36 @@ class StageCheckpoint:
         extra: dict | None = None,
         expect_rows: int | None = None,
     ) -> DataFrame:
-        """Fast-append commit (Iceberg ``fast_append`` analog): write
-        ONLY ``df``'s rows as new parquet files in the stage directory —
-        O(increment) data written, history untouched. The pre-append
-        version is archived as manifest + file listing (no data move)
-        and is ``rollback``-able. Stats for the manifest are computed by
+        """Fast-append commit (Iceberg ``fast_append`` analog): a new
+        version that hard-links the live version's data files and writes
+        ONLY ``df``'s rows next to them — O(increment) data written, no
+        existing file touched. Stats for the manifest are computed by
         scanning just the new files, and the output fingerprint is
         composed exactly (xor/count), so downstream resume keys match a
         full rescan.
 
         Requires a complete existing stage. Bucketed stages append
-        through the catalog table with the same bucket spec, preserving
-        Exchange elision (multiple files per bucket are fine; only the
-        within-bucket sort-elision is lost, which the sort-merge join
-        re-establishes).
+        through the new version's catalog table with the same bucket
+        spec, preserving Exchange elision (multiple files per bucket are
+        fine; only the within-bucket sort-elision is lost, which the
+        sort-merge join re-establishes).
 
-        CAUTION — ``df``'s lineage must not read the stage being
-        appended to, and (when committing several stages) must not read
-        any stage mutated EARLIER in the sequence: Spark's
-        refreshByPath/table-cache invalidation re-compiles cached plans
-        over mutated inputs, silently changing what gets written. Commit
-        leaf-first, and pass ``expect_rows`` (the increment's known row
-        count) so a plan that re-evaluated to something else fails the
-        commit loudly instead of corrupting the stage."""
+        ``expect_rows`` (the increment's known row count) makes a plan
+        that re-evaluated to a different row set at write time fail the
+        commit loudly instead of corrupting the stage; the new version
+        is then left uncommitted."""
         t0 = time.monotonic()
         m = self.read_manifest(stage)
         if m is None:
             raise FileNotFoundError(
                 f"append needs a complete stage {stage!r}; write() it first"
             )
-        # same stale-marker hygiene as write(): an append beginning on a
-        # complete stage voids any pending-compaction claim (after the
-        # completeness check — a failed call on a manifest-less stage
-        # must not destroy a legitimately pending heal)
-        self._compact_marker(stage).unlink(missing_ok=True)
         spark = df.sparkSession
-        path = self._dir(stage) / "data.parquet"
         # schema guard, same spirit as expect_rows: the composed
         # output fingerprint hashes columns in file order, so an
         # increment with reordered/retyped columns would silently
         # diverge from a full rescan (and mixed-schema files in one
-        # stage directory are a read hazard). Names+order+types must
+        # version directory are a read hazard). Names+order+types must
         # match exactly (nullability excluded — parquet unions it).
         existing = self.load(spark, stage)
         want = [(f.name, f.dataType.simpleString()) for f in existing.schema.fields]
@@ -972,70 +512,49 @@ class StageCheckpoint:
             )
         prev_fp = m.get("output_fingerprint") or stage_fingerprint(existing)
         bucket_by = m.get("bucket_by")
-        # (the load() above also re-registered a bucketed stage's catalog
-        # table from the manifest, which must happen BEFORE the manifest
-        # is archived away)
-        files_before = set(self._data_files(stage))
-        self._archive_append_point(stage)
+        src = self._data_path(stage)
+        linked = _part_files(src)
+        v = self._new_version(stage)
+        path = self._data_path(stage, v)
+        path.mkdir()
+        for f in linked:
+            os.link(src / f, path / f)
+            if (src / f".{f}.crc").exists():
+                os.link(src / f".{f}.crc", path / f".{f}.crc")
         if bucket_by:
+            n_buckets = int(m.get("n_buckets", 32))
             (
-                df.write.bucketBy(int(m.get("n_buckets", 32)), bucket_by)
+                df.write.bucketBy(n_buckets, bucket_by)
                 .sortBy(bucket_by)
                 .mode("append")
                 .format("parquet")
-                .saveAsTable(self._table_name(stage))
+                .saveAsTable(self._bucketed_table(spark, stage, v, bucket_by, n_buckets))
             )
         else:
             df.write.mode("append").parquet(str(path))
-        new_files = sorted(set(self._data_files(stage)) - files_before)
+        new_files = sorted(set(_part_files(path)) - set(linked))
         if new_files:
-            appended = spark.read.parquet(
-                *(str(path / f) for f in new_files)
-            )
+            appended = spark.read.parquet(*(str(path / f) for f in new_files))
             part_rows, n_new, h = _scan_partition_stats(appended)
         else:
             part_rows, n_new, h = [], 0, 0
         if expect_rows is not None and n_new != expect_rows:
-            # undo the partial commit (delete the appended files, restore
-            # the archived manifest) and fail loudly — the appended plan
-            # re-evaluated to a different row set than the caller
-            # materialized (usually a cache invalidated by an earlier
-            # append in the same commit sequence)
-            v = self.snapshot_versions(stage)[-1]
-            src = self._snapshots_dir(stage) / f"v{v}"
-            for f in new_files:
-                (path / f).unlink(missing_ok=True)
-                (path / f".{f}.crc").unlink(missing_ok=True)
-            (src / "_manifest.json").rename(self.manifest_path(stage))
-            (src / "_files.json").unlink(missing_ok=True)
-            src.rmdir()
-            # drop the just-deleted files from the shared listing cache
-            spark.catalog.refreshByPath(str(path))
             raise ValueError(
                 f"append to stage {stage!r} wrote {n_new} rows but the "
                 f"caller expected {expect_rows}; the increment plan "
-                "re-evaluated differently at write time (cache "
-                "invalidation by an earlier append?) — commit was undone"
+                "re-evaluated differently at write time — the new version "
+                "was not committed"
             )
-        new_fp = _fp_format(n_new, h)
-        out_fp = _fp_combine(prev_fp, new_fp)
-        pid_base = (
-            max((p["id"] for p in m.get("partitions", [])), default=-1) + 1
-        )
-        partitions = list(m.get("partitions", [])) + sorted(
-            [
-                {"id": pid_base + int(r["_pid"]), "rows": int(r["count"])}
-                for r in part_rows
-            ],
-            key=lambda d: d["id"],
-        )
+        out_fp = _fp_combine(prev_fp, _fp_format(n_new, h))
+        pid_base = max((p["id"] for p in m.get("partitions", [])), default=-1) + 1
+        partitions = list(m.get("partitions", [])) + _partitions(part_rows, pid_base)
         # keep the commit O(increment): after many fast-appends the
         # cumulative per-partition history would dominate the manifest
         # (a zero-row commit rewriting an unbounded JSON). Compact the
         # oldest entries into one rollup row — recent appends keep full
         # skew visibility, row totals are preserved exactly, and the
-        # granular history of every era survives in the archived
-        # snapshot manifests
+        # granular history of every era survives in the retained
+        # versions' manifests
         if len(partitions) > _PARTITION_HISTORY_CAP:
             keep = _PARTITION_HISTORY_CAP // 2
             old, recent = partitions[:-keep], partitions[-keep:]
@@ -1060,32 +579,127 @@ class StageCheckpoint:
             manifest["n_buckets"] = int(m.get("n_buckets", 32))
         if extra:
             manifest.update(extra)
-        # atomic: a crash mid-write must leave the previous state
-        # inferable (manifest absent), never a torn JSON that wedges
-        # read_manifest at every entry point
-        write_json_atomic(self.manifest_path(stage), manifest)
+        self._commit(stage, v, manifest)
         return self.load(spark, stage)
 
     def load_appended(self, spark: SparkSession, stage: str) -> DataFrame:
         """The rows the LAST commit appended to ``stage`` (reads exactly
-        the files recorded in the manifest's ``appended`` entry — safe
-        from any cache-invalidation hazard because it goes straight to
-        the increment's own files). Raises if the last commit was a full
-        write."""
+        the files recorded in the manifest's ``appended`` entry). Raises
+        if the last commit was a full write."""
         m = self.read_manifest(stage)
         if m is None or "appended" not in m:
             raise ValueError(
                 f"stage {stage!r} was not fast-appended by its last "
                 "commit; load_appended has nothing to read"
             )
-        path = self._dir(stage) / "data.parquet"
+        path = self._data_path(stage)
         files = m["appended"]["files"]
         if not files:
             return spark.read.parquet(str(path)).limit(0)
         return spark.read.parquet(*(str(path / f) for f in files))
 
+    def compact(
+        self,
+        spark: SparkSession,
+        stage: str,
+        target_file_bytes: int = 128 << 20,
+        min_files: int = 2,
+    ) -> dict:
+        """Rewrite the stage's accumulated data files into ~target-sized
+        ones (Iceberg ``rewrite_data_files`` / binpack analog). Fast
+        appends write O(increment) files per commit — after enough
+        increments a stage is thousands of KB-scale files, and at 100 TB
+        the per-file open/footer cost dominates every scan. Compaction
+        is CONTENT- and FINGERPRINT-PRESERVING: rows, ``rows``,
+        ``output_fingerprint``, ``input_fingerprint``, bucket spec, and
+        every config key in the manifest are carried through unchanged,
+        so it is invisible to resume keys and the config-drift guards —
+        only the file layout changes.
+
+        The compacted copy is a new version whose content fingerprint is
+        checked against the manifest BEFORE the head swap; a mismatch
+        raises with the stage untouched. The pre-compaction version is
+        retained and rollback-able like any other.
+
+        Bucketed stages are rewritten through the same bucket spec,
+        pre-partitioned on the bucket column so each bucket lands in
+        ~one file; Exchange elision is preserved. No-op (returns
+        ``{"compacted": False, ...}``) when the stage already has fewer
+        than ``min_files`` files or no more than the target layout's
+        file count — sized by TOTAL BYTES, so calling this after every
+        increment is cheap and idempotent."""
+        import math
+
+        m = self.read_manifest(stage)
+        if m is None:
+            raise FileNotFoundError(
+                f"compact needs a complete stage {stage!r}; write() it first"
+            )
+        src = self._data_path(stage)
+        files = _part_files(src)
+        bucket_by = m.get("bucket_by")
+        n_buckets = int(m.get("n_buckets", 32))
+        total_bytes = sum((src / f).stat().st_size for f in files)
+        if bucket_by:
+            n_out = n_buckets
+        else:
+            n_out = max(1, math.ceil(total_bytes / max(1, int(target_file_bytes))))
+        if len(files) < max(int(min_files), n_out + 1):
+            return {
+                "compacted": False,
+                "files": len(files),
+                "target_files": n_out,
+            }
+
+        t0 = time.monotonic()
+        prev = self._entry(stage)["live"]
+        current = spark.read.parquet(str(src))
+        v = self._new_version(stage)
+        path = self._data_path(stage, v)
+        if bucket_by:
+            # pre-partition on the bucket column with the SAME hash family
+            # bucketBy uses, so each writer task holds one bucket → ~one
+            # file per bucket
+            (
+                current.repartition(n_buckets, F.col(bucket_by))
+                .write.bucketBy(n_buckets, bucket_by)
+                .sortBy(bucket_by)
+                .option("path", str(path))
+                .mode("overwrite")
+                .format("parquet")
+                .saveAsTable(self._table_name(stage, v))
+            )
+        else:
+            current.coalesce(n_out).write.parquet(str(path))
+        # verify BEFORE the swap (count + xor content fingerprint).
+        # Pre-upgrade manifests may lack output_fingerprint (same
+        # tolerance append() has) — rescan the live files for it
+        recorded = m.get("output_fingerprint") or stage_fingerprint(current)
+        part_rows, n, h = _scan_partition_stats(spark.read.parquet(str(path)))
+        out_fp = _fp_format(n, h)
+        if out_fp != recorded:
+            raise RuntimeError(
+                f"compaction of stage {stage!r} produced fingerprint "
+                f"{out_fp} != recorded {recorded}; stage left untouched"
+            )
+        manifest = {k: val for k, val in m.items() if k != "appended"}
+        manifest["output_fingerprint"] = out_fp  # backfills pre-upgrade
+        manifest["partitions"] = _partitions(part_rows)
+        manifest["wall_ms"] = int((time.monotonic() - t0) * 1000)
+        manifest["written_at_unix"] = int(time.time())
+        result = {
+            "compacted": True,
+            "files_before": len(files),
+            "files_after": len(_part_files(path)),
+            "bytes": total_bytes,
+            "snapshot": prev,
+        }
+        manifest["compaction"] = result
+        self._commit(stage, v, manifest)
+        return result
+
     def annotate_manifest(self, stage: str, extra: dict) -> None:
-        """Merge ``extra`` keys into an existing stage manifest (atomic
+        """Merge ``extra`` keys into the live version's manifest (atomic
         rewrite). For reporting-only metadata discovered after write()
         committed — e.g. the chunked-scoring loop walls, which write()'s
         own ``wall_ms`` cannot see (the loop runs before its clock
@@ -1118,14 +732,6 @@ class StageCheckpoint:
     ) -> tuple[DataFrame, bool]:
         """(df, was_cached). ``compute`` is a thunk returning the stage
         DataFrame; only invoked on a manifest miss/mismatch."""
-        if self.read_manifest(stage) is None:
-            # a crash inside a previous commit's archive step strands
-            # the manifest in a snapshot slot with the data intact —
-            # healing here makes that a zero-recompute resume instead
-            # of a stage rebuild; ditto a compaction that crashed
-            # mid-swap (marker-fenced, restores the archived version)
-            self.heal_half_archive(stage, spark=spark)
-            self.heal_crashed_compaction(stage, spark=spark)
         if self.is_complete(stage, input_fingerprint):
             return self.load(spark, stage), True
         df = self.write(

@@ -6,15 +6,15 @@ closes that gap: each micro-batch of transcripts is merged into the
 pipeline checkpoint with ``plans/incremental.incremental_update`` —
 blocking keys, pair scores, and connected components stay current as
 conversations arrive, and every commit inherits the incremental path's
-guarantees (WAL-fenced multi-stage commits, redelivery anti-joins,
-snapshot archives). The first non-empty batch bootstraps the checkpoint
+guarantees (one atomic head swap per multi-stage commit, redelivery
+anti-joins, retained stage versions). The first non-empty batch bootstraps the checkpoint
 with a full ``run_pipeline``.
 
 Exactly-once: Structured Streaming replays a micro-batch after a crash
 (at-least-once delivery); ``incremental_update`` makes the replay a
 no-op commit (already-known conversations are anti-joined away, a fully
-redelivered batch appends zero rows, and a crash mid-commit rolls back
-via the WAL marker before the replay applies) — so clusters end up
+redelivered batch appends zero rows, and a crash mid-commit never
+swapped the head, so the replay applies to the pre-crash state) — so clusters end up
 exactly-once per conversation without relying on the sink being
 idempotent by luck.
 
@@ -65,10 +65,9 @@ def apply_transcript_batch(
     the replayed batch then RESUMES ``run_pipeline``, whose
     fingerprint-keyed stage cache skips the committed stages
     (exactly-once). Any other partially-missing checkpoint is foreign
-    damage: it is handed to the incremental path, which self-heals
-    crashed-compaction / half-archive debris and raises a clear error
-    for anything beyond repair — never rebuilt from one micro-batch,
-    which would silently drop every previously-applied conversation.
+    damage: it is handed to the incremental path, which raises a clear
+    error — never rebuilt from one micro-batch, which would silently
+    drop every previously-applied conversation.
 
     ``founded_marker``: the founding sentinel owned by the STREAM
     checkpoint (``start_pipeline_stream`` wires it) — a
@@ -165,8 +164,8 @@ def start_pipeline_stream(
         if stats is not None:
             # surface the per-batch stats the return value carries in
             # batch mode: redelivery drops (the ONLY signal of an
-            # upstream closed-conversation contract violation), WAL
-            # rollback recoveries, compactions, phase timings
+            # upstream closed-conversation contract violation),
+            # compactions, phase timings
             log.info("pipeline stream epoch %d stats: %s", epoch, stats)
 
     stream = read_transcript_stream(

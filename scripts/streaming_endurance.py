@@ -7,7 +7,7 @@ The batch endurance rows (BASELINE.md) exercise ``run_pipeline`` /
 conversations delivered as 20+ parquet drops consumed one per
 micro-batch (``maxFilesPerTrigger=1``): the first epoch founds the
 checkpoint with a full ``run_pipeline``, every later epoch is a
-WAL-fenced ``incremental_update`` commit, auto-compaction enabled.
+head-pointer ``incremental_update`` commit, auto-compaction enabled.
 
 Reported: per-epoch wall (stream progress ``batchDuration`` + the
 commit stats captured from the driver's epoch log), checkpoint store
@@ -78,7 +78,7 @@ def main() -> int:
         action="store_true",
         help="keep an existing workdir and resume: the stream restarts "
         "from its own checkpoint (redelivered drops are dropped by the "
-        "WAL anti-join — this is the recovery path the engine ships), "
+        "redelivery anti-join — this is the recovery path the engine ships), "
         "and the batch-comparison run resumes from its stage cache. "
         "Stream wall/epoch stats then cover only the resumed portion "
         "(flagged `resumed` in the output). Requires a completed drop "

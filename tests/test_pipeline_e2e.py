@@ -39,9 +39,17 @@ def test_cluster_f1_vs_planted_truth(spark, pipeline_run):
 
 
 def test_manifests_written(pipeline_run):
+    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
+
     out, _, _, _ = pipeline_run
+    ck = StageCheckpoint(out)
+    head = json.loads((out / "_head.json").read_text())
     for stage in ["signatures", "blocks", "candidate_pairs", "scores", "components"]:
-        mpath = out / stage / "_manifest.json"
+        # the head names the live version; its manifest sits beside its data
+        v = head[stage]["live"]
+        mpath = out / stage / f"v{v}" / "_manifest.json"
+        assert ck.manifest_path(stage) == mpath
+        assert (mpath.parent / "data.parquet").is_dir(), stage
         assert mpath.exists(), stage
         m = json.loads(mpath.read_text())
         assert m["rows"] > 0
@@ -50,9 +58,12 @@ def test_manifests_written(pipeline_run):
 
 
 def test_resume_skips_completed_stages(spark, pipeline_run):
+    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
+
     out, tdf, cfg, first = pipeline_run
+    ck = StageCheckpoint(out)
     mtimes = {
-        s: (out / s / "_manifest.json").stat().st_mtime
+        s: ck.manifest_path(s).stat().st_mtime
         for s in ["signatures", "blocks", "candidate_pairs", "scores", "components"]
     }
     second = run_pipeline(spark, tdf, cfg)
@@ -64,7 +75,7 @@ def test_resume_skips_completed_stages(spark, pipeline_run):
         "components",
     }
     for s, t in mtimes.items():
-        assert (out / s / "_manifest.json").stat().st_mtime == t, f"{s} recomputed"
+        assert ck.manifest_path(s).stat().st_mtime == t, f"{s} recomputed"
 
 
 def test_exact_duplicates_always_clustered(spark, pipeline_run):
@@ -97,17 +108,20 @@ def test_resume_recomputes_only_downstream(spark, pipeline_run):
     }
     import shutil
 
+    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
+
+    ck = StageCheckpoint(out)
     shutil.rmtree(out / "scores")
     shutil.rmtree(out / "components")
     upstream_mtimes = {
-        s: (out / s / "_manifest.json").stat().st_mtime
+        s: ck.manifest_path(s).stat().st_mtime
         for s in ["signatures", "blocks", "candidate_pairs"]
     }
     second = run_pipeline(spark, tdf, cfg)
     assert "scores" not in second.cached_stages
     assert set(second.cached_stages) >= {"signatures", "blocks", "candidate_pairs"}
     for s, t in upstream_mtimes.items():
-        assert (out / s / "_manifest.json").stat().st_mtime == t
+        assert ck.manifest_path(s).stat().st_mtime == t
     after = {r["conv_id"]: r["component_id"] for r in second.components.collect()}
     assert after == before
 
@@ -198,7 +212,7 @@ def test_bucketed_checkpoint_survives_catalog_loss(spark, tmp_path):
     ck = StageCheckpoint(tmp_path / "out")
     written = ck.write("sig_b", sigs, bucket_by="conv_id", n_buckets=4)
     n = written.count()
-    table = ck._table_name("sig_b")
+    table = ck._table_name("sig_b", 1)  # the table of version v1
     spark.sql(f"DROP TABLE {table}")  # what a process restart looks like
     assert not spark.catalog.tableExists(table)
 
@@ -224,8 +238,8 @@ def test_bucketed_checkpoint_survives_catalog_loss(spark, tmp_path):
 
 
 class TestSnapshots:
-    """Iceberg snapshot analog: overwrite archives, history lists,
-    rollback restores, expire prunes."""
+    """Iceberg snapshot analog: a rewrite retains the previous version,
+    history lists, rollback points the head back, expire prunes."""
 
     def _ckpt(self, spark, tmp_path):
         from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
@@ -286,9 +300,9 @@ class TestSnapshots:
 
 
 class TestFastAppend:
-    """Iceberg fast_append analog: append commits only the increment's
-    files, composes the fingerprint exactly, archives manifest + file
-    listing (no data move), and rolls back by deleting appended files."""
+    """Iceberg fast_append analog: append writes only the increment's
+    files into a new version that hard-links the previous one's, composes
+    the fingerprint exactly, and rolls back by pointing the head back."""
 
     def _ckpt(self, spark, tmp_path):
         from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
@@ -323,24 +337,27 @@ class TestFastAppend:
         import os
 
         ck, v1, inc = self._ckpt(spark, tmp_path)
-        data_dir = ck._dir("stage") / "data.parquet"
+        old_dir = ck.manifest_path("stage").parent / "data.parquet"
         before = {
-            f: os.stat(data_dir / f) for f in ck._data_files("stage")
+            f: os.stat(old_dir / f) for f in ck._data_files("stage")
         }
         ck.append("stage", inc)
+        new_dir = ck.manifest_path("stage").parent / "data.parquet"
+        assert new_dir != old_dir  # a new version directory
         after_files = set(ck._data_files("stage"))
         assert set(before) < after_files  # strictly grew
         for f, st in before.items():
-            now = os.stat(data_dir / f)
-            assert (st.st_mtime_ns, st.st_size, st.st_ino) == (
-                now.st_mtime_ns, now.st_size, now.st_ino
-            ), f"pre-append file {f} was rewritten"
+            # the new version hard-links the old files: same inode, no copy
+            for now in (os.stat(old_dir / f), os.stat(new_dir / f)):
+                assert (st.st_mtime_ns, st.st_size, st.st_ino) == (
+                    now.st_mtime_ns, now.st_size, now.st_ino
+                ), f"pre-append file {f} was rewritten"
 
     def test_append_rollback(self, spark, tmp_path):
         ck, v1, inc = self._ckpt(spark, tmp_path)
         m1 = ck.read_manifest("stage")
         ck.append("stage", inc, input_fingerprint="fp2")
-        # the append archived the pre-append version (manifest + listing)
+        # the pre-append version is retained
         assert ck.snapshot_versions("stage") == [1]
         hist = ck.history("stage")
         assert [h["version"] for h in hist] == [1, None]
@@ -351,15 +368,17 @@ class TestFastAppend:
         assert m["output_fingerprint"] == m1["output_fingerprint"]
         assert {r["id"] for r in ck.load(spark, "stage").collect()} == {1, 2}
 
-    def test_append_rollback_blocked_after_full_rewrite(self, spark, tmp_path):
+    def test_append_rollback_after_full_rewrite(self, spark, tmp_path):
         ck, v1, inc = self._ckpt(spark, tmp_path)
-        ck.append("stage", inc)  # v1 = append point
-        ck.write("stage", v1, input_fingerprint="fp3")  # v2 = full archive
-        with pytest.raises(FileNotFoundError, match="full rewrite"):
-            ck.rollback("stage", 1)
-        # the full snapshot is still reachable
+        ck.append("stage", inc)  # v2 = the append version
+        ck.write("stage", v1, input_fingerprint="fp3")  # v3 = full rewrite
+        # versions are self-contained: the append version survives the
+        # rewrite and rolls back with its rows
         ck.rollback("stage", 2)
         assert ck.read_manifest("stage")["rows"] == 4
+        assert {r["id"] for r in ck.load(spark, "stage").collect()} == {1, 2, 3, 4}
+        ck.rollback("stage", 1)
+        assert {r["id"] for r in ck.load(spark, "stage").collect()} == {1, 2}
 
     def test_append_requires_existing_stage(self, spark, tmp_path):
         from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
@@ -412,117 +431,6 @@ class TestFastAppend:
         assert plan.count("Exchange") == 1
 
 
-class TestCrashDebrisRecovery:
-    """Checkpoint-level repair of the two real crash shapes an
-    interrupted commit leaves behind: a half-archive (manifest moved to
-    the snapshot slot, data still in place) and a partial rewrite
-    (archive completed, junk data written, no manifest)."""
-
-    def _write_two(self, spark, tmp_path):
-        from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-        ck = StageCheckpoint(tmp_path / "debris")
-        v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
-        v2 = spark.createDataFrame([(3, "c"), (4, "d")], "id long, s string")
-        ck.write("stage", v1, input_fingerprint="fp1")
-        ck.write("stage", v2, input_fingerprint="fp2")  # archives v1
-        return ck
-
-    def test_heal_half_archive_restores_current(self, spark, tmp_path):
-        ck = self._write_two(spark, tmp_path)
-        m_before = ck.read_manifest("stage")
-        # simulate a crash between _archive_current's two renames:
-        # manifest moved into the next snapshot slot, data left behind
-        v = ck.snapshot_versions("stage")[-1] + 1
-        slot = ck._snapshots_dir("stage") / f"v{v}"
-        slot.mkdir(parents=True)
-        ck.manifest_path("stage").rename(slot / "_manifest.json")
-        assert ck.read_manifest("stage") is None
-        assert ck.latest_snapshot("stage") != v  # slot is incomplete
-
-        assert ck.heal_half_archive("stage") is True
-        m_after = ck.read_manifest("stage")
-        assert m_after == m_before
-        assert not slot.exists()
-        assert ck.load(spark, "stage").count() == 2
-        # idempotent no-op when the stage is complete
-        assert ck.heal_half_archive("stage") is False
-
-    def test_rollback_clears_partial_rewrite_junk(self, spark, tmp_path):
-        import shutil
-
-        ck = self._write_two(spark, tmp_path)
-        v2_fp = ck.read_manifest("stage")["output_fingerprint"]
-        # simulate a crash mid-rewrite AFTER a completed archive: the
-        # previous version sits whole in the newest snapshot, the stage
-        # holds a partial junk data dir and no manifest
-        v = ck._archive_current("stage")
-        junk = ck._dir("stage") / "data.parquet"
-        junk.mkdir()
-        (junk / "_temporary").mkdir()
-        (junk / "part-junk.snappy.parquet").write_bytes(b"not parquet")
-
-        ck.rollback("stage", v, spark=spark)
-        m = ck.read_manifest("stage")
-        assert m["output_fingerprint"] == v2_fp
-        assert ck.load(spark, "stage").count() == 2
-        assert not (junk / "part-junk.snappy.parquet").exists()
-
-    def test_recovery_heals_half_archived_stage(self, spark, tmp_path):
-        """Integration: _recover_pending meets a manifest-less stage
-        whose newest snapshot slot is manifest-only — it must heal (not
-        roll back to an older version, not silently skip)."""
-        import json
-
-        from poi_name_matching_spark.plans.incremental import (
-            _PENDING_MARKER,
-            _recover_pending,
-        )
-        from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-        ck = self._write_two(spark, tmp_path)
-        fp2 = ck.read_manifest("stage")["output_fingerprint"]
-        v = ck.snapshot_versions("stage")[-1] + 1
-        slot = ck._snapshots_dir("stage") / f"v{v}"
-        slot.mkdir(parents=True)
-        ck.manifest_path("stage").rename(slot / "_manifest.json")
-        (tmp_path / "debris" / _PENDING_MARKER).write_text(
-            json.dumps({"in_fp": "x", "stage_fps": {"stage": fp2}})
-        )
-        rec = _recover_pending(spark, ck)
-        assert rec["rolled_back"] == ["stage"]
-        assert ck.read_manifest("stage")["output_fingerprint"] == fp2
-        assert ck.load(spark, "stage").count() == 2
-
-    def test_recovery_raises_when_nothing_to_restore(self, spark, tmp_path):
-        """A mutated stage with no manifest and no complete snapshot must
-        fail loudly and KEEP the marker — silently clearing it would
-        report a half-applied increment as recovered."""
-        import json
-
-        import pytest as _pytest
-
-        from poi_name_matching_spark.plans.incremental import (
-            _PENDING_MARKER,
-            _recover_pending,
-        )
-        from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-        ck = StageCheckpoint(tmp_path / "debris2")
-        df = spark.createDataFrame([(1, "a")], "id long, s string")
-        ck.write("stage", df, input_fingerprint="fp1")
-        fp = ck.read_manifest("stage")["output_fingerprint"]
-        # crash debris with NO snapshot history at all
-        ck.manifest_path("stage").unlink()
-        marker = tmp_path / "debris2" / _PENDING_MARKER
-        marker.write_text(
-            json.dumps({"in_fp": "x", "stage_fps": {"stage": fp}})
-        )
-        with _pytest.raises(RuntimeError, match="cannot restore"):
-            _recover_pending(spark, ck)
-        assert marker.exists()
-
-
 def test_append_manifest_partitions_history_compacts(spark, tmp_path, monkeypatch):
     """Fast-append manifests must stay O(increment): old per-partition
     entries compact into one rollup row once the cap is hit, preserving
@@ -548,131 +456,6 @@ def test_append_manifest_partitions_history_compacts(spark, tmp_path, monkeypatc
     # ids stay monotone so the next append's id base is still unique
     ids = [p["id"] for p in m["partitions"]]
     assert ids == sorted(ids)
-
-
-class TestHealGuards:
-    """heal_half_archive must reunite the stranded manifest ONLY with
-    the data it describes, and the batch write path must preserve a
-    half-archived version instead of overwriting the only copy."""
-
-    def _write_two(self, spark, tmp_path, name="healg"):
-        from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-        ck = StageCheckpoint(tmp_path / name)
-        v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
-        v2 = spark.createDataFrame([(3, "c"), (4, "d")], "id long, s string")
-        ck.write("stage", v1, input_fingerprint="fp1")
-        ck.write("stage", v2, input_fingerprint="fp2")
-        return ck
-
-    def _half_archive(self, ck):
-        v = ck.snapshot_versions("stage")[-1] + 1
-        slot = ck._snapshots_dir("stage") / f"v{v}"
-        slot.mkdir(parents=True)
-        ck.manifest_path("stage").rename(slot / "_manifest.json")
-        return slot
-
-    def test_heal_refuses_junk_data(self, spark, tmp_path):
-        """Second crash mid-rewrite after a half-archive: the stage data
-        dir is junk (no _SUCCESS) — healing would mint a corrupt
-        'complete' version, so it must refuse."""
-        import shutil
-
-        ck = self._write_two(spark, tmp_path, "healg1")
-        slot = self._half_archive(ck)
-        data = ck._dir("stage") / "data.parquet"
-        shutil.rmtree(data)
-        data.mkdir()
-        (data / "part-junk.parquet").write_bytes(b"garbage")
-        assert ck.heal_half_archive("stage", spark=spark) is False
-        assert (slot / "_manifest.json").exists()  # manifest stays put
-
-    def test_heal_refuses_wrong_complete_data(self, spark, tmp_path):
-        """Data dir complete (_SUCCESS present) but NOT the version the
-        stranded manifest describes: the fingerprint verification (spark
-        passed) must reject the pairing."""
-        import shutil
-
-        ck = self._write_two(spark, tmp_path, "healg2")
-        slot = self._half_archive(ck)
-        data = ck._dir("stage") / "data.parquet"
-        shutil.rmtree(data)
-        other = spark.createDataFrame(
-            [(9, "z"), (10, "y"), (11, "x")], "id long, s string"
-        )
-        other.write.parquet(str(data))  # complete, wrong content
-        assert ck.heal_half_archive("stage", spark=spark) is False
-        assert (slot / "_manifest.json").exists()
-
-    def test_write_preserves_half_archived_version(self, spark, tmp_path):
-        """run_pipeline-style remediation: write() over a half-archived
-        stage must heal first so the previous version lands in snapshot
-        history (rollback-able) instead of being overwritten."""
-        ck = self._write_two(spark, tmp_path, "healg3")
-        fp2 = ck.read_manifest("stage")["output_fingerprint"]
-        self._half_archive(ck)
-        v3 = spark.createDataFrame([(7, "g")], "id long, s string")
-        ck.write("stage", v3, input_fingerprint="fp3")
-        hist = ck.history("stage")
-        archived_fps = {
-            h["output_fingerprint"] for h in hist if h["version"] is not None
-        }
-        assert fp2 in archived_fps  # the healed version survived
-        v = [
-            h["version"]
-            for h in hist
-            if h["version"] is not None
-            and h["output_fingerprint"] == fp2
-        ][0]
-        ck.rollback("stage", v, spark=spark)
-        assert ck.load(spark, "stage").count() == 2
-
-
-def test_run_pipeline_clears_stale_pending_marker(spark, tmp_path):
-    """A completed batch run supersedes any in-flight increment: a stale
-    WAL marker must not survive run_pipeline (it would trigger a bogus
-    rollback of the rebuild at the next incremental_update)."""
-    from poi_name_matching_spark.data import transcripts_df
-    from poi_name_matching_spark.plans.pipeline import (
-        PENDING_MARKER_NAME,
-        PipelineConfig,
-        run_pipeline,
-    )
-
-    tdf = transcripts_df(spark, n_convs=40, seed=4)
-    out = tmp_path / "mk"
-    cfg = PipelineConfig(checkpoint_dir=out)
-    run_pipeline(spark, tdf, cfg)
-    (out / PENDING_MARKER_NAME).write_text(
-        '{"in_fp": "stale", "stage_fps": {}}'
-    )
-    run_pipeline(spark, tdf, cfg)  # fully cached resume still clears it
-    assert not (out / PENDING_MARKER_NAME).exists()
-
-
-def test_half_archived_stage_resumes_without_recompute(spark, tmp_path):
-    """get_or_compute heals a half-archived stage before deciding on a
-    recompute: the crash costs nothing — resume reuses the healed
-    version instead of rebuilding the stage."""
-    from poi_name_matching_spark.data import transcripts_df
-    from poi_name_matching_spark.plans.pipeline import PipelineConfig, run_pipeline
-    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-    tdf = transcripts_df(spark, n_convs=40, seed=8)
-    out = tmp_path / "heal_resume"
-    cfg = PipelineConfig(checkpoint_dir=out)
-    run_pipeline(spark, tdf, cfg)
-    ck = StageCheckpoint(out)
-    fp = ck.read_manifest("scores")["output_fingerprint"]
-    v = (ck.snapshot_versions("scores") or [0])[-1] + 1
-    slot = ck._snapshots_dir("scores") / f"v{v}"
-    slot.mkdir(parents=True)
-    ck.manifest_path("scores").rename(slot / "_manifest.json")
-
-    second = run_pipeline(spark, tdf, cfg)
-    assert "scores" in second.cached_stages  # healed, not recomputed
-    assert ck.read_manifest("scores")["output_fingerprint"] == fp
-    assert not slot.exists()
 
 
 def test_append_refuses_schema_drift(spark, tmp_path):
@@ -742,7 +525,7 @@ class TestCompaction:
     """Iceberg rewrite_data_files analog: fast appends accumulate small
     files; compact() rewrites them into ~target-sized ones while
     preserving content, fingerprint, and every manifest config key —
-    invisible to resume, recovery, and drift guards."""
+    invisible to resume and drift guards."""
 
     def _many_appends(self, spark, tmp_path, n_appends=3):
         from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
@@ -811,7 +594,7 @@ class TestCompaction:
         files_before = set(ck._data_files("stage"))
         res = ck.compact(spark, "stage")
         v = res["snapshot"]
-        ck.rollback("stage", v, spark=spark)
+        ck.rollback("stage", v)
         assert set(ck._data_files("stage")) == files_before
         m = ck.read_manifest("stage")
         assert m["appended"]["rows"] == 2  # pre-compaction manifest is back
@@ -865,13 +648,31 @@ class TestCompaction:
         assert set(ck._data_files("stage")) == files_before
         assert ck.snapshot_versions("stage") == snaps_before
         assert ck.read_manifest("stage") == m_before
-        assert not (ck._dir("stage") / "_compact_tmp").exists()
         assert ck.load(spark, "stage").count() == m_before["rows"]
+        # the rejected copy is an unnamed version; expiry sweeps it
+        live = ck.manifest_path("stage").parent.name
+        ck.expire_snapshots("stage", keep_last=len(snaps_before))
+        assert sorted(p.name for p in ck._dir("stage").iterdir()) == sorted(
+            [live] + [f"v{v}" for v in snaps_before]
+        )
+
+    def test_compact_tolerates_pre_upgrade_manifest(self, spark, tmp_path):
+        """Manifests written before output_fingerprint existed must
+        compact via a rescan (the same tolerance append() has) and have
+        the fingerprint backfilled."""
+        ck = self._many_appends(spark, tmp_path)
+        mp = ck.manifest_path("stage")
+        m = json.loads(mp.read_text())
+        fp = m.pop("output_fingerprint")
+        mp.write_text(json.dumps(m))
+        res = ck.compact(spark, "stage")
+        assert res["compacted"]
+        assert ck.read_manifest("stage")["output_fingerprint"] == fp
 
 
 class TestTimeTravel:
-    """load_snapshot: read any archived version without mutating the
-    stage (Iceberg VERSION AS OF analog), across both snapshot shapes."""
+    """load_snapshot: read any retained version without mutating the
+    stage (Iceberg VERSION AS OF analog), written or appended."""
 
     def _staged(self, spark, tmp_path):
         from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
@@ -880,9 +681,9 @@ class TestTimeTravel:
         v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
         v2_inc = spark.createDataFrame([(3, "c")], "id long, s string")
         v3 = spark.createDataFrame([(9, "z")], "id long, s string")
-        ck.write("stage", v1, input_fingerprint="fp1")
-        ck.append("stage", v2_inc)           # v1 = append snapshot {1,2}
-        ck.write("stage", v3, input_fingerprint="fp3")  # v2 = full {1,2,3}
+        ck.write("stage", v1, input_fingerprint="fp1")  # v1 = {1,2}
+        ck.append("stage", v2_inc)           # v2 = append version {1,2,3}
+        ck.write("stage", v3, input_fingerprint="fp3")  # v3 = live {9}
         return ck
 
     def test_reads_both_snapshot_shapes_without_mutation(
@@ -890,7 +691,7 @@ class TestTimeTravel:
     ):
         ck = self._staged(spark, tmp_path)
         m_cur = ck.read_manifest("stage")
-        # v2 is the full snapshot of the appended state
+        # v2 is the appended state
         full = ck.load_snapshot(spark, "stage", 2)
         assert {r["id"] for r in full.collect()} == {1, 2, 3}
         # current version untouched by the read
@@ -898,11 +699,11 @@ class TestTimeTravel:
         assert {r["id"] for r in ck.load_snapshot(spark, "stage", None).collect()} == {9}
         assert {r["id"] for r in ck.load(spark, "stage").collect()} == {9}
 
-    def test_append_snapshot_blocked_after_rewrite(self, spark, tmp_path):
+    def test_append_snapshot_readable_after_rewrite(self, spark, tmp_path):
         ck = self._staged(spark, tmp_path)
-        # v1 is an append snapshot whose files the v3 full rewrite moved
-        with pytest.raises(FileNotFoundError, match="full rewrite"):
-            ck.load_snapshot(spark, "stage", 1)
+        # the v3 full rewrite left the append version and its parent whole
+        assert {r["id"] for r in ck.load_snapshot(spark, "stage", 2).collect()} == {1, 2, 3}
+        assert {r["id"] for r in ck.load_snapshot(spark, "stage", 1).collect()} == {1, 2}
         with pytest.raises(FileNotFoundError, match="no complete snapshot"):
             ck.load_snapshot(spark, "stage", 99)
 
@@ -913,106 +714,10 @@ class TestTimeTravel:
         v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
         ck.write("stage", v1)
         ck.append("stage", spark.createDataFrame([(3, "c")], "id long, s string"))
-        # no rewrite since: the append snapshot's files are all live
+        # v1 is the pre-append version
         old = ck.load_snapshot(spark, "stage", 1)
         assert {r["id"] for r in old.collect()} == {1, 2}
         assert ck.load(spark, "stage").count() == 3
-
-
-class TestCompactionCrashRecovery:
-    """The compaction swap is fenced by _compact_pending.json: a crash
-    anywhere inside it must be healable without recomputing the stage
-    (the pre-compaction version is archived and content-identical)."""
-
-    def _staged(self, spark, tmp_path, name):
-        from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-        ck = StageCheckpoint(tmp_path / name)
-        ck.write("stage", spark.createDataFrame(
-            [(1, "a"), (2, "b")], "id long, s string"))
-        ck.append("stage", spark.createDataFrame(
-            [(3, "c")], "id long, s string"))
-        return ck
-
-    def _crash_after_archive(self, ck, spark, rename_tmp):
-        """Reproduce the swap-window debris: marker written, current
-        version archived, optionally the compacted copy renamed in,
-        manifest never written."""
-        import shutil
-
-        from poi_name_matching_spark.sources.checkpoint import (
-            write_json_atomic,
-        )
-
-        m = ck.read_manifest("stage")
-        tmp = ck._dir("stage") / "_compact_tmp"
-        data_dir = ck._dir("stage") / "data.parquet"
-        spark.read.parquet(str(data_dir)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp))
-        write_json_atomic(
-            ck._compact_marker("stage"),
-            {"stage": "stage", "fp": m["output_fingerprint"]},
-        )
-        ck._archive_current("stage")
-        if rename_tmp:
-            tmp.rename(data_dir)
-        return m
-
-    @pytest.mark.parametrize("rename_tmp", [False, True])
-    def test_incremental_entry_heals_crashed_swap(
-        self, spark, tmp_path, rename_tmp
-    ):
-        ck = self._staged(spark, tmp_path, f"ccr{rename_tmp}")
-        m_before = self._crash_after_archive(ck, spark, rename_tmp)
-        assert ck.read_manifest("stage") is None  # the crash window
-        healed = ck.heal_crashed_compaction("stage")
-        assert healed
-        m = ck.read_manifest("stage")
-        assert m == m_before  # exact pre-compaction version restored
-        assert {r["id"] for r in ck.load(spark, "stage").collect()} == {1, 2, 3}
-        assert not ck._compact_marker("stage").exists()
-        # idempotent: nothing left to heal
-        assert ck.heal_crashed_compaction("stage") is False
-
-    def test_resume_and_compact_self_heal(self, spark, tmp_path):
-        ck = self._staged(spark, tmp_path, "ccr2")
-        self._crash_after_archive(ck, spark, rename_tmp=True)
-        # get_or_compute (the resume entry) must heal, not recompute
-        df, cached = ck.get_or_compute(
-            spark, "stage",
-            lambda: (_ for _ in ()).throw(AssertionError("recomputed")),
-        )
-        assert cached and df.count() == 3
-        # and a follow-up compact completes normally
-        res = ck.compact(spark, "stage")
-        assert res["compacted"] and len(ck._data_files("stage")) == 1
-
-    def test_unmarked_manifestless_stage_still_requires_rebuild(
-        self, spark, tmp_path
-    ):
-        """Without the marker, a manifest-less stage is a crashed batch
-        rewrite: restoring a snapshot would desynchronize the checkpoint,
-        so heal declines and incremental refuses as before."""
-        ck = self._staged(spark, tmp_path, "ccr3")
-        ck._archive_current("stage")  # manifest-less, NO marker
-        assert ck.heal_crashed_compaction("stage") is False
-        assert ck.read_manifest("stage") is None
-
-    def test_compact_tolerates_pre_upgrade_manifest(self, spark, tmp_path):
-        """Manifests written before output_fingerprint existed must
-        compact via a rescan (the same tolerance append() has) and have
-        the fingerprint backfilled."""
-        import json as _json
-
-        ck = self._staged(spark, tmp_path, "ccr4")
-        mp = ck.manifest_path("stage")
-        m = _json.loads(mp.read_text())
-        fp = m.pop("output_fingerprint")
-        mp.write_text(_json.dumps(m))
-        res = ck.compact(spark, "stage")
-        assert res["compacted"]
-        assert ck.read_manifest("stage")["output_fingerprint"] == fp
 
 
 def test_cli_rejects_compact_without_incremental(capsys):
@@ -1023,219 +728,3 @@ def test_cli_rejects_compact_without_incremental(capsys):
               "--compact-above-files", "8"])
     assert exc.value.code == 2
     assert "requires --incremental" in capsys.readouterr().err
-
-
-def test_heal_crashed_compaction_mid_archive(spark, tmp_path):
-    """The third crash window: inside _archive_current itself (manifest
-    renamed into the snapshot slot, data not yet moved) with the
-    compaction marker present — healed by reuniting manifest and data
-    (the half-archive repair), losing nothing."""
-    from poi_name_matching_spark.sources.checkpoint import (
-        StageCheckpoint,
-        write_json_atomic,
-    )
-
-    ck = StageCheckpoint(tmp_path / "ccr5")
-    ck.write("stage", spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, s string"))
-    ck.append("stage", spark.createDataFrame(
-        [(3, "c")], "id long, s string"))
-    m_before = ck.read_manifest("stage")
-    write_json_atomic(
-        ck._compact_marker("stage"),
-        {"stage": "stage", "fp": m_before["output_fingerprint"]},
-    )
-    # crash inside _archive_current: manifest rename done, data rename not
-    v = ck.snapshot_versions("stage")[-1] + 1
-    slot = ck._snapshots_dir("stage") / f"v{v}"
-    slot.mkdir(parents=True)
-    ck.manifest_path("stage").rename(slot / "_manifest.json")
-
-    assert ck.heal_crashed_compaction("stage", spark=spark)
-    assert ck.read_manifest("stage") == m_before
-    assert {r["id"] for r in ck.load(spark, "stage").collect()} == {1, 2, 3}
-    assert not ck._compact_marker("stage").exists()
-
-
-class TestCompactMarkerHygiene:
-    """A stale compaction marker (crash after the manifest write but
-    before marker cleanup) must never misclassify a LATER crash as a
-    healable compaction — fp-validated restores plus marker clearing at
-    every rewrite entry point."""
-
-    def _ck(self, spark, tmp_path, name):
-        from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-        ck = StageCheckpoint(tmp_path / name)
-        ck.write("stage", spark.createDataFrame(
-            [(1, "a"), (2, "b")], "id long, s string"))
-        return ck
-
-    def test_fp_mismatched_marker_declines_restore(self, spark, tmp_path):
-        """Marker fp != archived snapshot fp ⇒ the manifest-less stage is
-        NOT a healable compaction (it is some later rewrite's debris):
-        heal declines and the rebuild contract stands."""
-        from poi_name_matching_spark.sources.checkpoint import (
-            write_json_atomic,
-        )
-
-        ck = self._ck(spark, tmp_path, "mh1")
-        write_json_atomic(
-            ck._compact_marker("stage"), {"stage": "stage", "fp": "0:stale"}
-        )
-        ck._archive_current("stage")  # simulates a crashed LATER rewrite
-        assert ck.heal_crashed_compaction("stage", spark=spark) is False
-        assert ck.read_manifest("stage") is None  # still needs a rebuild
-        assert not ck._compact_marker("stage").exists()  # debris cleared
-
-    def test_write_append_rollback_clear_stale_marker(self, spark, tmp_path):
-        from poi_name_matching_spark.sources.checkpoint import (
-            write_json_atomic,
-        )
-
-        ck = self._ck(spark, tmp_path, "mh2")
-        df = spark.createDataFrame([(3, "c")], "id long, s string")
-        for op in ("write", "append", "rollback"):
-            write_json_atomic(
-                ck._compact_marker("stage"), {"stage": "stage", "fp": "x"}
-            )
-            if op == "write":
-                ck.write("stage", df)
-            elif op == "append":
-                ck.append("stage", spark.createDataFrame(
-                    [(4, "d")], "id long, s string"))
-            else:
-                ck.rollback(
-                    "stage", ck.snapshot_versions("stage")[-1], spark=spark
-                )
-            assert not ck._compact_marker("stage").exists(), op
-
-
-
-class TestMarkerHygieneEdges:
-    """Edges of the stale-marker hardening: pre-upgrade (fingerprint-
-    less) checkpoints must still heal, failed calls must not destroy a
-    pending claim, and a crash inside rollback's restore is healable."""
-
-    def _ck(self, spark, tmp_path, name):
-        from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-        ck = StageCheckpoint(tmp_path / name)
-        ck.write("stage", spark.createDataFrame(
-            [(1, "a"), (2, "b")], "id long, s string"))
-        ck.append("stage", spark.createDataFrame(
-            [(3, "c")], "id long, s string"))
-        return ck
-
-    def test_pre_upgrade_crashed_compaction_still_heals(
-        self, spark, tmp_path
-    ):
-        """A compaction over a pre-upgrade (fingerprint-less) manifest
-        that crashes mid-swap must heal by RESCANNING the archived data
-        against the marker's computed fingerprint."""
-        import json as _json
-
-        from poi_name_matching_spark.sources.checkpoint import (
-            write_json_atomic,
-        )
-
-        ck = self._ck(spark, tmp_path, "pu1")
-        mp = ck.manifest_path("stage")
-        m = _json.loads(mp.read_text())
-        fp = m.pop("output_fingerprint")   # simulate pre-upgrade manifest
-        mp.write_text(_json.dumps(m))
-        # crashed swap: marker carries the fp compact() computed by rescan
-        write_json_atomic(
-            ck._compact_marker("stage"), {"stage": "stage", "fp": fp}
-        )
-        ck._archive_current("stage")
-        assert ck.heal_crashed_compaction("stage", spark=spark)
-        restored = ck.read_manifest("stage")
-        assert restored is not None and "output_fingerprint" not in restored
-        assert {r["id"] for r in ck.load(spark, "stage").collect()} == {1, 2, 3}
-
-    def test_fp_less_half_archive_sparkless_keeps_marker(
-        self, spark, tmp_path
-    ):
-        """A pre-upgrade (fingerprint-less) stranded manifest cannot be
-        verified without a rescan: the spark-less compaction heal must
-        keep the marker and decline — never reunite blind — and a later
-        spark-ful call finishes the heal by rescanning."""
-        import json as _json
-
-        from poi_name_matching_spark.sources.checkpoint import (
-            write_json_atomic,
-        )
-
-        ck = self._ck(spark, tmp_path, "pu4")
-        mp = ck.manifest_path("stage")
-        m = _json.loads(mp.read_text())
-        fp = m.pop("output_fingerprint")   # simulate pre-upgrade manifest
-        mp.write_text(_json.dumps(m))
-        write_json_atomic(
-            ck._compact_marker("stage"), {"stage": "stage", "fp": fp}
-        )
-        # crash inside _archive_current: manifest renamed into the slot,
-        # data still in place — the half-archive window
-        v = ck.snapshot_versions("stage")[-1] + 1
-        slot = ck._snapshots_dir("stage") / f"v{v}"
-        slot.mkdir(parents=True)
-        ck.manifest_path("stage").rename(slot / "_manifest.json")
-
-        # direct heal without a session: unverifiable ⇒ refuse
-        assert ck.heal_half_archive("stage", expect_fp=fp) is False
-        # compaction heal without a session: refuse AND keep the claim
-        assert ck.heal_crashed_compaction("stage") is False
-        assert ck.read_manifest("stage") is None
-        assert ck._compact_marker("stage").exists()
-        # spark-ful heal verifies by rescan and finishes the job
-        assert ck.heal_crashed_compaction("stage", spark=spark)
-        assert {r["id"] for r in ck.load(spark, "stage").collect()} == {1, 2, 3}
-        assert not ck._compact_marker("stage").exists()
-
-    def test_failed_rollback_keeps_pending_claim(self, spark, tmp_path):
-        """rollback(bad version) raises without touching anything — it
-        must not destroy the compaction marker a pending heal needs."""
-        from poi_name_matching_spark.sources.checkpoint import (
-            write_json_atomic,
-        )
-
-        ck = self._ck(spark, tmp_path, "pu2")
-        m = ck.read_manifest("stage")
-        write_json_atomic(
-            ck._compact_marker("stage"),
-            {"stage": "stage", "fp": m["output_fingerprint"]},
-        )
-        ck._archive_current("stage")   # crashed compaction swap
-        with pytest.raises(FileNotFoundError, match="no complete snapshot"):
-            ck.rollback("stage", 99, spark=spark)
-        assert ck._compact_marker("stage").exists()  # claim survives
-        assert ck.heal_crashed_compaction("stage", spark=spark)
-        assert ck.read_manifest("stage") == m
-
-    def test_crash_inside_rollback_restore_is_healable(
-        self, spark, tmp_path
-    ):
-        """A crash between rollback's two restore renames strands the
-        manifest in a MID-list snapshot slot; the spark-verified
-        half-archive heal must find it there (not just in the newest)."""
-        from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-        ck = StageCheckpoint(tmp_path / "pu3")
-        v1 = spark.createDataFrame([(1, "a")], "id long, s string")
-        v2 = spark.createDataFrame([(2, "b")], "id long, s string")
-        v3 = spark.createDataFrame([(3, "c")], "id long, s string")
-        ck.write("stage", v1)
-        ck.write("stage", v2)   # archives v1 as snapshot 1
-        ck.write("stage", v3)   # archives v2 as snapshot 2
-        m1 = ck.history("stage")[0]
-        # simulate rollback("stage", 1) crashing between its renames:
-        # current archived (snapshot 3), v1's data renamed in, manifest not
-        ck._archive_current("stage")
-        slot1 = ck._snapshots_dir("stage") / "v1"
-        (slot1 / "data.parquet").rename(ck._dir("stage") / "data.parquet")
-        assert ck.read_manifest("stage") is None
-        assert ck.heal_half_archive("stage", spark=spark)
-        m = ck.read_manifest("stage")
-        assert m["output_fingerprint"] == m1["output_fingerprint"]
-        assert {r["id"] for r in ck.load(spark, "stage").collect()} == {1}
