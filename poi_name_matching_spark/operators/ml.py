@@ -194,6 +194,16 @@ def _vector_width(data: DataFrame) -> int:
     return len(row["features"])
 
 
+def _fit(est, train: DataFrame):
+    """``est.fit(train)`` without its training summary. The summary holds
+    the SparkSession, and ``transform`` serializes the model into its
+    task closure; under Spark 4.1 a session that has run
+    ``DataFrame.observe`` (every checkpoint commit does) no longer
+    serializes, because its ObservationManager is not Serializable.
+    ``copy()`` drops the summary, which nothing here reads."""
+    return est.fit(train).copy()
+
+
 def hash_split(df: DataFrame, key_cols: list[str], test_fraction: float = 0.2):
     """Deterministic train/test split: pmod(xxhash64(keys), 100) —
     stable across runs and partitionings (reference uses
@@ -221,7 +231,7 @@ def train_model(
     est = make_classifier(
         kind, label_col=label_col, seed=seed, n_features=n_features, **estimator_kwargs
     )
-    model = est.fit(train)
+    model = _fit(est, train)
     preds = model.transform(test).select(
         "left_id",
         "right_id",
@@ -301,7 +311,7 @@ def cross_validate(
             n_features=n_features,
             **estimator_kwargs,
         )
-        model = est.fit(train)
+        model = _fit(est, train)
         preds = model.transform(test).withColumn(
             "pred", F.col("prediction").cast("int")
         )

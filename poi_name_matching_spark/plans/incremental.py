@@ -489,9 +489,10 @@ def incremental_update(
 
         stats["n_signatures"] = ckpt.read_manifest("signatures")["rows"]
         stats["n_candidate_pairs"] = ckpt.read_manifest("candidate_pairs")["rows"]
-        stats["n_components"] = (
-            comps.select("component_id").distinct().count()
-        )
+        # one self-labelled member per component (labels are min ids)
+        stats["n_components"] = comps.filter(
+            F.col("conv_id") == F.col("component_id")
+        ).count()
         return PipelineResult(sigs, pairs, scores, comps, [], stats)
     finally:
         for _df in persisted:

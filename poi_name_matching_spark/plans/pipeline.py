@@ -41,9 +41,9 @@ STAGES = ["signatures", "blocks", "candidate_pairs", "scores", "components"]
 
 def _output_fp(ckpt: StageCheckpoint, stage: str, df: DataFrame) -> str:
     """Output fingerprint of a completed stage: fast path reads the
-    manifest (recorded at write time in the same scan as partition
-    stats); fallback recomputes only for pre-upgrade checkpoints whose
-    manifest lacks the field."""
+    manifest (observed while the stage's rows were written, so no scan);
+    fallback recomputes only for pre-upgrade checkpoints whose manifest
+    lacks the field."""
     manifest = ckpt.read_manifest(stage) or {}
     return manifest.get("output_fingerprint") or stage_fingerprint(df)
 
@@ -277,7 +277,9 @@ def run_pipeline(
 
     stats["n_signatures"] = ckpt.read_manifest("signatures")["rows"]
     stats["n_candidate_pairs"] = ckpt.read_manifest("candidate_pairs")["rows"]
-    stats["n_components"] = comps.select("component_id").distinct().count()
+    # labels are the minimum member id: each component has exactly one
+    # member labelled with its own id (a filter + count, no shuffle)
+    stats["n_components"] = comps.filter(F.col("conv_id") == F.col("component_id")).count()
     if cfg.expire_keep_last is not None:
         for stage in STAGES:
             ckpt.expire_snapshots(stage, keep_last=cfg.expire_keep_last)

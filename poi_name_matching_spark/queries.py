@@ -912,8 +912,9 @@ def score_block_pairs_lev(spark, sf_dir):
        FROM walk GROUP BY node""",
 )
 def er_components(spark, sf_dir):
-    """Connected components (alternating star contraction) over
-    first-token blocking edges of the derived transcripts. Oracle:
+    """Connected components (driver union-find, or star contraction
+    above ``DRIVER_MAX_EDGES``) over first-token blocking edges of the
+    derived transcripts. Oracle:
     reachability closure via WITH RECURSIVE + min-label per node —
     component_id = lexicographic min conv_id in the component on BOTH
     engines (string ordering)."""

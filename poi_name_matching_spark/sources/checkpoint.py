@@ -13,6 +13,19 @@ whose manifest exists AND whose recorded ``input_fingerprint`` matches the
 fingerprint of the current inputs; deleting one stage directory recomputes
 that stage and everything downstream, nothing upstream.
 
+Stats without a rescan: ``write`` and ``append`` observe the output
+fingerprint (row count + xor of ``xxhash64`` row hashes, the
+``stage_fingerprint`` aggregate) with ``DataFrame.observe`` while the
+rows are written, and read each new data file's row count from its
+parquet footer on the driver — one Spark job per commit, not a write
+plus a rescan. The observed count must equal the footers' total or the
+version is left uncommitted. ``partitions`` holds one entry per
+non-empty data file. ``compact`` alone rescans what it wrote: that
+independent fingerprint is its verification. Under Spark 4.1 a session
+that has run an observation no longer Java-serializes, so a spark.ml
+model whose training summary holds it cannot ``transform``;
+``operators/ml.py`` drops those summaries.
+
 Commit protocol (the Iceberg metadata-pointer commit): every ``write``,
 ``append`` and ``compact`` creates a NEW version directory and never
 touches an existing one. ``_head.json`` names each stage's live version
@@ -53,7 +66,8 @@ import time
 from contextlib import contextmanager
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -76,15 +90,29 @@ def write_json_atomic(path: Path, payload: dict) -> None:
         os.close(dfd)
 
 
+def _fp_columns(columns: list[str]) -> tuple:
+    """The content-fingerprint aggregate over ``columns``: row count and
+    bit_xor of ``xxhash64`` row hashes (``n``, ``h``)."""
+    return (
+        F.count("*").alias("n"),
+        F.coalesce(F.bit_xor(F.xxhash64(*columns)), F.lit(0)).alias("h"),
+    )
+
+
 def stage_fingerprint(df: DataFrame) -> str:
     """Order/partitioning-insensitive content fingerprint: bit_xor of
     row hashes + row count over ALL columns. One scan; used to decide
     stage skip and to verify byte-stability in resumability tests."""
-    row = df.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64(*df.columns)), F.lit(0)).alias("h"),
-    ).first()
+    row = df.agg(*_fp_columns(df.columns)).first()
     return _fp_format(row["n"], row["h"])
+
+
+def _observe_fingerprint(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its ``stage_fingerprint`` aggregate observed as the
+    rows stream through the action that consumes it (the stage write),
+    so the fingerprint costs no scan of its own."""
+    obs = Observation()
+    return df.observe(obs, *_fp_columns(df.columns)), obs
 
 
 def _fp_format(n: int, h: int) -> str:
@@ -104,33 +132,29 @@ def _fp_parse(fp: str) -> tuple[int, int]:
 _PARTITION_HISTORY_CAP = 512
 
 
-def _scan_partition_stats(df: DataFrame) -> tuple[list, int, int]:
-    """One scan of ``df``: per-partition ``(_pid, count, h)`` rows (skew
-    visibility for the manifest) plus the driver-side xor-fold of the
-    per-partition ``xxhash64`` hashes, wrapped to signed 64-bit so the
-    result formats identically to ``stage_fingerprint``. Shared by
-    ``write``, ``append`` and ``compact`` — the 'composed fingerprint ==
-    full rescan' contract depends on every caller using the same scan
-    and wrap rule. Returns ``(part_rows, n, h)``."""
-    part_rows = (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.count("*").alias("count"),
-            F.coalesce(
-                F.bit_xor(F.xxhash64(*df.columns)), F.lit(0)
-            ).alias("h"),
+def _file_rows(path: Path, files: list[str]) -> list[int]:
+    """Row count of each of ``files`` under ``path``, read from its
+    parquet footer on the driver (no Spark job). Every commit — write,
+    append and compact — calls it once its data files are written."""
+    return [pq.read_metadata(path / f).num_rows for f in files]
+
+
+def _observed_stats(
+    stage: str, obs: Observation, path: Path, files: list[str]
+) -> tuple[int, int, list[int]]:
+    """``(n, h, file_rows)`` of a write observed by ``obs`` that added
+    ``files`` under ``path``. The observed count must equal the footers'
+    total; a mismatch (a plan that ran twice, a lost file) raises before
+    the new version is committed."""
+    file_rows = _file_rows(path, files)
+    fp = obs.get
+    n, h = int(fp["n"]), int(fp["h"])
+    if n != sum(file_rows):
+        raise ValueError(
+            f"stage {stage!r}: the write observed {n} rows but its files "
+            f"hold {sum(file_rows)} — the new version was not committed"
         )
-        .collect()
-    )
-    h = 0
-    for r in part_rows:
-        h ^= int(r["h"])
-    h &= (1 << 64) - 1
-    if h >= 1 << 63:
-        h -= 1 << 64
-    n = int(sum(r["count"] for r in part_rows))
-    return part_rows, n, h
+    return n, h, file_rows
 
 
 def _fp_combine(a: str, b: str) -> str:
@@ -145,11 +169,9 @@ def _fp_combine(a: str, b: str) -> str:
     return _fp_format(na + nb, h)
 
 
-def _partitions(part_rows, base: int = 0) -> list[dict]:
-    return sorted(
-        [{"id": base + int(r["_pid"]), "rows": int(r["count"])} for r in part_rows],
-        key=lambda d: d["id"],
-    )
+def _partitions(file_rows: list[int], base: int = 0) -> list[dict]:
+    """Manifest ``partitions`` entries: one per non-empty data file."""
+    return [{"id": base + i, "rows": r} for i, r in enumerate(file_rows) if r]
 
 
 def _part_files(path: Path) -> list[str]:
@@ -412,10 +434,10 @@ class StageCheckpoint:
         bucket_by: str | None = None,
         n_buckets: int = 32,
     ) -> DataFrame:
-        """Materialize ``df`` as a new version, record per-partition row
-        counts (lineage + skew visibility) and wall time, commit it, and
-        return the reloaded DataFrame so downstream stages read the
-        checkpoint, not the lineage.
+        """Materialize ``df`` as a new version, record its observed
+        output fingerprint, per-file row counts (skew visibility) and
+        wall time, commit it, and return the reloaded DataFrame so
+        downstream stages read the checkpoint, not the lineage.
 
         ``bucket_by``: write as a BUCKETED external table instead of
         plain parquet (``bucketBy(n_buckets).sortBy``). Downstream
@@ -428,10 +450,13 @@ class StageCheckpoint:
         spark = df.sparkSession
         v = self._new_version(stage)
         path = self._data_path(stage, v)
+        # the output fingerprint is observed as the rows are written —
+        # downstream stages key off it without re-scanning the checkpoint
+        observed, obs = _observe_fingerprint(df)
         if bucket_by:
             table = self._table_name(stage, v)
             (
-                df.write.bucketBy(int(n_buckets), bucket_by)
+                observed.write.bucketBy(int(n_buckets), bucket_by)
                 .sortBy(bucket_by)
                 .option("path", str(path))
                 .mode("overwrite")
@@ -441,19 +466,17 @@ class StageCheckpoint:
             reloaded = spark.table(table)
             extra = {**(extra or {}), "bucket_by": bucket_by, "n_buckets": int(n_buckets)}
         else:
-            df.write.parquet(str(path))
-            reloaded = spark.read.parquet(str(path))
-        # one scan: per-partition rows (skew visibility) + per-partition
-        # xxhash64 xor, combined driver-side into the same format as
-        # stage_fingerprint — downstream stages key off this without
-        # re-scanning the checkpoint
-        part_rows, n, h = _scan_partition_stats(reloaded)
+            observed.write.parquet(str(path))
+            # the written schema is df's: passing it skips the footer-
+            # sampling job schema inference would launch
+            reloaded = spark.read.schema(df.schema).parquet(str(path))
+        n, h, file_rows = _observed_stats(stage, obs, path, _part_files(path))
         manifest = {
             "stage": stage,
             "input_fingerprint": input_fingerprint,
             "output_fingerprint": _fp_format(n, h),
             "rows": n,
-            "partitions": _partitions(part_rows),
+            "partitions": _partitions(file_rows),
             "wall_ms": int((time.monotonic() - t0) * 1000),
             "written_at_unix": int(time.time()),
         }
@@ -473,10 +496,10 @@ class StageCheckpoint:
         """Fast-append commit (Iceberg ``fast_append`` analog): a new
         version that hard-links the live version's data files and writes
         ONLY ``df``'s rows next to them — O(increment) data written, no
-        existing file touched. Stats for the manifest are computed by
-        scanning just the new files, and the output fingerprint is
-        composed exactly (xor/count), so downstream resume keys match a
-        full rescan.
+        existing file touched. The increment's fingerprint is observed
+        during its write and the new files' row counts come from their
+        footers; the stage's output fingerprint is composed exactly
+        (xor/count), so downstream resume keys match a full rescan.
 
         Requires a complete existing stage. Bucketed stages append
         through the new version's catalog table with the same bucket
@@ -521,23 +544,20 @@ class StageCheckpoint:
             os.link(src / f, path / f)
             if (src / f".{f}.crc").exists():
                 os.link(src / f".{f}.crc", path / f".{f}.crc")
+        observed, obs = _observe_fingerprint(df)
         if bucket_by:
             n_buckets = int(m.get("n_buckets", 32))
             (
-                df.write.bucketBy(n_buckets, bucket_by)
+                observed.write.bucketBy(n_buckets, bucket_by)
                 .sortBy(bucket_by)
                 .mode("append")
                 .format("parquet")
                 .saveAsTable(self._bucketed_table(spark, stage, v, bucket_by, n_buckets))
             )
         else:
-            df.write.mode("append").parquet(str(path))
+            observed.write.mode("append").parquet(str(path))
         new_files = sorted(set(_part_files(path)) - set(linked))
-        if new_files:
-            appended = spark.read.parquet(*(str(path / f) for f in new_files))
-            part_rows, n_new, h = _scan_partition_stats(appended)
-        else:
-            part_rows, n_new, h = [], 0, 0
+        n_new, h, file_rows = _observed_stats(stage, obs, path, new_files)
         if expect_rows is not None and n_new != expect_rows:
             raise ValueError(
                 f"append to stage {stage!r} wrote {n_new} rows but the "
@@ -547,9 +567,9 @@ class StageCheckpoint:
             )
         out_fp = _fp_combine(prev_fp, _fp_format(n_new, h))
         pid_base = max((p["id"] for p in m.get("partitions", [])), default=-1) + 1
-        partitions = list(m.get("partitions", [])) + _partitions(part_rows, pid_base)
+        partitions = list(m.get("partitions", [])) + _partitions(file_rows, pid_base)
         # keep the commit O(increment): after many fast-appends the
-        # cumulative per-partition history would dominate the manifest
+        # cumulative per-file history would dominate the manifest
         # (a zero-row commit rewriting an unbounded JSON). Compact the
         # oldest entries into one rollup row — recent appends keep full
         # skew visibility, row totals are preserved exactly, and the
@@ -675,8 +695,10 @@ class StageCheckpoint:
         # Pre-upgrade manifests may lack output_fingerprint (same
         # tolerance append() has) — rescan the live files for it
         recorded = m.get("output_fingerprint") or stage_fingerprint(current)
-        part_rows, n, h = _scan_partition_stats(spark.read.parquet(str(path)))
-        out_fp = _fp_format(n, h)
+        file_rows = _file_rows(path, _part_files(path))
+        # an independent rescan of the new files, not an observation of
+        # the write: this check is what makes the rewrite trustworthy
+        out_fp = stage_fingerprint(spark.read.parquet(str(path)))
         if out_fp != recorded:
             raise RuntimeError(
                 f"compaction of stage {stage!r} produced fingerprint "
@@ -684,7 +706,7 @@ class StageCheckpoint:
             )
         manifest = {k: val for k, val in m.items() if k != "appended"}
         manifest["output_fingerprint"] = out_fp  # backfills pre-upgrade
-        manifest["partitions"] = _partitions(part_rows)
+        manifest["partitions"] = _partitions(file_rows)
         manifest["wall_ms"] = int((time.monotonic() - t0) * 1000)
         manifest["written_at_unix"] = int(time.time())
         result = {

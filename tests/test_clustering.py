@@ -1,9 +1,16 @@
-"""Connected components (large-star/small-star) unit + e2e tests."""
+"""Connected components unit + e2e tests.
+
+Every case runs twice: at the default ``DRIVER_MAX_EDGES`` (these small
+graphs take the driver union-find path) and, in the ``StarRounds``
+classes at the end, with the bound at 0 so the large-star/small-star
+rounds run instead."""
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from poi_name_matching_spark.operators import clustering
 from poi_name_matching_spark.operators.clustering import components
 
 
@@ -171,3 +178,67 @@ class TestIncrementalComponents:
             got = self._run(spark, old, new_nodes, new_edges)
             want = self._full(spark, old, old_edges, new_nodes, new_edges)
             assert got == want, f"seed {seed}: incremental != full"
+
+
+@pytest.fixture
+def star_rounds(monkeypatch):
+    """Force every ``components`` call onto the star rounds."""
+    monkeypatch.setattr(clustering, "DRIVER_MAX_EDGES", 0)
+
+
+@pytest.mark.usefixtures("star_rounds")
+class TestStarRounds:
+    test_chain = staticmethod(test_chain)
+    test_two_components_and_reversed_edges = staticmethod(
+        test_two_components_and_reversed_edges
+    )
+    test_random_graph_matches_union_find = staticmethod(
+        test_random_graph_matches_union_find
+    )
+    test_deterministic_across_partitionings = staticmethod(
+        test_deterministic_across_partitionings
+    )
+
+
+@pytest.mark.usefixtures("star_rounds")
+class TestIncrementalComponentsStarRounds(TestIncrementalComponents):
+    pass
+
+
+def test_driver_bound_boundary(spark, monkeypatch):
+    """A graph of exactly ``bound`` edges takes the driver path, one of
+    ``bound + 1`` the star rounds, and both give the same components —
+    null endpoints and self-loops included, which both paths drop."""
+    rng = random.Random(5)
+    nodes = [f"n{i:02d}" for i in range(40)]
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(30)]
+    edges += [("n07", "n07"), (None, "n03"), ("n05", None)]
+    star_calls = []
+    star = clustering.connected_components_edges
+
+    def spy(*args, **kwargs):
+        star_calls.append(1)
+        return star(*args, **kwargs)
+
+    monkeypatch.setattr(clustering, "connected_components_edges", spy)
+    got = {}
+    for bound in (len(edges), len(edges) - 1):
+        monkeypatch.setattr(clustering, "DRIVER_MAX_EDGES", bound)
+        got[bound] = _cc(spark, edges, nodes)
+    assert len(star_calls) == 1  # only the bound + 1 run took the star path
+    assert got[len(edges)] == got[len(edges) - 1]
+    assert len(set(got[len(edges)].values())) < len(nodes)
+
+
+def test_driver_path_long_ids_and_no_edges(spark):
+    """The driver mapping keeps the id column's type, and a graph with
+    no edges leaves every node a singleton."""
+    e = spark.createDataFrame([(3, 1), (2, 3), (9, 8)], "src long, dst long")
+    n = spark.createDataFrame([(x,) for x in (1, 2, 3, 8, 9, 10)], "conv_id long")
+    out = components(n, e)
+    assert dict(out.dtypes) == {"conv_id": "bigint", "component_id": "bigint"}
+    assert {r[0]: r[1] for r in out.collect()} == {
+        1: 1, 2: 1, 3: 1, 8: 8, 9: 8, 10: 10,
+    }
+    none = components(n, e.limit(0))
+    assert {r[0]: r[1] for r in none.collect()} == {x: x for x in (1, 2, 3, 8, 9, 10)}

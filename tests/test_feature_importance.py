@@ -101,3 +101,17 @@ class TestImportanceBarsSVG:
     def test_empty_raises(self):
         with pytest.raises(ValueError):
             importance_bars_svg([])
+
+
+def test_trained_models_transform_after_a_checkpoint_commit(spark, labeled, tmp_path):
+    """A checkpoint commit observes its write with ``DataFrame.observe``,
+    after which the session no longer serializes; models trained here
+    must still transform in that session."""
+    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
+
+    StageCheckpoint(tmp_path / "ck").write("stage", spark.range(3))
+    model, preds = train_model(labeled, kind="rf", feature_cols=FEATURES, n_trees=3)
+    assert preds.filter(F.col("pred") == F.col("match")).count() > 0
+    data, _ = _assembled(labeled, FEATURES)
+    hits = model.transform(data).filter(F.col("prediction") == F.col("match"))
+    assert hits.count() > 190

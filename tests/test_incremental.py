@@ -796,7 +796,8 @@ def _inject(monkeypatch, step):
             crash()
 
     if step == "after_data":
-        monkeypatch.setattr(cp, "_scan_partition_stats", crash)
+        # every commit reads its new files' footers once they are written
+        monkeypatch.setattr(cp, "_file_rows", crash)
     else:
         monkeypatch.setattr(cp, "write_json_atomic", crashing_write_json)
 

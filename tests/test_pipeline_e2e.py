@@ -639,9 +639,7 @@ class TestCompaction:
         files_before = set(ck._data_files("stage"))
         snaps_before = ck.snapshot_versions("stage")
         m_before = ck.read_manifest("stage")
-        monkeypatch.setattr(
-            ckmod, "_scan_partition_stats", lambda df: ([], 0, 0)
-        )
+        monkeypatch.setattr(ckmod, "stage_fingerprint", lambda df: "0:0")
         with pytest.raises(RuntimeError, match="fingerprint"):
             ck.compact(spark, "stage")
         monkeypatch.undo()
