@@ -10,10 +10,10 @@ embedding cosine) as the vectorized scoring kernel.
 Layout:
     functions/  pure-Python + numpy kernels and their pandas-UDF wrappers
     operators/  DataFrame-level pipeline stages (signatures, blocking,
-                scoring, clustering, evaluation, text stats)
+                scoring, clustering, evaluation)
     sources/    readers & checkpointed sinks (parquet manifests)
     plans/      end-to-end resumable pipeline driver
-    streaming/  Structured Streaming ingest of the transcripts table
+    streaming/  full-pipeline Structured Streaming over transcript drops
     data/       deterministic synthetic-data generators (test fixtures)
 """
 

@@ -15,7 +15,6 @@ The document-frequency map and embedder weights are shipped via
 
 from __future__ import annotations
 
-import math
 from functools import lru_cache
 
 import numpy as np
@@ -591,10 +590,3 @@ def make_minhash_udf(num_hashes: int = 32, seed: int = 42):
         return pd.Series(out)
 
     return minhash_udf
-
-
-def embedding_deltas(a: Column, b: Column) -> Column:
-    """K18: per-dimension embedding delta features ``dim_i = (b - a)[i]``
-    (``ml_similarity_metrics.py:438-468``) as a native zip_with — feed to
-    VectorAssembler / explode into dim columns for the ML ensemble."""
-    return F.zip_with(b, a, lambda y, x: y - x)

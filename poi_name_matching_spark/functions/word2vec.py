@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .embedding import VocabEmbedder
 
@@ -141,28 +140,3 @@ def text_vectors_to_npz(src_path: str, out_path: str) -> str:
     if not rows:
         raise ValueError(f"{src_path}: no vectors found")
     return _save_npz(np.array(vocab, dtype=np.str_), np.stack(rows), out_path)
-
-
-def embed_corpus(
-    df: DataFrame,
-    embedder,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokens_col: str | None = None,
-) -> DataFrame:
-    """(vec_id, embedding array<double>) — one vector per document,
-    computed with the given embedder (Arrow-batched UDF, narrow stage).
-    Tokenization defaults to lowercase whitespace split unless a
-    pre-tokenized column is named."""
-    from .spark_udfs import make_embed_udf, whitespace_tokens
-
-    toks = (
-        F.col(tokens_col)
-        if tokens_col is not None
-        else whitespace_tokens(F.lower(F.trim(F.col(text_col))))
-    )
-    embed = make_embed_udf(embedder)
-    return df.select(
-        F.col(id_col).alias("vec_id"),
-        embed(toks).cast("array<double>").alias("embedding"),
-    )

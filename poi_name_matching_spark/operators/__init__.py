@@ -5,7 +5,6 @@
     scoring     — candidate pairs → full similarity-feature struct + score
     clustering  — thresholded edges → connected components (entity clusters)
     evaluation  — (label, score) → confusion counts, P/R/F1/MCC
-    textstats   — language-ID, quality scoring, token counts, fingerprints
     restricted  — restricted soft-TFIDF over a per-pair gathered corpus
     ml          — ML ensemble over the similarity feature matrix
 """

@@ -37,7 +37,8 @@ Arrow-vectorized pandas UDF.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from contextlib import contextmanager
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -97,23 +98,6 @@ class ScoringConfig:
     #: df-map hard top-K cap — bounded BY DEFAULT so an unknown 100 TB
     #: vocabulary cannot OOM the driver; None opts out explicitly
     max_vocab: int | None = DEFAULT_MAX_VOCAB
-
-
-def document_frequency(signatures: DataFrame) -> DataFrame:
-    """df(token, df) over the distinct-signature corpus — set semantics
-    per document (``test_hybrid_func.py:27-32``); corpus membership is
-    deduped by signature text exactly as the reference dedupes names
-    (``token_based_func.py:18-35``)."""
-    corpus = signatures.select("sig_text", "tokens").dropDuplicates(["sig_text"])
-    return (
-        corpus.select(F.explode(F.array_distinct("tokens")).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("df"))
-    )
-
-
-def corpus_size(signatures: DataFrame) -> int:
-    return signatures.select("sig_text").distinct().count()
 
 
 def broadcast_df_map(
@@ -470,23 +454,6 @@ def score_pairs_chunked(
     return spark.read.option("recursiveFileLookup", "true").parquet(staging_dir)
 
 
-import weakref
-from contextlib import contextmanager
-
-#: nesting depth / saved session value per SparkSession for
-#: udf_stage_parallelism's outermost-scope-restores contract. Weak-keyed
-#: on the session OBJECT: a stopped/GC'd session's entry disappears with
-#: it, so a new session that happens to reuse the same id() can never
-#: inherit a leaked depth/saved-value (the id()-keyed dict this replaces
-#: had exactly that failure mode).
-_UDF_SCOPE_DEPTH: "weakref.WeakKeyDictionary[SparkSession, int]" = (
-    weakref.WeakKeyDictionary()
-)
-_UDF_SCOPE_SAVED: "weakref.WeakKeyDictionary[SparkSession, str | None]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 @contextmanager
 def udf_stage_parallelism(spark: SparkSession, advisory_bytes: str = "1m"):
     """Scope a small AQE advisory partition size around the ACTION that
@@ -502,37 +469,25 @@ def udf_stage_parallelism(spark: SparkSession, advisory_bytes: str = "1m"):
     At 100 TB the same rule holds: partition UDF stages by row/compute
     budget, not bytes; relational stages keep the session default.
 
-    Reentrancy: nested scopes on the same session are common (the
-    pipeline wraps stages that themselves call helpers using this) —
-    only the OUTERMOST scope snapshots and restores the session value,
-    so an inner exit can neither restore early (re-enabling coalescing
-    under a still-running outer UDF stage) nor leak the advisory value
-    into the session. Scopes are tracked per live SparkSession object
-    (weak-keyed, so stopped sessions can't bequeath stale state to a new
-    session reusing their memory address); concurrent use from multiple
-    *threads* on one session shares the SQL conf by Spark's own design
-    and is not supported here.
+    Nested scopes: each scope saves the value it finds and restores it on
+    exit, so an inner exit puts back the outer scope's advisory value and
+    the outermost exit puts back the session's own. Concurrent use from
+    multiple *threads* on one session shares the SQL conf by Spark's own
+    design and is not supported here.
     """
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    depth = _UDF_SCOPE_DEPTH.get(spark, 0)
-    if depth == 0:
-        try:
-            _UDF_SCOPE_SAVED[spark] = spark.conf.get(key)
-        except Exception:
-            _UDF_SCOPE_SAVED[spark] = None
-        spark.conf.set(key, advisory_bytes)
-    _UDF_SCOPE_DEPTH[spark] = depth + 1
+    try:
+        saved = spark.conf.get(key)
+    except Exception:
+        saved = None
+    spark.conf.set(key, advisory_bytes)
     try:
         yield
     finally:
-        _UDF_SCOPE_DEPTH[spark] = depth
-        if depth == 0:
-            old = _UDF_SCOPE_SAVED.pop(spark, None)
-            del _UDF_SCOPE_DEPTH[spark]
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
 
 
 def edges_from_scores(scores: DataFrame, threshold: float) -> DataFrame:

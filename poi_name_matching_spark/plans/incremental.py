@@ -74,32 +74,23 @@ from ..sources.checkpoint import StageCheckpoint, stage_fingerprint
 from .pipeline import STAGES, PipelineConfig, PipelineResult
 
 
-#: sentinel: retention follows cfg.expire_keep_last unless the caller
-#: overrides it explicitly — two independent knobs for the same
-#: checkpoint would let the default here silently delete snapshots a
-#: cfg set to keep-everything
-_RETENTION_FROM_CFG = object()
-
-
 def incremental_update(
     spark: SparkSession,
     new_transcripts: DataFrame,
     cfg: PipelineConfig = PipelineConfig(),
     rescore_all: bool = False,
-    expire_keep_last: int | None | object = _RETENTION_FROM_CFG,
 ) -> PipelineResult:
     """Merge a batch of new conversations into a completed pipeline
     checkpoint and refresh clusters. Requires every stage of a prior
     ``run_pipeline`` at ``cfg.checkpoint_dir``.
 
-    ``expire_keep_last``: snapshot retention — after the commit, keep at
-    most this many retained versions per stage. Defaults to the
-    checkpoint-wide policy ``cfg.expire_keep_last``; pass a value to
-    override for this increment only. Fast-append versions (the default
-    path) share their data files by hard link, but full rewrites
-    (``rescore_all``, and the components stage every increment) are
-    corpus-sized, so unbounded retention would grow the checkpoint dir
-    by O(corpus) per increment. ``None`` keeps everything."""
+    Snapshot retention follows ``cfg.expire_keep_last``: after the
+    commit, keep at most that many retained versions per stage.
+    Fast-append versions (the default path) share their data files by
+    hard link, but full rewrites (``rescore_all``, and the components
+    stage every increment) are corpus-sized, so unbounded retention
+    would grow the checkpoint dir by O(corpus) per increment. ``None``
+    keeps everything."""
     if cfg.shuffle_partitions:
         spark.conf.set(
             "spark.sql.shuffle.partitions", str(cfg.shuffle_partitions)
@@ -477,14 +468,9 @@ def incremental_update(
                     pairs = ckpt.load(spark, "candidate_pairs")
                 if "scores" in compactions:
                     scores = ckpt.load(spark, "scores")
-        keep = (
-            cfg.expire_keep_last
-            if expire_keep_last is _RETENTION_FROM_CFG
-            else expire_keep_last
-        )
-        if keep is not None:
+        if cfg.expire_keep_last is not None:
             for stage in STAGES:
-                ckpt.expire_snapshots(stage, keep_last=keep)
+                ckpt.expire_snapshots(stage, keep_last=cfg.expire_keep_last)
         _mark("retention")
 
         stats["n_signatures"] = ckpt.read_manifest("signatures")["rows"]

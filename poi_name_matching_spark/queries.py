@@ -26,7 +26,6 @@ from .functions.spark_udfs import (
     whitespace_tokens,
 )
 from .functions.tokenize import WS_CLASS
-from .operators import textstats
 from .operators.signatures import build_signatures
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -664,129 +663,6 @@ def k20_classify(spark, sf_dir):
         .select((F.col("value") >= 50.0).cast("int").alias("pred"))
         .groupBy("pred")
         .agg(F.count("*").alias("n"))
-    )
-
-
-# =====================================================================
-# Text statistics over the documents table
-# =====================================================================
-
-
-def text_token_counts(spark, sf_dir):
-    """Token counting, both flavors in one scan: whitespace token count
-    (K17-style) and the BPE-ish subword count (letter/digit runs charged
-    ceil(len/4), punctuation one each). NOT registered as a driver
-    oracle row: its token math duplicates ``text_quality_score``'s
-    oracled expressions. Still pinned by
-    tests/test_oracle_parity.py::test_text_token_counts_oracle with the
-    identical DuckDB SQL."""
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        textstats.token_count(F.col("text")).alias("n_tokens"),
-        textstats.bpe_ish_token_count(F.col("text")).alias("n_bpe"),
-    )
-
-
-@_q(
-    "text_fingerprint",
-    """SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
-       FROM documents""",
-)
-def text_fingerprint(spark, sf_dir):
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", textstats.fingerprint(F.col("text")).alias("fp")
-    )
-
-
-def _lang_id_oracle_sql() -> str:
-    """Generated from the SAME marker dict as the Spark expression so the
-    two can never drift; argmax tie-break = (score DESC, lang DESC),
-    matching Spark's array_max over (s, lg) structs."""
-    score_cols = ",\n              ".join(
-        "len(list_filter(t, x -> list_contains(["
-        + ", ".join(f"'{w}'" for w in words)
-        + f"], x))) AS {lang}"
-        for lang, words in textstats._LANG_MARKERS.items()
-    )
-    langs = ", ".join(textstats._LANG_MARKERS)
-    return f"""WITH toks AS (
-         SELECT doc_id, regexp_split_to_array(lower(text), '[^a-zà-ÿäöüß]+') AS t
-         FROM documents
-       ),
-       wide AS (
-         SELECT doc_id,
-              {score_cols}
-         FROM toks
-       ),
-       long AS (
-         SELECT doc_id, lang, score FROM wide
-         UNPIVOT (score FOR lang IN ({langs}))
-       ),
-       best AS (
-         SELECT doc_id, lang, score,
-                row_number() OVER (PARTITION BY doc_id
-                                   ORDER BY score DESC, lang DESC) AS rk
-         FROM long
-       )
-       SELECT doc_id, CASE WHEN score > 0 THEN lang ELSE 'und' END AS lang
-       FROM best WHERE rk = 1"""
-
-
-@_q(
-    "text_quality_score",
-    """WITH f AS (
-         SELECT doc_id,
-                length(text) AS n_chars,
-                len(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '')) AS n_tokens,
-                CASE WHEN length(text) > 0
-                     THEN length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text)
-                     ELSE 0.0 END AS alpha_ratio,
-                CASE WHEN length(text) > 0
-                     THEN length(regexp_replace(text, '[A-Za-z0-9 \\t\\n\\r\\f\\v]', '', 'g')) * 1.0 / length(text)
-                     ELSE 0.0 END AS punct_ratio,
-                len(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                    w -> list_contains(['the','and','of','to','is','in','that','it','was','for'], w))) AS stop_hits
-         FROM documents
-       ),
-       r AS (
-         SELECT doc_id, n_tokens, alpha_ratio, punct_ratio,
-                CASE WHEN n_tokens > 0 THEN stop_hits * 1.0 / n_tokens ELSE 0.0 END AS stopword_ratio,
-                CASE WHEN n_tokens > 0 THEN n_chars * 1.0 / n_tokens ELSE 0.0 END AS mean_word_len
-         FROM f
-       )
-       SELECT doc_id,
-              round(alpha_ratio, 6) AS alpha_ratio,
-              round(punct_ratio, 6) AS punct_ratio,
-              round(stopword_ratio, 6) AS stopword_ratio,
-              round(mean_word_len, 6) AS mean_word_len,
-              round(CASE WHEN n_tokens = 0 THEN 0.0 ELSE
-                    least(n_tokens / 20.0, 1.0) * 0.3
-                    + alpha_ratio * 0.3
-                    + (1.0 - least(punct_ratio * 4.0, 1.0)) * 0.2
-                    + least(stopword_ratio * 4.0, 1.0) * 0.2 END, 6) AS quality_score
-       FROM r""",
-)
-def text_quality_score(spark, sf_dir):
-    """Full quality-feature surface: alpha/punct ratios (absorbed from
-    the former text_quality row so the registry stays within the
-    driver's query budget), stopword ratio, mean word length, and the
-    composite [0,1] quality score (the en-marker list in the oracle is
-    the same frozen _LANG_MARKERS['en'])."""
-    q = textstats.quality_features(_t(spark, sf_dir, "documents"))
-    return q.select(
-        "doc_id",
-        _r6(F.col("alpha_ratio")).alias("alpha_ratio"),
-        _r6(F.col("punct_ratio")).alias("punct_ratio"),
-        _r6(F.col("stopword_ratio")).alias("stopword_ratio"),
-        _r6(F.col("mean_word_len")).alias("mean_word_len"),
-        _r6(F.col("quality_score")).alias("quality_score"),
-    )
-
-
-@_q("text_lang_id", _lang_id_oracle_sql())
-def text_lang_id(spark, sf_dir):
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", textstats.lang_id(F.col("text")).alias("lang")
     )
 
 
@@ -1585,45 +1461,6 @@ def k18_delta_features(spark, sf_dir):
         F.col("dim").cast("long").alias("dim"),
         _r6(F.col("delta")).alias("delta"),
     )
-
-
-@_q(
-    "text_winnowing",
-    r"""WITH t AS (
-         SELECT doc_id, regexp_replace(lower(text), '\s+', ' ', 'g') AS s
-         FROM documents
-       ),
-       g AS (
-         SELECT doc_id, s, greatest(length(s) - 7, 0) AS ng FROM t
-       ),
-       grams AS (
-         SELECT doc_id, ng,
-                list_transform(generate_series(1, greatest(ng, 1)),
-                  i -> list_reduce(
-                         list_prepend(CAST(0 AS BIGINT),
-                           list_transform(generate_series(0, 7),
-                             j -> CAST(unicode(substr(s, CAST(i + j AS INT), 1)) AS BIGINT))),
-                         (h, c) -> (h * 131 + c) % 2147483647)) AS gh
-         FROM g WHERE ng > 0
-       ),
-       wins AS (
-         SELECT doc_id,
-                list_distinct(list_transform(generate_series(1, greatest(ng - 3, 1)),
-                  i -> list_min(gh[i:i+3]))) AS fps
-         FROM grams
-       )
-       SELECT doc_id, unnest(fps) AS fp FROM wins""",
-)
-def text_winnowing(spark, sf_dir):
-    """Winnowing fingerprints (Schleimer et al., SIGMOD'03) over the
-    documents table, k=8 / window=4, portable hash family so the full
-    k-gram → windowed-min → distinct pipeline is oracle-verified
-    (operators/textstats.py winnow_fingerprints; the xxhash64 production
-    family keeps its pytest pin). Exploded to (doc_id, fp) rows —
-    documents shorter than k contribute no rows on either side."""
-    docs = _t(spark, sf_dir, "documents")
-    fps = textstats.winnow_fingerprints(F.col("text"), hash_family="portable")
-    return docs.select("doc_id", F.explode(fps).alias("fp"))
 
 
 # =====================================================================

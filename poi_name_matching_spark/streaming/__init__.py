@@ -1,21 +1,21 @@
 """Structured Streaming ingest (engine capability beyond the reference).
 
-The reference is batch-only (SURVEY.md §2.8); the production engine still
-needs a continuous ingest path for the transcripts table. This module
-gives the minimal honest version: file-source ``readStream`` of
-transcript parquet drops, incremental per-conversation signature
-aggregation with a watermark, and ``foreachBatch`` upsert into the
-signatures checkpoint — the batch pipeline then runs downstream stages
-from that table (the reference's own pickle-per-stage pattern, made
-incremental)."""
+The reference is batch-only (SURVEY.md §2.8). The engine has one
+streaming path: ``start_pipeline_stream`` watches a directory of
+transcript parquet drops and merges each micro-batch of closed
+conversations into the pipeline checkpoint through
+``incremental_update``, so signatures, blocks, scores and clusters stay
+current. ``apply_transcript_batch`` is the same merge for one batch
+outside Structured Streaming."""
 
-from .ingest import incremental_signatures, read_transcript_stream, start_signature_stream
-from .pipeline import apply_transcript_batch, start_pipeline_stream
+from .pipeline import (
+    apply_transcript_batch,
+    read_transcript_stream,
+    start_pipeline_stream,
+)
 
 __all__ = [
     "read_transcript_stream",
-    "incremental_signatures",
-    "start_signature_stream",
     "apply_transcript_batch",
     "start_pipeline_stream",
 ]

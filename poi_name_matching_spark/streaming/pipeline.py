@@ -1,14 +1,13 @@
-"""Streaming record-linkage driver: the FULL pipeline per micro-batch.
+"""Streaming record linkage: the FULL pipeline per micro-batch.
 
-``start_signature_stream`` keeps only the signatures table fresh and
-leaves blocking/scoring/clustering to a scheduled batch job. This module
-closes that gap: each micro-batch of transcripts is merged into the
-pipeline checkpoint with ``plans/incremental.incremental_update`` —
-blocking keys, pair scores, and connected components stay current as
-conversations arrive, and every commit inherits the incremental path's
-guarantees (one atomic head swap per multi-stage commit, redelivery
-anti-joins, retained stage versions). The first non-empty batch bootstraps the checkpoint
-with a full ``run_pipeline``.
+A file-source ``readStream`` watches a directory of transcript parquet
+drops. Each micro-batch is merged into the pipeline checkpoint with
+``plans/incremental.incremental_update``, so blocking keys, pair scores
+and connected components stay current as conversations arrive. Every
+commit inherits the incremental path's guarantees: one atomic head swap
+per multi-stage commit, redelivery anti-joins and retained stage
+versions. The first non-empty batch founds the checkpoint with a full
+``run_pipeline``.
 
 Exactly-once: Structured Streaming replays a micro-batch after a crash
 (at-least-once delivery); ``incremental_update`` makes the replay a
@@ -22,12 +21,10 @@ idempotent by luck.
 freezes a conv_id on first sight (that is what makes redelivery safe),
 so a conversation whose turns straggle across micro-batches would be
 signed from its first partial slice and never updated. Feed batches of
-complete conversations: either append whole-conversation files to the
-watched directory (each parquet drop carries only finished convs — the
-pattern the file source naturally gives), or sessionize upstream with
-``stateful_signature_stream``'s watermark and emit a conversation only
-after it closes. This is the same contract Iceberg-based CDC pipelines
-put on their upsert key.
+complete conversations: append whole-conversation files to the watched
+directory, so each parquet drop carries only finished conversations.
+Sessionizing open conversations is the upstream producer's job. This is
+the same contract Iceberg-based CDC pipelines put on their upsert key.
 
 Engine capability beyond the reference (batch-only, SURVEY.md §2.8).
 """
@@ -41,8 +38,22 @@ from pyspark.sql import DataFrame, SparkSession
 from ..plans.incremental import incremental_update
 from ..plans.pipeline import STAGES, PipelineConfig, run_pipeline
 from ..sources.checkpoint import StageCheckpoint, stage_fingerprint
-from .ingest import read_transcript_stream
 from .sentinel import LocalSentinel, make_sentinel
+
+TRANSCRIPTS_DDL = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp"
+)
+
+
+def read_transcript_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int = 4
+) -> DataFrame:
+    return (
+        spark.readStream.schema(TRANSCRIPTS_DDL)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(path)
+    )
 
 
 def apply_transcript_batch(

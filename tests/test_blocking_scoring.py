@@ -300,8 +300,44 @@ def test_udf_stage_parallelism_nested_scopes(spark):
             # inner exit: still scoped
             assert spark.conf.get(key) == "1m"
         assert spark.conf.get(key) == "48m"
+        # an exception inside a scope still restores the pre-entry value
+        with pytest.raises(RuntimeError):
+            with udf_stage_parallelism(spark):
+                raise RuntimeError("stage failed")
+        assert spark.conf.get(key) == "48m"
     finally:
         spark.conf.unset(key)
+
+
+def _hot_fixture(spark):
+    """200 boilerplate docs sharing one hot 2-token prefix/shingle set +
+    5 planted near-dup pairs with distinctive text."""
+    rows = []
+    for i in range(200):
+        rows.append((i, f"common prefix boilerplate header text junk filler {i % 7}"))
+    planted = []
+    for j in range(5):
+        a, b = 1000 + 2 * j, 1001 + 2 * j
+        base = f"unique signal document number {j} about topic alpha beta gamma delta"
+        rows.append((a, base))
+        rows.append((b, base + " extra"))
+        planted.append((a, b))
+    return spark.createDataFrame(rows, "doc_id long, text string"), planted
+
+
+def test_ngram_hot_bucket_salted_bounds(spark):
+    docs, planted = _hot_fixture(spark)
+    toks = F.split(F.trim("text"), r"\s+")
+    buckets = docs.select(
+        F.col("doc_id").alias("conv_id"),
+        F.concat_ws(" ", F.slice(toks, 1, 2)).alias("block_key"),
+    )
+    salted = salt_oversized(buckets, 20)
+    sizes = salted.groupBy("block_key").count().collect()
+    # ceil(200/20)=10 salts → expected ~20/bucket; hash unevenness bounded
+    assert max(r["count"] for r in sizes) <= 40
+    # membership preserved: salting moves rows, never drops them
+    assert salted.count() == buckets.count()
 
 
 class TestConfigValidation:

@@ -83,26 +83,6 @@ def test_rows_only_queries_run(spark, name):
     assert df.count() >= 0
 
 
-def test_text_token_counts_oracle(spark, ddb):
-    """text_token_counts is not in the driver registry; this pins the
-    identical DuckDB parity locally so the operator keeps full
-    oracle-grade coverage."""
-    from poi_name_matching_spark.queries import text_token_counts
-
-    sql = r"""SELECT doc_id,
-              len(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')) AS n_tokens,
-              CAST(list_sum(list_transform(regexp_split_to_array(text, '\s+'),
-                   r -> CAST(ceil(length(regexp_replace(r, '[^\p{L}\p{N}]', '', 'g')) / 4.0) AS BIGINT)
-                        + length(regexp_replace(r, '[\p{L}\p{N}]', '', 'g')))) AS BIGINT) AS n_bpe
-       FROM documents"""
-    sdf = text_token_counts(spark, SF_DIR)
-    res = ddb.execute(sql)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(duck_cols)
-    assert _multiset(sdf.collect(), sdf.columns) == _multiset(duck_rows, duck_cols)
-
-
 def test_registry_within_driver_cap_and_softtfidf_family_inside():
     """The correctness driver evaluates at most 50 queries in registry
     order; every registered query must sit inside that window (the

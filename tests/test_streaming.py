@@ -1,513 +1,10 @@
-"""Streaming ingest: out-of-order parquet drops → identical signatures
-to the batch stage (per-turn equality under stable ordering, incl.
-re-delivered files — at-least-once safety)."""
-
-import pytest
+"""Full-pipeline stream: parquet drops of closed conversations through
+``start_pipeline_stream`` equal one batch run, a replay is a no-op, and
+the founding guard survives crashes around the first commit."""
 
 from poi_name_matching_spark.data import generate_transcripts
-from poi_name_matching_spark.operators.signatures import build_signatures
-from poi_name_matching_spark.streaming.ingest import (
-    signatures_from_store,
-    start_signature_stream,
-)
 
-N = 60
 SEED = 33
-
-
-def test_stream_matches_batch_signatures(spark, tmp_path):
-    res = generate_transcripts(n_convs=N, seed=SEED)
-    # split shuffled rows into 3 unordered parquet drops
-    src = tmp_path / "drops"
-    src.mkdir()
-    third = len(res.rows) // 3
-    chunks = [res.rows[:third], res.rows[third : 2 * third], res.rows[2 * third :]]
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-
-    for i, chunk in enumerate(chunks):
-        spark.createDataFrame(chunk, TRANSCRIPTS_SCHEMA).coalesce(1).write.parquet(
-            str(src / f"drop_{i}")
-        )
-    # file stream sees the drop directories' files
-    store = tmp_path / "sig_store"
-    ckpt = tmp_path / "ckpt"
-    q = start_signature_stream(
-        spark,
-        str(src) + "/*/",
-        str(store),
-        str(ckpt),
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r["conv_id"]: (r["sig_text"], r["n_turns"])
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-    full = spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA)
-    expected = {
-        r["conv_id"]: (r["sig_text"], r["n_turns"])
-        for r in build_signatures(full, with_tokens=False).collect()
-    }
-    assert got == expected
-
-
-def test_redelivery_idempotent(spark, tmp_path):
-    """Applying the same batch twice must not duplicate turns."""
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.ingest import incremental_signatures
-
-    res = generate_transcripts(n_convs=10, seed=3)
-    df = spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA)
-    store = str(tmp_path / "store")
-    incremental_signatures(df, store)
-    incremental_signatures(df, store)  # redelivery
-    sig = signatures_from_store(spark, store)
-    full = build_signatures(df, with_tokens=False)
-    got = {r["conv_id"]: r["sig_text"] for r in sig.collect()}
-    exp = {r["conv_id"]: r["sig_text"] for r in full.collect()}
-    assert got == exp
-
-
-def test_micro_batch_leaves_untouched_buckets_byte_identical(spark, tmp_path):
-    """The bucketed store's scale contract: a micro-batch must rewrite
-    ONLY the bucket partitions it touches — every file in every other
-    bucket stays byte-identical (same path, size, mtime). This is what
-    makes per-batch cost O(touched), not O(store)."""
-    from pathlib import Path
-
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.ingest import incremental_signatures
-
-    res = generate_transcripts(n_convs=30, seed=11)
-    df = spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA)
-    store = tmp_path / "store"
-    incremental_signatures(df, str(store), n_buckets=8)
-
-    def snapshot(only_untouched_of=None):
-        out = {}
-        for p in Path(store).rglob("*.parquet"):
-            b = next(
-                part for part in p.parts if part.startswith("bucket=")
-            )
-            if only_untouched_of is None or b not in only_untouched_of:
-                out[str(p)] = (p.stat().st_size, p.stat().st_mtime_ns)
-        return out
-
-    # redeliver ONE conversation → exactly one bucket is touched
-    one_conv = [r for r in res.rows if r[0] == res.rows[0][0]]
-    batch2 = spark.createDataFrame(one_conv, TRANSCRIPTS_SCHEMA)
-    from pyspark.sql import functions as F
-
-    touched = {
-        f"bucket={r[0]}"
-        for r in batch2.select(
-            F.pmod(F.xxhash64("conv_id"), F.lit(8)).alias("b")
-        )
-        .distinct()
-        .collect()
-    }
-    assert len(touched) == 1
-    before = snapshot(only_untouched_of=touched)
-    assert before, "expected untouched buckets to exist"
-    incremental_signatures(batch2, str(store), n_buckets=8)
-    after = snapshot(only_untouched_of=touched)
-    assert after == before  # untouched buckets: same files, sizes, mtimes
-    # the merge's scratch dir is removed after the overwrite commits
-    assert not Path(str(store) + ".tmp").exists()
-
-    # and the store still reads back correctly (idempotent redelivery)
-    got = {
-        r["conv_id"]: r["sig_text"]
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-    exp = {
-        r["conv_id"]: r["sig_text"]
-        for r in build_signatures(df, with_tokens=False).collect()
-    }
-    assert got == exp
-    # a later batch asking for a DIFFERENT bucket count gets the pinned
-    # one (re-bucketing an existing store would strand stale rows)
-    incremental_signatures(batch2, str(store), n_buckets=32)
-    assert not any(
-        "bucket=" in str(p) and int(str(p).rsplit("bucket=", 1)[1].split("/")[0]) >= 8
-        for p in Path(store).rglob("*.parquet")
-    )
-
-
-def test_legacy_flat_store_migrates_crash_safely(spark, tmp_path):
-    """One-time flat→bucketed migration: the bucketed replacement (data
-    + meta) is fully staged BEFORE the flat store is renamed away, so no
-    crash point loses the only copy; staging/backup dirs are gone after
-    success."""
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.ingest import incremental_signatures
-
-    res = generate_transcripts(n_convs=20, seed=5)
-    df = spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA)
-    store = tmp_path / "store"
-    # legacy layout: (conv_id, turns) parquet, unbucketed, no meta file
-    flat = df.groupBy("conv_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("turn_idx", "text", "ts"))
-        ).alias("turns")
-    )
-    flat.write.parquet(str(store))
-
-    first = res.rows[0][0]
-    batch = spark.createDataFrame(
-        [r for r in res.rows if r[0] == first], TRANSCRIPTS_SCHEMA
-    )
-    incremental_signatures(batch, str(store), n_buckets=8)
-    assert (store / "_store_meta.json").exists()
-    assert any("bucket=" in str(p) for p in store.rglob("*.parquet"))
-    for leftover in (".old", ".migrating", ".tmp"):
-        assert not Path(str(store) + leftover).exists()
-    got = {
-        r["conv_id"]: r["sig_text"]
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-    exp = {
-        r["conv_id"]: r["sig_text"]
-        for r in build_signatures(df, with_tokens=False).collect()
-    }
-    assert got == exp
-
-
-def test_interrupted_migration_swap_recovers(spark, tmp_path):
-    """Simulate a crash between the migration's two renames (store
-    missing, flat backup at <store>.old, possibly a complete staging
-    dir): the next micro-batch restores the backup and re-runs the
-    migration — nothing is lost."""
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.ingest import incremental_signatures
-
-    res = generate_transcripts(n_convs=15, seed=6)
-    df = spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA)
-    store = tmp_path / "store"
-    flat = df.groupBy("conv_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("turn_idx", "text", "ts"))
-        ).alias("turns")
-    )
-    flat.write.parquet(str(store))
-    # crash state: first rename done, second not
-    store.rename(Path(str(store) + ".old"))
-    Path(str(store) + ".migrating").mkdir()  # stale partial staging
-
-    first = res.rows[0][0]
-    batch = spark.createDataFrame(
-        [r for r in res.rows if r[0] == first], TRANSCRIPTS_SCHEMA
-    )
-    incremental_signatures(batch, str(store), n_buckets=8)
-    got = {
-        r["conv_id"]: r["sig_text"]
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-    exp = {
-        r["conv_id"]: r["sig_text"]
-        for r in build_signatures(df, with_tokens=False).collect()
-    }
-    assert got == exp  # every pre-crash conversation survived
-    assert not Path(str(store) + ".old").exists()
-
-
-def test_stateful_signatures_match_batch(spark, tmp_path):
-    """applyInPandasWithState path: out-of-order drops + a redelivered
-    chunk → latest changelog rows equal the batch signatures."""
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.stateful import (
-        latest_signatures,
-        run_stateful_signatures,
-    )
-
-    res = generate_transcripts(n_convs=40, seed=7)
-    src = tmp_path / "drops"
-    src.mkdir()
-    half = len(res.rows) // 2
-    # 3rd drop = identical redelivery; 4th = a DIFFERING-payload
-    # redelivery of one turn whose text sorts lower → the struct-min
-    # winner changes at unchanged n_turns (the case that exposed the
-    # old max(n_turns)-based changelog collapse)
-    victim = res.rows[0]
-    lowered = (victim[0], victim[1], victim[2], "!redelivered", victim[4], victim[5])
-    chunks = [res.rows[:half], res.rows[half:], res.rows[:half], [lowered]]
-    for i, chunk in enumerate(chunks):
-        spark.createDataFrame(chunk, TRANSCRIPTS_SCHEMA).coalesce(1).write.parquet(
-            str(src / f"drop_{i}")
-        )
-    out = tmp_path / "changelog"
-    q = run_stateful_signatures(
-        spark, str(src) + "/*/", str(out), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(180)
-
-    got = {
-        r["conv_id"]: (r["sig_text"], r["n_turns"])
-        for r in latest_signatures(spark, str(out)).collect()
-    }
-    merged = [lowered if r == victim else r for r in res.rows]
-    full = spark.createDataFrame(merged, TRANSCRIPTS_SCHEMA)
-    expected = {
-        r["conv_id"]: (r["sig_text"], int(r["n_turns"]))
-        for r in build_signatures(full, with_tokens=False).collect()
-    }
-    assert got == expected
-
-
-def test_empty_first_batch_does_not_found_the_store(spark, tmp_path):
-    """A zero-row first micro-batch must not create a data-less store
-    with a pinned meta file (every later bucketed read would fail on
-    schema inference); store creation defers to the first batch with
-    rows, after which empty batches are no-ops as before."""
-    from pathlib import Path
-
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.ingest import (
-        incremental_signatures,
-        signatures_from_store,
-    )
-
-    res = generate_transcripts(n_convs=6, seed=11)
-    df = spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA)
-    empty = df.limit(0)
-    store = tmp_path / "store_empty_first"
-    incremental_signatures(empty, str(store))
-    assert not (store / "_store_meta.json").exists()
-
-    incremental_signatures(df, str(store))
-    incremental_signatures(empty, str(store))  # empty later batch: no-op
-    sig = signatures_from_store(spark, str(store))
-    full = build_signatures(df, with_tokens=False)
-    got = {r["conv_id"]: r["sig_text"] for r in sig.collect()}
-    exp = {r["conv_id"]: r["sig_text"] for r in full.collect()}
-    assert got == exp
-
-
-def test_interrupted_upsert_commit_recovers_from_staging(spark, tmp_path):
-    """Spark's dynamic partition overwrite is not atomic across
-    partitions: a kill mid-commit can leave a touched bucket with its
-    old files deleted. The upsert stages the complete merged bucket
-    content to .tmp and writes a marker before overwriting — recovery
-    must redo the overwrite from staging, losing nothing."""
-    import json
-    import shutil
-    from pathlib import Path
-
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.ingest import incremental_signatures
-
-    res = generate_transcripts(n_convs=12, seed=9)
-    df = spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA)
-    store = tmp_path / "store"
-    incremental_signatures(df, str(store), n_buckets=4)
-    want = {
-        r["conv_id"]: r["sig_text"]
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-
-    # simulate the crash window: a merged batch staged to .tmp + marker
-    # written, then the overwrite died after deleting a bucket's old
-    # files. Stage = current content of bucket 0 (the no-op merge of a
-    # redelivered batch), "crash" = bucket 0's files deleted from the
-    # store with marker + staging left behind.
-    b0 = spark.read.parquet(str(store)).filter("bucket = 0")
-    assert b0.count() > 0, "fixture must touch bucket 0"
-    tmp = Path(str(store) + ".tmp")
-    b0.write.mode("overwrite").parquet(str(tmp))
-    Path(str(store) + ".upsert_pending").write_text(
-        json.dumps({"n_buckets": 4})
-    )
-    shutil.rmtree(store / "bucket=0")
-
-    # next micro-batch (empty) triggers recovery before anything else
-    empty = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
-    incremental_signatures(empty, str(store), n_buckets=4)
-
-    got = {
-        r["conv_id"]: r["sig_text"]
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-    assert got == want  # bucket 0's conversations are all back
-    assert not Path(str(store) + ".upsert_pending").exists()
-    assert not tmp.exists()
-
-
-def test_stale_staging_without_marker_is_discarded(spark, tmp_path):
-    """A .tmp dir with NO marker is pre-overwrite debris (the store was
-    never touched): the next batch must drop it and proceed normally."""
-    from pathlib import Path
-
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.ingest import incremental_signatures
-
-    res = generate_transcripts(n_convs=8, seed=11)
-    df = spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA)
-    store = tmp_path / "store"
-    incremental_signatures(df, str(store), n_buckets=4)
-    tmp = Path(str(store) + ".tmp")
-    tmp.mkdir()
-    (tmp / "part-junk.parquet").write_bytes(b"junk")
-    incremental_signatures(df, str(store), n_buckets=4)  # redelivery
-    sig = signatures_from_store(spark, str(store))
-    full = build_signatures(df, with_tokens=False)
-    got = {r["conv_id"]: r["sig_text"] for r in sig.collect()}
-    exp = {r["conv_id"]: r["sig_text"] for r in full.collect()}
-    assert got == exp
-    assert not tmp.exists()
-
-
-def test_reader_renders_committed_view_around_crash_debris(spark, tmp_path):
-    """A reader hitting a mid-commit kill's debris (marker + staged
-    copy, a touched bucket's files deleted) must render the committed
-    content — but WITHOUT mutating the store: a reader that repaired in
-    place would race a live writer (delete its staging dir, or run a
-    second concurrent overwrite). The debris stays for the serialized
-    writer path to heal."""
-    import json
-    import shutil
-    from pathlib import Path
-
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.ingest import incremental_signatures
-
-    res = generate_transcripts(n_convs=12, seed=9)
-    df = spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA)
-    store = tmp_path / "store"
-    incremental_signatures(df, str(store), n_buckets=4)
-    want = {
-        r["conv_id"]: r["sig_text"]
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-    b0 = spark.read.parquet(str(store)).filter("bucket = 0")
-    tmp = Path(str(store) + ".tmp")
-    b0.write.mode("overwrite").parquet(str(tmp))
-    marker = Path(str(store) + ".upsert_pending")
-    marker.write_text(json.dumps({"n_buckets": 4}))
-    shutil.rmtree(store / "bucket=0")
-
-    got = {
-        r["conv_id"]: r["sig_text"]
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-    assert got == want  # bucket 0's conversations are visible again
-    # non-mutating: debris intact for the writer to heal
-    assert marker.exists()
-    assert tmp.exists()
-    assert not (store / "bucket=0").exists()
-
-    # the next writer batch performs the actual repair
-    empty = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
-    incremental_signatures(empty, str(store), n_buckets=4)
-    assert not marker.exists() and not tmp.exists()
-    assert (store / "bucket=0").exists()
-    healed = {
-        r["conv_id"]: r["sig_text"]
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-    assert healed == want
-
-
-def test_reader_overlay_when_debris_covers_every_populated_bucket(
-    spark, tmp_path
-):
-    """Pathological crash window: the staged copy holds EVERY populated
-    bucket and the overwrite deleted them all from the store before
-    dying. The base store then has zero data files (schema inference
-    would fail) — the reader must still render the full committed
-    content from the staged copy."""
-    import json
-    import shutil
-    from pathlib import Path
-
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.ingest import incremental_signatures
-
-    res = generate_transcripts(n_convs=3, seed=17)
-    df = spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA)
-    store = tmp_path / "store"
-    incremental_signatures(df, str(store), n_buckets=4)
-    want = {
-        r["conv_id"]: r["sig_text"]
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-    all_buckets = spark.read.parquet(str(store))
-    tmp = Path(str(store) + ".tmp")
-    all_buckets.write.mode("overwrite").parquet(str(tmp))
-    Path(str(store) + ".upsert_pending").write_text(
-        json.dumps({"n_buckets": 4})
-    )
-    for d in store.glob("bucket=*"):
-        shutil.rmtree(d)
-
-    got = {
-        r["conv_id"]: r["sig_text"]
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-    assert got == want
-
-
-def test_reader_never_deletes_writer_staging(spark, tmp_path):
-    """A .tmp WITHOUT a marker may be a LIVE writer's in-progress
-    staging (the marker is written only after staging completes).
-    Readers must ignore it — deleting it would destroy the concurrent
-    micro-batch's work. Only the writer path reaps marker-less debris."""
-    from pathlib import Path
-
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.ingest import incremental_signatures
-
-    res = generate_transcripts(n_convs=8, seed=13)
-    df = spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA)
-    store = tmp_path / "store"
-    incremental_signatures(df, str(store), n_buckets=4)
-    tmp = Path(str(store) + ".tmp")
-    tmp.mkdir()
-    (tmp / "part-inflight.parquet").write_bytes(b"writer in flight")
-    sig = signatures_from_store(spark, str(store))
-    assert sig.count() == 8  # store renders normally
-    assert (tmp / "part-inflight.parquet").exists()  # untouched
-
-
-def test_reader_stream_batch_parity_with_null_turn_text(spark, tmp_path):
-    """signatures_from_store must join null turn texts as empty strings
-    exactly like the batch stage — the default array_join DROPS nulls,
-    which would collapse ['a', NULL, 'b'] with ['a', 'b'] while n_turns
-    says 3, breaking the stream==batch signature contract."""
-    import datetime
-
-    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
-    from poi_name_matching_spark.streaming.ingest import incremental_signatures
-
-    ts = datetime.datetime(2026, 1, 1)
-    rows = [
-        ("A", 0, "user", "a", None, ts),
-        ("A", 1, "assistant", None, None, ts),
-        ("A", 2, "user", "b", None, ts),
-        ("B", 0, "user", "a", None, ts),
-        ("B", 1, "user", "b", None, ts),
-    ]
-    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    store = tmp_path / "store"
-    incremental_signatures(df, str(store), n_buckets=4)
-    got = {
-        r["conv_id"]: (r["sig_text"], r["n_turns"])
-        for r in signatures_from_store(spark, str(store)).collect()
-    }
-    exp = {
-        r["conv_id"]: (r["sig_text"], r["n_turns"])
-        for r in build_signatures(df, with_tokens=False).collect()
-    }
-    assert got == exp
-    assert got["A"] == ("a  b", 3)  # null joined as '', not dropped
-    assert got["A"][0] != got["B"][0]
 
 
 def test_full_pipeline_stream_matches_batch_and_replay_is_noop(

@@ -80,7 +80,7 @@ def test_ws_class_is_exactly_python_backslash_s():
 def test_ws_class_split_parity_python_vs_duckdb():
     """The same WS_CLASS split must tokenize identically in Python re
     and DuckDB RE2 on exotic-whitespace input (the Spark side is pinned
-    in test_dedup_textstats_ann::test_whitespace_tokens_matches_re_findall)."""
+    in test_whitespace_tokens_matches_re_findall below)."""
     import re
 
     import duckdb
@@ -103,3 +103,41 @@ def test_ws_class_split_parity_python_vs_duckdb():
             [t, WS_CLASS + "+"],
         ).fetchone()[0]
         assert got == re.findall(r"\S+", t), repr(t)
+
+
+def test_whitespace_tokens_matches_re_findall(spark):
+    """whitespace_tokens must equal re.findall(r'\\S+', s) EXACTLY —
+    F.trim strips only spaces, so without the empty-token filter a
+    tab/newline-adjacent text leaks a '' token and diverges from every
+    DuckDB oracle's `t <> ''` filter (round-3 review finding)."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from poi_name_matching_spark.functions.spark_udfs import whitespace_tokens
+
+    rows = [
+        (1, "foo bar baz\n"),
+        (2, "\tlead tab"),
+        (3, "a  b\t\nc d"),
+        (4, "   "),
+        (5, ""),
+        (6, "\n\t \n"),
+        (7, "plain words here"),
+        # non-ASCII whitespace: Java \s would NOT split these — the
+        # explicit WS_CLASS must (NBSP, line sep, ideographic space,
+        # NEL, thin space) — plus \x0b, where Java and RE2 disagree
+        (8, "cafe\xa0bar"),
+        (9, "one\u2028two\u3000three"),
+        (10, "a\x0bb\x85c\u2009d"),
+        (11, "\u1680lead ogham\u202f"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: list(r["t"])
+        for r in df.select(
+            "doc_id", whitespace_tokens(F.col("text")).alias("t")
+        ).collect()
+    }
+    for i, s in rows:
+        assert got[i] == re.findall(r"\S+", s), (i, got[i])

@@ -13,10 +13,7 @@ from poi_name_matching_spark.functions.embedding import (
     HashEmbedder,
     VocabEmbedder,
 )
-from poi_name_matching_spark.functions.word2vec import (
-    embed_corpus,
-    train_word2vec,
-)
+from poi_name_matching_spark.functions.word2vec import train_word2vec
 
 CORPUS = [
     "grand central station",
@@ -98,18 +95,6 @@ class TestTrainWord2Vec:
 
 
 class TestTrainedVectorsDriveOperators:
-    def test_embed_corpus_udf_parity(self, trained):
-        """The Arrow UDF path produces exactly the driver-side pooling of
-        the learned table (float32 ops on both sides)."""
-        emb, _, df = trained
-        got = {
-            r["vec_id"]: np.array(r["embedding"])
-            for r in embed_corpus(df, emb).collect()
-        }
-        for i, text in enumerate(CORPUS):
-            expected = emb.embed_text("", tokens=text.split()).astype(np.float64)
-            assert np.array_equal(got[i], expected), text
-
     def test_scoring_end_to_end_cosine_parity(self, spark, trained):
         """score_pairs with the trained embedder: emb_cosine equals a
         driver-side recomputation from the npz table, and the semantic
