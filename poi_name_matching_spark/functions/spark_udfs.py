@@ -415,11 +415,6 @@ SIM_SCORE_FIELDS = [
     "emb_cosine",
 ]
 
-SIM_SCORES_SCHEMA = StructType(
-    [StructField(f, DoubleType()) for f in SIM_SCORE_FIELDS]
-)
-
-
 def make_sim_scores_udf(
     df_map_bc,
     corpus_size_bc,

@@ -34,7 +34,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.spark_udfs import make_minhash_udf
@@ -143,52 +144,91 @@ def block_keys(signatures: DataFrame, cfg: BlockingConfig = BlockingConfig()) ->
     return out
 
 
-def salt_oversized(blocks: DataFrame, max_block_size: int) -> DataFrame:
+def oversized_blocks(
+    blocks: DataFrame, max_block_size: int | None
+) -> tuple[int, pa.Table]:
+    """``(largest block size, over-cap blocks)`` from ONE block-size
+    aggregation: the over-cap blocks come back to the driver as an Arrow
+    table ``(block_key, n_salt)`` with ``n_salt = ceil(size /
+    max_block_size)``, and the largest size is observed while that
+    aggregation runs. A falsy ``max_block_size`` disables salting: the
+    table is empty and the aggregation only measures the largest size."""
+    sizes = blocks.groupBy("block_key").agg(F.count("*").alias("block_size"))
+    cap = int(max_block_size or 0)
+    if not cap:
+        largest = sizes.agg(F.max("block_size")).first()[0]
+        none = pa.table(
+            {"block_key": pa.array([], pa.string()), "n_salt": pa.array([], pa.int32())}
+        )
+        return int(largest or 0), none
+    obs = Observation()
+    largest = F.coalesce(F.max("block_size"), F.lit(0)).alias("largest")
+    n_salt = F.ceil(F.col("block_size") / cap).cast("int").alias("n_salt")
+    hot = (
+        sizes.observe(obs, largest)
+        .filter(F.col("block_size") > cap)
+        .select("block_key", n_salt)
+        .toArrow()
+    )
+    return int(obs.get["largest"]), hot
+
+
+def salt_oversized(
+    blocks: DataFrame, max_block_size: int | None, hot: pa.Table | None = None
+) -> DataFrame:
     """Split blocks larger than ``max_block_size`` into deterministic
     salted sub-blocks: ``block_key#<salt>`` with ``salt =
     xxhash64(conv_id) mod ceil(size / max_block_size)``. Normal blocks
-    pass through unchanged (salt suffix omitted), so the common case
-    costs one broadcast join against the (tiny) oversized-key list. All
-    other columns are preserved."""
+    pass through unchanged (salt suffix omitted). ``hot`` is the
+    over-cap table of :func:`oversized_blocks` (computed here when not
+    given); with no over-cap block, ``blocks`` is returned as is — no
+    join at all — else one broadcast left join against the (tiny)
+    over-cap table salts the hot members. All columns are preserved."""
+    if hot is None:
+        _, hot = oversized_blocks(blocks, max_block_size)
+    if hot.num_rows == 0:
+        return blocks
     out_cols = list(blocks.columns)
-    sizes = blocks.groupBy("block_key").agg(F.count("*").alias("block_size"))
-    hot = sizes.filter(F.col("block_size") > max_block_size).withColumn(
-        "n_salt", F.ceil(F.col("block_size") / max_block_size).cast("int")
-    )
-    salted = (
-        blocks.join(F.broadcast(hot), "block_key", "inner")
+    # from an Arrow table, not a Python list: a list goes through a
+    # Python-worker job, which starts a second worker daemon
+    n_salt = F.broadcast(blocks.sparkSession.createDataFrame(hot))
+    return (
+        blocks.join(n_salt, "block_key", "left")
         .withColumn(
             "block_key",
-            F.concat(
-                F.col("block_key"),
-                F.lit("#"),
-                F.pmod(F.xxhash64("conv_id"), F.col("n_salt")),
+            F.when(F.col("n_salt").isNull(), F.col("block_key")).otherwise(
+                F.concat(
+                    F.col("block_key"),
+                    F.lit("#"),
+                    F.pmod(F.xxhash64("conv_id"), F.col("n_salt")),
+                )
             ),
         )
         .select(*out_cols)
     )
-    normal = blocks.join(
-        F.broadcast(hot.select("block_key")), "block_key", "left_anti"
-    ).select(*out_cols)
-    return normal.unionByName(salted)
 
 
 def candidate_pairs(
     blocks: DataFrame,
     cfg: BlockingConfig = BlockingConfig(),
     materialize: str = "local_checkpoint",
+    hot: pa.Table | None = None,
 ) -> DataFrame:
     """candidate_pairs(left_id, right_id) — equi-self-join on block_key,
     ordered pair key, deduped across key families.
+
+    ``hot``: the over-cap table of :func:`oversized_blocks` when the
+    caller already ran that aggregation (the batch pipeline does, to
+    record the largest block size); otherwise salting runs it.
 
     Two shuffles total: the self-join on ``block_key`` (AQE skew-split
     eligible) and the ``dropDuplicates`` on the pair key. The salting
     bound keeps any single join partition from exploding quadratically.
 
     ``materialize`` — how to avoid recomputing the block relation for
-    salting's three references (size scan, hot branch, normal branch),
-    which matters when ``blocks`` is a raw ``block_keys`` plan whose
-    MinHash UDF would otherwise run per branch:
+    salting's two references (size scan, salting join), which matters
+    when ``blocks`` is a raw ``block_keys`` plan whose MinHash UDF would
+    otherwise run per reference:
 
     * ``"local_checkpoint"`` (default): fastest (raw row blocks, no
       columnar encode/decode — measured ~2× faster than persist at
@@ -226,7 +266,7 @@ def candidate_pairs(
             from pyspark import StorageLevel
 
             blocks = materialized = blocks.persist(StorageLevel.MEMORY_AND_DISK)
-        blocks = salt_oversized(blocks, cfg.max_block_size)
+        blocks = salt_oversized(blocks, cfg.max_block_size, hot)
     left = blocks.alias("l")
     right = blocks.alias("r")
     pairs = (
@@ -240,17 +280,3 @@ def candidate_pairs(
     )
     pairs._materialized_blocks = materialized  # release handle (docstring)
     return pairs
-
-
-def block_stats(blocks: DataFrame) -> DataFrame:
-    """Per-block metrics (size, implied candidate count) — the
-    measurement half of the skew story: emitted into the stage manifest
-    so hot keys are visible, not guessed."""
-    return (
-        blocks.groupBy("block_key")
-        .agg(F.count("*").alias("block_size"))
-        .withColumn(
-            "candidate_count",
-            (F.col("block_size") * (F.col("block_size") - 1) / 2).cast("long"),
-        )
-    )

@@ -233,8 +233,8 @@ def components(nodes: DataFrame, edges: DataFrame, max_iter: int = 25) -> DataFr
     ``conv_id``; ``edges`` columns ``src``/``dst``. Up to
     ``DRIVER_MAX_EDGES`` edges, the components are found on the driver;
     above it, by the star rounds."""
-    # one job: the sentinel row past the bound says "too big" without a
-    # separate count() (the broadcast_df_map idiom)
+    # one collect: the sentinel row past the bound says "too big"
+    # without a separate count()
     small = edges.select("src", "dst").limit(DRIVER_MAX_EDGES + 1).toArrow()
     if small.num_rows <= DRIVER_MAX_EDGES:
         mapping = F.broadcast(_driver_mapping(edges.sparkSession, small))

@@ -40,7 +40,7 @@ from __future__ import annotations
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.embedding import HashEmbedder
@@ -126,50 +126,51 @@ def broadcast_df_map(
       truncation is visible. ``None`` opts out explicitly.
 
     Corpus SIZE is unaffected by either cap (idf ratios of surviving
-    tokens don't shift). The deduped corpus is persisted for the span of
-    this call so the df aggregation and the distinct-count share ONE
-    dedup shuffle instead of scanning the signatures relation twice —
-    at scale the dedup is the expensive half of the build."""
-    from pyspark import StorageLevel
+    tokens don't shift). It is observed while the df aggregation runs
+    (the deduped corpus's row count), so the build is ONE query: no
+    persist of the deduped corpus, no separate count. The common case
+    collects the map unsorted: the ``max_vocab + 1`` sentinel row tells
+    whether the cap binds, and only then a second query keeps the top-K
+    by df."""
+    obs = Observation()
+    corpus = signatures.select("sig_text", "tokens").dropDuplicates(["sig_text"])
 
-    corpus = (
-        signatures.select("sig_text", "tokens")
-        .dropDuplicates(["sig_text"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    df = (
-        corpus.select(F.explode(F.array_distinct("tokens")).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("df"))
-    )
-    if min_df > 1:
-        df = df.filter(F.col("df") >= int(min_df))
-    if max_vocab is not None:
-        # collect cap+1 rows in ONE job: the sentinel row both detects
-        # that the cap binds (no separate count() job) and is dropped
-        df_rows = (
-            df.orderBy(F.desc("df"), F.asc("token"))
-            .limit(int(max_vocab) + 1)
-            .collect()
+    def doc_freq(docs: DataFrame) -> DataFrame:
+        df = (
+            docs.select(F.explode(F.array_distinct("tokens")).alias("token"))
+            .groupBy("token")
+            .agg(F.count("*").alias("df"))
         )
-        if len(df_rows) > int(max_vocab):
-            df_rows = df_rows[: int(max_vocab)]
-            import logging
+        return df.filter(F.col("df") >= int(min_df)) if min_df > 1 else df
 
-            logging.getLogger(__name__).warning(
-                "df-map vocabulary exceeds max_vocab=%d — keeping the "
-                "top-%d tokens by document frequency; dropped tokens get "
-                "missing-token kernel semantics (skipped in numerator "
-                "and denominator). Raise max_vocab (or pass None) if "
-                "full-vocabulary weighting is required.",
-                int(max_vocab),
-                int(max_vocab),
-            )
+    counted = doc_freq(corpus.observe(obs, F.count("*").alias("n")))
+    if max_vocab is None:
+        table = counted.toArrow()
     else:
-        df_rows = df.collect()
-    df_map = {r["token"]: r["df"] for r in df_rows}
-    n = corpus.count()  # cache hit: the df collect populated it
-    corpus.unpersist()
+        table = counted.limit(int(max_vocab) + 1).toArrow()
+    # with no token at all, AQE replaces the empty token shuffle (and the
+    # observation inside it) by an empty relation: count the corpus then
+    n = obs.get["n"] if table.num_rows else corpus.count()
+    if max_vocab is not None and table.num_rows > int(max_vocab):
+        table = (
+            doc_freq(corpus)
+            .orderBy(F.desc("df"), F.asc("token"))
+            .limit(int(max_vocab))
+            .toArrow()
+        )
+        import logging
+
+        logging.getLogger(__name__).warning(
+            "df-map vocabulary exceeds max_vocab=%d — keeping the "
+            "top-%d tokens by document frequency; dropped tokens get "
+            "missing-token kernel semantics (skipped in numerator "
+            "and denominator). Raise max_vocab (or pass None) if "
+            "full-vocabulary weighting is required.",
+            int(max_vocab),
+            int(max_vocab),
+        )
+    tokens, dfs = table.column("token").to_pylist(), table.column("df").to_pylist()
+    df_map = dict(zip(tokens, dfs))
     sc = spark.sparkContext
     return sc.broadcast(df_map), sc.broadcast(n)
 
@@ -220,8 +221,8 @@ def score_pairs(
                 spark, signatures, min_df=cfg.min_df, max_vocab=cfg.max_vocab
             )
         else:
-            # no selected kernel reads the df map — skip the two
-            # full-corpus jobs and the broadcast entirely
+            # no selected kernel reads the df map — skip the
+            # full-corpus df query and the broadcast entirely
             sc = spark.sparkContext
             df_map_bc, corpus_size_bc = sc.broadcast({}), sc.broadcast(0)
 

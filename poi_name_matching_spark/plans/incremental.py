@@ -66,12 +66,20 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.blocking import block_keys, salt_oversized
+from ..operators.blocking import block_keys, oversized_blocks, salt_oversized
 from ..operators.clustering import components, incremental_components
 from ..operators.scoring import edges_from_scores, score_pairs
 from ..operators.signatures import build_signatures
-from ..sources.checkpoint import StageCheckpoint, stage_fingerprint
-from .pipeline import STAGES, PipelineConfig, PipelineResult
+# stage_fingerprint is not called here but stays a module attribute:
+# perfbench/tracer.py wraps it by name in this module
+from ..sources.checkpoint import StageCheckpoint, input_key, stage_fingerprint  # noqa: F401
+from .pipeline import (
+    STAGES,
+    PipelineConfig,
+    PipelineResult,
+    component_count,
+    n_components,
+)
 
 
 def incremental_update(
@@ -174,7 +182,7 @@ def incremental_update(
     from ..operators.scoring import udf_stage_parallelism
 
     # the increment's identity, recorded as every commit's input key
-    in_fp = stage_fingerprint(new_transcripts)
+    in_fp = input_key(new_transcripts)
     old_sigs = ckpt.load(spark, "signatures")
     old_blocks = ckpt.load(spark, "blocks")
     old_pairs = ckpt.load(spark, "candidate_pairs")
@@ -221,13 +229,15 @@ def incremental_update(
         # sub-block boundaries match what a batch run over the union would
         # use, without baking '#salt' suffixes into the next increment's input
         join_blocks = blocks_all
-        blocks_cached = None
+        pairs_extra = {}
         if cfg.blocking.max_block_size:
             # the size scan runs over the id-only union relation (narrow,
             # cheap); keep the persisted handle so it can be released below
             blocks_cached = blocks_all.persist()
             persisted.append(blocks_cached)
-            join_blocks = salt_oversized(blocks_cached, cfg.blocking.max_block_size)
+            cap = cfg.blocking.max_block_size
+            pairs_extra["max_block_size"], hot = oversized_blocks(blocks_cached, cap)
+            join_blocks = salt_oversized(blocks_cached, cap, hot)
         new_ids = new_sigs.select("conv_id")
         new_side = join_blocks.join(new_ids, "conv_id")
         touched_keys = new_side.select("block_key").distinct()
@@ -293,7 +303,10 @@ def incremental_update(
                     )
                     _mark("commit_blocks")
                     pairs = ckpt.write(
-                        "candidate_pairs", pairs_all, input_fingerprint=f"incr:{in_fp}"
+                        "candidate_pairs",
+                        pairs_all,
+                        input_fingerprint=f"incr:{in_fp}",
+                        extra=pairs_extra,
                     )
                     _mark("commit_candidate_pairs")
                     # the scores write is where the scoring kernels (and the
@@ -333,6 +346,7 @@ def incremental_update(
                     "candidate_pairs",
                     new_pairs,
                     input_fingerprint=f"incr:{in_fp}",
+                    extra=pairs_extra,
                     expect_rows=stats["n_new_pairs"],
                 )
                 _mark("commit_candidate_pairs")
@@ -431,6 +445,7 @@ def incremental_update(
                     ],
                     "threshold": cfg.scoring.threshold,
                 },
+                observe=component_count(),
             )
         _mark("components")
         # persisted increment handles are released by the enclosing finally
@@ -475,10 +490,7 @@ def incremental_update(
 
         stats["n_signatures"] = ckpt.read_manifest("signatures")["rows"]
         stats["n_candidate_pairs"] = ckpt.read_manifest("candidate_pairs")["rows"]
-        # one self-labelled member per component (labels are min ids)
-        stats["n_components"] = comps.filter(
-            F.col("conv_id") == F.col("component_id")
-        ).count()
+        stats["n_components"] = n_components(ckpt, comps)
         return PipelineResult(sigs, pairs, scores, comps, [], stats)
     finally:
         for _df in persisted:

@@ -15,6 +15,21 @@ exactly that stage and its downstream, never upstream (FIXTURES.md §6),
 and rerunning with a changed config recomputes exactly the stages that
 config reaches — a threshold retune reuses scores and recomputes only
 the clustering.
+
+Input key (``sources.checkpoint.input_key``): transcripts read from files
+— a file scan, or a plain column projection of one such as
+``read_transcripts`` returns — are keyed by their files' paths, sizes and
+mtimes plus the output schema, read when the run starts; no Spark job
+scans them. So a byte-identical copy of the input at a new path
+recomputes every stage, and so does rewriting a file with the same bytes
+(its mtime changes). Any other DataFrame (``createDataFrame``, a filter or
+join over files) keeps the content scan: row count and xor of row hashes.
+
+With a file-backed input, only the stage writes and the driver collects
+that feed them run Spark jobs: a cache hit loads with the schema its
+manifest records, and the run's statistics come from manifests —
+``max_block_size`` from the block-size aggregation salting runs anyway,
+the component count observed while the components are written.
 """
 
 from __future__ import annotations
@@ -25,7 +40,12 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.blocking import BlockingConfig, block_keys, block_stats, candidate_pairs
+from ..operators.blocking import (
+    BlockingConfig,
+    block_keys,
+    candidate_pairs,
+    oversized_blocks,
+)
 from ..operators.clustering import components
 from ..operators.scoring import (
     ScoringConfig,
@@ -34,9 +54,25 @@ from ..operators.scoring import (
     score_pairs_chunked,
 )
 from ..operators.signatures import build_signatures
-from ..sources.checkpoint import StageCheckpoint, stage_fingerprint
+from ..sources.checkpoint import StageCheckpoint, input_key, stage_fingerprint
 
 STAGES = ["signatures", "blocks", "candidate_pairs", "scores", "components"]
+
+
+def component_count() -> dict:
+    """The components write's ``observe`` aggregate: labels are the
+    minimum member id, so each component has exactly one member labelled
+    with its own id."""
+    return {"n_components": F.count_if(F.col("conv_id") == F.col("component_id"))}
+
+
+def n_components(ckpt: StageCheckpoint, comps: DataFrame) -> int:
+    """The live components stage's component count: observed during its
+    write; a manifest written before that (no ``n_components``) counts."""
+    n = (ckpt.read_manifest("components") or {}).get("n_components")
+    if n is None:
+        n = comps.filter(F.col("conv_id") == F.col("component_id")).count()
+    return int(n)
 
 
 def _output_fp(ckpt: StageCheckpoint, stage: str, df: DataFrame) -> str:
@@ -112,7 +148,7 @@ def run_pipeline(
 
     from ..operators.scoring import udf_stage_parallelism
 
-    in_fp = stage_fingerprint(transcripts)
+    in_fp = input_key(transcripts)
     # config is part of each stage's cache identity: a resume keyed on
     # data fingerprints alone would cache-HIT a stage built under a
     # different config — e.g. a threshold retune would silently return
@@ -143,10 +179,6 @@ def run_pipeline(
         cached.append("signatures")
     sig_fp = _output_fp(ckpt, "signatures", sigs)
 
-    def _blocks():
-        b = block_keys(sigs, cfg.blocking)
-        return b
-
     with udf_stage_parallelism(spark):
         # the blocking config is part of the blocks stage's identity
         # (cache key AND manifest record): incremental_update compares
@@ -155,34 +187,49 @@ def run_pipeline(
         blocks, hit = ckpt.get_or_compute(
             spark,
             "blocks",
-            _blocks,
+            lambda: block_keys(sigs, cfg.blocking),
             f"{sig_fp}|cfg:{blocking_key}",
             extra={"blocking_config": asdict(cfg.blocking)},
         )
     if hit:
         cached.append("blocks")
     blocks_fp = _output_fp(ckpt, "blocks", blocks)
-    stats["max_block_size"] = (
-        block_stats(blocks).agg(F.max("block_size")).first()[0]
-    )
+
+    # the largest block size is recorded from the block-size aggregation
+    # salting runs anyway (filled in by _pairs, read after it returns)
+    pairs_extra: dict = {}
+
+    def _pairs():
+        largest, hot = oversized_blocks(blocks, cfg.blocking.max_block_size)
+        pairs_extra["max_block_size"] = largest
+        # blocks is checkpoint-backed parquet here: re-scanning it for
+        # salting's references is cheap AND recomputable, so skip the
+        # extra materialization copy (see candidate_pairs docstring)
+        return candidate_pairs(blocks, cfg.blocking, materialize="none", hot=hot)
 
     pairs, hit = ckpt.get_or_compute(
         spark,
         "candidate_pairs",
-        # blocks is checkpoint-backed parquet here: re-scanning it for
-        # salting's three references is cheap AND recomputable, so skip
-        # the extra materialization copy (see candidate_pairs docstring)
-        lambda: candidate_pairs(blocks, cfg.blocking, materialize="none"),
+        _pairs,
         f"{blocks_fp}|cfg:{blocking_key}",
+        extra=pairs_extra,
     )
     if hit:
         cached.append("candidate_pairs")
     pairs_fp = _output_fp(ckpt, "candidate_pairs", pairs)
+    largest = ckpt.read_manifest("candidate_pairs").get("max_block_size")
+    if largest is None:
+        # a manifest written before the field existed
+        largest = oversized_blocks(blocks, None)[0]
+    stats["max_block_size"] = largest
 
     # UDF-heavy stage: keep AQE from byte-coalescing the scoring
     # partitions down to core count (stragglers — see
     # scoring.udf_stage_parallelism)
     scores_staging = str(Path(cfg.checkpoint_dir) / "_scores_staging")
+    # scores read the signatures' text as well as the pairs, so a changed
+    # signature must miss even when the pair set comes out the same
+    scores_key = f"{pairs_fp}|{sig_fp}|cfg:{scoring_key}"
 
     def _scores():
         if cfg.scoring_chunks > 1:
@@ -194,9 +241,9 @@ def run_pipeline(
                 cfg.scoring_chunks,
                 scores_staging,
                 # the scores cache key doubles as the staging resume
-                # token: same pairs fingerprint + same scoring config →
-                # committed chunks are reusable after a crashed run
-                resume_token=f"{pairs_fp}|cfg:{scoring_key}",
+                # token: same pairs and signatures + same scoring config
+                # → committed chunks are reusable after a crashed run
+                resume_token=scores_key,
             )
         return score_pairs(spark, pairs, sigs, cfg.scoring)
 
@@ -205,7 +252,7 @@ def run_pipeline(
             spark,
             "scores",
             _scores,
-            f"{pairs_fp}|cfg:{scoring_key}",
+            scores_key,
             # scoring_config (threshold-independent, JSON-normalized) is
             # the record incremental_update's drift guard compares: any
             # drifted scoring parameter — not just the kernel — would
@@ -258,7 +305,9 @@ def run_pipeline(
         spark,
         "components",
         _components,
-        f"{scores_fp}|threshold:{cfg.scoring.threshold}",
+        # every signature is a node: a conversation without pairs still
+        # changes the components, though not the scores
+        f"{scores_fp}|{sig_fp}|threshold:{cfg.scoring.threshold}",
         # explicit linkage for incremental CC's staleness guard (the
         # input fingerprint now carries the threshold suffix, so the
         # guard's raw-fingerprint fallback would no longer match).
@@ -271,15 +320,14 @@ def run_pipeline(
             "scores_fingerprint": scores_fp,
             "threshold": cfg.scoring.threshold,
         },
+        observe=component_count(),
     )
     if hit:
         cached.append("components")
 
     stats["n_signatures"] = ckpt.read_manifest("signatures")["rows"]
     stats["n_candidate_pairs"] = ckpt.read_manifest("candidate_pairs")["rows"]
-    # labels are the minimum member id: each component has exactly one
-    # member labelled with its own id (a filter + count, no shuffle)
-    stats["n_components"] = comps.filter(F.col("conv_id") == F.col("component_id")).count()
+    stats["n_components"] = n_components(ckpt, comps)
     if cfg.expire_keep_last is not None:
         for stage in STAGES:
             ckpt.expire_snapshots(stage, keep_last=cfg.expire_keep_last)

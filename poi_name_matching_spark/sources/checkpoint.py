@@ -5,13 +5,29 @@ FIXTURES.md §6 layout:
     out/_head.json                     {<stage>: {live, versions, last}}
     out/<stage>/v<N>/data.parquet/
     out/<stage>/v<N>/_manifest.json    {stage, input_fingerprint,
-                                        output_fingerprint, rows,
-                                        partitions: [{id, rows}], wall_ms}
+                                        output_fingerprint, rows, schema,
+                                        partitions: [{id, rows}], wall_ms,
+                                        <observed stats>}
 
 Resumability contract (north rule): rerunning the pipeline skips any stage
 whose manifest exists AND whose recorded ``input_fingerprint`` matches the
 fingerprint of the current inputs; deleting one stage directory recomputes
-that stage and everything downstream, nothing upstream.
+that stage and everything downstream, nothing upstream. ``input_key``
+computes the pipeline's input fingerprint: from file metadata for a file
+scan, from the rows for anything else.
+
+Manifest fields beyond the identity ones:
+
+* ``schema`` — the stage's schema (Spark's JSON form). ``load``,
+  ``append``, ``load_appended``, ``load_snapshot`` and the bucketed-table
+  registration read with it, so reading a stage runs no schema-inference
+  job; only a manifest without one (written before the field existed)
+  makes them infer it from the parquet footers.
+* observed stats — named aggregates a caller passes to ``write`` as
+  ``observe``, computed while the rows are written (the pipeline records
+  ``n_components`` this way), plus ``extra`` values a caller learned from
+  a query that already ran (the pipeline's ``max_block_size`` on
+  ``candidate_pairs``).
 
 Stats without a rescan: ``write`` and ``append`` observe the output
 fingerprint (row count + xor of ``xxhash64`` row hashes, the
@@ -59,16 +75,19 @@ rescan.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 import time
 from contextlib import contextmanager
 from pathlib import Path
+from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def write_json_atomic(path: Path, payload: dict) -> None:
@@ -107,12 +126,70 @@ def stage_fingerprint(df: DataFrame) -> str:
     return _fp_format(row["n"], row["h"])
 
 
-def _observe_fingerprint(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """``df`` with its ``stage_fingerprint`` aggregate observed as the
-    rows stream through the action that consumes it (the stage write),
-    so the fingerprint costs no scan of its own."""
+def _file_relation(df: DataFrame):
+    """The ``HadoopFsRelation`` ``df`` reads when ``df`` is a file scan or
+    a plain column projection of one (no filter, rename or expression —
+    its rows are then fixed by the files and its schema); else ``None``."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "Project":
+        exprs = plan.projectList().iterator()
+        while exprs.hasNext():
+            if exprs.next().getClass().getSimpleName() != "AttributeReference":
+                return None
+        plan = plan.child()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    return rel if rel.getClass().getSimpleName() == "HadoopFsRelation" else None
+
+
+def _file_stat(spark: SparkSession, uri: str) -> tuple[int, int]:
+    """(size, mtime) of one input file, read now: nanoseconds from
+    ``os.stat`` for a local file, the Hadoop FileSystem's milliseconds
+    for any other scheme."""
+    parsed = urlparse(uri)
+    if parsed.scheme in ("", "file"):
+        st = os.stat(unquote(parsed.path))
+        return st.st_size, st.st_mtime_ns
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(uri)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    st = fs.getFileStatus(path)
+    return st.getLen(), st.getModificationTime()
+
+
+def input_key(df: DataFrame) -> str:
+    """The cache key of a pipeline input. A file scan (or a plain column
+    projection of one) is keyed by its format, reader options, output
+    schema and every file's path, size and mtime, read from the file
+    system when the key is computed — no Spark job. So a rewrite of a
+    file, even with the same bytes, and a byte-identical copy at a new
+    path both change the key. Any other DataFrame is keyed by its rows
+    (``stage_fingerprint``)."""
+    rel = _file_relation(df)
+    if rel is None:
+        return stage_fingerprint(df)
+    spark = df.sparkSession
+    files = sorted(df.inputFiles())
+    payload = [
+        rel.fileFormat().toString(),
+        rel.options().toString(),
+        df.schema.json(),
+        [[f, *_file_stat(spark, f)] for f in files],
+    ]
+    return "files:" + hashlib.sha256(json.dumps(payload).encode()).hexdigest()
+
+
+def _observe_fingerprint(
+    df: DataFrame, observe: dict | None = None
+) -> tuple[DataFrame, Observation]:
+    """``df`` with its ``stage_fingerprint`` aggregate (and the named
+    ``observe`` aggregates) observed as the rows stream through the
+    action that consumes it (the stage write), so they cost no scan of
+    their own."""
     obs = Observation()
-    return df.observe(obs, *_fp_columns(df.columns)), obs
+    named = [col.alias(name) for name, col in (observe or {}).items()]
+    return df.observe(obs, *_fp_columns(df.columns), *named), obs
 
 
 def _fp_format(n: int, h: int) -> str:
@@ -303,7 +380,6 @@ class StageCheckpoint:
         return True
 
     def _table_name(self, stage: str, v: int) -> str:
-        import hashlib
         import re
 
         # slug for readability + absolute-path hash for collision proofing:
@@ -329,7 +405,7 @@ class StageCheckpoint:
         table = self._table_name(stage, v)
         if not spark.catalog.tableExists(table):
             path = self._data_path(stage, v)
-            schema_ddl = spark.read.parquet(str(path)).schema.toDDL()
+            schema_ddl = self._read(spark, stage, v).schema.toDDL()
             spark.sql(
                 f"CREATE TABLE {table} ({schema_ddl}) USING parquet "
                 f"CLUSTERED BY ({bucket_by}) SORTED BY ({bucket_by}) "
@@ -337,9 +413,24 @@ class StageCheckpoint:
             )
         return table
 
+    def _read(
+        self, spark: SparkSession, stage: str, v: int, files: list[str] | None = None
+    ) -> DataFrame:
+        """Version ``v``'s parquet data (or just its ``files``), read
+        with the schema its manifest records — no schema-inference job.
+        A manifest without one (written before the field existed) falls
+        back to inferring it from the footers."""
+        path = self._data_path(stage, v)
+        schema = (self._manifest(stage, v) or {}).get("schema")
+        reader = spark.read if schema is None else spark.read.schema(
+            StructType.fromJson(schema)
+        )
+        if files is None:
+            return reader.parquet(str(path))
+        return reader.parquet(*(str(path / f) for f in files))
+
     def load(self, spark: SparkSession, stage: str) -> DataFrame:
         v = self._entry(stage)["live"]
-        path = self._data_path(stage, v)
         m = self._manifest(stage, v) or {}
         if m.get("bucket_by"):
             return spark.table(
@@ -347,7 +438,7 @@ class StageCheckpoint:
                     spark, stage, v, m["bucket_by"], int(m.get("n_buckets", 32))
                 )
             )
-        return spark.read.parquet(str(path))
+        return self._read(spark, stage, v)
 
     # ------------------------------------------------------------------
     # snapshots — Iceberg time-travel/rollback/expire analog
@@ -390,7 +481,7 @@ class StageCheckpoint:
         if version is None:
             return self.load(spark, stage)
         self._check_snapshot(stage, version)
-        return spark.read.parquet(str(self._data_path(stage, version)))
+        return self._read(spark, stage, version)
 
     def rollback(self, stage: str, version: int) -> None:
         """Point the head back at retained ``version``. Undoable: the
@@ -433,11 +524,16 @@ class StageCheckpoint:
         extra: dict | None = None,
         bucket_by: str | None = None,
         n_buckets: int = 32,
+        observe: dict | None = None,
     ) -> DataFrame:
         """Materialize ``df`` as a new version, record its observed
-        output fingerprint, per-file row counts (skew visibility) and
-        wall time, commit it, and return the reloaded DataFrame so
-        downstream stages read the checkpoint, not the lineage.
+        output fingerprint, schema, per-file row counts (skew
+        visibility) and wall time, commit it, and return the reloaded
+        DataFrame so downstream stages read the checkpoint, not the
+        lineage.
+
+        ``observe``: ``{name: aggregate Column}`` computed while the
+        rows are written and recorded in the manifest under ``name``.
 
         ``bucket_by``: write as a BUCKETED external table instead of
         plain parquet (``bucketBy(n_buckets).sortBy``). Downstream
@@ -452,7 +548,7 @@ class StageCheckpoint:
         path = self._data_path(stage, v)
         # the output fingerprint is observed as the rows are written —
         # downstream stages key off it without re-scanning the checkpoint
-        observed, obs = _observe_fingerprint(df)
+        observed, obs = _observe_fingerprint(df, observe)
         if bucket_by:
             table = self._table_name(stage, v)
             (
@@ -476,9 +572,11 @@ class StageCheckpoint:
             "input_fingerprint": input_fingerprint,
             "output_fingerprint": _fp_format(n, h),
             "rows": n,
+            "schema": reloaded.schema.jsonValue(),
             "partitions": _partitions(file_rows),
             "wall_ms": int((time.monotonic() - t0) * 1000),
             "written_at_unix": int(time.time()),
+            **{name: obs.get[name] for name in observe or {}},
         }
         if extra:
             manifest.update(extra)
@@ -589,6 +687,7 @@ class StageCheckpoint:
             "input_fingerprint": input_fingerprint,
             "output_fingerprint": out_fp,
             "rows": _fp_parse(out_fp)[0],
+            "schema": existing.schema.jsonValue(),
             "partitions": partitions,
             "appended": {"files": new_files, "rows": n_new},
             "wall_ms": int((time.monotonic() - t0) * 1000),
@@ -612,11 +711,11 @@ class StageCheckpoint:
                 f"stage {stage!r} was not fast-appended by its last "
                 "commit; load_appended has nothing to read"
             )
-        path = self._data_path(stage)
+        v = self._entry(stage)["live"]
         files = m["appended"]["files"]
         if not files:
-            return spark.read.parquet(str(path)).limit(0)
-        return spark.read.parquet(*(str(path / f) for f in files))
+            return self._read(spark, stage, v).limit(0)
+        return self._read(spark, stage, v, files)
 
     def compact(
         self,
@@ -673,7 +772,7 @@ class StageCheckpoint:
 
         t0 = time.monotonic()
         prev = self._entry(stage)["live"]
-        current = spark.read.parquet(str(src))
+        current = self._read(spark, stage, prev)
         v = self._new_version(stage)
         path = self._data_path(stage, v)
         if bucket_by:
@@ -698,7 +797,9 @@ class StageCheckpoint:
         file_rows = _file_rows(path, _part_files(path))
         # an independent rescan of the new files, not an observation of
         # the write: this check is what makes the rewrite trustworthy
-        out_fp = stage_fingerprint(spark.read.parquet(str(path)))
+        out_fp = stage_fingerprint(
+            spark.read.schema(current.schema).parquet(str(path))
+        )
         if out_fp != recorded:
             raise RuntimeError(
                 f"compaction of stage {stage!r} produced fingerprint "
@@ -706,6 +807,7 @@ class StageCheckpoint:
             )
         manifest = {k: val for k, val in m.items() if k != "appended"}
         manifest["output_fingerprint"] = out_fp  # backfills pre-upgrade
+        manifest["schema"] = current.schema.jsonValue()
         manifest["partitions"] = _partitions(file_rows)
         manifest["wall_ms"] = int((time.monotonic() - t0) * 1000)
         manifest["written_at_unix"] = int(time.time())
@@ -751,17 +853,22 @@ class StageCheckpoint:
         extra: dict | None = None,
         bucket_by: str | None = None,
         n_buckets: int = 32,
+        observe: dict | None = None,
     ) -> tuple[DataFrame, bool]:
         """(df, was_cached). ``compute`` is a thunk returning the stage
-        DataFrame; only invoked on a manifest miss/mismatch."""
+        DataFrame; only invoked on a manifest miss/mismatch. ``extra`` is
+        read after ``compute`` returns, so ``compute`` may add the
+        statistics it learned on the way to it."""
         if self.is_complete(stage, input_fingerprint):
             return self.load(spark, stage), True
+        df = compute()
         df = self.write(
             stage,
-            compute(),
+            df,
             input_fingerprint,
             extra,
             bucket_by=bucket_by,
             n_buckets=n_buckets,
+            observe=observe,
         )
         return df, False

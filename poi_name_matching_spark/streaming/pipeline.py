@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.incremental import incremental_update
 from ..plans.pipeline import STAGES, PipelineConfig, run_pipeline
-from ..sources.checkpoint import StageCheckpoint, stage_fingerprint
+from ..sources.checkpoint import StageCheckpoint, input_key
 from .sentinel import LocalSentinel, make_sentinel
 
 TRANSCRIPTS_DDL = (
@@ -71,8 +71,9 @@ def apply_transcript_batch(
     Crash handling around the bootstrap itself: a partially-committed
     founding run (some stages written, the driver died between stage
     commits) is recognized by the signatures manifest carrying THIS
-    batch's fingerprint (founding runs key stages on
-    ``stage_fingerprint(input)``; increments use an ``incr:`` prefix) —
+    batch's input key (founding runs key signatures on
+    ``input_key(batch)``, the function ``run_pipeline`` records with;
+    increments use an ``incr:`` prefix) —
     the replayed batch then RESUMES ``run_pipeline``, whose
     fingerprint-keyed stage cache skips the committed stages
     (exactly-once). Any other partially-missing checkpoint is foreign
@@ -115,14 +116,15 @@ def apply_transcript_batch(
             "input_fingerprint"
         )
         # crashed-founding resume: only meaningful on a PARTIAL
-        # checkpoint, and only a FOUNDING run writes the raw batch
-        # fingerprint (increments use an 'incr:' prefix — skip the
-        # full-batch scan whenever the prefix rules a match out)
+        # checkpoint, and only a FOUNDING run writes the raw batch key
+        # (increments use an 'incr:' prefix — skip computing the key,
+        # a full-batch scan for a non-file batch, whenever the prefix
+        # rules a match out)
         if (
             missing
             and sig_fp is not None
             and not sig_fp.startswith("incr:")
-            and sig_fp == stage_fingerprint(batch)
+            and sig_fp == input_key(batch)
         ):
             # our own founding run of THIS batch crashed between stage
             # commits — resume it (completed stages cache-hit)

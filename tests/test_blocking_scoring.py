@@ -10,7 +10,6 @@ from poi_name_matching_spark.functions import kernels
 from poi_name_matching_spark.operators.blocking import (
     BlockingConfig,
     block_keys,
-    block_stats,
     candidate_pairs,
     salt_oversized,
 )
@@ -86,8 +85,8 @@ def test_hot_block_skew_recall(spark):
     sigs = build_signatures(tdf).cache()
     cfg = BlockingConfig(max_block_size=50)
     blocks = block_keys(sigs, cfg)
-    stats = block_stats(salt_oversized(blocks, cfg.max_block_size))
-    assert stats.agg(F.max("block_size")).first()[0] <= 2 * cfg.max_block_size
+    sizes = salt_oversized(blocks, cfg.max_block_size).groupBy("block_key").count()
+    assert sizes.agg(F.max("count")).first()[0] <= 2 * cfg.max_block_size
 
     res = generate_transcripts(n_convs=300, seed=13, hot_fraction=0.4)
     clusters = defaultdict(list)
@@ -282,6 +281,17 @@ def test_max_vocab_bounded_by_default(spark, sigs, caplog):
     assert len(uncapped_bc.value) == vocab_n
     assert uncapped_bc.value == full_bc.value  # non-binding cap: identical map
     assert not caplog.records
+
+
+@pytest.mark.parametrize("rows", [[], [("c1", "", []), ("c2", "the", [])]])
+def test_df_map_of_a_corpus_without_tokens(spark, rows):
+    """The corpus size is observed inside the df query; with no token to
+    count, AQE drops that query's token stage and the observation with
+    it, and the size must still come out right (0, or the 2 distinct
+    texts)."""
+    schema = "conv_id string, sig_text string, tokens array<string>"
+    df_map_bc, n_bc = broadcast_df_map(spark, spark.createDataFrame(rows, schema))
+    assert (df_map_bc.value, n_bc.value) == ({}, len(rows))
 
 
 def test_udf_stage_parallelism_nested_scopes(spark):

@@ -47,3 +47,30 @@ def test_write_of_narrow_frame_is_one_spark_job(spark, tmp_path):
         sc._jsc.clearJobGroup()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     assert out.count() == 200
+
+
+@pytest.mark.parametrize("bucketed", [False, True])
+def test_loads_read_the_manifest_schema_with_no_spark_job(
+    spark, tmp_path, count_jobs, bucketed
+):
+    """``load``, ``load_appended`` and ``load_snapshot`` read with the
+    schema the manifest records, so none of them launches the footer
+    job schema inference would — a bucketed stage included, whose
+    catalog table a fresh session must register again."""
+    ck = StageCheckpoint(tmp_path / "ck")
+    kw = {"bucket_by": "id", "n_buckets": 4} if bucketed else {}
+    written = ck.write("stage", _rows(spark, 0, 50), **kw)
+    ck.append("stage", _rows(spark, 50, 60), expect_rows=10)
+    assert ck.read_manifest("stage")["schema"] == written.schema.jsonValue()
+    if bucketed:
+        # what a process restart looks like to the in-memory catalog
+        spark.sql(f"DROP TABLE {ck._table_name('stage', 2)}")
+    loaded, n_jobs = count_jobs(lambda: ck.load(spark, "stage"))
+    assert n_jobs == 0
+    assert loaded.schema == written.schema
+    appended, n_jobs = count_jobs(lambda: ck.load_appended(spark, "stage"))
+    assert n_jobs == 0
+    old, n_jobs = count_jobs(lambda: ck.load_snapshot(spark, "stage", 1))
+    assert n_jobs == 0
+    assert (loaded.count(), appended.count(), old.count()) == (60, 10, 50)
+    assert stage_fingerprint(loaded) == ck.read_manifest("stage")["output_fingerprint"]

@@ -726,3 +726,219 @@ def test_cli_rejects_compact_without_incremental(capsys):
               "--compact-above-files", "8"])
     assert exc.value.code == 2
     assert "requires --incremental" in capsys.readouterr().err
+
+
+# ---- file-backed input: the input key and the per-run job budget ------
+
+FILE_N = 60
+FILE_SEED = 23
+STAGE_ORDER = ["signatures", "blocks", "candidate_pairs", "scores", "components"]
+
+
+def _write_transcript_files(out, n_convs=FILE_N, seed=FILE_SEED, n_files=2):
+    """The generated transcripts as ``n_files`` parquet files under
+    ``out``, each holding whole conversations."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from poi_name_matching_spark.data import generate_transcripts
+
+    rows = generate_transcripts(n_convs=n_convs, seed=seed).rows
+    convs = sorted({r[0] for r in rows})
+    out.mkdir(parents=True)
+    for i in range(n_files):
+        mine = set(convs[i::n_files])
+        cols = list(zip(*[r for r in rows if r[0] in mine]))
+        table = pa.table(
+            {
+                "conv_id": pa.array(cols[0], pa.string()),
+                "turn_idx": pa.array(cols[1], pa.int32()),
+                "role": pa.array(cols[2], pa.string()),
+                "text": pa.array(cols[3], pa.string()),
+                "tool": pa.array(cols[4], pa.string()),
+                "ts": pa.array(cols[5], pa.timestamp("us", tz="UTC")),
+            }
+        )
+        pq.write_table(table, out / f"part-{i}.parquet")
+
+
+def _small_cfg(checkpoint_dir, threshold=0.425):
+    from poi_name_matching_spark.operators.scoring import ScoringConfig
+
+    return PipelineConfig(
+        checkpoint_dir=checkpoint_dir,
+        scoring=ScoringConfig(kernels=("jaccard", "tfidf"), threshold=threshold),
+    )
+
+
+@pytest.fixture(scope="module")
+def file_run(spark, tmp_path_factory):
+    """One run over transcripts read from parquet files: (input dir,
+    checkpoint dir, result). Tests copy the checkpoint before changing
+    it; none changes the input files."""
+    root = tmp_path_factory.mktemp("file_input")
+    _write_transcript_files(root / "in")
+    result = run_pipeline(
+        spark, spark.read.parquet(str(root / "in")), _small_cfg(root / "ckpt")
+    )
+    assert result.cached_stages == []
+    return root / "in", root / "ckpt", result
+
+
+def test_input_key_follows_the_files(spark, tmp_path, count_jobs, file_run):
+    """A file scan, or a plain projection of one, is keyed by its files'
+    paths, sizes and mtimes plus its schema, with no Spark job; any other
+    DataFrame keeps the content scan."""
+    import shutil
+
+    from poi_name_matching_spark.sources.checkpoint import input_key
+    from poi_name_matching_spark.sources.readers import read_transcripts
+
+    src, _, _ = file_run
+    df = spark.read.parquet(str(src))
+    key, n_jobs = count_jobs(lambda: input_key(df))
+    assert key.startswith("files:") and n_jobs == 0
+    assert input_key(spark.read.parquet(str(src))) == key
+    # read_transcripts projects every column in file order: same scan
+    assert input_key(read_transcripts(spark, str(src))) == key
+    narrow = input_key(df.select("conv_id", "text"))
+    assert narrow.startswith("files:") and narrow != key
+    assert input_key(df.select("text", "conv_id")) not in (key, narrow)
+    # a byte-identical copy (mtimes kept) at a new path is a new input
+    shutil.copytree(src, tmp_path / "copy")
+    assert input_key(spark.read.parquet(str(tmp_path / "copy"))) != key
+    # a filter is no plain scan: keyed by its rows
+    assert not input_key(df.filter(F.col("turn_idx") > 0)).startswith("files:")
+
+
+def test_touching_an_input_file_invalidates_signatures(spark, tmp_path):
+    """Re-reading unchanged files hits every stage. Writing one file's
+    bytes again (new mtime) recomputes signatures; the stages after it
+    are keyed by the signatures' content, which did not change, so they
+    hit. Changing one row recomputes all five stages."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "in"
+    _write_transcript_files(src)
+    cfg = _small_cfg(tmp_path / "ckpt")
+
+    def run():
+        return run_pipeline(spark, spark.read.parquet(str(src)), cfg)
+
+    first = run()
+    assert first.cached_stages == []
+    assert run().cached_stages == STAGE_ORDER
+
+    touched = src / "part-0.parquet"
+    data, st = touched.read_bytes(), touched.stat()
+    touched.unlink()
+    touched.write_bytes(data)
+    os.utime(touched, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    rewritten = run()
+    assert rewritten.cached_stages == STAGE_ORDER[1:]
+    assert rewritten.stats == first.stats
+
+    table = pq.read_table(touched)
+    i = table.column("turn_idx").to_pylist().index(0)
+    texts = table.column("text").to_pylist()
+    # a new first word: the conversation's signature and its first-token
+    # and prefix block keys all change
+    texts[i] = "zanzibar " + texts[i]
+    col = table.schema.get_field_index("text")
+    pq.write_table(table.set_column(col, "text", pa.array(texts, pa.string())), touched)
+    changed = run()
+    assert changed.cached_stages == []
+    assert changed.stats["n_signatures"] == first.stats["n_signatures"]
+
+
+def test_conversation_without_pairs_reaches_components(spark, tmp_path):
+    """A new conversation that blocks with nobody leaves the pair set
+    and so the scores unchanged; it must still get its own component
+    (the components key covers the signatures, not only the scores)."""
+    from poi_name_matching_spark.data import generate_transcripts
+    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
+
+    rows = generate_transcripts(n_convs=30, seed=4).rows
+    cfg = _small_cfg(tmp_path / "ckpt")
+    first = run_pipeline(spark, spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA), cfg)
+    loner = ("zz-loner", 0, "user", "qwxz vbnk plmj", None, rows[0][5])
+    second = run_pipeline(
+        spark, spark.createDataFrame(rows + [loner], TRANSCRIPTS_SCHEMA), cfg
+    )
+    assert second.stats["n_candidate_pairs"] == first.stats["n_candidate_pairs"]
+    assert "components" not in second.cached_stages
+    assert second.stats["n_components"] == first.stats["n_components"] + 1
+    got = {r["conv_id"]: r["component_id"] for r in second.components.collect()}
+    assert got["zz-loner"] == "zz-loner"
+
+
+def test_cache_hits_and_retunes_run_within_the_job_budget(
+    spark, tmp_path, count_jobs, file_run
+):
+    """Only stage writes (and the driver collects feeding them) run
+    Spark jobs: a rerun that hits every stage runs none, and a threshold
+    retune — four cache hits and a components rebuild — runs at most 4."""
+    import shutil
+
+    src, ckpt, first = file_run
+    shutil.copytree(ckpt, tmp_path / "ckpt")
+    transcripts = spark.read.parquet(str(src))
+
+    rerun, n_jobs = count_jobs(
+        lambda: run_pipeline(spark, transcripts, _small_cfg(tmp_path / "ckpt"))
+    )
+    assert rerun.cached_stages == STAGE_ORDER
+    assert rerun.stats == first.stats
+    assert n_jobs == 0
+
+    retune, n_jobs = count_jobs(
+        lambda: run_pipeline(spark, transcripts, _small_cfg(tmp_path / "ckpt", 0.6))
+    )
+    assert retune.cached_stages == STAGE_ORDER[:4]
+    assert n_jobs <= 4
+    comps = {r["conv_id"]: r["component_id"] for r in retune.components.collect()}
+    assert retune.stats["n_components"] == len(set(comps.values()))
+    assert retune.stats["max_block_size"] == first.stats["max_block_size"]
+
+
+def test_pre_upgrade_manifests_still_cache_hit(spark, tmp_path, monkeypatch, file_run):
+    """Manifests written before ``schema``, ``max_block_size`` and
+    ``n_components`` existed: a rerun and a retune still hit the same
+    stages and return the same stats, computing each missing value once."""
+    import shutil
+
+    from poi_name_matching_spark.plans import pipeline
+    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
+
+    src, ckpt, first = file_run
+    transcripts = spark.read.parquet(str(src))
+    shutil.copytree(ckpt, tmp_path / "new")
+    shutil.copytree(ckpt, tmp_path / "old")
+    ck = StageCheckpoint(tmp_path / "old")
+    for stage in STAGE_ORDER:
+        path = ck.manifest_path(stage)
+        m = json.loads(path.read_text())
+        for k in ("schema", "max_block_size", "n_components"):
+            m.pop(k, None)
+        path.write_text(json.dumps(m))
+
+    calls = []
+    measure = pipeline.oversized_blocks
+    monkeypatch.setattr(
+        pipeline, "oversized_blocks", lambda *a: calls.append(a) or measure(*a)
+    )
+    rerun = run_pipeline(spark, transcripts, _small_cfg(tmp_path / "old"))
+    assert rerun.cached_stages == STAGE_ORDER
+    assert rerun.stats == first.stats
+    assert len(calls) == 1
+
+    calls.clear()
+    retune_old = run_pipeline(spark, transcripts, _small_cfg(tmp_path / "old", 0.6))
+    assert len(calls) == 1
+    retune_new = run_pipeline(spark, transcripts, _small_cfg(tmp_path / "new", 0.6))
+    assert len(calls) == 1
+    assert retune_old.cached_stages == retune_new.cached_stages == STAGE_ORDER[:4]
+    assert retune_old.stats == retune_new.stats

@@ -149,6 +149,41 @@ def test_crashed_bootstrap_resumes_on_replay(spark, tmp_path):
     assert ck.read_manifest("components")["rows"] == 30
 
 
+def test_crashed_file_bootstrap_resumes_on_replay(spark, tmp_path):
+    """The crashed-founding check with a batch read from files: the
+    founding run keys signatures on the files' metadata, and the replay
+    must compare with that same input key (a content fingerprint of the
+    batch would never match it, and the replay would be refused as a
+    damaged checkpoint)."""
+    import shutil
+
+    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
+    from poi_name_matching_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
+    from poi_name_matching_spark.streaming.pipeline import (
+        apply_transcript_batch,
+    )
+
+    res = generate_transcripts(n_convs=30, seed=8)
+    drop = str(tmp_path / "drop")
+    spark.createDataFrame(res.rows, TRANSCRIPTS_SCHEMA).coalesce(1).write.parquet(drop)
+    cfg = PipelineConfig(checkpoint_dir=str(tmp_path / "pipe"))
+    run_pipeline(spark, spark.read.parquet(drop), cfg)
+    ck = StageCheckpoint(cfg.checkpoint_dir)
+    assert ck.read_manifest("signatures")["input_fingerprint"].startswith("files:")
+    sig_mtime = ck.manifest_path("signatures").stat().st_mtime_ns
+    for s in ("candidate_pairs", "scores", "components"):
+        shutil.rmtree(tmp_path / "pipe" / s)
+
+    stats = apply_transcript_batch(spark.read.parquet(drop), cfg)  # the replay
+    assert stats is not None
+    assert ck.manifest_path("signatures").stat().st_mtime_ns == sig_mtime
+    assert ck.read_manifest("components")["rows"] == 30
+
+
 def test_lost_pipeline_checkpoint_with_live_offsets_raises(spark, tmp_path):
     """Stream offsets surviving a lost pipeline checkpoint must fail
     LOUDLY: re-founding from a mid-stream batch would silently drop
