@@ -130,8 +130,11 @@ def broadcast_df_map(
     (the deduped corpus's row count), so the build is ONE query: no
     persist of the deduped corpus, no separate count. The common case
     collects the map unsorted: the ``max_vocab + 1`` sentinel row tells
-    whether the cap binds, and only then a second query keeps the top-K
-    by df."""
+    whether the cap binds. Only then does a second query keep the top-K
+    by df, running the corpus dedup and df aggregation again and
+    discarding the ``max_vocab + 1`` rows the first one collected (on
+    2,000 conversations with a binding cap of 100, about as long as the
+    earlier single sorted query over a persisted corpus)."""
     obs = Observation()
     corpus = signatures.select("sig_text", "tokens").dropDuplicates(["sig_text"])
 

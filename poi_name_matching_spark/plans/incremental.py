@@ -73,13 +73,7 @@ from ..operators.signatures import build_signatures
 # stage_fingerprint is not called here but stays a module attribute:
 # perfbench/tracer.py wraps it by name in this module
 from ..sources.checkpoint import StageCheckpoint, input_key, stage_fingerprint  # noqa: F401
-from .pipeline import (
-    STAGES,
-    PipelineConfig,
-    PipelineResult,
-    component_count,
-    n_components,
-)
+from .pipeline import STAGES, PipelineConfig, PipelineResult, component_count
 
 
 def incremental_update(
@@ -490,7 +484,7 @@ def incremental_update(
 
         stats["n_signatures"] = ckpt.read_manifest("signatures")["rows"]
         stats["n_candidate_pairs"] = ckpt.read_manifest("candidate_pairs")["rows"]
-        stats["n_components"] = n_components(ckpt, comps)
+        stats["n_components"] = ckpt.read_manifest("components")["n_components"]
         return PipelineResult(sigs, pairs, scores, comps, [], stats)
     finally:
         for _df in persisted:

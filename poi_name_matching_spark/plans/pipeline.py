@@ -21,9 +21,13 @@ Input key (``sources.checkpoint.input_key``): transcripts read from files
 ``read_transcripts`` returns — are keyed by their files' paths, sizes and
 mtimes plus the output schema, read when the run starts; no Spark job
 scans them. So a byte-identical copy of the input at a new path
-recomputes every stage, and so does rewriting a file with the same bytes
-(its mtime changes). Any other DataFrame (``createDataFrame``, a filter or
-join over files) keeps the content scan: row count and xor of row hashes.
+recomputes the signatures, and so does rewriting a file with the same
+bytes (its mtime changes); later stages are keyed by the content they
+read and hit when the signatures come out the same. Any other DataFrame
+(``createDataFrame``, a filter or join over files) keeps the content
+scan: row count and xor of row hashes. A checkpoint written before these
+keys recomputes scores and components once (their keys now cover the
+signatures), and signatures too for a file-backed input.
 
 With a file-backed input, only the stage writes and the driver collects
 that feed them run Spark jobs: a cache hit loads with the schema its
@@ -64,15 +68,6 @@ def component_count() -> dict:
     minimum member id, so each component has exactly one member labelled
     with its own id."""
     return {"n_components": F.count_if(F.col("conv_id") == F.col("component_id"))}
-
-
-def n_components(ckpt: StageCheckpoint, comps: DataFrame) -> int:
-    """The live components stage's component count: observed during its
-    write; a manifest written before that (no ``n_components``) counts."""
-    n = (ckpt.read_manifest("components") or {}).get("n_components")
-    if n is None:
-        n = comps.filter(F.col("conv_id") == F.col("component_id")).count()
-    return int(n)
 
 
 def _output_fp(ckpt: StageCheckpoint, stage: str, df: DataFrame) -> str:
@@ -327,7 +322,7 @@ def run_pipeline(
 
     stats["n_signatures"] = ckpt.read_manifest("signatures")["rows"]
     stats["n_candidate_pairs"] = ckpt.read_manifest("candidate_pairs")["rows"]
-    stats["n_components"] = n_components(ckpt, comps)
+    stats["n_components"] = ckpt.read_manifest("components")["n_components"]
     if cfg.expire_keep_last is not None:
         for stage in STAGES:
             ckpt.expire_snapshots(stage, keep_last=cfg.expire_keep_last)

@@ -82,7 +82,6 @@ import shutil
 import time
 from contextlib import contextmanager
 from pathlib import Path
-from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -143,39 +142,48 @@ def _file_relation(df: DataFrame):
     return rel if rel.getClass().getSimpleName() == "HadoopFsRelation" else None
 
 
-def _file_stat(spark: SparkSession, uri: str) -> tuple[int, int]:
-    """(size, mtime) of one input file, read now: nanoseconds from
-    ``os.stat`` for a local file, the Hadoop FileSystem's milliseconds
-    for any other scheme."""
-    parsed = urlparse(uri)
-    if parsed.scheme in ("", "file"):
-        st = os.stat(unquote(parsed.path))
-        return st.st_size, st.st_mtime_ns
+def _file_stats(spark: SparkSession, files: list[str]) -> list[tuple[int, int]]:
+    """(size, mtime in ms) of each of ``files`` (URIs, as ``inputFiles``
+    returns them), read now through the Hadoop FileSystem of its scheme:
+    one fresh listing per parent directory, not one call per file, and
+    not the listing Spark cached when the DataFrame was created."""
     jvm = spark.sparkContext._jvm
-    path = jvm.org.apache.hadoop.fs.Path(uri)
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    st = fs.getFileStatus(path)
-    return st.getLen(), st.getModificationTime()
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    listed: dict[str, dict[str, tuple[int, int]]] = {}
+    stats = []
+    for f in files:
+        path = jvm.org.apache.spark.paths.SparkPath.fromUrlString(f).toPath()
+        parent = path.getParent()
+        if parent.toString() not in listed:
+            listed[parent.toString()] = {
+                st.getPath().getName(): (st.getLen(), st.getModificationTime())
+                for st in parent.getFileSystem(conf).listStatus(parent)
+            }
+        entries = listed[parent.toString()]
+        if path.getName() not in entries:
+            raise FileNotFoundError(f"input file {f} no longer exists")
+        stats.append(entries[path.getName()])
+    return stats
 
 
 def input_key(df: DataFrame) -> str:
     """The cache key of a pipeline input. A file scan (or a plain column
     projection of one) is keyed by its format, reader options, output
-    schema and every file's path, size and mtime, read from the file
+    schema and every file's path, size and mtime, listed from the file
     system when the key is computed — no Spark job. So a rewrite of a
     file, even with the same bytes, and a byte-identical copy at a new
-    path both change the key. Any other DataFrame is keyed by its rows
-    (``stage_fingerprint``)."""
+    path both change the key; a same-size rewrite within the same
+    millisecond (the FileSystem's mtime unit) does not. Any other
+    DataFrame is keyed by its rows (``stage_fingerprint``)."""
     rel = _file_relation(df)
     if rel is None:
         return stage_fingerprint(df)
-    spark = df.sparkSession
     files = sorted(df.inputFiles())
     payload = [
         rel.fileFormat().toString(),
         rel.options().toString(),
         df.schema.json(),
-        [[f, *_file_stat(spark, f)] for f in files],
+        [[f, *st] for f, st in zip(files, _file_stats(df.sparkSession, files))],
     ]
     return "files:" + hashlib.sha256(json.dumps(payload).encode()).hexdigest()
 

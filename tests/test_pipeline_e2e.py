@@ -904,25 +904,42 @@ def test_cache_hits_and_retunes_run_within_the_job_budget(
     assert retune.stats["max_block_size"] == first.stats["max_block_size"]
 
 
-def test_pre_upgrade_manifests_still_cache_hit(spark, tmp_path, monkeypatch, file_run):
-    """Manifests written before ``schema``, ``max_block_size`` and
-    ``n_components`` existed: a rerun and a retune still hit the same
-    stages and return the same stats, computing each missing value once."""
+def test_checkpoint_from_before_the_upgrade(spark, tmp_path, monkeypatch, file_run):
+    """A checkpoint written before the file-metadata input key, the
+    signatures in the scores and components keys, and the ``schema``,
+    ``max_block_size`` and ``n_components`` manifest fields: its first
+    run recomputes signatures (a file input's key changed), scores and
+    components (their keys changed) and hits blocks and candidate_pairs,
+    loading them without a recorded schema and measuring the missing
+    ``max_block_size`` once. From then on a retune hits four stages, as
+    on a checkpoint written after the upgrade, with the same stats."""
     import shutil
 
     from poi_name_matching_spark.plans import pipeline
-    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
+    from poi_name_matching_spark.sources.checkpoint import (
+        StageCheckpoint,
+        stage_fingerprint,
+    )
 
     src, ckpt, first = file_run
     transcripts = spark.read.parquet(str(src))
     shutil.copytree(ckpt, tmp_path / "new")
     shutil.copytree(ckpt, tmp_path / "old")
     ck = StageCheckpoint(tmp_path / "old")
+    sig_fp = ck.read_manifest("signatures")["output_fingerprint"]
+    # the keys as the earlier code wrote them
+    legacy_key = {
+        "signatures": lambda k: stage_fingerprint(transcripts),
+        "scores": lambda k: k.replace(f"|{sig_fp}|cfg:", "|cfg:"),
+        "components": lambda k: k.replace(f"|{sig_fp}|threshold:", "|threshold:"),
+    }
     for stage in STAGE_ORDER:
         path = ck.manifest_path(stage)
         m = json.loads(path.read_text())
         for k in ("schema", "max_block_size", "n_components"):
             m.pop(k, None)
+        if stage in legacy_key:
+            m["input_fingerprint"] = legacy_key[stage](m["input_fingerprint"])
         path.write_text(json.dumps(m))
 
     calls = []
@@ -930,9 +947,9 @@ def test_pre_upgrade_manifests_still_cache_hit(spark, tmp_path, monkeypatch, fil
     monkeypatch.setattr(
         pipeline, "oversized_blocks", lambda *a: calls.append(a) or measure(*a)
     )
-    rerun = run_pipeline(spark, transcripts, _small_cfg(tmp_path / "old"))
-    assert rerun.cached_stages == STAGE_ORDER
-    assert rerun.stats == first.stats
+    upgraded = run_pipeline(spark, transcripts, _small_cfg(tmp_path / "old"))
+    assert upgraded.cached_stages == ["blocks", "candidate_pairs"]
+    assert upgraded.stats == first.stats
     assert len(calls) == 1
 
     calls.clear()
