@@ -1,9 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target).
 
 ``entry(spark)`` runs the flagship record-linkage pipeline end-to-end on
-sf0.001 testdata; ``queries()`` / ``oracle_sql()`` expose every
-implemented operator from SURVEY.md §2, each with a DuckDB oracle to
-cross-check it against.
+sf0.001 testdata; ``queries()`` / ``oracle_sql()`` expose the contract
+queries of ``poi_name_matching_spark.queries`` — each runs package code
+(a pipeline stage, a similarity kernel or an evaluation operator) and
+has a DuckDB oracle to cross-check it against.
 """
 
 from __future__ import annotations

@@ -36,10 +36,6 @@ def main(argv: list[str] | None = None) -> int:
         "comma list of kernel names",
     )
     p.add_argument("--max-block-size", type=int, default=200)
-    p.add_argument("--bucket-signatures", type=int, default=None,
-                   help="bucket the signatures checkpoint by conv_id into "
-                        "N buckets (elides the scoring joins' big-side "
-                        "Exchange; size to scoring parallelism)")
     p.add_argument("--master", default=None,
                    help="override master (default: whatever spark-submit set)")
     p.add_argument("--shuffle-partitions", type=int, default=None)
@@ -112,7 +108,6 @@ def main(argv: list[str] | None = None) -> int:
             threshold=args.threshold,
         ),
         shuffle_partitions=args.shuffle_partitions,
-        bucket_signatures=args.bucket_signatures,
         compact_above_files=args.compact_above_files,
     )
     if args.incremental:

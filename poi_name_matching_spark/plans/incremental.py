@@ -285,8 +285,6 @@ def incremental_update(
                         "signatures",
                         all_sigs,
                         input_fingerprint=f"incr:{in_fp}",
-                        bucket_by="conv_id" if cfg.bucket_signatures else None,
-                        n_buckets=cfg.bucket_signatures or 32,
                     )
                     _mark("commit_signatures")
                     blocks = ckpt.write(
@@ -461,8 +459,8 @@ def incremental_update(
                     continue
                 if len(ckpt._data_files(stage)) > cfg.compact_above_files:
                     res = ckpt.compact(spark, stage)
-                    # compact() may decline (e.g. a bucketed stage already
-                    # at ~one file per bucket): record and reload only
+                    # compact() may decline (a stage whose files already
+                    # match its target layout): record and reload only
                     # stages it actually rewrote
                     if res["compacted"]:
                         compactions[stage] = res

@@ -85,12 +85,6 @@ class PipelineConfig:
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
     scoring: ScoringConfig = field(default_factory=ScoringConfig)
     shuffle_partitions: int | None = None  # None → session default
-    #: bucket the signatures checkpoint by conv_id into this many
-    #: buckets: the scoring stage's two signature joins then read the
-    #: hash partitioning from table metadata and skip the signatures-
-    #: side Exchange (only the id-only pair relation shuffles). None →
-    #: plain parquet. Size to the scoring shuffle parallelism.
-    bucket_signatures: int | None = None
     #: snapshot retention for BATCH runs: after a completed run, keep at
     #: most this many retained versions per stage (and sweep the orphan
     #: versions of crashed writes). Every stage rewrite is a new
@@ -167,8 +161,6 @@ def run_pipeline(
             "signatures",
             lambda: build_signatures(transcripts),
             in_fp,
-            bucket_by="conv_id" if cfg.bucket_signatures else None,
-            n_buckets=cfg.bucket_signatures or 32,
         )
     if hit:
         cached.append("signatures")

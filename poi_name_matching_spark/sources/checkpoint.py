@@ -19,10 +19,10 @@ scan, from the rows for anything else.
 Manifest fields beyond the identity ones:
 
 * ``schema`` — the stage's schema (Spark's JSON form). ``load``,
-  ``append``, ``load_appended``, ``load_snapshot`` and the bucketed-table
-  registration read with it, so reading a stage runs no schema-inference
-  job; only a manifest without one (written before the field existed)
-  makes them infer it from the parquet footers.
+  ``append``, ``load_appended`` and ``load_snapshot`` read with it, so
+  reading a stage runs no schema-inference job; only a manifest without
+  one (written before the field existed) makes them infer it from the
+  parquet footers.
 * observed stats — named aggregates a caller passes to ``write`` as
   ``observe``, computed while the rows are written (the pipeline records
   ``n_components`` this way), plus ``extra`` values a caller learned from
@@ -387,40 +387,6 @@ class StageCheckpoint:
             return False
         return True
 
-    def _table_name(self, stage: str, v: int) -> str:
-        import re
-
-        # slug for readability + absolute-path hash for collision proofing:
-        # the slug alone collapses 'out-a' and 'out_a' to one name, and a
-        # stale catalog table whose bucket metadata no longer matches the
-        # files would silently mis-join (Spark trusts bucket metadata).
-        # One table per version: a version's files never change, so its
-        # table's cached listing never goes stale.
-        root = str(self.root.resolve())
-        slug = re.sub(r"[^A-Za-z0-9_]", "_", root).strip("_").lower()[-48:]
-        tag = hashlib.sha256(root.encode()).hexdigest()[:8]
-        return f"ckpt_{slug}_{tag}_{stage}_v{v}"
-
-    def _bucketed_table(
-        self, spark: SparkSession, stage: str, v: int, bucket_by: str, n_buckets: int
-    ) -> str:
-        """Register version ``v`` of a bucketed stage as a catalog table
-        unless this session already has it. saveAsTable registers only in
-        the writing session's (in-memory) catalog; a fresh process must
-        re-register from the manifest so the resume contract survives
-        restarts WITH the bucket metadata intact (plain read.parquet
-        would lose the Exchange elision)."""
-        table = self._table_name(stage, v)
-        if not spark.catalog.tableExists(table):
-            path = self._data_path(stage, v)
-            schema_ddl = self._read(spark, stage, v).schema.toDDL()
-            spark.sql(
-                f"CREATE TABLE {table} ({schema_ddl}) USING parquet "
-                f"CLUSTERED BY ({bucket_by}) SORTED BY ({bucket_by}) "
-                f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-            )
-        return table
-
     def _read(
         self, spark: SparkSession, stage: str, v: int, files: list[str] | None = None
     ) -> DataFrame:
@@ -438,15 +404,7 @@ class StageCheckpoint:
         return reader.parquet(*(str(path / f) for f in files))
 
     def load(self, spark: SparkSession, stage: str) -> DataFrame:
-        v = self._entry(stage)["live"]
-        m = self._manifest(stage, v) or {}
-        if m.get("bucket_by"):
-            return spark.table(
-                self._bucketed_table(
-                    spark, stage, v, m["bucket_by"], int(m.get("n_buckets", 32))
-                )
-            )
-        return self._read(spark, stage, v)
+        return self._read(spark, stage, self._entry(stage)["live"])
 
     # ------------------------------------------------------------------
     # snapshots — Iceberg time-travel/rollback/expire analog
@@ -484,8 +442,7 @@ class StageCheckpoint:
     ) -> DataFrame:
         """Time-travel READ (Iceberg ``VERSION AS OF`` analog): the
         stage's rows as of retained ``version``, without mutating
-        anything. ``None`` reads the live version (= ``load``). Bucketed
-        stages time-travel as plain parquet (no Exchange elision)."""
+        anything. ``None`` reads the live version (= ``load``)."""
         if version is None:
             return self.load(spark, stage)
         self._check_snapshot(stage, version)
@@ -530,8 +487,6 @@ class StageCheckpoint:
         df: DataFrame,
         input_fingerprint: str | None = None,
         extra: dict | None = None,
-        bucket_by: str | None = None,
-        n_buckets: int = 32,
         observe: dict | None = None,
     ) -> DataFrame:
         """Materialize ``df`` as a new version, record its observed
@@ -541,15 +496,7 @@ class StageCheckpoint:
         lineage.
 
         ``observe``: ``{name: aggregate Column}`` computed while the
-        rows are written and recorded in the manifest under ``name``.
-
-        ``bucket_by``: write as a BUCKETED external table instead of
-        plain parquet (``bucketBy(n_buckets).sortBy``). Downstream
-        equi-joins on the bucket column read the hash-partitioning from
-        the table metadata and skip the checkpoint side's Exchange
-        entirely — at 100 TB the scores stage's two signature joins
-        shuffle only the (small, id-only) pair relation. Size
-        ``n_buckets`` to the scoring stage's shuffle parallelism."""
+        rows are written and recorded in the manifest under ``name``."""
         t0 = time.monotonic()
         spark = df.sparkSession
         v = self._new_version(stage)
@@ -557,23 +504,10 @@ class StageCheckpoint:
         # the output fingerprint is observed as the rows are written —
         # downstream stages key off it without re-scanning the checkpoint
         observed, obs = _observe_fingerprint(df, observe)
-        if bucket_by:
-            table = self._table_name(stage, v)
-            (
-                observed.write.bucketBy(int(n_buckets), bucket_by)
-                .sortBy(bucket_by)
-                .option("path", str(path))
-                .mode("overwrite")
-                .format("parquet")
-                .saveAsTable(table)
-            )
-            reloaded = spark.table(table)
-            extra = {**(extra or {}), "bucket_by": bucket_by, "n_buckets": int(n_buckets)}
-        else:
-            observed.write.parquet(str(path))
-            # the written schema is df's: passing it skips the footer-
-            # sampling job schema inference would launch
-            reloaded = spark.read.schema(df.schema).parquet(str(path))
+        observed.write.parquet(str(path))
+        # the written schema is df's: passing it skips the footer-
+        # sampling job schema inference would launch
+        reloaded = spark.read.schema(df.schema).parquet(str(path))
         n, h, file_rows = _observed_stats(stage, obs, path, _part_files(path))
         manifest = {
             "stage": stage,
@@ -607,11 +541,7 @@ class StageCheckpoint:
         footers; the stage's output fingerprint is composed exactly
         (xor/count), so downstream resume keys match a full rescan.
 
-        Requires a complete existing stage. Bucketed stages append
-        through the new version's catalog table with the same bucket
-        spec, preserving Exchange elision (multiple files per bucket are
-        fine; only the within-bucket sort-elision is lost, which the
-        sort-merge join re-establishes).
+        Requires a complete existing stage.
 
         ``expect_rows`` (the increment's known row count) makes a plan
         that re-evaluated to a different row set at write time fail the
@@ -640,7 +570,6 @@ class StageCheckpoint:
                 "stage's order with matching types before appending"
             )
         prev_fp = m.get("output_fingerprint") or stage_fingerprint(existing)
-        bucket_by = m.get("bucket_by")
         src = self._data_path(stage)
         linked = _part_files(src)
         v = self._new_version(stage)
@@ -651,17 +580,7 @@ class StageCheckpoint:
             if (src / f".{f}.crc").exists():
                 os.link(src / f".{f}.crc", path / f".{f}.crc")
         observed, obs = _observe_fingerprint(df)
-        if bucket_by:
-            n_buckets = int(m.get("n_buckets", 32))
-            (
-                observed.write.bucketBy(n_buckets, bucket_by)
-                .sortBy(bucket_by)
-                .mode("append")
-                .format("parquet")
-                .saveAsTable(self._bucketed_table(spark, stage, v, bucket_by, n_buckets))
-            )
-        else:
-            observed.write.mode("append").parquet(str(path))
+        observed.write.mode("append").parquet(str(path))
         new_files = sorted(set(_part_files(path)) - set(linked))
         n_new, h, file_rows = _observed_stats(stage, obs, path, new_files)
         if expect_rows is not None and n_new != expect_rows:
@@ -701,9 +620,6 @@ class StageCheckpoint:
             "wall_ms": int((time.monotonic() - t0) * 1000),
             "written_at_unix": int(time.time()),
         }
-        if bucket_by:
-            manifest["bucket_by"] = bucket_by
-            manifest["n_buckets"] = int(m.get("n_buckets", 32))
         if extra:
             manifest.update(extra)
         self._commit(stage, v, manifest)
@@ -738,23 +654,20 @@ class StageCheckpoint:
         increments a stage is thousands of KB-scale files, and at 100 TB
         the per-file open/footer cost dominates every scan. Compaction
         is CONTENT- and FINGERPRINT-PRESERVING: rows, ``rows``,
-        ``output_fingerprint``, ``input_fingerprint``, bucket spec, and
-        every config key in the manifest are carried through unchanged,
-        so it is invisible to resume keys and the config-drift guards —
-        only the file layout changes.
+        ``output_fingerprint``, ``input_fingerprint`` and every config
+        key in the manifest are carried through unchanged, so it is
+        invisible to resume keys and the config-drift guards — only the
+        file layout changes.
 
         The compacted copy is a new version whose content fingerprint is
         checked against the manifest BEFORE the head swap; a mismatch
         raises with the stage untouched. The pre-compaction version is
         retained and rollback-able like any other.
 
-        Bucketed stages are rewritten through the same bucket spec,
-        pre-partitioned on the bucket column so each bucket lands in
-        ~one file; Exchange elision is preserved. No-op (returns
-        ``{"compacted": False, ...}``) when the stage already has fewer
-        than ``min_files`` files or no more than the target layout's
-        file count — sized by TOTAL BYTES, so calling this after every
-        increment is cheap and idempotent."""
+        No-op (returns ``{"compacted": False, ...}``) when the stage
+        already has fewer than ``min_files`` files or no more than the
+        target layout's file count — sized by TOTAL BYTES, so calling
+        this after every increment is cheap and idempotent."""
         import math
 
         m = self.read_manifest(stage)
@@ -764,13 +677,8 @@ class StageCheckpoint:
             )
         src = self._data_path(stage)
         files = _part_files(src)
-        bucket_by = m.get("bucket_by")
-        n_buckets = int(m.get("n_buckets", 32))
         total_bytes = sum((src / f).stat().st_size for f in files)
-        if bucket_by:
-            n_out = n_buckets
-        else:
-            n_out = max(1, math.ceil(total_bytes / max(1, int(target_file_bytes))))
+        n_out = max(1, math.ceil(total_bytes / max(1, int(target_file_bytes))))
         if len(files) < max(int(min_files), n_out + 1):
             return {
                 "compacted": False,
@@ -783,21 +691,7 @@ class StageCheckpoint:
         current = self._read(spark, stage, prev)
         v = self._new_version(stage)
         path = self._data_path(stage, v)
-        if bucket_by:
-            # pre-partition on the bucket column with the SAME hash family
-            # bucketBy uses, so each writer task holds one bucket → ~one
-            # file per bucket
-            (
-                current.repartition(n_buckets, F.col(bucket_by))
-                .write.bucketBy(n_buckets, bucket_by)
-                .sortBy(bucket_by)
-                .option("path", str(path))
-                .mode("overwrite")
-                .format("parquet")
-                .saveAsTable(self._table_name(stage, v))
-            )
-        else:
-            current.coalesce(n_out).write.parquet(str(path))
+        current.coalesce(n_out).write.parquet(str(path))
         # verify BEFORE the swap (count + xor content fingerprint).
         # Pre-upgrade manifests may lack output_fingerprint (same
         # tolerance append() has) — rescan the live files for it
@@ -859,8 +753,6 @@ class StageCheckpoint:
         compute,
         input_fingerprint: str | None = None,
         extra: dict | None = None,
-        bucket_by: str | None = None,
-        n_buckets: int = 32,
         observe: dict | None = None,
     ) -> tuple[DataFrame, bool]:
         """(df, was_cached). ``compute`` is a thunk returning the stage
@@ -870,13 +762,4 @@ class StageCheckpoint:
         if self.is_complete(stage, input_fingerprint):
             return self.load(spark, stage), True
         df = compute()
-        df = self.write(
-            stage,
-            df,
-            input_fingerprint,
-            extra,
-            bucket_by=bucket_by,
-            n_buckets=n_buckets,
-            observe=observe,
-        )
-        return df, False
+        return self.write(stage, df, input_fingerprint, extra, observe=observe), False

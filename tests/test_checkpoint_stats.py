@@ -10,16 +10,12 @@ def _rows(spark, lo, hi):
     return spark.range(lo, hi).selectExpr("id", "cast(id * 7 as string) s").repartition(3)
 
 
-@pytest.mark.parametrize(
-    "case", ["write", "bucketed_write", "append", "empty_write", "empty_append"]
-)
+@pytest.mark.parametrize("case", ["write", "append", "empty_write", "empty_append"])
 def test_observed_fingerprint_equals_rescan(spark, tmp_path, case):
     ck = StageCheckpoint(tmp_path / "ck")
     want_rows = {"empty_write": 0, "empty_append": 20}.get(case, 50)
     if case == "write":
         ck.write("stage", _rows(spark, 0, 50))
-    elif case == "bucketed_write":
-        ck.write("stage", _rows(spark, 0, 50), bucket_by="id", n_buckets=4)
     elif case == "empty_write":
         ck.write("stage", _rows(spark, 0, 50).limit(0))
     else:
@@ -49,22 +45,14 @@ def test_write_of_narrow_frame_is_one_spark_job(spark, tmp_path):
     assert out.count() == 200
 
 
-@pytest.mark.parametrize("bucketed", [False, True])
-def test_loads_read_the_manifest_schema_with_no_spark_job(
-    spark, tmp_path, count_jobs, bucketed
-):
+def test_loads_read_the_manifest_schema_with_no_spark_job(spark, tmp_path, count_jobs):
     """``load``, ``load_appended`` and ``load_snapshot`` read with the
     schema the manifest records, so none of them launches the footer
-    job schema inference would — a bucketed stage included, whose
-    catalog table a fresh session must register again."""
+    job schema inference would."""
     ck = StageCheckpoint(tmp_path / "ck")
-    kw = {"bucket_by": "id", "n_buckets": 4} if bucketed else {}
-    written = ck.write("stage", _rows(spark, 0, 50), **kw)
+    written = ck.write("stage", _rows(spark, 0, 50))
     ck.append("stage", _rows(spark, 50, 60), expect_rows=10)
     assert ck.read_manifest("stage")["schema"] == written.schema.jsonValue()
-    if bucketed:
-        # what a process restart looks like to the in-memory catalog
-        spark.sql(f"DROP TABLE {ck._table_name('stage', 2)}")
     loaded, n_jobs = count_jobs(lambda: ck.load(spark, "stage"))
     assert n_jobs == 0
     assert loaded.schema == written.schema

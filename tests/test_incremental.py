@@ -161,45 +161,6 @@ class TestIncrementalFastAppend:
         ck.rollback("scores", ck.snapshot_versions("scores")[-1])
         assert set(ck._data_files("scores")) == set(base_rows)
 
-    def test_default_mode_appends_real_increments_bucketed(
-        self, spark, tmp_path, split
-    ):
-        """Regression for the append-order cache-invalidation bug: under
-        a BUCKETED signatures stage (file listing re-resolves per
-        action), appending signatures before blocks/pairs silently
-        re-evaluated the persisted increments to EMPTY (the redelivery
-        anti-join saw the already-appended rows). Pin that every stage's
-        content matches a from-scratch batch run's universe in default
-        mode."""
-        full, part1, part2 = split
-
-        def cfg(path):
-            return PipelineConfig(
-                checkpoint_dir=str(path), bucket_signatures=8
-            )
-
-        d = tmp_path / "incfb"
-        run_pipeline(spark, part1, cfg(d))
-        inc = incremental_update(spark, part2, cfg(d))
-        batch = run_pipeline(spark, full, cfg(tmp_path / "batchb"))
-        # identical signature ids, block relation size, pair universe
-        assert {r["conv_id"] for r in inc.signatures.collect()} == {
-            r["conv_id"] for r in batch.signatures.collect()
-        }
-        ck = StageCheckpoint(d)
-        bk = StageCheckpoint(tmp_path / "batchb")
-        assert (
-            ck.read_manifest("blocks")["rows"]
-            == bk.read_manifest("blocks")["rows"]
-        )
-        assert _pairs(inc.candidate_pairs) == _pairs(batch.candidate_pairs)
-        # scores stage covers exactly the pair universe
-        assert ck.read_manifest("scores")["rows"] == len(
-            _pairs(batch.candidate_pairs)
-        )
-        assert _clusters(inc.components) == _clusters(batch.components)
-
-
 def test_changed_threshold_falls_back_to_full_components(
     spark, tmp_path, split
 ):

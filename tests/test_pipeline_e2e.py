@@ -126,117 +126,6 @@ def test_resume_recomputes_only_downstream(spark, pipeline_run):
     assert after == before
 
 
-def test_bucketed_signatures_elide_exchange(spark, tmp_path):
-    """A conv_id-bucketed signatures checkpoint removes the signatures-
-    side Exchange from a pair join (the scores stage's dominant shuffle
-    at 100 TB reads its partitioning from table metadata instead)."""
-    from pyspark.sql import functions as F
-
-    from poi_name_matching_spark.data import transcripts_df
-    from poi_name_matching_spark.operators.signatures import build_signatures
-    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-    sigs = build_signatures(transcripts_df(spark, n_convs=120, seed=3))
-    ck = StageCheckpoint(tmp_path / "out")
-    plain = ck.write("sig_plain", sigs)
-    bucketed = ck.write("sig_bucketed", sigs, bucket_by="conv_id", n_buckets=8)
-    pairs = spark.createDataFrame(
-        [(str(i), str(i + 1)) for i in range(60)], "left_id string, right_id string"
-    )
-
-    def n_exchanges(sig_df):
-        left = sig_df.select(
-            F.col("conv_id").alias("left_id"), F.col("sig_text").alias("l_text")
-        )
-        with_conf = spark.conf
-        old_bcast = with_conf.get("spark.sql.autoBroadcastJoinThreshold")
-        old_aqe = with_conf.get("spark.sql.adaptive.enabled")
-        with_conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        with_conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            plan = (
-                pairs.join(left, "left_id")
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-        finally:
-            with_conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
-            with_conf.set("spark.sql.adaptive.enabled", old_aqe)
-        return plan.count("Exchange")
-
-    assert n_exchanges(bucketed) < n_exchanges(plain)
-    # bucketed checkpoint round-trips through load() with identical content
-    reloaded = ck.load(spark, "sig_bucketed")
-    assert reloaded.count() == plain.count()
-    assert ck.read_manifest("sig_bucketed")["bucket_by"] == "conv_id"
-
-
-def test_pipeline_with_bucketed_signatures(spark, tmp_path):
-    """End-to-end pipeline with bucket_signatures on: same components as
-    the plain-parquet run, and resume still skips completed stages."""
-    from poi_name_matching_spark.data import transcripts_df
-    from poi_name_matching_spark.plans.pipeline import PipelineConfig, run_pipeline
-
-    tdf = transcripts_df(spark, n_convs=80, seed=9)
-    plain = run_pipeline(
-        spark, tdf, PipelineConfig(checkpoint_dir=tmp_path / "plain")
-    )
-    bucketed = run_pipeline(
-        spark,
-        tdf,
-        PipelineConfig(checkpoint_dir=tmp_path / "bucketed", bucket_signatures=8),
-    )
-    a = {(r["conv_id"], r["component_id"]) for r in plain.components.collect()}
-    b = {(r["conv_id"], r["component_id"]) for r in bucketed.components.collect()}
-    assert a == b
-    again = run_pipeline(
-        spark,
-        tdf,
-        PipelineConfig(checkpoint_dir=tmp_path / "bucketed", bucket_signatures=8),
-    )
-    assert "signatures" in again.cached_stages
-
-
-def test_bucketed_checkpoint_survives_catalog_loss(spark, tmp_path):
-    """A fresh Spark session has an empty in-memory catalog; load() must
-    re-register the bucketed table from the manifest (resume contract)
-    WITH bucket metadata intact. Simulated by dropping the table."""
-    from pyspark.sql import functions as F
-
-    from poi_name_matching_spark.data import transcripts_df
-    from poi_name_matching_spark.operators.signatures import build_signatures
-    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-    sigs = build_signatures(transcripts_df(spark, n_convs=50, seed=2))
-    ck = StageCheckpoint(tmp_path / "out")
-    written = ck.write("sig_b", sigs, bucket_by="conv_id", n_buckets=4)
-    n = written.count()
-    table = ck._table_name("sig_b", 1)  # the table of version v1
-    spark.sql(f"DROP TABLE {table}")  # what a process restart looks like
-    assert not spark.catalog.tableExists(table)
-
-    reloaded = ck.load(spark, "sig_b")
-    assert reloaded.count() == n
-    assert spark.catalog.tableExists(table)
-    # bucket metadata restored: the join still elides the bucketed-side
-    # Exchange in a fresh registration
-    pairs = spark.createDataFrame(
-        [(str(i), str(i + 1)) for i in range(20)], "left_id string, right_id string"
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        left = reloaded.select(
-            F.col("conv_id").alias("left_id"), F.col("sig_text").alias("t")
-        )
-        plan = pairs.join(left, "left_id")._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert plan.count("Exchange") == 1
-
-
 class TestSnapshots:
     """Iceberg snapshot analog: a rewrite retains the previous version,
     history lists, rollback points the head back, expire prunes."""
@@ -387,49 +276,6 @@ class TestFastAppend:
         inc = spark.createDataFrame([(1, "a")], "id long, s string")
         with pytest.raises(FileNotFoundError, match="write"):
             ck.append("missing", inc)
-
-    def test_append_bucketed_preserves_elision(self, spark, tmp_path):
-        from poi_name_matching_spark.data import transcripts_df
-        from poi_name_matching_spark.operators.signatures import build_signatures
-        from poi_name_matching_spark.sources.checkpoint import (
-            StageCheckpoint,
-            stage_fingerprint,
-        )
-
-        sigs = build_signatures(transcripts_df(spark, n_convs=80, seed=5))
-        # real id format is conv_%08d — split so the base stage is
-        # POPULATED (the risky path: appending to buckets that already
-        # hold files, composing a non-trivial prev fingerprint)
-        old = sigs.filter(F.col("conv_id") < "conv_00000060")
-        new = sigs.filter(F.col("conv_id") >= "conv_00000060")
-        assert old.count() > 0 and new.count() > 0
-        ck = StageCheckpoint(tmp_path / "bapp")
-        ck.write("sig", old, bucket_by="conv_id", n_buckets=8)
-        reloaded = ck.append("sig", new)
-        m = ck.read_manifest("sig")
-        assert m["bucket_by"] == "conv_id" and m["rows"] == sigs.count()
-        assert m["output_fingerprint"] == stage_fingerprint(reloaded)
-        # the appended table still elides the big-side Exchange
-        pairs = spark.createDataFrame(
-            [("conv_00000000",), ("conv_00000070",)], "left_id string"
-        )
-        old_conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = (
-                pairs.join(
-                    reloaded.select(F.col("conv_id").alias("left_id"), "sig_text"),
-                    "left_id",
-                )
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_conf)
-        # one Exchange (the pairs side); the bucketed table side has none
-        assert plan.count("Exchange") == 1
-
 
 def test_append_manifest_partitions_history_compacts(spark, tmp_path, monkeypatch):
     """Fast-append manifests must stay O(increment): old per-partition
@@ -599,37 +445,6 @@ class TestCompaction:
         m = ck.read_manifest("stage")
         assert m["appended"]["rows"] == 2  # pre-compaction manifest is back
 
-    def test_compact_bucketed_stage_keeps_bucket_metadata(
-        self, spark, tmp_path
-    ):
-        from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-        ck = StageCheckpoint(tmp_path / "cmpb")
-        base = spark.createDataFrame(
-            [(i, f"v{i}") for i in range(16)], "id long, s string"
-        )
-        ck.write("stage", base, input_fingerprint="fp0",
-                 bucket_by="id", n_buckets=4)
-        inc = spark.createDataFrame(
-            [(100 + i, f"w{i}") for i in range(16)], "id long, s string"
-        )
-        ck.append("stage", inc)
-        files_before = len(ck._data_files("stage"))
-        m_before = ck.read_manifest("stage")
-
-        res = ck.compact(spark, "stage")
-        assert res["compacted"]
-        assert res["files_after"] <= 4 < files_before  # ~one file/bucket
-        m = ck.read_manifest("stage")
-        assert m["output_fingerprint"] == m_before["output_fingerprint"]
-        assert (m["bucket_by"], m["n_buckets"]) == ("id", 4)
-        # load() still resolves through the bucketed catalog table
-        out = ck.load(spark, "stage")
-        assert out.count() == 32
-        assert {r["id"] for r in out.collect()} == set(range(16)) | {
-            100 + i for i in range(16)
-        }
-
     def test_compact_verify_failure_leaves_stage_untouched(
         self, spark, tmp_path, monkeypatch
     ):
@@ -657,15 +472,25 @@ class TestCompaction:
     def test_compact_tolerates_pre_upgrade_manifest(self, spark, tmp_path):
         """Manifests written before output_fingerprint existed must
         compact via a rescan (the same tolerance append() has) and have
-        the fingerprint backfilled."""
+        the fingerprint backfilled. Manifests of the retired bucketed
+        layout (``bucket_by``/``n_buckets`` keys) load, compact and
+        append as plain parquet."""
+        from poi_name_matching_spark.sources.checkpoint import stage_fingerprint
+
         ck = self._many_appends(spark, tmp_path)
         mp = ck.manifest_path("stage")
         m = json.loads(mp.read_text())
         fp = m.pop("output_fingerprint")
-        mp.write_text(json.dumps(m))
+        mp.write_text(json.dumps({**m, "bucket_by": "id", "n_buckets": 4}))
+        ids = {1, 2, 10, 11, 12, 13, 14, 15}
+        assert {r["id"] for r in ck.load(spark, "stage").collect()} == ids
         res = ck.compact(spark, "stage")
         assert res["compacted"]
         assert ck.read_manifest("stage")["output_fingerprint"] == fp
+        inc = spark.createDataFrame([(99, "z")], "id long, s string")
+        out = ck.append("stage", inc, expect_rows=1)
+        assert {r["id"] for r in out.collect()} == ids | {99}
+        assert ck.read_manifest("stage")["output_fingerprint"] == stage_fingerprint(out)
 
 
 class TestTimeTravel:

@@ -2,11 +2,6 @@
 must not rot silently — these are the properties that decide whether the
 same query is cheap or catastrophic at 100 TB."""
 
-import pytest
-from pyspark.sql import functions as F
-
-SF = "/root/testdata/sf0.01"
-
 
 def _formatted(df) -> str:
     return df._jdf.queryExecution().explainString(
@@ -14,35 +9,51 @@ def _formatted(df) -> str:
     )
 
 
-def test_bbox_filter_pushes_to_scan(spark):
-    from poi_name_matching_spark.queries import p5_bbox_filter
+def test_audit_filter_pushes_to_scan(spark, tmp_path):
+    """The false-negative audit scan's predicates reach the parquet
+    reader, so an audit over a large labeled-pairs file reads only the
+    row groups that can hold a miss."""
+    from poi_name_matching_spark.operators.evaluation import false_negatives
 
-    plan = _formatted(p5_bbox_filter(spark, SF))
+    path = str(tmp_path / "labeled.parquet")
+    spark.createDataFrame(
+        [(1, 0.9), (1, 0.2), (0, 0.7)], "match int, score double"
+    ).write.parquet(path)
+    plan = _formatted(false_negatives(spark.read.parquet(path), 0.5))
     assert "PushedFilters" in plan
-    # all four range predicates reach the parquet reader
-    for frag in [
-        "LessThan(l_quantity", "GreaterThan(l_quantity",
-        "GreaterThan(l_discount", "LessThan(l_discount",
-    ]:
+    for frag in ["EqualTo(match,1)", "LessThan(score,0.5)"]:
         assert frag in plan, frag
 
 
-def test_projection_prunes_scan_schema(spark):
-    from poi_name_matching_spark.queries import p2_filter_eq
+def test_projection_prunes_scan_schema(spark, tmp_path):
+    """``read_transcripts`` projects to the transcript schema, so a
+    source's extra columns never leave the scan."""
+    from poi_name_matching_spark.sources.readers import read_transcripts
 
-    plan = _formatted(p2_filter_eq(spark, SF))
-    # ReadSchema carries only the selected + filtered columns
+    path = str(tmp_path / "transcripts.parquet")
+    spark.createDataFrame(
+        [("c1", 0, "user", "hi", None, None, "x" * 64)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp, payload string",
+    ).write.parquet(path)
+    plan = _formatted(read_transcripts(spark, path))
+    # ReadSchema carries only the transcript columns
     read = [l for l in plan.splitlines() if "ReadSchema" in l][0]
-    for col in ("event_id", "user_id", "value", "event_type"):
+    for col in ("conv_id", "turn_idx", "role", "text", "tool", "ts"):
         assert col in read
-    assert "payload" not in read and "ts" not in read
+    assert "payload" not in read
 
 
 def test_dimension_join_broadcasts(spark):
-    from poi_name_matching_spark.queries import j4_tag_lookup_join
+    """``threshold_sweep`` joins the scored rows to its small thresholds
+    table by broadcast: the scored side is never shuffled for the join."""
+    from poi_name_matching_spark.operators.evaluation import threshold_sweep
 
-    plan = _formatted(j4_tag_lookup_join(spark, SF))
-    assert "BroadcastHashJoin" in plan
+    labeled = spark.range(100).selectExpr(
+        "cast(id % 2 as int) AS match", "id / 100.0 AS score"
+    )
+    plan = _formatted(threshold_sweep(labeled, [0.25, 0.5, 0.75]))
+    assert "BroadcastNestedLoopJoin" in plan
 
 
 def test_scoring_join_partitions_by_right_id(spark):
