@@ -4,7 +4,7 @@ Two tiers, chosen per SURVEY.md §2.7:
 
 * **Native Column expressions** where Catalyst has a built-in — these stay
   inside WholeStageCodegen (levenshtein, token-set jaccard, haversine,
-  threshold classify). Used on the hot path.
+  embedding cosine). Used on the hot path.
 * **Arrow-vectorized pandas UDFs** for kernels with no JVM builtin
   (canonical tokenizer with stemming, jaro/jaro-winkler, tf-idf /
   soft-TFIDF family, embeddings). No per-row Python UDFs anywhere.
@@ -89,12 +89,6 @@ def haversine_meters(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> 
     )
     c = 2 * F.atan2(F.sqrt(a), F.sqrt(F.lit(1.0) - a))
     return c * F.lit(6371.0 * 1000.0)
-
-
-def classify(score: Column, threshold: float) -> Column:
-    """K20: pred = 1 iff score >= threshold (``evaluation_metrics.py:28-33``),
-    as a pure expression instead of the reference's in-place mutation."""
-    return (score >= F.lit(float(threshold))).cast("int")
 
 
 def cosine_array(a: Column, b: Column) -> Column:
@@ -403,26 +397,19 @@ def make_embed_udf(embedder: HashEmbedder):
     return embed_udf
 
 
-SIM_SCORE_FIELDS = [
-    "levenshtein",
-    "jaro",
-    "jaro_winkler",
-    "jaccard",
-    "cosine",
-    "tfidf",
-    "softtfidf",
-    "semantic_softtfidf",
-    "emb_cosine",
-]
+#: kernels with no native JVM expression: the fields ``make_sim_scores_udf``
+#: computes
+UDF_KERNELS = ["jaro", "jaro_winkler", "cosine", "tfidf", "softtfidf", "semantic_softtfidf"]
+
 
 def make_sim_scores_udf(
     df_map_bc,
     corpus_size_bc,
     embedder: HashEmbedder,
+    fields: list[str],
     softtfidf_threshold: float = 0.9,
     semantic_char_threshold: float = 0.85,
     semantic_threshold: float = 0.7,
-    fields: list[str] | None = None,
 ):
     """The reference scoring suite as ONE pandas UDF pass
     (mirrors the feature build at ``ml_similarity_metrics.py:39-74``,
@@ -433,11 +420,17 @@ def make_sim_scores_udf(
     ``df_map_bc`` / ``corpus_size_bc`` are SparkContext broadcasts of the
     corpus document-frequency map (SURVEY.md A3) and distinct-doc count.
 
-    ``fields`` selects which kernels to compute (default: all). The hot
-    path passes only the Python-only kernels and lets native expressions
-    (levenshtein, jaccard, emb cosine) run JVM-side.
+    ``fields`` selects which of :data:`UDF_KERNELS` to compute; the
+    kernels with a native expression (levenshtein, jaccard, emb cosine)
+    run JVM-side in ``scoring.score_pairs`` and are refused here.
     """
-    fields = list(SIM_SCORE_FIELDS) if fields is None else list(fields)
+    unknown = [f for f in fields if f not in UDF_KERNELS]
+    if unknown:
+        raise ValueError(
+            f"make_sim_scores_udf cannot compute {unknown}; it computes "
+            f"{UDF_KERNELS}"
+        )
+    fields = list(fields)
     schema = StructType([StructField(f, DoubleType()) for f in fields])
     want = set(fields)
 
@@ -471,8 +464,6 @@ def make_sim_scores_udf(
             lt, rt = left_text.iloc[i] or "", right_text.iloc[i] or ""
             ltoks = list(left_tokens.iloc[i]) if left_tokens.iloc[i] is not None else []
             rtoks = list(right_tokens.iloc[i]) if right_tokens.iloc[i] is not None else []
-            if "levenshtein" in want:
-                cols["levenshtein"][i] = kernels.levenshtein_similarity(lt, rt)
             if "jaro" in want:
                 jaro_val = kernels.jaro_similarity(lt, rt)
                 cols["jaro"][i] = jaro_val
@@ -486,8 +477,6 @@ def make_sim_scores_udf(
                 # length-gated: full signatures never pollute the
                 # term-pair cache (VERDICT r2 finding 1)
                 cols["jaro_winkler"][i] = _jw_full(lt, rt)
-            if "jaccard" in want:
-                cols["jaccard"][i] = kernels.jaccard_similarity(lt, rt)
             if "cosine" in want:
                 cols["cosine"][i] = kernels.cosine_count_similarity(lt, rt)
             if "tfidf" in want:
@@ -517,10 +506,6 @@ def make_sim_scores_udf(
                     emb,
                     embedder.cache_key(),
                 )
-            if "emb_cosine" in want:
-                le = embedder.embed_text(lt, tokens=ltoks)
-                re_ = embedder.embed_text(rt, tokens=rtoks)
-                cols["emb_cosine"][i] = kernels.cosine_vec(le, re_)
         return pd.DataFrame(cols)
 
     return sim_scores_udf

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..functions.embedding import HashEmbedder
 from ..functions.spark_udfs import (
+    UDF_KERNELS,
     cosine_array,
     jaccard_tokens,
     levenshtein_sim,
@@ -55,8 +56,6 @@ from ..functions.spark_udfs import (
 
 #: kernels with a native JVM expression (stay in codegen)
 NATIVE_KERNELS = ["levenshtein", "jaccard", "emb_cosine"]
-#: kernels that require the pandas UDF
-UDF_KERNELS = ["jaro", "jaro_winkler", "cosine", "tfidf", "softtfidf", "semantic_softtfidf"]
 
 ALL_KERNELS = NATIVE_KERNELS + UDF_KERNELS
 

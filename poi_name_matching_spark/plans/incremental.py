@@ -17,9 +17,21 @@ checkpoint (``plans/pipeline.py``) with a batch of new transcripts:
   table commit;
 * stage commits are FAST APPENDS (``StageCheckpoint.append``): only
   the increment's rows are written as new files — O(increment) bytes
-  per commit, never a rewrite of history. Only ``rescore_all`` (full
-  df-map parity) and the components stage (cluster ids can change
-  globally) rewrite whole stages.
+  per commit, never a rewrite of history.
+
+Commit order is the batch pipeline's, root first; each stage reads the
+one before it from the pending version's immutable files (``load`` and
+``load_appended`` inside ``StageCheckpoint.commit()``), so no plan is
+persisted or re-evaluated, and the new-row counts in ``stats`` are the
+manifests' ``appended.rows``:
+
+1. append the signatures of the conversations not already stored;
+2. append the block keys of the appended signatures;
+3. salt and pair-join over the blocks stage (now holding the new
+   blocks) and append the new-touching pairs not stored yet;
+4. score the appended pairs and append them — under ``rescore_all``,
+   score every pair and rewrite the scores stage whole;
+5. rewrite the components stage (cluster ids can change globally).
 
 Semantics vs a from-scratch batch run (documented, pinned by tests):
 
@@ -52,23 +64,27 @@ Semantics vs a from-scratch batch run (documented, pinned by tests):
   contraction path) runs only when that linkage matches the current
   scores stage, else one full CC self-heals it.
 
-``stats["phase_wall_s"]`` records wall seconds per phase (signatures,
-blocking, scoring, commit, components, retention) — the per-stage
-metrics the north rule asks each checkpoint commit to carry, and the
+``stats["phase_wall_s"]`` records wall seconds per phase, each covering
+the compute its stage's write runs: ``signatures`` (build, anti-join,
+append and the redelivery count), ``commit_blocks`` (MinHash keys and
+their append), ``blocking`` (salting, the pair join and the pairs
+append), ``commit_scores``, ``components`` and ``retention`` — the
 first thing to read when an increment is slower than expected.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import time
+from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.blocking import block_keys, oversized_blocks, salt_oversized
 from ..operators.clustering import components, incremental_components
-from ..operators.scoring import edges_from_scores, score_pairs
+from ..operators.scoring import edges_from_scores, score_pairs, udf_stage_parallelism
 from ..operators.signatures import build_signatures
 # stage_fingerprint is not called here but stays a module attribute:
 # perfbench/tracer.py wraps it by name in this module
@@ -88,9 +104,9 @@ def incremental_update(
 
     Snapshot retention follows ``cfg.expire_keep_last``: after the
     commit, keep at most that many retained versions per stage.
-    Fast-append versions (the default path) share their data files by
-    hard link, but full rewrites (``rescore_all``, and the components
-    stage every increment) are corpus-sized, so unbounded retention
+    Fast-append versions share their data files by hard link, but full
+    rewrites (the components stage every increment, the scores stage
+    under ``rescore_all``) are corpus-sized, so unbounded retention
     would grow the checkpoint dir by O(corpus) per increment. ``None``
     keeps everything."""
     if cfg.shuffle_partitions:
@@ -106,15 +122,15 @@ def incremental_update(
                 "run_pipeline first"
             )
     # ---- config-drift guards: refuse BEFORE any mutation ---------------
-    from dataclasses import asdict
-
-    scores_meta0 = ckpt.read_manifest("scores")
+    # captured BEFORE the scores commit replaces the manifest: decides
+    # whether the historical edge set is reusable for incremental CC
+    old_scores_meta = ckpt.read_manifest("scores")
     # threshold-independent, JSON-normalized (tuples → lists) — the
     # same identity the batch pipeline keys the scores stage on
     scoring_now = json.loads(json.dumps(asdict(cfg.scoring)))
     scoring_now.pop("threshold")
-    stored_scoring = (scores_meta0 or {}).get("scoring_config")
-    stored_kernel = (scores_meta0 or {}).get("score_kernel")
+    stored_scoring = (old_scores_meta or {}).get("scoring_config")
+    stored_kernel = (old_scores_meta or {}).get("score_kernel")
     if not rescore_all and (
         (stored_scoring is not None and stored_scoring != scoring_now)
         or (
@@ -154,8 +170,6 @@ def incremental_update(
             "run_pipeline with the new one"
         )
     if stored_blocking is None:
-        import logging
-
         logging.getLogger(__name__).warning(
             "checkpoint's blocks manifest records no blocking_config "
             "(pre-upgrade); assuming it matches the current config — "
@@ -173,67 +187,64 @@ def incremental_update(
         phases[phase] = round(phases.get(phase, 0.0) + (now - _t0), 2)
         _t0 = now
 
-    from ..operators.scoring import udf_stage_parallelism
-
     # the increment's identity, recorded as every commit's input key
-    in_fp = input_key(new_transcripts)
+    incr_fp = f"incr:{input_key(new_transcripts)}"
     old_sigs = ckpt.load(spark, "signatures")
-    old_blocks = ckpt.load(spark, "blocks")
     old_pairs = ckpt.load(spark, "candidate_pairs")
-    # captured BEFORE the scores commit replaces the manifest: decides
-    # whether the historical edge set is reusable for incremental CC
-    old_scores_meta = ckpt.read_manifest("scores")
     old_comps_meta = ckpt.read_manifest("components")
+    score_extra = {
+        "score_kernel": cfg.scoring.score_kernel,
+        "threshold": cfg.scoring.threshold,
+        "scoring_config": scoring_now,
+        "rescore_all": bool(rescore_all),
+    }
 
-    # every .persist() handle created below lands in this list and is
-    # released in the finally: a FAILED increment (e.g. the append
-    # guard firing on a fully-redelivered batch, retried by a
-    # long-lived driver) must not pin cached copies of the increment's
-    # signatures/blocks/pairs in executor storage
-    persisted: list[DataFrame] = []
-    try:
-        # ---- signatures: UDF work on NEW conversations only ----------------
+    # the five stage commits below become visible in ONE head swap at the
+    # end of this block; an exception anywhere inside leaves the
+    # pre-increment head in place. Each stage appends its rows, and the
+    # next stage reads them back from the pending version's files.
+    with ckpt.commit():
+        # ---- signatures: UDF work on NEW conversations only ------------
         with udf_stage_parallelism(spark):
-            incoming = build_signatures(new_transcripts)
             # at-least-once redelivery: already-known conversations are frozen
-            new_sigs = incoming.join(
-                old_sigs.select("conv_id"), "conv_id", "left_anti"
-            ).persist()
-            persisted.append(new_sigs)
-            n_new = new_sigs.count()
-        stats["n_new_convs"] = n_new
-        # redelivery count WITHOUT re-running the signature UDF: distinct
-        # conv ids in the raw increment minus the survivors
+            sigs = ckpt.append(
+                "signatures",
+                build_signatures(new_transcripts).join(
+                    old_sigs.select("conv_id"), "conv_id", "left_anti"
+                ),
+                input_fingerprint=incr_fp,
+            )
+        stats["n_new_convs"] = ckpt.read_manifest("signatures")["appended"]["rows"]
+        # raw distinct ids minus the survivors, a query of its own: AQE
+        # drops an observation under the anti-join's shuffle when empty
         stats["n_redelivered_dropped"] = (
-            new_transcripts.select("conv_id").distinct().count() - n_new
+            new_transcripts.select("conv_id").distinct().count() - stats["n_new_convs"]
         )
+        new_sigs = ckpt.load_appended(spark, "signatures")
         _mark("signatures")
 
-        all_sigs = old_sigs.unionByName(new_sigs)
-
-        # ---- blocking: keys for new convs; salting over the UNION ----------
+        # ---- blocks: MinHash keys for the new conversations ------------
         with udf_stage_parallelism(spark):
-            # persisted: materialized once (as part of the union scan below)
-            # then reused by the fast-append commit of the blocks stage
-            new_blocks = block_keys(new_sigs, cfg.blocking).persist()
-            persisted.append(new_blocks)
-        blocks_all = old_blocks.unionByName(new_blocks)
+            blocks = ckpt.append(
+                "blocks",
+                block_keys(new_sigs, cfg.blocking),
+                input_fingerprint=incr_fp,
+                extra={"blocking_config": blocking_now},
+            )
+        _mark("commit_blocks")
+
+        # ---- candidate pairs: new × touched blocks of the union --------
         # the stored blocks stage stays UNSALTED (as in the batch pipeline —
-        # salting is a pair-generation concern); salt a join-local view so
-        # sub-block boundaries match what a batch run over the union would
-        # use, without baking '#salt' suffixes into the next increment's input
-        join_blocks = blocks_all
+        # salting is a pair-generation concern); salt a join-local view of
+        # the union so sub-block boundaries match what a batch run over it
+        # would use, without baking '#salt' suffixes into the stage
+        join_blocks = blocks
         pairs_extra = {}
         if cfg.blocking.max_block_size:
-            # the size scan runs over the id-only union relation (narrow,
-            # cheap); keep the persisted handle so it can be released below
-            blocks_cached = blocks_all.persist()
-            persisted.append(blocks_cached)
             cap = cfg.blocking.max_block_size
-            pairs_extra["max_block_size"], hot = oversized_blocks(blocks_cached, cap)
-            join_blocks = salt_oversized(blocks_cached, cap, hot)
-        new_ids = new_sigs.select("conv_id")
-        new_side = join_blocks.join(new_ids, "conv_id")
+            pairs_extra["max_block_size"], hot = oversized_blocks(blocks, cap)
+            join_blocks = salt_oversized(blocks, cap, hot)
+        new_side = join_blocks.join(new_sigs.select("conv_id"), "conv_id")
         touched_keys = new_side.select("block_key").distinct()
         # members of touched blocks only — untouched old blocks are never
         # joined (the whole point: per-increment join work is O(new × cap))
@@ -251,239 +262,137 @@ def incremental_update(
             )
             .dropDuplicates(["left_id", "right_id"])
         )
-        new_pairs = cand.join(
-            old_pairs, ["left_id", "right_id"], "left_anti"
-        ).persist()
-        persisted.append(new_pairs)
-        # this count MATERIALIZES the MinHash-UDF blocking work — it must run
-        # under the advisory guard (the config is read at execution time;
-        # plan construction above is not enough — see udf_stage_parallelism)
-        with udf_stage_parallelism(spark):
-            stats["n_new_pairs"] = new_pairs.count()
-        pairs_all = old_pairs.unionByName(new_pairs)
+        pairs = ckpt.append(
+            "candidate_pairs",
+            cand.join(old_pairs, ["left_id", "right_id"], "left_anti"),
+            input_fingerprint=incr_fp,
+            extra=pairs_extra,
+        )
+        stats["n_new_pairs"] = ckpt.read_manifest("candidate_pairs")["appended"]["rows"]
         _mark("blocking")
 
-        # ---- scoring + commit ----------------------------------------------
-        score_extra = {
-            "score_kernel": cfg.scoring.score_kernel,
-            "threshold": cfg.scoring.threshold,
-            "scoring_config": scoring_now,
-            "rescore_all": bool(rescore_all),
-        }
-        # the five stage commits below become visible in ONE head swap at
-        # the end of this block; an exception anywhere inside leaves the
-        # pre-increment head in place
-        with ckpt.commit():
-            if rescore_all:
-                # full-rewrite path: every pair is rescored under the
-                # updated df-map, so every stage is a full rewrite. Each
-                # write goes to a new version directory, so the union
-                # plans keep reading the versions they were built on.
-                with udf_stage_parallelism(spark):
-                    scores_all = score_pairs(spark, pairs_all, all_sigs, cfg.scoring)
-                    sigs = ckpt.write(
-                        "signatures",
-                        all_sigs,
-                        input_fingerprint=f"incr:{in_fp}",
-                    )
-                    _mark("commit_signatures")
-                    blocks = ckpt.write(
-                        "blocks",
-                        blocks_all,
-                        input_fingerprint=f"incr:{in_fp}",
-                        extra={"blocking_config": blocking_now},
-                    )
-                    _mark("commit_blocks")
-                    pairs = ckpt.write(
-                        "candidate_pairs",
-                        pairs_all,
-                        input_fingerprint=f"incr:{in_fp}",
-                        extra=pairs_extra,
-                    )
-                    _mark("commit_candidate_pairs")
-                    # the scores write is where the scoring kernels (and the
-                    # df-map build over the updated corpus) actually EXECUTE
-                    scores = ckpt.write(
-                        "scores",
-                        scores_all,
-                        input_fingerprint=f"incr:{in_fp}",
-                        extra=score_extra,
-                    )
-                    _mark("commit_scores")
-            else:
-                # fast-append path (the default, and the 100 TB shape): each
-                # stage commits ONLY the increment's rows as new files —
-                # O(increment) bytes written per commit, history untouched.
-                #
-                # Commit order (leaf-first) is kept for the expect_rows
-                # guards: each stage is committed before any stage its
-                # increment's lineage reads, so a persisted increment that
-                # re-evaluated at write time would fail its row-count check
-                # instead of landing silently:
-                #   scores          (reads signatures + new_pairs)   first,
-                #   candidate_pairs (reads blocks/pairs/signatures)  second,
-                #   blocks          (reads signatures via new_sigs)  third,
-                #   signatures      (reads the signatures stage)     last.
-                with udf_stage_parallelism(spark):
-                    new_scores = score_pairs(spark, new_pairs, all_sigs, cfg.scoring)
-                    scores = ckpt.append(
-                        "scores",
-                        new_scores,
-                        input_fingerprint=f"incr:{in_fp}",
-                        extra=score_extra,
-                        expect_rows=stats["n_new_pairs"],
-                    )
-                    _mark("commit_scores")
-                pairs = ckpt.append(
-                    "candidate_pairs",
-                    new_pairs,
-                    input_fingerprint=f"incr:{in_fp}",
-                    extra=pairs_extra,
-                    expect_rows=stats["n_new_pairs"],
-                )
-                _mark("commit_candidate_pairs")
-                with udf_stage_parallelism(spark):
-                    n_new_blocks = new_blocks.count()  # cached; cheap
-                    blocks = ckpt.append(
-                        "blocks",
-                        new_blocks,
-                        input_fingerprint=f"incr:{in_fp}",
-                        expect_rows=n_new_blocks,
-                        extra={"blocking_config": blocking_now},
-                    )
-                    _mark("commit_blocks")
-                    sigs = ckpt.append(
-                        "signatures",
-                        new_sigs,
-                        input_fingerprint=f"incr:{in_fp}",
-                        expect_rows=n_new,
-                    )
-                    _mark("commit_signatures")
+        # ---- scores: the new pairs, or every pair under rescore_all ----
+        # both score under the df-map of the UPDATED corpus; the scores
+        # write is where the kernels and the df-map build actually EXECUTE
+        to_score = pairs if rescore_all else ckpt.load_appended(spark, "candidate_pairs")
+        commit_scores = ckpt.write if rescore_all else ckpt.append
+        with udf_stage_parallelism(spark):
+            scores = commit_scores(
+                "scores",
+                score_pairs(spark, to_score, sigs, cfg.scoring),
+                input_fingerprint=incr_fp,
+                extra=score_extra,
+            )
+        _mark("commit_scores")
 
-            # ---- clustering -------------------------------------------------
-            # Default path: CONTRACTION — old components become supernodes
-            # and CC runs only over the increment's edges (O(increment),
-            # identical output to a full run because old edges are unchanged
-            # and labels are min-composable; see operators/clustering.py).
-            # Inputs come from the appended FILES of the pending versions plus
-            # the not-yet-touched components stage. Falls back to full CC
-            # when the historical edge set is not reusable: rescore_all, or a
-            # changed threshold/kernel.
-            # the threshold is compared against the COMPONENTS manifest — the
-            # stage the threshold actually shaped — never the scores manifest:
-            # a batch threshold retune cache-HITs scores (their extras keep the
-            # original threshold) while rebuilding components at the new one,
-            # so the scores-side record goes stale exactly when it matters. A
-            # pre-upgrade components manifest (no threshold recorded) fails
-            # the comparison and self-heals via one full CC.
-            same_operating_point = (
-                old_scores_meta is not None
-                and old_comps_meta is not None
-                and old_comps_meta.get("threshold") == cfg.scoring.threshold
-                and old_scores_meta.get("score_kernel") == cfg.scoring.score_kernel
+        # ---- clustering -------------------------------------------------
+        # Default path: CONTRACTION — old components become supernodes
+        # and CC runs only over the increment's edges (O(increment),
+        # identical output to a full run because old edges are unchanged
+        # and labels are min-composable; see operators/clustering.py).
+        # Falls back to full CC when the historical edge set is not
+        # reusable: rescore_all, or a changed threshold/kernel.
+        # The threshold is compared against the COMPONENTS manifest — the
+        # stage the threshold actually shaped — never the scores manifest:
+        # a batch threshold retune cache-HITs scores (their extras keep the
+        # original threshold) while rebuilding components at the new one,
+        # so the scores-side record goes stale exactly when it matters. A
+        # pre-upgrade components manifest (no threshold recorded) fails
+        # the comparison and self-heals via one full CC.
+        same_operating_point = (
+            old_scores_meta is not None
+            and old_comps_meta is not None
+            and old_comps_meta.get("threshold") == cfg.scoring.threshold
+            and old_scores_meta.get("score_kernel") == cfg.scoring.score_kernel
+        )
+        # staleness guard: incremental CC is only sound if the stored
+        # components reflect the PRE-append scores state, as the batch
+        # (input_fingerprint) and every commit (scores_fingerprint)
+        # record it. A break in that linkage (older-format checkpoint,
+        # manual stage surgery) self-heals via one full CC.
+        comps_linked = (
+            old_comps_meta is not None
+            and old_scores_meta is not None
+            and (
+                old_comps_meta.get("scores_fingerprint")
+                or old_comps_meta.get("input_fingerprint")
             )
-            # staleness guard: incremental CC is only sound if the stored
-            # components actually reflect the PRE-append scores state. The
-            # batch pipeline keys the components stage on the scores output
-            # fingerprint (input_fingerprint); incremental commits record it
-            # explicitly (scores_fingerprint). A break in that linkage
-            # (older-format checkpoint, manual stage surgery) self-heals via
-            # one full CC.
-            comps_linked = (
-                old_comps_meta is not None
-                and old_scores_meta is not None
-                and (
-                    old_comps_meta.get("scores_fingerprint")
-                    or old_comps_meta.get("input_fingerprint")
-                )
-                == old_scores_meta.get("output_fingerprint")
+            == old_scores_meta.get("output_fingerprint")
+        )
+        if rescore_all or not same_operating_point or not comps_linked:
+            stats["components_mode"] = "full"
+            stats["components_full_reason"] = (
+                "rescore_all" if rescore_all
+                else "operating_point_changed" if not same_operating_point
+                else "components_scores_linkage_broken"
             )
-            if rescore_all or not same_operating_point or not comps_linked:
-                stats["components_mode"] = "full"
-                stats["components_full_reason"] = (
-                    "rescore_all"
-                    if rescore_all
-                    else (
-                        "operating_point_changed"
-                        if not same_operating_point
-                        else "components_scores_linkage_broken"
-                    )
-                )
-                comps_df = components(
-                    sigs.select("conv_id"),
-                    edges_from_scores(scores, cfg.scoring.threshold),
-                )
-            else:
-                stats["components_mode"] = "incremental"
-                comps_df = incremental_components(
-                    ckpt.load(spark, "components"),
-                    ckpt.load_appended(spark, "signatures").select("conv_id"),
-                    edges_from_scores(
-                        ckpt.load_appended(spark, "scores"), cfg.scoring.threshold
-                    ),
-                )
-            comps = ckpt.write(
-                "components",
-                comps_df,
-                input_fingerprint=f"incr:{in_fp}",
-                # linkage for the NEXT increment's staleness guard: the
-                # scores state (post-commit, read from the pending version)
-                # these components were derived from, and the threshold they
-                # were built at (the operating-point check reads it from
-                # here — see same_operating_point above)
-                extra={
-                    "scores_fingerprint": ckpt.read_manifest("scores")[
-                        "output_fingerprint"
-                    ],
-                    "threshold": cfg.scoring.threshold,
-                },
-                observe=component_count(),
+            comps_df = components(
+                sigs.select("conv_id"),
+                edges_from_scores(scores, cfg.scoring.threshold),
             )
-        _mark("components")
-        # persisted increment handles are released by the enclosing finally
-        # (success AND failure paths — a retried failed increment must not
-        # pin cached copies in executor storage). Maintenance runs after
-        # the commit; each compaction is its own content-preserving commit.
-        if cfg.compact_above_files is not None:
-            compactions = {}
-            # Stages FULLY REWRITTEN this increment are exempt: their next
-            # increment's ckpt.write replaces every file regardless, so a
-            # post-commit compaction is a read+rewrite+fingerprint scan the
-            # very next commit throws away — and if the rewrite itself emits
-            # more than compact_above_files part files (shuffle_partitions >
-            # bound), EVERY increment would pay that tax. components is
-            # rewritten every increment; under rescore_all, all stages are.
-            rewritten = set(STAGES) if rescore_all else {"components"}
-            for stage in STAGES:
-                if stage in rewritten:
-                    continue
-                if len(ckpt._data_files(stage)) > cfg.compact_above_files:
-                    res = ckpt.compact(spark, stage)
-                    # compact() may decline (a stage whose files already
-                    # match its target layout): record and reload only
-                    # stages it actually rewrote
-                    if res["compacted"]:
-                        compactions[stage] = res
-            if compactions:
-                stats["compactions"] = compactions
-                # the stage handles resolved above read the pre-compaction
-                # versions, which retention may expire; re-load any
-                # compacted stage so the returned plans read the live one
-                if "signatures" in compactions:
-                    sigs = ckpt.load(spark, "signatures")
-                if "candidate_pairs" in compactions:
-                    pairs = ckpt.load(spark, "candidate_pairs")
-                if "scores" in compactions:
-                    scores = ckpt.load(spark, "scores")
-        if cfg.expire_keep_last is not None:
-            for stage in STAGES:
-                ckpt.expire_snapshots(stage, keep_last=cfg.expire_keep_last)
-        _mark("retention")
+        else:
+            stats["components_mode"] = "incremental"
+            comps_df = incremental_components(
+                ckpt.load(spark, "components"),
+                new_sigs.select("conv_id"),
+                edges_from_scores(
+                    ckpt.load_appended(spark, "scores"), cfg.scoring.threshold
+                ),
+            )
+        comps = ckpt.write(
+            "components",
+            comps_df,
+            input_fingerprint=incr_fp,
+            # linkage for the NEXT increment's staleness guard: the
+            # scores state (post-commit, read from the pending version)
+            # these components were derived from, and the threshold they
+            # were built at (the operating-point check reads it from
+            # here — see same_operating_point above)
+            extra={
+                "scores_fingerprint": ckpt.read_manifest("scores")[
+                    "output_fingerprint"
+                ],
+                "threshold": cfg.scoring.threshold,
+            },
+            observe=component_count(),
+        )
+    _mark("components")
+    # maintenance: each compaction is its own content-preserving commit
+    if cfg.compact_above_files is not None:
+        compactions = {}
+        # Stages FULLY REWRITTEN this increment are exempt: their next
+        # increment's ckpt.write replaces every file regardless, so a
+        # post-commit compaction is a read+rewrite+fingerprint scan the
+        # very next commit throws away — and if the rewrite itself emits
+        # more than compact_above_files part files (shuffle_partitions >
+        # bound), EVERY increment would pay that tax. components is
+        # rewritten every increment; under rescore_all, scores are too.
+        rewritten = {"scores", "components"} if rescore_all else {"components"}
+        for stage in STAGES:
+            if stage not in rewritten and len(ckpt._data_files(stage)) > cfg.compact_above_files:
+                res = ckpt.compact(spark, stage)
+                # compact() may decline (a stage whose files already
+                # match its target layout): record and reload only
+                # stages it actually rewrote
+                if res["compacted"]:
+                    compactions[stage] = res
+        if compactions:
+            stats["compactions"] = compactions
+            # the stage handles resolved above read the pre-compaction
+            # versions, which retention may expire; re-load any
+            # compacted stage so the returned plans read the live one
+            if "signatures" in compactions:
+                sigs = ckpt.load(spark, "signatures")
+            if "candidate_pairs" in compactions:
+                pairs = ckpt.load(spark, "candidate_pairs")
+            if "scores" in compactions:
+                scores = ckpt.load(spark, "scores")
+    if cfg.expire_keep_last is not None:
+        for stage in STAGES:
+            ckpt.expire_snapshots(stage, keep_last=cfg.expire_keep_last)
+    _mark("retention")
 
-        stats["n_signatures"] = ckpt.read_manifest("signatures")["rows"]
-        stats["n_candidate_pairs"] = ckpt.read_manifest("candidate_pairs")["rows"]
-        stats["n_components"] = ckpt.read_manifest("components")["n_components"]
-        return PipelineResult(sigs, pairs, scores, comps, [], stats)
-    finally:
-        for _df in persisted:
-            _df.unpersist()
+    stats["n_signatures"] = ckpt.read_manifest("signatures")["rows"]
+    stats["n_candidate_pairs"] = ckpt.read_manifest("candidate_pairs")["rows"]
+    stats["n_components"] = ckpt.read_manifest("components")["n_components"]
+    return PipelineResult(sigs, pairs, scores, comps, [], stats)

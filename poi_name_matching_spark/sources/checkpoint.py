@@ -531,7 +531,6 @@ class StageCheckpoint:
         df: DataFrame,
         input_fingerprint: str | None = None,
         extra: dict | None = None,
-        expect_rows: int | None = None,
     ) -> DataFrame:
         """Fast-append commit (Iceberg ``fast_append`` analog): a new
         version that hard-links the live version's data files and writes
@@ -541,12 +540,7 @@ class StageCheckpoint:
         footers; the stage's output fingerprint is composed exactly
         (xor/count), so downstream resume keys match a full rescan.
 
-        Requires a complete existing stage.
-
-        ``expect_rows`` (the increment's known row count) makes a plan
-        that re-evaluated to a different row set at write time fail the
-        commit loudly instead of corrupting the stage; the new version
-        is then left uncommitted."""
+        Requires a complete existing stage."""
         t0 = time.monotonic()
         m = self.read_manifest(stage)
         if m is None:
@@ -554,12 +548,12 @@ class StageCheckpoint:
                 f"append needs a complete stage {stage!r}; write() it first"
             )
         spark = df.sparkSession
-        # schema guard, same spirit as expect_rows: the composed
-        # output fingerprint hashes columns in file order, so an
-        # increment with reordered/retyped columns would silently
-        # diverge from a full rescan (and mixed-schema files in one
-        # version directory are a read hazard). Names+order+types must
-        # match exactly (nullability excluded — parquet unions it).
+        # schema guard: the composed output fingerprint hashes columns
+        # in file order, so an increment with reordered/retyped columns
+        # would silently diverge from a full rescan (and mixed-schema
+        # files in one version directory are a read hazard). Names, order
+        # and types must match exactly (nullability excluded — parquet
+        # unions it).
         existing = self.load(spark, stage)
         want = [(f.name, f.dataType.simpleString()) for f in existing.schema.fields]
         got = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
@@ -583,13 +577,6 @@ class StageCheckpoint:
         observed.write.mode("append").parquet(str(path))
         new_files = sorted(set(_part_files(path)) - set(linked))
         n_new, h, file_rows = _observed_stats(stage, obs, path, new_files)
-        if expect_rows is not None and n_new != expect_rows:
-            raise ValueError(
-                f"append to stage {stage!r} wrote {n_new} rows but the "
-                f"caller expected {expect_rows}; the increment plan "
-                "re-evaluated differently at write time — the new version "
-                "was not committed"
-            )
         out_fp = _fp_combine(prev_fp, _fp_format(n_new, h))
         pid_base = max((p["id"] for p in m.get("partitions", [])), default=-1) + 1
         partitions = list(m.get("partitions", [])) + _partitions(file_rows, pid_base)

@@ -365,14 +365,15 @@ class TestEmbedder:
         # pickle carries the identity (executors share the namespace)
         assert pickle.loads(pickle.dumps(e3)).cache_key() == e3.cache_key()
 
-    def test_from_weights_drives_scoring_udf(self, spark, tmp_path):
-        """File-backed embedder through the real Arrow UDF path: the
-        semantic suite runs and emb_cosine equals the driver-side
-        computation on the same weights."""
+    def test_from_weights_drives_score_pairs(self, spark, tmp_path):
+        """File-backed embedder through ``score_pairs``: the embedding
+        UDF and the native cosine give the driver-side emb_cosine on the
+        same weights."""
         import numpy as np
 
-        from poi_name_matching_spark.functions.spark_udfs import (
-            make_sim_scores_udf,
+        from poi_name_matching_spark.operators.scoring import (
+            ScoringConfig,
+            score_pairs,
         )
 
         rng = np.random.default_rng(9)
@@ -380,27 +381,31 @@ class TestEmbedder:
         np.savez(path, weights=rng.standard_normal((128, 12)).astype(np.float32))
         emb = HashEmbedder.from_weights(str(path))
 
-        from pyspark.sql import functions as F
-
-        sc = spark.sparkContext
-        udf = make_sim_scores_udf(
-            sc.broadcast({"pizza": 1, "park": 1}),
-            sc.broadcast(2),
-            emb,
-            fields=["emb_cosine"],
+        toks = {"a": ["park", "pizza"], "b": ["park", "pizzas"]}
+        sigs = spark.createDataFrame(
+            [(c, " ".join(t), t) for c, t in toks.items()],
+            "conv_id string, sig_text string, tokens array<string>",
         )
-        df = spark.createDataFrame(
-            [("park pizza", "park pizzas", ["park", "pizza"], ["park", "pizzas"])],
-            "lt string, rt string, ltk array<string>, rtk array<string>",
-        )
-        got = df.select(udf("lt", "rt", "ltk", "rtk").alias("s")).first()["s"][
-            "emb_cosine"
-        ]
+        pairs = spark.createDataFrame([("a", "b")], "left_id string, right_id string")
+        cfg = ScoringConfig(kernels=("emb_cosine",), score_kernel="emb_cosine")
+        got = score_pairs(spark, pairs, sigs, cfg, embedder=emb).first()["emb_cosine"]
         expected = kernels.cosine_vec(
-            emb.embed_text("", tokens=["park", "pizza"]),
-            emb.embed_text("", tokens=["park", "pizzas"]),
+            *(np.asarray(emb.embed_text("", tokens=toks[c]), np.float64) for c in "ab")
         )
-        assert got == APPROX(expected)
+        # the native cosine multiplies the float32 components in float32
+        # before summing in double
+        assert got == pytest.approx(expected, abs=1e-6)
+
+    def test_scoring_udf_refuses_native_kernels(self):
+        """The kernels with a native expression are computed JVM-side
+        only; asking the scoring UDF for one raises."""
+        from poi_name_matching_spark.functions.spark_udfs import (
+            make_sim_scores_udf,
+        )
+
+        for field in ("levenshtein", "jaccard", "emb_cosine", "nope"):
+            with pytest.raises(ValueError, match="cannot compute"):
+                make_sim_scores_udf(None, None, HashEmbedder(), fields=["tfidf", field])
 
 
 # ---------------------------------------------------------------------------
