@@ -230,46 +230,28 @@ def candidate_pairs(
     when ``blocks`` is a raw ``block_keys`` plan whose MinHash UDF would
     otherwise run per reference:
 
-    * ``"local_checkpoint"`` (default): fastest (raw row blocks, no
-      columnar encode/decode — measured ~2× faster than persist at
-      bench scale), but the blocks live only in executor storage and
-      CANNOT be recomputed — on a cluster, an executor lost between
-      materialization and the self-join fails the stage permanently.
-    * ``"persist"``: MEMORY_AND_DISK cache, recomputable on executor
-      loss — the fault-tolerant choice for long-running cluster stages.
-    * ``"none"``: no materialization — CORRECT choice when ``blocks``
-      is already checkpoint-backed (parquet): re-scanning the file is
+    * ``"local_checkpoint"`` (default): raw row blocks in executor
+      storage, no columnar encode/decode, but they CANNOT be recomputed
+      — on a cluster, an executor lost between materialization and the
+      self-join fails the stage permanently.
+    * ``"none"``: no materialization — the choice when ``blocks`` is
+      already checkpoint-backed (parquet): re-scanning the file is
       cheap, recomputable, and skips a pointless extra copy. The batch
       pipeline passes this.
-
-    Spark offers no safe point inside this function to release either
-    materialization (the returned pairs plan still reads it lazily), so
-    both handles are exposed on the result as ``_materialized_blocks``:
-    a long-running driver calling this repeatedly with ``"persist"``
-    should ``pairs._materialized_blocks.unpersist()`` after consuming
-    the pairs, or executor storage accumulates one cached block
-    relation per call.
     """
-    if materialize not in ("local_checkpoint", "persist", "none"):
+    if materialize not in ("local_checkpoint", "none"):
         # validated unconditionally — a typo'd mode must fail loudly
-        # even when salting (the only consumer) is disabled, not let the
-        # caller believe their chosen fault-tolerance mode is in effect
+        # even when salting (the only consumer) is disabled
         raise ValueError(
-            f"materialize must be 'local_checkpoint', 'persist' or "
-            f"'none', got {materialize!r}"
+            f"materialize must be 'local_checkpoint' or 'none', got {materialize!r}"
         )
-    materialized = None
     if cfg.max_block_size:
         if materialize == "local_checkpoint":
-            blocks = materialized = blocks.localCheckpoint(eager=True)
-        elif materialize == "persist":
-            from pyspark import StorageLevel
-
-            blocks = materialized = blocks.persist(StorageLevel.MEMORY_AND_DISK)
+            blocks = blocks.localCheckpoint(eager=True)
         blocks = salt_oversized(blocks, cfg.max_block_size, hot)
     left = blocks.alias("l")
     right = blocks.alias("r")
-    pairs = (
+    return (
         left.join(right, "block_key")
         .filter(F.col("l.conv_id") < F.col("r.conv_id"))
         .select(
@@ -278,5 +260,3 @@ def candidate_pairs(
         )
         .dropDuplicates(["left_id", "right_id"])
     )
-    pairs._materialized_blocks = materialized  # release handle (docstring)
-    return pairs

@@ -71,6 +71,9 @@ DF_MAP_KERNELS = frozenset({"tfidf", "softtfidf", "semantic_softtfidf"})
 #: when the vocabulary is known-bounded.
 DEFAULT_MAX_VOCAB = 1 << 22
 
+#: AQE advisory partition size inside ``udf_stage_parallelism``
+UDF_ADVISORY_BYTES = "1m"
+
 
 @dataclass(frozen=True)
 class ScoringConfig:
@@ -309,156 +312,8 @@ def score_pairs(
     return out.withColumn("score", F.col(cfg.score_kernel))
 
 
-def score_pairs_chunked(
-    spark: SparkSession,
-    pairs: DataFrame,
-    signatures: DataFrame,
-    cfg: ScoringConfig,
-    n_chunks: int,
-    staging_dir: str,
-    resume_token: str | None = None,
-) -> DataFrame:
-    """Bounded-scratch-disk scoring: identical output to
-    :func:`score_pairs`, but computed as ``n_chunks`` independent Spark
-    jobs so the stage's dominant disk consumer — the wide
-    pairs×signatures exchange feeding the kernel UDF (~620 B/pair of
-    zstd-compressed shuffle; measured 64 GB for the 103.3 M-pair
-    1 M-conversation endurance corpus, enough to exhaust a single
-    node's scratch volume) — exists for only ``|pairs| / n_chunks``
-    rows at a time.
-
-    Mechanics: chunk membership is ``pmod(xxhash64(left_id, right_id),
-    n_chunks)`` — a pure function of the pair, independent of
-    partitioning, so the union of chunk outputs is EXACTLY the unchunked
-    relation (scores are per-pair pure functions given the corpus-level
-    df map, which is built ONCE over the FULL corpus here and shared
-    across chunks — chunking must not perturb idf). Each chunk's narrow
-    scores relation is appended to ``staging_dir`` as its own write job;
-    the returned DataFrame reads the staging directory back.
-
-    Costs and knobs:
-
-    * ``n_chunks`` extra scans of the pairs+signatures inputs — cheap
-      when both are checkpoint-backed parquet (the batch pipeline's
-      shape), wasteful if they are expensive un-materialized plans.
-    * a finished chunk's shuffle files are reclaimed by the JVM's
-      ContextCleaner only after the shuffle dependency is GC'd; this
-      loop drops its references per-iteration, but on long chunks set
-      ``spark.cleaner.periodicGC.interval`` below the per-chunk wall
-      (e.g. ``5min``) so reclamation actually lands between chunks and
-      peak scratch stays ~2 chunks' worth.
-    * the scores relation is written twice (staging + the stage store's
-      checkpoint write) — a few GB of narrow rows against the tens of
-      wide GB this bounds.
-
-    Crash resume: each chunk is written to its own ``chunk_<i>/``
-    subdirectory (its ``_SUCCESS`` marker is the chunk's commit record),
-    and ``staging_dir/_staging_meta.json`` pins the caller-supplied
-    ``resume_token`` — an identity for (pairs, signatures, scoring
-    config); the pipeline passes its scores cache key. On re-entry with
-    a matching token and ``n_chunks``, committed chunks are skipped and
-    only the in-flight/remaining ones run: a killed driver (the
-    1 M-conversation run lost ~90 min of scoring to a machine restart)
-    costs at most one chunk. Soundness: given identical inputs every
-    chunk's output is deterministic (pure per-pair kernels under a df
-    map that is itself a pure aggregate of the signatures), so resumed
-    and fresh runs are bit-identical. A missing/mismatched token starts
-    clean.
-    """
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    if n_chunks < 1:
-        raise ValueError(f"n_chunks must be >= 1, got {n_chunks}")
-    if n_chunks == 1:
-        return score_pairs(spark, pairs, signatures, cfg)
-
-    meta_path = _os.path.join(staging_dir, "_staging_meta.json")
-    done: set[int] = set()
-    if resume_token is not None and _os.path.exists(meta_path):
-        try:
-            with open(meta_path) as f:
-                meta = _json.load(f)
-        except (OSError, ValueError):
-            meta = None
-        if (
-            meta
-            and meta.get("resume_token") == resume_token
-            and meta.get("n_chunks") == n_chunks
-        ):
-            done = {
-                i
-                for i in range(n_chunks)
-                if _os.path.exists(
-                    _os.path.join(staging_dir, f"chunk_{i}", "_SUCCESS")
-                )
-            }
-    if not done:
-        # fresh start (or unverifiable residue): clear and re-pin identity
-        _shutil.rmtree(staging_dir, ignore_errors=True)
-        _os.makedirs(staging_dir, exist_ok=True)
-        with open(meta_path, "w") as f:
-            _json.dump({"resume_token": resume_token, "n_chunks": n_chunks}, f)
-
-    todo = [i for i in range(n_chunks) if i not in done]
-    if todo:
-        # shared per-corpus state, built once (df map over the FULL corpus)
-        if DF_MAP_KERNELS & set(cfg.kernels):
-            df_map_bc, corpus_size_bc = broadcast_df_map(
-                spark, signatures, min_df=cfg.min_df, max_vocab=cfg.max_vocab
-            )
-        else:
-            sc = spark.sparkContext
-            df_map_bc, corpus_size_bc = sc.broadcast({}), sc.broadcast(0)
-        embedder = HashEmbedder(dim=cfg.embed_dim, seed=cfg.embed_seed)
-        chunk_of = F.pmod(
-            F.xxhash64(F.col("left_id"), F.col("right_id")), F.lit(n_chunks)
-        )
-        import time as _time
-
-        for i in todo:
-            t_chunk = _time.monotonic()
-            scored = score_pairs(
-                spark,
-                pairs.filter(chunk_of == i),
-                signatures,
-                cfg,
-                df_map_bc=df_map_bc,
-                corpus_size_bc=corpus_size_bc,
-                embedder=embedder,
-            )
-            # overwrite: a crashed chunk attempt left no _SUCCESS, so its
-            # partial files are replaced wholesale on the retry
-            scored.write.mode("overwrite").parquet(
-                _os.path.join(staging_dir, f"chunk_{i}")
-            )
-            del scored  # release plan → chunk shuffle becomes GC-reclaimable
-            # record the chunk's compute wall in the staging meta: the
-            # stage manifest's wall_ms times only the staging→stage
-            # promote (write() starts its clock AFTER compute() — i.e.
-            # after this whole loop — returned), so without these the
-            # scoring stage's real cost is invisible to reporting.
-            # Atomic rewrite (tmp+rename), preserving the resume token.
-            try:
-                with open(meta_path) as f:
-                    meta_now = _json.load(f)
-            except (OSError, ValueError):
-                meta_now = {"resume_token": resume_token, "n_chunks": n_chunks}
-            walls = meta_now.setdefault("chunk_walls_s", {})
-            walls[str(i)] = round(_time.monotonic() - t_chunk, 1)
-            tmp_meta = meta_path + ".tmp"
-            with open(tmp_meta, "w") as f:
-                _json.dump(meta_now, f)
-            _os.replace(tmp_meta, meta_path)
-    # recursiveFileLookup: flat file listing under the chunk_<i> subdirs
-    # (no partition-column inference; _staging_meta.json is `_`-prefixed
-    # and therefore invisible to the file index)
-    return spark.read.option("recursiveFileLookup", "true").parquet(staging_dir)
-
-
 @contextmanager
-def udf_stage_parallelism(spark: SparkSession, advisory_bytes: str = "1m"):
+def udf_stage_parallelism(spark: SparkSession):
     """Scope a small AQE advisory partition size around the ACTION that
     materializes a UDF-heavy stage (the config is read at execution
     time, so it must wrap the action, not the plan construction).
@@ -483,7 +338,7 @@ def udf_stage_parallelism(spark: SparkSession, advisory_bytes: str = "1m"):
         saved = spark.conf.get(key)
     except Exception:
         saved = None
-    spark.conf.set(key, advisory_bytes)
+    spark.conf.set(key, UDF_ADVISORY_BYTES)
     try:
         yield
     finally:

@@ -115,11 +115,14 @@ def incremental_update(
         )
     ckpt = StageCheckpoint(cfg.checkpoint_dir)
     for stage in STAGES:
-        if ckpt.read_manifest(stage) is None:
+        m = ckpt.read_manifest(stage)
+        # partial_chunks: the live version of an unfinished chunked
+        # scoring loop, holding only some of the pairs' scores
+        if m is None or "partial_chunks" in m:
             raise FileNotFoundError(
                 f"incremental_update needs a completed pipeline checkpoint; "
-                f"stage {stage!r} is missing at {cfg.checkpoint_dir} — run "
-                "run_pipeline first"
+                f"stage {stage!r} is missing or unfinished at "
+                f"{cfg.checkpoint_dir} — run run_pipeline first"
             )
     # ---- config-drift guards: refuse BEFORE any mutation ---------------
     # captured BEFORE the scores commit replaces the manifest: decides

@@ -34,6 +34,17 @@ that feed them run Spark jobs: a cache hit loads with the schema its
 manifest records, and the run's statistics come from manifests —
 ``max_block_size`` from the block-size aggregation salting runs anyway,
 the component count observed while the components are written.
+
+Chunked scoring (``PipelineConfig.scoring_chunks`` = K > 1) commits the
+scores stage one hash chunk at a time through the same store: chunk 0 is
+a ``write``, each later chunk an ``append`` that hard-links the earlier
+chunks' files, so every score row is written once. A chunk before the
+last commits under ``<scores key>|chunk:<k>/<K>`` (k chunks done) with
+the manifest field ``partial_chunks``, so only the last commit is a
+cache hit; a rerun after a crash resumes at the first uncommitted chunk.
+The K−1 partial versions stay in the stage's history as retained
+versions (hard links, no bytes of their own) and count against
+``expire_keep_last``.
 """
 
 from __future__ import annotations
@@ -52,10 +63,12 @@ from ..operators.blocking import (
 )
 from ..operators.clustering import components
 from ..operators.scoring import (
+    DF_MAP_KERNELS,
     ScoringConfig,
+    broadcast_df_map,
     edges_from_scores,
     score_pairs,
-    score_pairs_chunked,
+    udf_stage_parallelism,
 )
 from ..operators.signatures import build_signatures
 from ..sources.checkpoint import StageCheckpoint, input_key, stage_fingerprint
@@ -102,15 +115,84 @@ class PipelineConfig:
     #: (compact manually / out-of-band).
     compact_above_files: int | None = None
     #: scratch-disk bound for the scoring stage: >1 scores the candidate
-    #: pairs in this many hash-chunks (``scoring.score_pairs_chunked``),
-    #: each its own job appending to a staging dir under the checkpoint,
-    #: so the stage's wide pairs×signatures shuffle (~1 KB/pair — the
-    #: measured 64 GB at 65 M pairs that exhausts a single scratch
-    #: volume first) peaks at 1/chunks of the unchunked run. Output is
-    #: bit-identical (chunking is pair-pure; the df map is built once
-    #: over the full corpus), so this is NOT part of the scores cache
-    #: identity. 1 → plain single-job scoring.
+    #: pairs in this many hash-chunks, each committed to the scores
+    #: stage as its own write (see the module docstring), so the stage's
+    #: wide pairs×signatures shuffle (~1 KB/pair — the measured 64 GB at
+    #: 65 M pairs that exhausts a single scratch volume first) peaks at
+    #: 1/chunks of the unchunked run. Output is bit-identical (chunking
+    #: is pair-pure; the df map is built once over the full corpus), so
+    #: this is NOT part of the completed scores' cache identity. The
+    #: chunk loop's partial versions count against ``expire_keep_last``.
+    #: 1 → plain single-job scoring.
     scoring_chunks: int = 1
+
+
+def _score_in_chunks(
+    spark: SparkSession,
+    ckpt: StageCheckpoint,
+    pairs: DataFrame,
+    sigs: DataFrame,
+    cfg: PipelineConfig,
+    scores_key: str,
+    extra: dict,
+) -> DataFrame:
+    """Score ``pairs`` in ``cfg.scoring_chunks`` hash chunks, committing
+    each to the scores stage (see the module docstring). Chunk
+    membership is ``pmod(xxhash64(left_id, right_id), K)``, a pure
+    function of the pair, and one df map over the whole corpus serves
+    every chunk, so the union is exactly the unchunked relation and its
+    composed output fingerprint equals the unchunked one. Each commit's
+    ``wall_ms`` times its own chunk; ``chunk_walls_s`` carries the
+    earlier chunks' walls, so the scoring wall is
+    ``wall_ms + sum(chunk_walls_s)``.
+
+    Resume: when the live scores version is this key's partial commit
+    of k of the same K chunks, the loop starts at chunk k; anything else
+    starts at chunk 0 with a full write.
+
+    A finished chunk's shuffle files are reclaimed only once the JVM
+    garbage-collects its shuffle; on long chunks set
+    ``spark.cleaner.periodicGC.interval`` below the per-chunk wall so
+    peak scratch stays about two chunks' worth."""
+    n = cfg.scoring_chunks
+    m = ckpt.read_manifest("scores") or {}
+    part = m.get("partial_chunks")
+    start, walls = 0, []
+    if (
+        part
+        and part["of"] == n
+        and m["input_fingerprint"] == f"{scores_key}|chunk:{part['done']}/{n}"
+    ):
+        start = part["done"]
+        walls = m["chunk_walls_s"] + [m["wall_ms"] / 1000]
+    df_map_bc = corpus_size_bc = None
+    if DF_MAP_KERNELS & set(cfg.scoring.kernels):
+        df_map_bc, corpus_size_bc = broadcast_df_map(
+            spark, sigs, min_df=cfg.scoring.min_df, max_vocab=cfg.scoring.max_vocab
+        )
+    chunk_of = F.pmod(F.xxhash64("left_id", "right_id"), F.lit(n))
+    for k in range(start, n):
+        chunk = score_pairs(
+            spark,
+            pairs.filter(chunk_of == k),
+            sigs,
+            cfg.scoring,
+            df_map_bc=df_map_bc,
+            corpus_size_bc=corpus_size_bc,
+        )
+        done = k + 1
+        commit_extra = {**extra, "chunk_walls_s": walls}
+        if done < n:
+            commit_extra["partial_chunks"] = {"done": done, "of": n}
+        commit = ckpt.write if k == 0 else ckpt.append
+        scores = commit(
+            "scores",
+            chunk,
+            scores_key if done == n else f"{scores_key}|chunk:{done}/{n}",
+            commit_extra,
+        )
+        walls = walls + [ckpt.read_manifest("scores")["wall_ms"] / 1000]
+    return scores
 
 
 @dataclass
@@ -134,8 +216,6 @@ def run_pipeline(
 
     from dataclasses import asdict
     import json as _json
-
-    from ..operators.scoring import udf_stage_parallelism
 
     in_fp = input_key(transcripts)
     # config is part of each stage's cache identity: a resume keyed on
@@ -210,78 +290,37 @@ def run_pipeline(
         largest = oversized_blocks(blocks, None)[0]
     stats["max_block_size"] = largest
 
-    # UDF-heavy stage: keep AQE from byte-coalescing the scoring
-    # partitions down to core count (stragglers — see
-    # scoring.udf_stage_parallelism)
-    scores_staging = str(Path(cfg.checkpoint_dir) / "_scores_staging")
     # scores read the signatures' text as well as the pairs, so a changed
     # signature must miss even when the pair set comes out the same
     scores_key = f"{pairs_fp}|{sig_fp}|cfg:{scoring_key}"
-
-    def _scores():
-        if cfg.scoring_chunks > 1:
-            return score_pairs_chunked(
-                spark,
-                pairs,
-                sigs,
-                cfg.scoring,
-                cfg.scoring_chunks,
-                scores_staging,
-                # the scores cache key doubles as the staging resume
-                # token: same pairs and signatures + same scoring config
-                # → committed chunks are reusable after a crashed run
-                resume_token=scores_key,
-            )
-        return score_pairs(spark, pairs, sigs, cfg.scoring)
-
+    # scoring_config (threshold-independent, JSON-normalized) is the
+    # record incremental_update's drift guard compares: any drifted
+    # scoring parameter — not just the kernel — would append
+    # incomparable values into the existing scores column
+    scores_extra = {
+        "score_kernel": cfg.scoring.score_kernel,
+        "threshold": cfg.scoring.threshold,
+        "scoring_config": _json.loads(scoring_key),
+    }
+    # UDF-heavy stage: keep AQE from byte-coalescing the scoring
+    # partitions down to core count (stragglers — see
+    # scoring.udf_stage_parallelism)
     with udf_stage_parallelism(spark):
-        scores, hit = ckpt.get_or_compute(
-            spark,
-            "scores",
-            _scores,
-            scores_key,
-            # scoring_config (threshold-independent, JSON-normalized) is
-            # the record incremental_update's drift guard compares: any
-            # drifted scoring parameter — not just the kernel — would
-            # append incomparable values into the existing scores column
-            extra={
-                "score_kernel": cfg.scoring.score_kernel,
-                "threshold": cfg.scoring.threshold,
-                "scoring_config": _json.loads(scoring_key),
-            },
-        )
+        if cfg.scoring_chunks > 1 and not ckpt.is_complete("scores", scores_key):
+            scores = _score_in_chunks(
+                spark, ckpt, pairs, sigs, cfg, scores_key, scores_extra
+            )
+            hit = False
+        else:
+            scores, hit = ckpt.get_or_compute(
+                spark,
+                "scores",
+                lambda: score_pairs(spark, pairs, sigs, cfg.scoring),
+                scores_key,
+                extra=scores_extra,
+            )
     if hit:
         cached.append("scores")
-    else:
-        # chunked scoring's staging copy is superseded by the stage
-        # store's committed write (`write` returns the reloaded store
-        # df, not the staging read) — drop it so the checkpoint dir
-        # doesn't carry a second scores-sized copy. First salvage the
-        # per-chunk compute walls the loop recorded there: the stage
-        # manifest's wall_ms times only the promote step (write()'s
-        # clock starts after the chunk loop returned), so without this
-        # annotation the scoring stage's real cost vanishes with the
-        # staging dir and any throughput derived from wall_ms is
-        # inflated by ~n_chunks× the true figure.
-        import shutil as _shutil
-
-        if cfg.scoring_chunks > 1:
-            try:
-                with open(Path(scores_staging) / "_staging_meta.json") as _f:
-                    _walls = _json.load(_f).get("chunk_walls_s") or {}
-            except (OSError, ValueError):
-                _walls = {}
-            if _walls:
-                ckpt.annotate_manifest(
-                    "scores",
-                    {
-                        "chunk_walls_s": _walls,
-                        "scoring_loop_wall_ms": int(
-                            sum(_walls.values()) * 1000
-                        ),
-                    },
-                )
-        _shutil.rmtree(scores_staging, ignore_errors=True)
     scores_fp = _output_fp(ckpt, "scores", scores)
 
     def _components():

@@ -216,6 +216,9 @@ def _fp_parse(fp: str) -> tuple[int, int]:
 #: rewrite regardless of how many increments a stage has accumulated
 _PARTITION_HISTORY_CAP = 512
 
+#: ``compact`` leaves a stage of fewer data files than this alone
+_COMPACT_MIN_FILES = 2
+
 
 def _file_rows(path: Path, files: list[str]) -> list[int]:
     """Row count of each of ``files`` under ``path``, read from its
@@ -633,7 +636,6 @@ class StageCheckpoint:
         spark: SparkSession,
         stage: str,
         target_file_bytes: int = 128 << 20,
-        min_files: int = 2,
     ) -> dict:
         """Rewrite the stage's accumulated data files into ~target-sized
         ones (Iceberg ``rewrite_data_files`` / binpack analog). Fast
@@ -652,9 +654,9 @@ class StageCheckpoint:
         retained and rollback-able like any other.
 
         No-op (returns ``{"compacted": False, ...}``) when the stage
-        already has fewer than ``min_files`` files or no more than the
-        target layout's file count — sized by TOTAL BYTES, so calling
-        this after every increment is cheap and idempotent."""
+        already has fewer than ``_COMPACT_MIN_FILES`` files or no more
+        than the target layout's file count — sized by TOTAL BYTES, so
+        calling this after every increment is cheap and idempotent."""
         import math
 
         m = self.read_manifest(stage)
@@ -666,7 +668,7 @@ class StageCheckpoint:
         files = _part_files(src)
         total_bytes = sum((src / f).stat().st_size for f in files)
         n_out = max(1, math.ceil(total_bytes / max(1, int(target_file_bytes))))
-        if len(files) < max(int(min_files), n_out + 1):
+        if len(files) < max(_COMPACT_MIN_FILES, n_out + 1):
             return {
                 "compacted": False,
                 "files": len(files),
@@ -710,28 +712,6 @@ class StageCheckpoint:
         manifest["compaction"] = result
         self._commit(stage, v, manifest)
         return result
-
-    def annotate_manifest(self, stage: str, extra: dict) -> None:
-        """Merge ``extra`` keys into the live version's manifest (atomic
-        rewrite). For reporting-only metadata discovered after write()
-        committed — e.g. the chunked-scoring loop walls, which write()'s
-        own ``wall_ms`` cannot see (the loop runs before its clock
-        starts). Refuses to touch identity fields."""
-        forbidden = {
-            "stage",
-            "input_fingerprint",
-            "output_fingerprint",
-            "rows",
-            "partitions",
-        }
-        bad = forbidden & set(extra)
-        if bad:
-            raise ValueError(f"annotate_manifest cannot alter {sorted(bad)}")
-        m = self.read_manifest(stage)
-        if m is None:
-            raise FileNotFoundError(f"stage {stage!r} has no manifest")
-        m.update(extra)
-        write_json_atomic(self.manifest_path(stage), m)
 
     def get_or_compute(
         self,

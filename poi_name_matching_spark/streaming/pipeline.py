@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..plans.incremental import incremental_update
 from ..plans.pipeline import STAGES, PipelineConfig, run_pipeline
 from ..sources.checkpoint import StageCheckpoint, input_key
-from .sentinel import LocalSentinel, make_sentinel
+from .sentinel import HadoopSentinel, make_sentinel
 
 TRANSCRIPTS_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -83,8 +83,8 @@ def apply_transcript_batch(
 
     ``founded_marker``: the founding sentinel owned by the STREAM
     checkpoint (``start_pipeline_stream`` wires it) — a
-    ``streaming.sentinel`` object, or a local ``Path`` for
-    convenience/back-compat. If the sentinel exists but every pipeline
+    ``streaming.sentinel.HadoopSentinel``, or a path to build one on.
+    If the sentinel exists but every pipeline
     stage is missing, the pipeline checkpoint was lost while the
     stream's offsets survived — founding again from a mid-stream batch
     would silently drop the prior corpus, so this raises instead. The
@@ -94,9 +94,9 @@ def apply_transcript_batch(
     outside this stream cannot disarm the guard."""
     if batch.isEmpty():
         return None
-    if isinstance(founded_marker, (str, Path)):
-        founded_marker = LocalSentinel(founded_marker)
     spark = batch.sparkSession
+    if isinstance(founded_marker, (str, Path)):
+        founded_marker = HadoopSentinel(spark, str(founded_marker))
     ck = StageCheckpoint(cfg.checkpoint_dir)
     missing = [s for s in STAGES if ck.read_manifest(s) is None]
     if len(missing) == len(STAGES):
@@ -150,7 +150,6 @@ def start_pipeline_stream(
     cfg: PipelineConfig,
     checkpoint_path: str,
     max_files_per_trigger: int = 4,
-    strict_guard: bool = False,
 ):
     """Wire the full-pipeline stream over a watched transcript-parquet
     directory; returns the StreamingQuery (caller awaits/stops).
@@ -164,13 +163,12 @@ def start_pipeline_stream(
     Hadoop FileSystem API (``streaming.sentinel.make_sentinel``), so the
     lost-pipeline-checkpoint guard works on HDFS/S3/local alike —
     scheme-less paths resolve against ``fs.defaultFS`` exactly as the
-    ``checkpointLocation`` itself does. ``strict_guard=True`` makes an
-    un-armable guard (no JVM gateway AND a non-local path) raise at
-    start instead of degrading to a warning."""
+    ``checkpointLocation`` itself does. An unreachable gateway or
+    filesystem raises here, before the stream starts."""
     import logging
 
     log = logging.getLogger(__name__)
-    founded = make_sentinel(spark, checkpoint_path, strict=strict_guard)
+    founded = make_sentinel(spark, checkpoint_path)
 
     def _apply(batch: DataFrame, epoch: int) -> None:
         stats = apply_transcript_batch(batch, cfg, founded_marker=founded)

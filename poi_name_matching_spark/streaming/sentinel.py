@@ -1,20 +1,16 @@
-"""Filesystem-agnostic founding sentinels for the pipeline stream.
+"""Filesystem-agnostic founding sentinel for the pipeline stream.
 
 The lost-pipeline-checkpoint guard (``pipeline.apply_transcript_batch``)
 needs one bit of durable state co-located with the STREAM's offset
 checkpoint: "this stream has founded a pipeline checkpoint before".
-Round 4 stored it with local ``pathlib``, which silently disabled the
-guard exactly where it matters most — cluster deployments whose stream
-checkpoint lives on HDFS/S3. These sentinels close that hole:
-
-* ``HadoopSentinel`` — exists/write through the Hadoop ``FileSystem``
-  API, so the marker lives on WHATEVER filesystem the checkpoint path
-  resolves to (scheme-less paths resolve against ``fs.defaultFS``,
-  URIs against their own scheme) — the same resolution Structured
-  Streaming itself applies to ``checkpointLocation``.
-* ``LocalSentinel`` — the round-4 pathlib behavior, kept as the
-  fallback when no JVM gateway is reachable (e.g. Spark Connect) and
-  the path is plainly local.
+``HadoopSentinel`` keeps it through the Hadoop ``FileSystem`` API, so
+the marker lives on WHATEVER filesystem the checkpoint path resolves to
+(scheme-less paths resolve against ``fs.defaultFS``, URIs against their
+own scheme) — the same resolution Structured Streaming itself applies
+to ``checkpointLocation``, so the guard holds on HDFS/S3 as on a local
+disk. A session without the JVM gateway cannot run the pipeline at all
+(``input_key`` and the df-map broadcast need it), so there is no
+fallback: an unreachable gateway raises when the stream starts.
 
 Only ``exists()`` gates the guard; the JSON payload is advisory
 (debuggability), so a crash mid-write that leaves a partial file still
@@ -26,32 +22,6 @@ Engine capability beyond the reference (batch-only; SURVEY.md §2.8).
 from __future__ import annotations
 
 import json
-import re
-from pathlib import Path
-
-from ..sources.checkpoint import write_json_atomic
-
-#: an explicit URI scheme (2+ chars, so a Windows drive letter does not
-#: match); anything else is a plain path resolved against fs.defaultFS
-URI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]+:")
-
-
-class LocalSentinel:
-    """Founding marker on the driver's local disk (pathlib)."""
-
-    def __init__(self, path: "Path | str") -> None:
-        self.path = Path(path)
-
-    def exists(self) -> bool:
-        return self.path.exists()
-
-    def write(self, payload: dict) -> None:
-        # parents auto-created to match Hadoop FileSystem.create
-        self.path.parent.mkdir(parents=True, exist_ok=True)
-        write_json_atomic(self.path, payload)
-
-    def __str__(self) -> str:  # error messages name the marker location
-        return str(self.path)
 
 
 class HadoopSentinel:
@@ -69,10 +39,8 @@ class HadoopSentinel:
     def _fs(self):
         # Route: SparkContext -> Hadoop Configuration -> Path-resolved
         # FileSystem. PySpark exposes no fully public accessor for the
-        # Hadoop conf; every gateway attribute below is touched inside
-        # the callers' try/except (make_sentinel probes exists() once),
-        # so a Spark build that drops them degrades to the documented
-        # fallback instead of crashing the stream.
+        # Hadoop conf; make_sentinel probes exists() once, so a Spark
+        # build that drops these attributes fails at stream start.
         jvm = self._spark._jvm
         hconf = self._spark.sparkContext._jsc.hadoopConfiguration()
         jpath = jvm.org.apache.hadoop.fs.Path(self.path)
@@ -94,50 +62,18 @@ class HadoopSentinel:
         return self.path
 
 
-def make_sentinel(
-    spark, checkpoint_path: str, strict: bool = False
-) -> "HadoopSentinel | LocalSentinel | None":
-    """Build the founding sentinel for a stream checkpoint location.
-
-    Prefers ``HadoopSentinel`` (probed with one ``exists()`` call so a
-    broken gateway is caught HERE, not mid-stream). If the gateway is
-    unreachable: a scheme-less path falls back to ``LocalSentinel``
-    (correct whenever fs.defaultFS is local — the only deployments that
-    lack a JVM gateway in practice), an explicit URI cannot be guarded
-    locally and returns ``None`` with a warning. ``strict=True`` turns
-    every degraded outcome into a raise — for deployments where silent
-    re-founding is costlier than a failed start.
-    """
-    import logging
-
-    log = logging.getLogger(__name__)
+def make_sentinel(spark, checkpoint_path: str) -> HadoopSentinel:
+    """The founding sentinel for a stream checkpoint location, probed
+    with one ``exists()`` call so a broken gateway or an unreachable
+    filesystem raises HERE, at stream start, not mid-stream."""
     marker_path = str(checkpoint_path).rstrip("/") + "/_pipeline_founded.json"
+    sentinel = HadoopSentinel(spark, marker_path)
     try:
-        sentinel = HadoopSentinel(spark, marker_path)
         sentinel.exists()
-        return sentinel
     except Exception as exc:  # gateway/classpath/scheme failure
-        if strict:
-            raise RuntimeError(
-                f"cannot arm the founding guard for stream checkpoint "
-                f"{checkpoint_path}: the Hadoop FileSystem gateway is "
-                f"unreachable ({exc!r}). Pass strict=False to fall back "
-                "to a local sentinel (scheme-less paths only)."
-            ) from exc
-        if not URI_RE.match(str(checkpoint_path)):
-            log.warning(
-                "Hadoop FS gateway unreachable (%r); founding guard "
-                "falls back to a LOCAL-filesystem sentinel at %s — "
-                "correct only if this path is on the driver's disk",
-                exc,
-                marker_path,
-            )
-            return LocalSentinel(marker_path)
-        log.warning(
-            "stream checkpoint %s is a URI but the Hadoop FS gateway is "
-            "unreachable (%r): the lost-pipeline-checkpoint founding "
-            "guard is DISABLED for this query",
-            checkpoint_path,
-            exc,
-        )
-        return None
+        raise RuntimeError(
+            f"cannot arm the founding guard for stream checkpoint "
+            f"{checkpoint_path}: its Hadoop FileSystem is unreachable "
+            f"({exc!r})"
+        ) from exc
+    return sentinel

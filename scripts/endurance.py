@@ -74,8 +74,8 @@ def main() -> int:
         action="store_true",
         help="keep an existing checkpoint dir and resume from completed "
         "stages (and, with --scoring-chunks > 1, completed scoring "
-        "chunks) — run_pipeline's config-aware stage cache plus the "
-        "chunked-scoring staging token make this exactly the fresh "
+        "chunks) — run_pipeline's config-aware stage cache, whose "
+        "scores stage commits each chunk, makes this exactly the fresh "
         "run's output; without the flag the dir is cleared as before",
     )
     args = ap.parse_args()
@@ -137,12 +137,11 @@ def main() -> int:
         for s in ["signatures", "blocks", "candidate_pairs", "scores", "components"]
     }
     # under --scoring-chunks the scores manifest's wall_ms covers only the
-    # staging→stage promote; the chunk loop's compute walls are annotated
-    # separately (pipeline salvages them from the staging meta) — fold
+    # last chunk; chunk_walls_s carries the earlier chunks' walls — fold
     # them back in so throughput below is the honest figure
     scores_m = ckpt.read_manifest("scores") or {}
     stage_walls["scores"] = round(
-        stage_walls["scores"] + scores_m.get("scoring_loop_wall_ms", 0) / 1000, 1
+        stage_walls["scores"] + sum(scores_m.get("chunk_walls_s", [])), 1
     )
     m = pairwise_cluster_f1(result.components, truth)
     n_pairs = result.stats["n_candidate_pairs"]

@@ -16,12 +16,11 @@ into a fresh pipeline run):
   run, from a different process, or after a crash;
 * prints one JSON line PER THRESHOLD as soon as it is measured (flushed),
   so a partially completed sweep still yields evidence — thresholds are
-  evaluated in the order given, put the most important first;
-* can read scores straight from a chunked-scoring staging dir
-  (`_scores_staging/`, see `scoring.score_pairs_chunked`) when every
-  chunk has committed but the scores stage itself was never promoted —
-  the crash window between the last chunk's `_SUCCESS` and the stage
-  checkpoint write.
+  evaluated in the order given, put the most important first.
+
+A scores stage left by an unfinished chunked-scoring run (its manifest
+carries `partial_chunks`) holds only some pairs' scores; the script
+refuses it (exit 3) — rerun the pipeline to finish the chunks.
 
 Usage:
     python scripts/retune.py --checkpoint /tmp/poi_endurance_1m \
@@ -56,6 +55,23 @@ def main() -> int:
     ap.add_argument("--driver-mem", default="48g")
     args = ap.parse_args()
 
+    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
+
+    # refused before any Spark session starts
+    ckpt = StageCheckpoint(args.checkpoint)
+    m = ckpt.read_manifest("scores")
+    if m is None:
+        print(json.dumps({"error": "no scores stage"}), flush=True)
+        return 2
+    if "partial_chunks" in m:
+        print(
+            json.dumps(
+                {"error": "scores stage unfinished", **m["partial_chunks"]}
+            ),
+            flush=True,
+        )
+        return 3
+
     from pyspark.sql import SparkSession
 
     spark = (
@@ -75,49 +91,8 @@ def main() -> int:
     from poi_name_matching_spark.operators.clustering import components
     from poi_name_matching_spark.operators.evaluation import pairwise_cluster_f1
     from poi_name_matching_spark.operators.scoring import edges_from_scores
-    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
 
-    ckpt = StageCheckpoint(args.checkpoint)
-    if ckpt.is_complete("scores"):
-        scores = ckpt.load(spark, "scores")
-        scores_src = "stage"
-    else:
-        # chunked-scoring staging fallback: every committed chunk is a
-        # durable slice of the exact unchunked relation (chunk membership
-        # is pmod(xxhash64(left_id, right_id), K) — pair-pure), so the
-        # union of _SUCCESS-marked chunk dirs IS the scores relation once
-        # all K have committed.
-        staging = os.path.join(args.checkpoint, "_scores_staging")
-        meta_p = os.path.join(staging, "_staging_meta.json")
-        if not os.path.exists(meta_p):
-            print(
-                json.dumps({"error": "no scores stage and no staging dir"}),
-                flush=True,
-            )
-            return 2
-        with open(meta_p) as f:
-            n_chunks = int(json.load(f)["n_chunks"])
-        committed = [
-            i
-            for i in range(n_chunks)
-            if os.path.exists(os.path.join(staging, f"chunk_{i}", "_SUCCESS"))
-        ]
-        if len(committed) != n_chunks:
-            print(
-                json.dumps(
-                    {
-                        "error": "staging incomplete",
-                        "committed_chunks": len(committed),
-                        "n_chunks": n_chunks,
-                    }
-                ),
-                flush=True,
-            )
-            return 3
-        scores = spark.read.parquet(
-            *[os.path.join(staging, f"chunk_{i}") for i in range(n_chunks)]
-        )
-        scores_src = "staging"
+    scores = ckpt.load(spark, "scores")
 
     ids = ckpt.load(spark, "signatures").select("conv_id")
     truth = truth_df(spark, n_convs=args.truth_n, seed=args.truth_seed).cache()
@@ -145,7 +120,6 @@ def main() -> int:
             {
                 "metric": "retune",
                 "checkpoint": args.checkpoint,
-                "scores_source": scores_src,
                 "n_scored_pairs": n_pairs,
                 "n_convs": args.truth_n,
                 "sweep": rows,

@@ -439,19 +439,18 @@ def test_null_turn_text_does_not_collapse_signatures(spark):
 
 
 def test_candidate_pairs_materialize_modes_identical(spark, sigs):
-    """All three materialization strategies (speed/fault-tolerance/
-    checkpoint-backed trade, see docstring) must produce the identical
-    pair universe; unknown mode rejected."""
+    """Both materialization strategies (local checkpoint / none, see
+    docstring) must produce the identical pair universe; unknown mode
+    rejected."""
     blocks = block_keys(sigs)
     base = {
         (r["left_id"], r["right_id"])
         for r in candidate_pairs(blocks).collect()
     }
-    for mode in ("persist", "none"):
-        got = {
-            (r["left_id"], r["right_id"])
-            for r in candidate_pairs(blocks, materialize=mode).collect()
-        }
-        assert got == base, mode
+    got = {
+        (r["left_id"], r["right_id"])
+        for r in candidate_pairs(blocks, materialize="none").collect()
+    }
+    assert got == base
     with pytest.raises(ValueError, match="materialize"):
         candidate_pairs(blocks, materialize="bogus")

@@ -1,249 +1,227 @@
-"""Chunked (bounded-scratch-disk) scoring == unchunked scoring, exactly.
+"""Chunked scoring (``PipelineConfig.scoring_chunks``) == unchunked
+scoring, exactly, through the stage store.
 
-`score_pairs_chunked` exists because the scoring stage's wide
-pairs×signatures exchange is the pipeline's dominant scratch-disk
-consumer (~1 KB/pair of compressed shuffle — 64 GB measured at the
-1 M-conversation endurance run), and chunking it is only admissible if
-the output is BIT-identical: chunk membership is a pure function of the
-pair and the df map is built once over the full corpus, so every score
-is computed by the same arithmetic on the same inputs either way.
+Chunking exists because the scoring stage's wide pairs×signatures
+exchange is the pipeline's dominant scratch-disk consumer (~1 KB/pair of
+compressed shuffle — 64 GB measured at the 1 M-conversation endurance
+run). It is only admissible if the output is BIT-identical: chunk
+membership is a pure function of the pair and the df map is built once
+over the full corpus, so every score is computed by the same arithmetic
+on the same inputs either way. Each chunk is committed to the scores
+stage (chunk 0 written, later chunks appended), so a crashed run
+resumes at its first uncommitted chunk and no staging copy exists.
 """
 
-import pyspark.sql.functions as F
+import os
+import shutil
+import subprocess
+import sys
+
 import pytest
 
-from poi_name_matching_spark.data import transcripts_df, truth_df
-from poi_name_matching_spark.operators.blocking import (
-    BlockingConfig,
-    block_keys,
-    candidate_pairs,
-)
-from poi_name_matching_spark.operators.scoring import (
-    ScoringConfig,
-    score_pairs,
-    score_pairs_chunked,
-)
-from poi_name_matching_spark.operators.signatures import build_signatures
+from poi_name_matching_spark.data import transcripts_df
+from poi_name_matching_spark.operators.scoring import ScoringConfig
+from poi_name_matching_spark.plans import pipeline as pipeline_mod
+from poi_name_matching_spark.plans.incremental import incremental_update
 from poi_name_matching_spark.plans.pipeline import PipelineConfig, run_pipeline
+from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 N = 220
 SEED = 33
+K = 3
 
 # native + UDF + df-map kernel coverage without the slowest semantic path
-KERNELS = ("levenshtein", "jaccard", "emb_cosine", "tfidf", "softtfidf")
+SCORING = ScoringConfig(
+    kernels=("levenshtein", "jaccard", "emb_cosine", "tfidf", "softtfidf"),
+    score_kernel="tfidf",
+)
 
 
-@pytest.fixture(scope="module")
-def scored_inputs(spark):
-    tdf = transcripts_df(spark, n_convs=N, seed=SEED)
-    sigs = build_signatures(tdf).cache()
-    pairs = candidate_pairs(block_keys(sigs, BlockingConfig()), BlockingConfig())
-    pairs = pairs.cache()
-    pairs.count()
-    return sigs, pairs
+def _cfg(d, chunks=K, scoring=SCORING):
+    return PipelineConfig(checkpoint_dir=d, scoring=scoring, scoring_chunks=chunks)
 
 
 def _as_sorted_rows(df):
-    return sorted(
-        tuple(r) for r in df.select(sorted(df.columns)).collect()
-    )
+    return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
 
 
-def test_chunked_equals_unchunked_exactly(spark, scored_inputs, tmp_path):
-    sigs, pairs = scored_inputs
-    cfg = ScoringConfig(kernels=KERNELS, score_kernel="tfidf")
-    base = score_pairs(spark, pairs, sigs, cfg)
-    chunked = score_pairs_chunked(
-        spark, pairs, sigs, cfg, n_chunks=3, staging_dir=str(tmp_path / "staging")
-    )
-    assert chunked.columns == base.columns
+@pytest.fixture(scope="module")
+def runs(spark, tmp_path_factory):
+    """One unchunked and one ``scoring_chunks=K`` run over the same
+    transcripts, each in its own checkpoint."""
+    root = tmp_path_factory.mktemp("chunked")
+    tdf = transcripts_df(spark, n_convs=N, seed=SEED)
+    plain = run_pipeline(spark, tdf, _cfg(root / "plain", chunks=1))
+    chunked = run_pipeline(spark, tdf, _cfg(root / "chunked"))
+    return tdf, root, plain, chunked
+
+
+@pytest.fixture
+def score_calls(monkeypatch):
+    """Counts the pipeline's ``score_pairs`` calls (one per chunk);
+    ``fail_at`` makes that call (0-based) raise, a crash in that chunk."""
+    calls = {"n": 0, "fail_at": None}
+    real = pipeline_mod.score_pairs
+
+    def counted(*args, **kwargs):
+        calls["n"] += 1
+        if calls["n"] - 1 == calls["fail_at"]:
+            raise RuntimeError("injected chunk failure")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline_mod, "score_pairs", counted)
+    return calls
+
+
+def _without_scores(src, dst):
+    """A copy of checkpoint ``src`` whose scores must be recomputed: the
+    upstream stages cache-hit, and so do the components once the scores
+    come out the same."""
+    shutil.copytree(src, dst)
+    shutil.rmtree(dst / "scores")
+    return dst
+
+
+def _inodes(path):
+    """{data file: inode} of one version's parquet directory."""
+    return {f: os.stat(path / f).st_ino for f in os.listdir(path) if f.startswith("part-")}
+
+
+def test_chunked_equals_unchunked_exactly(runs):
+    _, root, plain, chunked = runs
+    assert chunked.scores.columns == plain.scores.columns
     # bit-exact: same arithmetic on the same inputs per pair, so even the
     # float kernel columns must agree with NO tolerance
-    assert _as_sorted_rows(chunked) == _as_sorted_rows(base)
+    assert _as_sorted_rows(chunked.scores) == _as_sorted_rows(plain.scores)
+    assert _as_sorted_rows(chunked.components) == _as_sorted_rows(plain.components)
+    # the composed fingerprint of K commits equals the single write's
+    fp = [
+        StageCheckpoint(root / d).read_manifest("scores")["output_fingerprint"]
+        for d in ("plain", "chunked")
+    ]
+    assert fp[0] == fp[1]
 
 
-def test_chunk_assignment_partitions_the_pairs(spark, scored_inputs, tmp_path):
-    """Every pair lands in exactly one chunk (no dupes, no drops)."""
-    sigs, pairs = scored_inputs
-    cfg = ScoringConfig(kernels=("levenshtein",), score_kernel="levenshtein")
-    chunked = score_pairs_chunked(
-        spark, pairs, sigs, cfg, n_chunks=4, staging_dir=str(tmp_path / "staging")
+def test_pipeline_scoring_chunks_same_clusters_and_no_staging_residue(spark, runs):
+    """Each chunk is one commit of the scores stage: the K−1 partial
+    versions are retained snapshots hard-linked into the final one, the
+    final manifest carries the earlier chunks' walls, no staging copy
+    exists, and a rerun cache-hits the completed stage."""
+    tdf, root, _, _ = runs
+    ck = StageCheckpoint(root / "chunked")
+    final = ck.read_manifest("scores")
+    assert "partial_chunks" not in final
+    assert len(final["chunk_walls_s"]) == K - 1
+    assert all(w >= 0 for w in final["chunk_walls_s"])
+    partial = [m for m in ck.history("scores") if "partial_chunks" in m]
+    assert [m["partial_chunks"] for m in partial] == [
+        {"done": k, "of": K} for k in range(1, K)
+    ]
+    assert len(ck.history("scores")) == K
+    # every file of the last partial version is the same inode in the final
+    linked = _inodes(ck._data_path("scores", partial[-1]["version"]))
+    assert linked and linked.items() <= _inodes(ck._data_path("scores")).items()
+    assert not (root / "chunked" / "_scores_staging").exists()
+
+    rerun = run_pipeline(spark, tdf, _cfg(root / "chunked"))
+    assert "scores" in rerun.cached_stages
+
+
+def test_n_chunks_one_is_plain_score_pairs(runs):
+    """``scoring_chunks=1`` scores through one stage write, as before."""
+    _, root, _, _ = runs
+    ck = StageCheckpoint(root / "plain")
+    m = ck.read_manifest("scores")
+    assert "chunk_walls_s" not in m and "partial_chunks" not in m
+    assert "appended" not in m
+    assert len(ck.history("scores")) == 1
+
+
+def test_chunked_resume_skips_committed_chunks(spark, runs, tmp_path, score_calls):
+    """A failure in chunk k leaves k committed chunks behind a partial
+    scores version, which incremental_update and retune refuse; the
+    rerun scores only chunks k…K−1, hard-links the committed ones, and
+    equals a fresh run."""
+    tdf, root, plain, _ = runs
+    d = _without_scores(root / "plain", tmp_path / "ck")
+    score_calls["fail_at"] = 2
+    with pytest.raises(RuntimeError, match="injected"):
+        run_pipeline(spark, tdf, _cfg(d))
+    ck = StageCheckpoint(d)
+    assert ck.read_manifest("scores")["partial_chunks"] == {"done": 2, "of": K}
+    committed = _inodes(ck._data_path("scores"))
+
+    with pytest.raises(FileNotFoundError, match="'scores' is missing or unfinished"):
+        incremental_update(spark, tdf, _cfg(d))
+    proc = subprocess.run(
+        [sys.executable, "scripts/retune.py", "--checkpoint", str(d), "--truth-n", str(N)],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        timeout=120,
     )
-    n_pairs = pairs.count()
-    assert chunked.count() == n_pairs
-    assert (
-        chunked.select("left_id", "right_id").distinct().count() == n_pairs
-    )
+    assert proc.returncode == 3, proc.stderr[-2000:]
+    assert "unfinished" in proc.stdout
+
+    score_calls.update(n=0, fail_at=None)
+    resumed = run_pipeline(spark, tdf, _cfg(d))
+    assert score_calls["n"] == 1  # chunk 2 only
+    assert committed.items() <= _inodes(ck._data_path("scores")).items()
+    assert _as_sorted_rows(resumed.scores) == _as_sorted_rows(plain.scores)
+    assert _as_sorted_rows(resumed.components) == _as_sorted_rows(plain.components)
+    assert len(ck.read_manifest("scores")["chunk_walls_s"]) == K - 1
+    assert not (d / "_scores_staging").exists()
 
 
-def test_n_chunks_one_is_plain_score_pairs(spark, scored_inputs, tmp_path):
-    sigs, pairs = scored_inputs
-    cfg = ScoringConfig(kernels=("levenshtein",), score_kernel="levenshtein")
-    out = score_pairs_chunked(
-        spark, pairs, sigs, cfg, n_chunks=1, staging_dir=str(tmp_path / "staging")
-    )
-    assert out.count() == pairs.count()
-    # no staging write happens on the single-chunk path
-    assert not (tmp_path / "staging").exists()
+def test_chunked_resume_rejects_stale_token(spark, runs, tmp_path, score_calls):
+    """Partial chunks of another K or another scoring config are never
+    reused: the loop restarts at chunk 0."""
+    tdf, root, _, _ = runs
+    d = _without_scores(root / "plain", tmp_path / "ck")
+    cheap = ScoringConfig(kernels=("levenshtein",), score_kernel="levenshtein")
+    score_calls["fail_at"] = 1
+    with pytest.raises(RuntimeError, match="injected"):
+        run_pipeline(spark, tdf, _cfg(d, scoring=cheap))
+    ck = StageCheckpoint(d)
+    assert ck.read_manifest("scores")["partial_chunks"] == {"done": 1, "of": K}
+
+    # another K: the new loop starts at chunk 0 (a resume at chunk 1
+    # would have committed two chunks before the failure)
+    score_calls.update(n=0, fail_at=2)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_pipeline(spark, tdf, _cfg(d, chunks=K + 1, scoring=cheap))
+    assert ck.read_manifest("scores")["partial_chunks"] == {"done": 2, "of": K + 1}
+
+    # another scoring config under the same K: restarts too
+    other = ScoringConfig(kernels=("levenshtein", "jaccard"), score_kernel="levenshtein")
+    score_calls.update(n=0, fail_at=None)
+    out = run_pipeline(spark, tdf, _cfg(d, chunks=K + 1, scoring=other))
+    assert score_calls["n"] == K + 1
+    assert "jaccard" in out.scores.columns
+    assert out.scores.count() == ck.read_manifest("candidate_pairs")["rows"]
 
 
-def test_chunked_resume_skips_committed_chunks(spark, scored_inputs, tmp_path):
-    """Crash-resume: with a matching resume_token, committed chunks are
-    reused byte-for-byte; an uncommitted (no _SUCCESS) chunk — the crash
-    window — is recomputed, and the result equals the fresh run."""
-    import os
-
-    sigs, pairs = scored_inputs
-    cfg = ScoringConfig(kernels=("levenshtein", "tfidf"), score_kernel="tfidf")
-    staging = str(tmp_path / "staging")
-    base = score_pairs_chunked(
-        spark, pairs, sigs, cfg, n_chunks=3, staging_dir=staging,
-        resume_token="tok-a",
-    )
-    expected = _as_sorted_rows(base)
-
-    # simulate a crash mid-chunk-2: drop its commit marker and corrupt a file
-    c2 = os.path.join(staging, "chunk_2")
-    os.remove(os.path.join(c2, "_SUCCESS"))
-    part = next(p for p in os.listdir(c2) if p.endswith(".parquet"))
-    with open(os.path.join(c2, part), "wb") as f:
-        f.write(b"garbage")
-    committed_files = {
-        (d, p, os.path.getmtime(os.path.join(staging, d, p)))
-        for d in ("chunk_0", "chunk_1")
-        for p in os.listdir(os.path.join(staging, d))
-    }
-
-    resumed = score_pairs_chunked(
-        spark, pairs, sigs, cfg, n_chunks=3, staging_dir=staging,
-        resume_token="tok-a",
-    )
-    assert _as_sorted_rows(resumed) == expected
-    # committed chunks were not rewritten (same files, same mtimes)
-    assert committed_files == {
-        (d, p, os.path.getmtime(os.path.join(staging, d, p)))
-        for d in ("chunk_0", "chunk_1")
-        for p in os.listdir(os.path.join(staging, d))
-    }
-
-
-def test_chunked_resume_rejects_stale_token(spark, scored_inputs, tmp_path):
-    """A token mismatch (different inputs/config identity) or a chunk-count
-    mismatch must start clean — never reuse another identity's chunks."""
-    import os
-
-    sigs, pairs = scored_inputs
-    cfg = ScoringConfig(kernels=("levenshtein",), score_kernel="levenshtein")
-    staging = str(tmp_path / "staging")
-    score_pairs_chunked(
-        spark, pairs, sigs, cfg, n_chunks=2, staging_dir=staging,
-        resume_token="tok-a",
-    ).count()
-    mt0 = {
-        p: os.path.getmtime(os.path.join(staging, "chunk_0", p))
-        for p in os.listdir(os.path.join(staging, "chunk_0"))
-    }
-    out = score_pairs_chunked(
-        spark, pairs, sigs, cfg, n_chunks=2, staging_dir=staging,
-        resume_token="tok-B",
-    )
-    assert out.count() == pairs.count()
-    mt1 = {
-        p: os.path.getmtime(os.path.join(staging, "chunk_0", p))
-        for p in os.listdir(os.path.join(staging, "chunk_0"))
-    }
-    # every file was rewritten under the new identity
-    assert not (set(mt0.items()) & set(mt1.items()))
-    # and n_chunks drift likewise rebuilds (meta pins both)
-    out2 = score_pairs_chunked(
-        spark, pairs, sigs, cfg, n_chunks=3, staging_dir=staging,
-        resume_token="tok-B",
-    )
-    assert out2.count() == pairs.count()
-
-
-def test_n_chunks_validation(spark, scored_inputs, tmp_path):
-    sigs, pairs = scored_inputs
-    with pytest.raises(ValueError, match="n_chunks"):
-        score_pairs_chunked(
-            spark,
-            pairs,
-            sigs,
-            ScoringConfig(),
-            n_chunks=0,
-            staging_dir=str(tmp_path / "staging"),
-        )
-
-
-def test_pipeline_scoring_chunks_same_clusters_and_no_staging_residue(
-    spark, tmp_path
-):
-    tdf = transcripts_df(spark, n_convs=N, seed=SEED)
-    scoring = ScoringConfig(kernels=KERNELS, score_kernel="tfidf")
-    plain = run_pipeline(
-        spark,
-        tdf,
-        PipelineConfig(checkpoint_dir=tmp_path / "plain", scoring=scoring),
-    )
+def test_chunk_assignment_partitions_the_pairs(spark, tmp_path):
+    """More chunks than pairs: the empty chunks commit zero-row versions
+    and every pair still lands in exactly one chunk."""
+    tdf = transcripts_df(spark, n_convs=12, seed=SEED)
+    cheap = ScoringConfig(kernels=("levenshtein", "tfidf"), score_kernel="tfidf")
+    plain = run_pipeline(spark, tdf, _cfg(tmp_path / "plain", chunks=1, scoring=cheap))
     chunked = run_pipeline(
         spark,
         tdf,
         PipelineConfig(
             checkpoint_dir=tmp_path / "chunked",
-            scoring=scoring,
-            scoring_chunks=3,
+            scoring=cheap,
+            scoring_chunks=16,
+            expire_keep_last=None,  # keep every chunk's version to inspect
         ),
     )
+    n_pairs = plain.scores.count()
+    assert 0 < n_pairs < 16
     assert _as_sorted_rows(chunked.scores) == _as_sorted_rows(plain.scores)
-    assert _as_sorted_rows(chunked.components) == _as_sorted_rows(
-        plain.components
-    )
-    # the staging copy is dropped once the stage store committed
-    assert not (tmp_path / "chunked" / "_scores_staging").exists()
-    # ...but the chunk loop's compute walls survive in the manifest:
-    # write()'s own wall_ms starts AFTER compute() (the whole loop)
-    # returned, so reporting that ignored these would inflate scoring
-    # throughput by ~n_chunks× (observed 9,190 "pairs/s" vs a true ~320
-    # on the 2k smoke before this annotation existed)
-    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-    m = StageCheckpoint(tmp_path / "chunked").read_manifest("scores")
-    assert set(m["chunk_walls_s"]) == {"0", "1", "2"}
-    assert all(w >= 0 for w in m["chunk_walls_s"].values())
-    assert m["scoring_loop_wall_ms"] == int(
-        sum(m["chunk_walls_s"].values()) * 1000
-    )
-    # and the committed stage is a normal, resumable checkpoint
-    resumed = run_pipeline(
-        spark,
-        tdf,
-        PipelineConfig(
-            checkpoint_dir=tmp_path / "chunked",
-            scoring=scoring,
-            scoring_chunks=3,
-        ),
-    )
-    assert "scores" in resumed.cached_stages
-
-
-def test_annotate_manifest_reporting_only(spark, tmp_path):
-    """annotate_manifest merges reporting keys but refuses identity
-    fields — a typo'd annotation must never be able to corrupt the
-    resume contract (fingerprints, row counts)."""
-    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
-
-    ckpt = StageCheckpoint(tmp_path / "ck")
-    df = spark.range(5).withColumnRenamed("id", "conv_id")
-    ckpt.write("sigs", df, input_fingerprint="fp0")
-    before = ckpt.read_manifest("sigs")
-
-    ckpt.annotate_manifest("sigs", {"note_wall_ms": 123})
-    after = ckpt.read_manifest("sigs")
-    assert after["note_wall_ms"] == 123
-    for k in ("input_fingerprint", "output_fingerprint", "rows"):
-        assert after[k] == before[k]
-
-    with pytest.raises(ValueError, match="cannot alter"):
-        ckpt.annotate_manifest("sigs", {"rows": 0})
-    with pytest.raises(FileNotFoundError):
-        ckpt.annotate_manifest("nope", {"x": 1})
+    history = StageCheckpoint(tmp_path / "chunked").history("scores")
+    appended = [m["appended"]["rows"] for m in history if "appended" in m]
+    assert 0 in appended and sum(appended) + history[0]["rows"] == n_pairs

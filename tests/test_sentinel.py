@@ -4,9 +4,8 @@ Round-4 stored the lost-pipeline-checkpoint marker with local pathlib
 and silently DISABLED the guard for URI / non-local-defaultFS stream
 checkpoints — exactly the deployments where silent re-founding is most
 costly. The sentinel now goes through the Hadoop FileSystem API; these
-tests pin that it works for plain paths and explicit URIs, that the
-strict mode refuses to start un-guarded, and that the degraded
-fallbacks are the documented ones.
+tests pin that it works for plain paths and explicit URIs and that a
+stream without a reachable gateway refuses to start un-guarded.
 """
 
 from __future__ import annotations
@@ -17,7 +16,6 @@ import pytest
 
 from poi_name_matching_spark.streaming.sentinel import (
     HadoopSentinel,
-    LocalSentinel,
     make_sentinel,
 )
 
@@ -70,21 +68,10 @@ def test_sentinel_overwrite_and_reread(spark, tmp_path):
 
 
 def test_strict_raises_without_gateway(tmp_path):
+    """No gateway, no guard, no stream: the sentinel refuses to start
+    rather than let the stream re-found silently."""
     with pytest.raises(RuntimeError, match="founding guard"):
-        make_sentinel(_BrokenSpark(), str(tmp_path / "ck"), strict=True)
-
-
-def test_no_gateway_plain_path_falls_back_local(tmp_path):
-    s = make_sentinel(_BrokenSpark(), str(tmp_path / "ck"))
-    assert isinstance(s, LocalSentinel)
-    assert not s.exists()
-    s.write({"checkpoint_dir": "/pipe"})
-    assert s.exists()
-    assert (tmp_path / "ck" / "_pipeline_founded.json").exists()
-
-
-def test_no_gateway_uri_disables_guard(tmp_path):
-    assert make_sentinel(_BrokenSpark(), "hdfs://nn/stream/ck") is None
+        make_sentinel(_BrokenSpark(), str(tmp_path / "ck"))
 
 
 def test_guard_end_to_end_via_hadoop_sentinel(spark, tmp_path):
