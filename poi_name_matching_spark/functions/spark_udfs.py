@@ -15,6 +15,8 @@ The document-frequency map and embedder weights are shipped via
 
 from __future__ import annotations
 
+from array import array
+from collections import Counter
 from functools import lru_cache
 
 import numpy as np
@@ -137,82 +139,187 @@ def _jw_full(a: str, b: str) -> float:
     return kernels.jaro_winkler_similarity(a, b)
 
 
-# -- soft-TFIDF fast path: per-(term_x, y-term-tuple) winner cache ---------
+# -- soft-TFIDF fast path: the vocabulary's JW >= θ neighbour table --------
 #
-# The kernel's O(|x|·|y|) secondary loop repeats VERBATIM for every
-# candidate pair that shares a right signature (blocking gives each
-# signature ~several partners), and the winner for a given term_x
-# against a given ordered y-term set depends only on (term_x, y_terms,
-# threshold) — never on tf/df. Caching it turns the quadratic loop into
-# |x| dict lookups for all but the first pair per signature. Parity with
-# kernels.soft_tfidf_pair(+gated jw) is pinned by
-# test_blocking_scoring::test_scoring_matches_pure_python and
-# test_kernels parity cases (incl. shared 1-char tokens).
-_WINNER_CACHE: dict[tuple, dict] = {}
-_WINNER_CACHE_MAX = 1 << 15  # outer = distinct y signatures per worker
+# The kernel's secondary loop scores every (term_x, term_y) pair of
+# every candidate pair, yet at θ = 0.9 only a few term pairs per
+# thousand clear the threshold. The table holds exactly those pairs, so
+# the per-pair winner is a lookup of term_x's neighbours among the y
+# terms. Each worker fills the table's rows on first use, one per
+# distinct term_x it scores, against a character index of the df map's
+# vocabulary: a batch pays for the terms it scores, an incremental
+# commit only for its new pairs' terms, and no driver builds or ships a
+# vocabulary-squared table. Parity with kernels.soft_tfidf_pair(jw) is
+# pinned by test_kernels::TestJwNeighbourTable and
+# test_blocking_scoring::test_scoring_matches_pure_python.
+
+#: Winkler's boost is jw = jaro + l·p·(1 − jaro) for a common prefix of
+#: l <= 4 characters at p = 0.1, so it closes at most 0.4 of the gap to
+#: 1. At or below a threshold of 0.4 the neighbour bound prunes nothing.
+_JW_P, _JW_MAX_L = 0.1, 4
+_JW_MAX_BOOST = _JW_P * _JW_MAX_L
+#: slack on the float bound so it can only ever admit extra pairs
+_BOUND_EPS = 1e-9
 
 
-def _jw_winner(term_x: str, y_terms: tuple, threshold: float, ratio_bound: float):
-    """Reference strictly-improving max over y_terms in first-occurrence
-    order: best (term_y, score) with jw >= threshold, or (None, 0.0).
-    The length-ratio gate only skips pairs PROVABLY below threshold
-    (jaro <= (2 + min/max)/3 and jw <= 0.6*jaro + 0.4 at the full
-    4-char boost), so skipping is semantics-preserving."""
-    best_ty, best_score = None, 0.0
-    lx = len(term_x)
-    gate = ratio_bound > 0.0
-    for ty in y_terms:
-        if gate:
-            ly = len(ty)
-            lo, hi = (lx, ly) if lx < ly else (ly, lx)
-            if hi and lo / hi < ratio_bound:
+class JwNeighbours:
+    """The JW >= ``threshold`` neighbour table of a vocabulary, one row
+    per term, each computed on first use: ``table(a)`` is
+    ``{b: jw(a, b)}`` for every vocabulary term ``b != a`` with
+    ``jw(a, b) >= threshold``, where jw is
+    ``kernels.jaro_winkler_similarity`` called in that argument order.
+    ``a`` itself need not be in the vocabulary.
+
+    A sound candidate filter picks the terms to score. jw >= θ needs
+    jaro >= j(l) = (θ − 0.1·l)/(1 − 0.1·l) for the pair's common prefix
+    l <= 4, so at least j* = j(4) = (θ − 0.4)/0.6; and jaro <=
+    (M/la + M/lb + 1)/3 where M is the character-multiset overlap of the
+    two terms (the matches cannot exceed it). The vocabulary is sorted
+    by length and indexed by character (posting lists of term position
+    and count), so a row sums M over the postings of its own characters
+    only, within the length window that M <= min(la, lb) allows, and
+    scores only the terms whose bound clears j* and then the j(l) of
+    their own prefix. Memory is one posting entry per distinct
+    character of each term."""
+
+    def __init__(self, vocab, threshold: float):
+        if threshold <= _JW_MAX_BOOST:
+            raise ValueError(
+                f"the neighbour bound prunes nothing at threshold {threshold} <= "
+                f"{_JW_MAX_BOOST}; score with kernels.soft_tfidf_pair instead"
+            )
+        self.threshold = threshold
+        self._j_need = [
+            (threshold - _JW_P * l) / (1.0 - _JW_P * l) - _BOUND_EPS
+            for l in range(_JW_MAX_L + 1)
+        ]
+        self._j_star = self._j_need[_JW_MAX_L]
+        # jaro <= (2 + lo/hi)/3, so lo/hi >= 3·j* − 2
+        self._ratio = 3.0 * self._j_star - 2.0
+        # an empty term has jw 0 against anything
+        self._terms = sorted((t for t in set(vocab) if t), key=lambda t: (len(t), t))
+        self._lens = np.array([len(t) for t in self._terms], dtype=np.float64)
+        postings: dict[str, tuple[array, array]] = {}
+        for i, t in enumerate(self._terms):
+            for c, k in Counter(t).items():
+                at, n = postings.setdefault(c, (array("q"), array("i")))
+                at.append(i)
+                n.append(k)
+        self._postings = {
+            c: (np.frombuffer(at, dtype=np.int64), np.frombuffer(n, dtype=np.int32))
+            for c, (at, n) in postings.items()
+        }
+        self.rows: dict[str, dict[str, float]] = {}
+
+    def __call__(self, a: str) -> dict[str, float]:
+        row = self.rows.get(a)
+        if row is None:
+            row = self.rows[a] = self._row(a)
+        return row
+
+    def _row(self, a: str) -> dict[str, float]:
+        if not a or self._j_star > 1.0:
+            return {}
+        la = len(a)
+        lens = self._lens
+        if self._ratio > 0:
+            lo = int(np.searchsorted(lens, la * self._ratio, "left"))
+            hi = int(np.searchsorted(lens, la / self._ratio, "right"))
+        else:
+            lo, hi = 0, len(lens)
+        overlap = np.zeros(hi - lo, dtype=np.int32)
+        for c, k in Counter(a).items():
+            posting = self._postings.get(c)
+            if posting is None:
                 continue
-        s = _jw_cached(term_x, ty)
-        if s >= threshold and s > best_score:
-            best_ty, best_score = ty, s
-    return best_ty, best_score
+            at, n = posting
+            s, e = np.searchsorted(at, (lo, hi))
+            overlap[at[s:e] - lo] += np.minimum(n[s:e], k)
+        bound = (overlap / la + overlap / lens[lo:hi] + 1.0) / 3.0
+        jw = kernels.jaro_winkler_similarity
+        row = {}
+        for i in np.flatnonzero(bound >= self._j_star):
+            b = self._terms[lo + i]
+            prefix = next(
+                (k for k, (x, y) in enumerate(zip(a, b[:_JW_MAX_L])) if x != y),
+                min(la, len(b), _JW_MAX_L),
+            )
+            if b != a and bound[i] >= self._j_need[prefix]:
+                s = jw(a, b)
+                if s >= self.threshold:
+                    row[b] = s
+        return row
+
+
+#: the worker's table: {"vocab": df map, "table": JwNeighbours}. Module
+#: level like the caches above: a UDF's closure is unpickled afresh for
+#: every task, and the rows must outlive tasks (python worker reuse).
+_JW_TABLE: dict = {}
+
+
+def jw_neighbours(df_map, threshold: float) -> JwNeighbours | None:
+    """The worker's :class:`JwNeighbours` over ``df_map``'s terms, kept
+    for as long as the same df map object (a broadcast value) and
+    threshold come back, so its rows serve every batch, task and chunk
+    scored under that map; a df map must not change in place. ``None``
+    at a threshold of 0.4 or less, where soft-TFIDF runs the kernel."""
+    if threshold <= _JW_MAX_BOOST:
+        return None
+    table = _JW_TABLE.get("table")
+    if _JW_TABLE.get("vocab") is not df_map or table.threshold != threshold:
+        table = JwNeighbours(df_map, threshold)
+        _JW_TABLE.update(vocab=df_map, table=table)
+    return table
 
 
 def _soft_tfidf_jw_fast(
-    tokens_x: list,
-    tokens_y: list,
+    tokens_x,
+    tokens_y,
     df_map,
     corpus_size: int,
     threshold: float,
-    ratio_bound: float,
 ) -> float:
-    """kernels.soft_tfidf_pair specialized for the (cached, length-
-    gated) jaro-winkler secondary — identical semantics, winner loop
-    served from the worker-level cache."""
-    from collections import Counter
-    from math import sqrt
+    """kernels.soft_tfidf_pair with the jaro-winkler secondary, served
+    from :func:`jw_neighbours` — identical semantics: the winner is the
+    highest score, ties to the earliest y position. With no table (a
+    threshold of 0.4 or less) it runs the kernel.
 
+    A term_x missing from the df map gets no winner (the assembly skips
+    it); a y term missing from the df map has no row entry but can
+    still win, so it is scored directly."""
+    neighbours = jw_neighbours(df_map, threshold)
+    if neighbours is None:
+        return kernels.soft_tfidf_pair(
+            tokens_x, tokens_y, df_map, corpus_size, kernels.jaro_winkler_similarity, threshold
+        )
     if tokens_x == tokens_y:
         return 1.0
     if not tokens_x or not tokens_y:
         return 0.0
     tf_x, tf_y = Counter(tokens_x), Counter(tokens_y)
-    y_terms = tuple(tf_y)
-
-    # two-level cache: ONE y-tuple hash per pair, then per-term_x string
-    # gets (a flat (term_x, y_terms) key would re-hash the long y tuple
-    # on every term_x lookup and cost more than the loop it replaces)
-    if len(_WINNER_CACHE) > _WINNER_CACHE_MAX:
-        _WINNER_CACHE.clear()
-    y_cache = _WINNER_CACHE.setdefault((y_terms, threshold), {})
+    y_pos = {t: p for p, t in enumerate(tf_y)}
+    unseen = [t for t in tf_y if t not in df_map]
     similarity_map: dict[str, tuple] = {}
     for term_x in tf_x:
+        if term_x not in df_map:
+            continue
         # identical-term shortcut, multi-char only (jw("7","7")=0.1 —
         # see kernels.soft_tfidf_pair)
         if threshold <= 1.0 and len(term_x) > 1 and term_x in tf_y:
             similarity_map[term_x] = (term_x, term_x, 1.0)
             continue
-        w = y_cache.get(term_x)
-        if w is None:
-            w = _jw_winner(term_x, y_terms, threshold, ratio_bound)
-            y_cache[term_x] = w
-        if w[0] is not None:
-            similarity_map[term_x] = (term_x, w[0], w[1])
+        near = neighbours(term_x)
+        if len(near) <= len(y_pos):
+            hits = [(s, y_pos[ty], ty) for ty, s in near.items() if ty in y_pos]
+        else:
+            hits = [(near[ty], p, ty) for ty, p in y_pos.items() if ty in near]
+        for ty in unseen:
+            s = _jw_cached(term_x, ty)
+            if s >= threshold:
+                hits.append((s, y_pos[ty], ty))
+        if hits:
+            s, _, ty = min(hits, key=lambda h: (-h[0], h[1]))
+            similarity_map[term_x] = (term_x, ty, s)
 
     return _assemble_soft_tfidf(tf_x, tf_y, similarity_map, df_map, corpus_size)
 
@@ -254,6 +361,19 @@ def _assemble_soft_tfidf(tf_x, tf_y, similarity_map, df_map, corpus_size) -> flo
     if v_x_2 == 0 or v_y_2 == 0:
         return result
     return result / (sqrt(v_x_2) * sqrt(v_y_2))
+
+
+# -- semantic soft-TFIDF: per-(term_x, y-term-tuple) winner cache ----------
+#
+# The embedding gate can admit term pairs the character bound rejects,
+# so this path keeps its O(|x|·|y|) loop. It repeats VERBATIM for every
+# candidate pair that shares a right signature, and the winner for a
+# given term_x against a given ordered y-term set depends only on
+# (term_x, y_terms, thresholds, embedder) — never on tf/df. The scoring
+# join is sort-merged on right_id when this kernel is selected, so pairs
+# sharing a right signature meet on one worker.
+_WINNER_CACHE: dict[tuple, dict] = {}
+_WINNER_CACHE_MAX = 1 << 15  # outer = distinct y signatures per worker
 
 
 def _semantic_winner(
@@ -316,10 +436,7 @@ def _semantic_soft_tfidf_fast(
     emb_key: tuple,
 ) -> float:
     """kernels.semantic_soft_tfidf_pair with the winner loop served from
-    the worker-level cache (same co-location argument as
-    _soft_tfidf_jw_fast; parity pinned by the scoring tests)."""
-    from collections import Counter
-
+    the worker-level cache (parity pinned by the scoring tests)."""
     if tokens_x == tokens_y:
         return 1.0
     if not tokens_x or not tokens_y:
@@ -423,6 +540,12 @@ def make_sim_scores_udf(
     ``fields`` selects which of :data:`UDF_KERNELS` to compute; the
     kernels with a native expression (levenshtein, jaccard, emb cosine)
     run JVM-side in ``scoring.score_pairs`` and are refused here.
+
+    ``softtfidf`` looks its winners up in the worker's
+    :func:`jw_neighbours` table of the df map's terms; at a threshold of
+    0.4 or less there is no table and it runs ``kernels.soft_tfidf_pair``.
+    Semantic soft-TFIDF keeps its own loop: its embedding gate can admit
+    term pairs the table's character bound rejects.
     """
     unknown = [f for f in fields if f not in UDF_KERNELS]
     if unknown:
@@ -444,9 +567,9 @@ def make_sim_scores_udf(
         df_map = df_map_bc.value
         corpus_size = corpus_size_bc.value
 
-        # module-level caches: soft-TFIDF calls jw for every term pair
-        # (~|x|·|y| per row); a per-batch cache would re-warm on every
-        # Arrow batch, the worker-process-level one persists across
+        # module-level caches: semantic soft-TFIDF calls jw for every
+        # term pair (~|x|·|y| per row); a per-batch cache would re-warm on
+        # every Arrow batch, the worker-process-level one persists across
         # batches AND tasks (python worker reuse)
         jw = _jw_cached
         emb_cache = _EMB_CACHE.setdefault(embedder.cache_key(), {})
@@ -483,12 +606,7 @@ def make_sim_scores_udf(
                 cols["tfidf"][i] = kernels.tfidf_pair(ltoks, rtoks, df_map, corpus_size)
             if "softtfidf" in want:
                 cols["softtfidf"][i] = _soft_tfidf_jw_fast(
-                    ltoks,
-                    rtoks,
-                    df_map,
-                    corpus_size,
-                    softtfidf_threshold,
-                    3.0 * (softtfidf_threshold - 0.4) / 0.6 - 2.0,
+                    ltoks, rtoks, df_map, corpus_size, softtfidf_threshold
                 )
             if "semantic_softtfidf" in want:
                 # NO length gate here: a term pair rejected on the char

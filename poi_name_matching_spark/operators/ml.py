@@ -259,29 +259,6 @@ def train_random_forest(
     )
 
 
-def train_ensemble(
-    labeled_scores: DataFrame,
-    kinds: tuple[str, ...] = MODEL_KINDS,
-    feature_cols: list[str] | None = None,
-    label_col: str = "match",
-    seed: int = 0,
-    **estimator_kwargs,
-) -> dict[str, tuple]:
-    """All three reference models on the same deterministic split;
-    returns {kind: (model, test_predictions)}."""
-    return {
-        k: train_model(
-            labeled_scores,
-            kind=k,
-            feature_cols=feature_cols,
-            label_col=label_col,
-            seed=seed,
-            **estimator_kwargs,
-        )
-        for k in kinds
-    }
-
-
 def cross_validate(
     labeled_scores: DataFrame,
     feature_cols: list[str] | None = None,

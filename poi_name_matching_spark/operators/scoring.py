@@ -248,14 +248,17 @@ def score_pairs(
         F.col("tokens").alias("r_tokens"),
         *([F.col("emb").alias("r_emb")] if need_emb else []),
     )
-    # the SECOND join is hinted sort-merge: its shuffle leaves the UDF
+    # the SECOND join is hinted sort-merge, whatever the kernels. Its
+    # shuffle is what puts the UDF after an exchange, whose partitions
+    # udf_stage_parallelism splits by its row budget: an unhinted plan
+    # broadcasts the signatures up to ~40k conversations (~235 B a row
+    # against the 10 MB threshold) and runs the UDF in the pair scan's
+    # partitions, one per small pairs file. The shuffle also leaves the
     # input partitioned (and sorted) by right_id, co-locating every pair
-    # that shares a right signature — the soft-TFIDF winner caches then
-    # compute each (signature, term) loop exactly once per worker
-    # REGARDLESS of worker count (an unhinted plan may broadcast the
-    # signature side at small scale, scattering same-signature pairs and
-    # diluting hit rates as parallelism grows). At 100 TB both sides are
-    # big and this is the plan Catalyst picks anyway.
+    # that shares a right signature, so the semantic soft-TFIDF winner
+    # cache computes each (signature, term) loop once per worker
+    # REGARDLESS of worker count. At 100 TB both sides are big and this
+    # is the plan Catalyst picks anyway.
     joined = pairs.join(left, "left_id").join(right.hint("merge"), "right_id")
 
     # Exact-match semantics (reference parity): ONLY the tfidf/soft-TFIDF

@@ -630,7 +630,7 @@ class TestSoftTfidfSingleCharParity:
 
 class TestSemanticFastPathParity:
     """spark_udfs._semantic_soft_tfidf_fast / _soft_tfidf_jw_fast (the
-    winner-cache paths the scoring UDF ships) must be value-identical to
+    paths the scoring UDF ships) must be value-identical to
     the pure kernels, including the adversarial cases: shared 1-char
     tokens and embedder cosine-1.0 collisions (anagrams under the
     char-count embedder)."""
@@ -668,7 +668,6 @@ class TestSemanticFastPathParity:
         from poi_name_matching_spark.functions.spark_udfs import _soft_tfidf_jw_fast
 
         jw = kernels.jaro_winkler_similarity
-        rb = 3.0 * (0.9 - 0.4) / 0.6 - 2.0
         cases = [
             (["7", "elevn"], ["7", "eleven"]),
             (["park", "avenu"], ["park", "avenue"]),
@@ -679,9 +678,109 @@ class TestSemanticFastPathParity:
         ]
         for tx, ty in cases:
             dfm = kernels.build_document_frequency([tx, ty])
-            a = _soft_tfidf_jw_fast(tx, ty, dfm, 2, 0.9, rb)
+            a = _soft_tfidf_jw_fast(tx, ty, dfm, 2, 0.9)
             b = kernels.soft_tfidf_pair(tx, ty, dfm, 2, jw, 0.9)
-            assert a == pytest.approx(b, abs=1e-12), (tx, ty)
+            assert a == b, (tx, ty)
+
+
+def _near_vocab(rng, n_base: int) -> list[str]:
+    """Random short words over a 5-letter alphabet plus one-edit variants
+    of some of them: dense in JW-near pairs, with 1-character terms."""
+    alphabet = "abcde"
+    words = {"".join(rng.choices(alphabet, k=rng.randint(1, 9))) for _ in range(n_base)}
+    for w in sorted(words)[: n_base // 2]:
+        i = rng.randrange(len(w))
+        words.add(w[:i] + rng.choice(alphabet) + w[i + 1 :])
+        words.add(w + rng.choice(alphabet))
+    return sorted(words)
+
+
+class TestJwNeighbourTable:
+    """spark_udfs.JwNeighbours (the vocabulary's JW >= threshold table,
+    filled a row at a time) and the table-backed _soft_tfidf_jw_fast:
+    exact, with no tolerance, against brute force and
+    kernels.soft_tfidf_pair."""
+
+    THRESHOLDS = (0.41, 0.7, 0.9, 1.0, 1.01)
+
+    def test_rows_equal_brute_force(self):
+        import random
+
+        from poi_name_matching_spark.functions.spark_udfs import JwNeighbours
+
+        vocab = _near_vocab(random.Random(11), 200)[:300]
+        assert len(vocab) >= 250
+        # rows are asked for terms outside the vocabulary too, one with
+        # a character no vocabulary term has
+        queries = vocab + ["abcdz", "zz", "eeeeeeeeee", ""]
+        jw = kernels.jaro_winkler_similarity
+        scores = {(a, b): jw(a, b) for a in queries for b in vocab if a != b}
+        for th in self.THRESHOLDS:
+            table = JwNeighbours(vocab, th)
+            want: dict = {a: {} for a in queries}
+            for (a, b), s in scores.items():
+                if s >= th:
+                    want[a][b] = s
+            assert {a: table(a) for a in queries} == want, th
+        # the dense vocabulary does reach the lower thresholds
+        assert any(s >= 0.9 for s in scores.values())
+
+    def test_worker_table_kept_per_df_map_and_threshold(self):
+        from poi_name_matching_spark.functions.spark_udfs import JwNeighbours, jw_neighbours
+
+        with pytest.raises(ValueError, match="prunes nothing"):
+            JwNeighbours(["ab", "abc"], 0.4)
+        dfm = {"abcde": 1, "abcdx": 1}
+        assert jw_neighbours(dfm, 0.3) is None
+        table = jw_neighbours(dfm, 0.9)
+        assert table("abcde") == {"abcdx": kernels.jaro_winkler_similarity("abcde", "abcdx")}
+        assert jw_neighbours(dfm, 0.9) is table
+        assert jw_neighbours(dfm, 0.95).threshold == 0.95
+        assert jw_neighbours(dict(dfm), 0.95).threshold == 0.95
+        assert jw_neighbours(dfm, 0.9) is not table
+
+    def test_tie_goes_to_earliest_y_position(self):
+        from poi_name_matching_spark.functions.spark_udfs import _soft_tfidf_jw_fast
+
+        jw = kernels.jaro_winkler_similarity
+        assert jw("abcde", "abcdx") == jw("abcde", "abcdy") >= 0.9
+        # the tied y terms differ in df, so the winner shows in the score
+        dfm = {"abcde": 1, "abcdx": 1, "abcdy": 2, "q": 2}
+        tx = ["abcde", "q"]
+        got = []
+        for ty in (["abcdx", "abcdy", "q"], ["abcdy", "abcdx", "q"]):
+            got.append(_soft_tfidf_jw_fast(tx, ty, dfm, 3, 0.9))
+            assert got[-1] == kernels.soft_tfidf_pair(tx, ty, dfm, 3, jw, 0.9)
+        assert got[0] != got[1]
+
+    @pytest.mark.parametrize("threshold", (0.3, *THRESHOLDS))
+    def test_fast_path_equals_kernel_random(self, threshold):
+        import random
+
+        from poi_name_matching_spark.functions.spark_udfs import _soft_tfidf_jw_fast
+
+        rng = random.Random(int(threshold * 100))
+        vocab = _near_vocab(rng, 60)
+        docs = [rng.choices(vocab, k=rng.randint(0, 8)) for _ in range(120)]
+        # identical lists, repeated terms, a shared 1-char term
+        docs += [docs[1], docs[2] + docs[2], ["a", "abc"], ["a", "abd"]]
+        full = kernels.build_document_frequency(docs)
+        top = sorted(full.items(), key=lambda kv: (-kv[1], kv[0]))[: len(full) // 2]
+        # the production caps: min_df drops hapaxes, max_vocab keeps the
+        # top-K by df; either leaves terms of both sides off the map
+        maps = {
+            "full": full,
+            "min_df=2": {t: n for t, n in full.items() if n >= 2},
+            "max_vocab": dict(top),
+        }
+        jw = kernels.jaro_winkler_similarity
+        for name, dfm in maps.items():
+            for i in range(len(docs)):
+                for j in range(i, min(len(docs), i + 12)):
+                    tx, ty = docs[i], docs[j]
+                    got = _soft_tfidf_jw_fast(tx, ty, dfm, len(docs), threshold)
+                    want = kernels.soft_tfidf_pair(tx, ty, dfm, len(docs), jw, threshold)
+                    assert got == want, (name, tx, ty)
 
 
 def test_jaro_winkler_from_jaro_bit_identical():

@@ -57,9 +57,11 @@ def test_dimension_join_broadcasts(spark):
 
 
 def test_scoring_join_partitions_by_right_id(spark):
-    """The shipped scoring plan must sort-merge the right_id join (co-
-    location contract of the winner caches) — a silent downgrade to
-    broadcast would break cache-hit scaling."""
+    """The shipped scoring plan must sort-merge the right_id join for
+    every kernel set: a broadcast would run the scoring UDF in the pair
+    scan's partitions, out of reach of udf_stage_parallelism's row
+    budget, and would scatter the pairs that semantic soft-TFIDF's
+    winner cache needs co-located."""
     from poi_name_matching_spark.data import transcripts_df
     from poi_name_matching_spark.operators.blocking import block_keys, candidate_pairs
     from poi_name_matching_spark.operators.scoring import ScoringConfig, score_pairs
@@ -67,8 +69,10 @@ def test_scoring_join_partitions_by_right_id(spark):
 
     sigs = build_signatures(transcripts_df(spark, n_convs=60, seed=4))
     pairs = candidate_pairs(block_keys(sigs))
-    scores = score_pairs(
-        spark, pairs, sigs, ScoringConfig(kernels=("levenshtein", "tfidf"))
-    )
-    plan = _formatted(scores)
-    assert "SortMergeJoin" in plan
+    for kernels in (
+        ("levenshtein", "tfidf"),
+        ("emb_cosine", "softtfidf"),
+        ("levenshtein", "semantic_softtfidf"),
+    ):
+        cfg = ScoringConfig(kernels=kernels, score_kernel=kernels[1])
+        assert "SortMergeJoin" in _formatted(score_pairs(spark, pairs, sigs, cfg)), kernels
