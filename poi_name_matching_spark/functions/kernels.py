@@ -1,9 +1,11 @@
 """Similarity kernels with exact parity to the reference formulas.
 
 Pure Python/numpy — no Spark imports. These run inside Arrow-vectorized
-pandas UDFs (see ``spark_udfs``); where Spark has a native expression
-(levenshtein, jaccard-over-arrays, haversine trig) the hot path uses the
-JVM expression and these serve as the parity oracle in tests.
+pandas UDFs (see ``spark_udfs``) or serve as the parity oracle in tests
+where the hot path has its own form: a native expression (embedding
+cosine, haversine trig) or a per-batch one in ``spark_udfs``
+(levenshtein's bit-parallel edit distance, jaccard's per-text token
+sets).
 
 Reference sources:
 * levenshtein_similarity   — ``load_data/character_based_func.py:15-34``

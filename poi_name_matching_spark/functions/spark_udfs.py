@@ -3,11 +3,15 @@
 Two tiers, chosen per SURVEY.md §2.7:
 
 * **Native Column expressions** where Catalyst has a built-in — these stay
-  inside WholeStageCodegen (levenshtein, token-set jaccard, haversine,
-  embedding cosine). Used on the hot path.
-* **Arrow-vectorized pandas UDFs** for kernels with no JVM builtin
-  (canonical tokenizer with stemming, jaro/jaro-winkler, tf-idf /
-  soft-TFIDF family, embeddings). No per-row Python UDFs anywhere.
+  inside WholeStageCodegen (embedding cosine, haversine, and the
+  levenshtein and whitespace-token expressions the contract queries use).
+* **Arrow-vectorized pandas UDFs** for the rest (canonical tokenizer
+  with stemming, embeddings, and the scoring suite). No per-row Python
+  UDFs anywhere. The scoring UDF computes levenshtein as one
+  bit-parallel edit distance per Arrow batch and jaccard from one token
+  set per distinct text, which costs less per pair than Spark's scalar
+  ``levenshtein`` and a per-pair regex split; jaro/jaro-winkler, cosine
+  and the tf-idf / soft-TFIDF family run per row.
 
 The document-frequency map and embedder weights are shipped via
 ``SparkContext.broadcast`` (SURVEY.md §4.3) — never captured per-row.
@@ -36,7 +40,7 @@ from pyspark.sql.types import (
 
 from . import kernels
 from .embedding import HashEmbedder
-from .tokenize import WS_CLASS, tokenize_name
+from .tokenize import WS_CLASS, tokenize_name, tokenize_on_space
 
 # --------------------------------------------------------------------------
 # Native Column expressions (JVM, WholeStageCodegen)
@@ -45,21 +49,13 @@ from .tokenize import WS_CLASS, tokenize_name
 
 def levenshtein_sim(c1: Column, c2: Column) -> Column:
     """K1 as a native expression: 1 - levenshtein/max(len); exact parity
-    with ``character_based_func.py:15-34``."""
+    with ``character_based_func.py:15-34``. The contract queries
+    ``k_char_kernels_pairs`` and ``score_block_pairs_lev`` use it; the
+    scoring UDF computes the same column per Arrow batch."""
     dist = F.levenshtein(c1, c2)
     max_len = F.greatest(F.length(c1), F.length(c2))
     return F.when(max_len == 0, F.lit(1.0)).otherwise(
         F.lit(1.0) - dist.cast("double") / max_len.cast("double")
-    )
-
-
-def jaccard_tokens(a: Column, b: Column) -> Column:
-    """K5 over token arrays: |A ∩ B| / |A ∪ B| with set semantics
-    (``token_based_func.py:150-172``)."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union == 0, F.lit(1.0)).otherwise(
-        inter.cast("double") / union.cast("double")
     )
 
 
@@ -514,9 +510,207 @@ def make_embed_udf(embedder: HashEmbedder):
     return embed_udf
 
 
+# -- levenshtein and jaccard, once per Arrow batch -------------------------
+#
+# Levenshtein is Myers' bit-parallel edit distance (JACM 1999) in
+# Hyyrö's multi-word form (2001): each 64-bit word holds the vertical
+# deltas of 64 pattern rows, so a text character advances a column in
+# ceil(m/64) word steps instead of m cells. numpy runs every step over
+# all the pairs of a sub-batch at once. Pairs are sorted by text length,
+# so the pairs still running are a suffix of the sub-batch and the
+# finished ones keep their last column. The distance is then read off
+# that column: D[m][n] = n + (+1 deltas) − (−1 deltas).
+
+_U1, _U63 = np.uint64(1), np.uint64(63)
+_ONES = np.uint64(0xFFFFFFFFFFFFFFFF)
+_POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
+#: bytes a sub-batch may spend on its match table and text index
+_LEV_SUB_BATCH_BYTES = 16 << 20
+
+
+def _code_points(texts) -> np.ndarray:
+    return np.frombuffer("".join(texts).encode("utf-32-le"), dtype=np.uint32)
+
+
+def _popcount(x: np.ndarray) -> np.ndarray:
+    return _POPCOUNT8[x.view(np.uint8)].reshape(*x.shape, 8).sum(axis=-1)
+
+
+def _myers(peq: np.ndarray, text: np.ndarray, m: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Edit distances of one sub-batch sorted by text length ``n``.
+    ``peq[w, c]`` is the match mask of pattern word ``w`` for row ``c``
+    of the flattened (pair, character) alphabet; ``text[j, i]`` is the
+    row of pair ``i``'s ``j``-th text character."""
+    N, W = len(m), peq.shape[0]
+    words = (m + 63) // 64
+    # words still needed once the pairs before k have finished
+    w_left = np.maximum.accumulate(words[::-1])[::-1]
+    first = np.searchsorted(n, np.arange(int(n[-1])), "right")
+    vp = np.full((W, N), _ONES)
+    vn = np.zeros((W, N), dtype=np.uint64)
+    x, d0, hp, hn, cp, cn, op, on = (np.empty(N, dtype=np.uint64) for _ in range(8))
+    for j in range(int(n[-1])):
+        k = int(first[j])
+        a = N - k
+        tj = text[j, k:]
+        xa, d, p, q = x[:a], d0[:a], hp[:a], hn[:a]
+        in_p, in_n, out_p, out_n = cp[:a], cn[:a], op[:a], on[:a]
+        w_end = int(w_left[k])
+        for w in range(w_end):
+            v, u = vp[w, k:], vn[w, k:]
+            np.take(peq[w], tj, out=xa)
+            if w:
+                # a −1 horizontal delta out of the word below
+                np.bitwise_or(xa, in_n, out=xa)
+            np.bitwise_and(xa, v, out=d)
+            np.add(d, v, out=d)
+            np.bitwise_xor(d, v, out=d)
+            np.bitwise_or(d, xa, out=d)
+            np.bitwise_or(d, u, out=d)
+            np.bitwise_or(d, v, out=p)
+            np.invert(p, out=p)
+            np.bitwise_or(p, u, out=p)
+            np.bitwise_and(d, v, out=q)
+            if w + 1 < w_end:
+                np.right_shift(p, _U63, out=out_p)
+                np.right_shift(q, _U63, out=out_n)
+            np.left_shift(p, _U1, out=p)
+            np.left_shift(q, _U1, out=q)
+            if w:
+                np.bitwise_or(p, in_p, out=p)
+                np.bitwise_or(q, in_n, out=q)
+            else:
+                # row 0 of the matrix is 0, 1, 2, …: every column's top
+                # horizontal delta is +1
+                np.bitwise_or(p, _U1, out=p)
+            np.bitwise_or(d, p, out=v)
+            np.invert(v, out=v)
+            np.bitwise_or(v, q, out=v)
+            np.bitwise_and(p, d, out=u)
+            in_p, out_p = out_p, in_p
+            in_n, out_n = out_n, in_n
+    bits = m[None, :] - 64 * np.arange(W)[:, None]
+    mask = np.where(bits >= 64, _ONES, (_U1 << np.clip(bits, 0, 63).astype(np.uint64)) - _U1)
+    return n + _popcount(vp & mask).sum(axis=0) - _popcount(vn & mask).sum(axis=0)
+
+
+def levenshtein_distances(left, right) -> np.ndarray:
+    """``kernels.levenshtein_distance`` of every pair ``(left[i],
+    right[i])``, as int64, over code points like Spark's
+    ``levenshtein``.
+
+    The shorter text of a pair is the pattern. The pairs are sorted by
+    the longer text's length and cut into sub-batches whose match table
+    (pairs × alphabet × pattern words) and text index stay within
+    ``_LEV_SUB_BATCH_BYTES``. The alphabet is the characters of the
+    batch's patterns; a text character outside it matches nothing."""
+    pats, texts = [], []
+    for a, b in zip(left, right):
+        if len(a) > len(b):
+            a, b = b, a
+        pats.append(a)
+        texts.append(b)
+    m = np.fromiter(map(len, pats), dtype=np.int64, count=len(pats))
+    n = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+    out = n.copy()  # an empty pattern is len(text) insertions
+    order = np.flatnonzero(m)
+    if not len(order):
+        return out
+    order = order[np.argsort(n[order], kind="stable")]
+    pats = [pats[i] for i in order]
+    texts = [texts[i] for i in order]
+    m, n = m[order], n[order]
+    pc, tc = _code_points(pats), _code_points(texts)
+    in_alphabet = np.zeros(0x110000, dtype=np.int32)
+    in_alphabet[pc] = 1
+    tc_hit = in_alphabet[tc] == 1
+    rank = np.cumsum(in_alphabet, dtype=np.int32) - 1
+    size = int(rank[-1]) + 1
+    pc, tc = rank[pc], rank[tc]
+    W = int((m.max() + 63) // 64)
+    step = max(1, _LEV_SUB_BATCH_BYTES // (8 * (W * size + int(n[-1]))))
+    p_off = np.concatenate(([0], np.cumsum(m)))
+    t_off = np.concatenate(([0], np.cumsum(n)))
+    for s in range(0, len(order), step):
+        e = min(s + step, len(order))
+        sm, sn = m[s:e], n[s:e]
+        pair = np.repeat(np.arange(e - s), sm)
+        pos = np.arange(len(pair)) - np.repeat(p_off[s:e] - p_off[s], sm)
+        miss = (e - s) * size
+        peq = np.zeros((int((sm.max() + 63) // 64), miss + 1), dtype=np.uint64)
+        np.bitwise_or.at(
+            peq,
+            (pos >> 6, pair * size + pc[p_off[s] : p_off[e]]),
+            _U1 << (pos & 63).astype(np.uint64),
+        )
+        pair = np.repeat(np.arange(e - s), sn)
+        pos = np.arange(len(pair)) - np.repeat(t_off[s:e] - t_off[s], sn)
+        text = np.full((int(sn[-1]), e - s), miss, dtype=np.intp)
+        text[pos, pair] = np.where(
+            tc_hit[t_off[s] : t_off[e]], pair * size + tc[t_off[s] : t_off[e]], miss
+        )
+        out[order[s:e]] = _myers(peq, text, sm, sn)
+    return out
+
+
+def _levenshtein_column(left: pd.Series, right: pd.Series) -> np.ndarray:
+    """K1 per Arrow batch: ``1 - d/max_len`` in double, in the order of
+    the native expression ``levenshtein_sim`` (so bit-identical to it),
+    1.0 for two empty texts and NULL (NaN) when either text is NULL."""
+    out = np.full(len(left), np.nan)
+    ok = np.flatnonzero(left.notna().to_numpy() & right.notna().to_numpy())
+    a, b = left.to_numpy()[ok], right.to_numpy()[ok]
+    max_len = np.maximum(
+        np.fromiter(map(len, a), dtype=np.int64, count=len(a)),
+        np.fromiter(map(len, b), dtype=np.int64, count=len(b)),
+    )
+    dist = levenshtein_distances(a, b)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = 1.0 - dist.astype(np.float64) / max_len.astype(np.float64)
+    out[ok] = np.where(max_len == 0, 1.0, sims)
+    return out
+
+
+def _jaccard_column(left: pd.Series, right: pd.Series) -> list:
+    """K5 per Arrow batch: ``|A ∩ B| / |A ∪ B|`` over the whitespace
+    token sets of the raw texts (``kernels.jaccard_similarity``), 1.0
+    when both are empty and NULL when either text is NULL. Each distinct
+    text is split once per batch; the pairs arrive sorted by right_id,
+    so a right signature recurs in a run."""
+    sets: dict[str, frozenset] = {}
+
+    def token_set(text: str) -> frozenset:
+        s = sets.get(text)
+        if s is None:
+            s = sets[text] = frozenset(tokenize_on_space(text))
+        return s
+
+    out = []
+    for a, b in zip(left, right):
+        if a is None or b is None:
+            out.append(None)
+            continue
+        x, y = token_set(a), token_set(b)
+        inter = len(x & y)
+        union = len(x) + len(y) - inter
+        out.append(inter / union if union else 1.0)
+    return out
+
+
 #: kernels with no native JVM expression: the fields ``make_sim_scores_udf``
 #: computes
-UDF_KERNELS = ["jaro", "jaro_winkler", "cosine", "tfidf", "softtfidf", "semantic_softtfidf"]
+UDF_KERNELS = [
+    "levenshtein",
+    "jaccard",
+    "jaro",
+    "jaro_winkler",
+    "cosine",
+    "tfidf",
+    "softtfidf",
+    "semantic_softtfidf",
+]
+#: the UDF kernels computed per batch rather than per row
+_BATCH_KERNELS = {"levenshtein": _levenshtein_column, "jaccard": _jaccard_column}
 
 
 def make_sim_scores_udf(
@@ -538,8 +732,11 @@ def make_sim_scores_udf(
     corpus document-frequency map (SURVEY.md A3) and distinct-doc count.
 
     ``fields`` selects which of :data:`UDF_KERNELS` to compute; the
-    kernels with a native expression (levenshtein, jaccard, emb cosine)
-    run JVM-side in ``scoring.score_pairs`` and are refused here.
+    embedding cosine runs JVM-side in ``scoring.score_pairs`` and is
+    refused here. ``levenshtein`` and ``jaccard`` are computed once per
+    Arrow batch (:func:`levenshtein_distances` over all its pairs, one
+    token set per distinct text) and are NULL when either text is NULL;
+    the other kernels run per row and read a NULL text as empty.
 
     ``softtfidf`` looks its winners up in the worker's
     :func:`jw_neighbours` table of the df map's terms; at a threshold of
@@ -583,6 +780,8 @@ def make_sim_scores_udf(
 
         n = len(left_text)
         cols: dict[str, list] = {f: [0.0] * n for f in fields}
+        for f in want & _BATCH_KERNELS.keys():
+            cols[f] = _BATCH_KERNELS[f](left_text, right_text)
         for i in range(n):
             lt, rt = left_text.iloc[i] or "", right_text.iloc[i] or ""
             ltoks = list(left_tokens.iloc[i]) if left_tokens.iloc[i] is not None else []

@@ -29,10 +29,11 @@ one pass. Our stage is the latter, distributed:
   signatures side is the big one; the joins are sort-merge with AQE, and
   the scoring itself is a narrow map afterwards.
 
-Native (WholeStageCodegen) kernels: levenshtein, token-set jaccard,
-embedding cosine, count-cosine denominator-free guards. Python-only
-kernels (jaro, jaro-winkler, tf-idf, soft-TFIDF family) run in one
-Arrow-vectorized pandas UDF.
+The one native (WholeStageCodegen) kernel is the embedding cosine. The
+others run in one Arrow-vectorized pandas UDF: levenshtein (a
+bit-parallel edit distance over each Arrow batch) and token-set jaccard
+(one token set per distinct text) per batch, then jaro, jaro-winkler,
+count cosine, tf-idf and the soft-TFIDF family per row.
 """
 
 from __future__ import annotations
@@ -47,17 +48,15 @@ from ..functions.embedding import HashEmbedder
 from ..functions.spark_udfs import (
     UDF_KERNELS,
     cosine_array,
-    jaccard_tokens,
-    levenshtein_sim,
     make_embed_udf,
     make_sim_scores_udf,
-    whitespace_tokens,
 )
 
 #: kernels with a native JVM expression (stay in codegen)
-NATIVE_KERNELS = ["levenshtein", "jaccard", "emb_cosine"]
+NATIVE_KERNELS = ["emb_cosine"]
 
-ALL_KERNELS = NATIVE_KERNELS + UDF_KERNELS
+#: every kernel, in the scores stage's column order
+ALL_KERNELS = UDF_KERNELS[:2] + NATIVE_KERNELS + UDF_KERNELS[2:]
 
 #: kernels whose formula consumes the corpus df map — only these make
 #: score_pairs pay for the df-map build (full-corpus dedup + driver
@@ -271,20 +270,13 @@ def score_pairs(
     # feature build does (ml_similarity_metrics.py:55-59): "Joe's Pizza"
     # vs "joes pizza" has equal tokens but levenshtein < 1.0. A previous
     # structural bypass here set every kernel to literal 1.0 for
-    # equal-token pairs, corrupting the ML feature matrix.
+    # equal-token pairs, corrupting the ML feature matrix. Jaccard splits
+    # the RAW text on whitespace, not the canonical normalizer
+    # (token_based_func.py:150); the UDF splits each distinct text once.
     kernel_cols = list(cfg.kernels)
     udf_fields = [k for k in kernel_cols if k in UDF_KERNELS]
     scored = joined
     native_exprs: dict[str, F.Column] = {}
-    if "levenshtein" in kernel_cols:
-        native_exprs["levenshtein"] = levenshtein_sim(F.col("l_text"), F.col("r_text"))
-    if "jaccard" in kernel_cols:
-        # reference default tokenizer for jaccard is whitespace split of
-        # the RAW text, not the canonical normalizer (token_based_func.py:150)
-        native_exprs["jaccard"] = jaccard_tokens(
-            F.array_distinct(whitespace_tokens(F.col("l_text"))),
-            F.array_distinct(whitespace_tokens(F.col("r_text"))),
-        )
     if "emb_cosine" in kernel_cols:
         native_exprs["emb_cosine"] = cosine_array(F.col("l_emb"), F.col("r_emb"))
 
@@ -329,6 +321,12 @@ def udf_stage_parallelism(spark: SparkSession):
     (+59%) at local[16] on the 130k-pair fixture when scoped to 1 MB.
     At 100 TB the same rule holds: partition UDF stages by row/compute
     budget, not bytes; relational stages keep the session default.
+
+    The scope splits only a shuffle larger than ``UDF_ADVISORY_BYTES``.
+    Smaller ones are still coalesced into one partition: on the
+    600-conversation perfbench workloads (up to ~2,600 pairs) the
+    scoring UDF runs in one task per job, since a traced run shows
+    ``stage.scores.tasks`` equal to ``stage.scores.jobs``.
 
     Nested scopes: each scope saves the value it finds and restores it on
     exit, so an inner exit puts back the outer scope's advisory value and

@@ -144,8 +144,8 @@ def test_scoring_equal_token_pairs_reference_semantics(spark, sigs):
         # char kernels: honest values on the raw texts
         exp_lev = kernels.levenshtein_similarity(row["ltext"], row["rtext"])
         exp_jac = kernels.jaccard_similarity(row["ltext"], row["rtext"])
-        assert row["levenshtein"] == pytest.approx(exp_lev, abs=1e-12)
-        assert row["jaccard"] == pytest.approx(exp_jac, abs=1e-12)
+        assert row["levenshtein"] == exp_lev
+        assert row["jaccard"] == exp_jac
         if row["ltext"] == row["rtext"]:
             assert row["levenshtein"] == 1.0
             assert row["jaccard"] == 1.0
@@ -173,8 +173,8 @@ def test_scoring_matches_pure_python(spark, sigs):
         # reference semantics: char kernels honest on raw text even for
         # equal-token pairs; only the hybrid family short-circuits (and
         # kernels.soft_tfidf_pair does so internally)
-        assert r["levenshtein"] == pytest.approx(exp_lev, abs=1e-9)
-        assert r["jaccard"] == pytest.approx(exp_jac, abs=1e-9)
+        assert r["levenshtein"] == exp_lev
+        assert r["jaccard"] == exp_jac
         assert r["jaro_winkler"] == pytest.approx(exp_jw, abs=1e-9)
         assert r["softtfidf"] == pytest.approx(exp_soft, abs=1e-9)
         exp_tfidf = (
@@ -182,6 +182,75 @@ def test_scoring_matches_pure_python(spark, sigs):
         )
         assert r["tfidf"] == pytest.approx(exp_tfidf, abs=1e-9)
         assert r["score"] == pytest.approx(r["tfidf"], abs=1e-12)
+
+
+def test_batch_char_kernels_equal_native_expressions(spark):
+    """score_pairs' levenshtein and jaccard, computed per Arrow batch in
+    the scoring UDF, equal the native expressions they replaced with no
+    tolerance: levenshtein_sim (Spark's levenshtein over code points) and
+    the size(array_intersect)/size(array_union) Jaccard over the
+    whitespace split. A NULL text on either side gives NULL in both."""
+    from poi_name_matching_spark.functions.spark_udfs import (
+        levenshtein_sim,
+        whitespace_tokens,
+    )
+
+    long_a = "north harbour cafe " * 40
+    texts = {
+        "empty": "",
+        "blank": " \t\u00a0\u2028 ",
+        "blank2": "  ",
+        "emoji": "caf\u00e9 \U0001F600 z\u00fcrich \U0001F355\U0001F355",
+        "emoji2": "cafe \U0001F600 zurich \U0001F355",
+        "cjk": "\u5317\u4eac \u70e4\u9e2d \u5e97",
+        "long_a": long_a,
+        "long_b": long_a.replace("cafe", "caf\u00e9", 7) + "\U0001F600",
+        "w64": "x" * 63 + " y",
+        "nul": None,
+    }
+    sigs = spark.createDataFrame(
+        [(k, v, None if v is None else v.split()) for k, v in texts.items()],
+        "conv_id string, sig_text string, tokens array<string>",
+    )
+    ids = sorted(texts)
+    pairs = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids], "left_id string, right_id string"
+    )
+    cfg = ScoringConfig(kernels=("levenshtein", "jaccard"), score_kernel="levenshtein")
+    got = {
+        (r["left_id"], r["right_id"]): (r["levenshtein"], r["jaccard"])
+        for r in score_pairs(spark, pairs, sigs, cfg).collect()
+    }
+
+    def toks(c):
+        return F.array_distinct(whitespace_tokens(c))
+
+    ltext, rtext = F.col("l.sig_text"), F.col("r.sig_text")
+    union = F.size(F.array_union(toks(ltext), toks(rtext)))
+    jac = F.when(union == 0, F.lit(1.0)).otherwise(
+        F.size(F.array_intersect(toks(ltext), toks(rtext))).cast("double")
+        / union.cast("double")
+    )
+    native = {
+        (x["left_id"], x["right_id"]): (x["lev"], x["jac"])
+        for x in pairs.join(sigs.alias("l"), F.col("left_id") == F.col("l.conv_id"))
+        .join(sigs.alias("r"), F.col("right_id") == F.col("r.conv_id"))
+        .select(
+            "left_id", "right_id", levenshtein_sim(ltext, rtext).alias("lev"), jac.alias("jac")
+        )
+        .collect()
+    }
+    assert len(got) == len(ids) ** 2
+    for (a, b), (lev, jac) in got.items():
+        if "nul" in (a, b):
+            # levenshtein_sim alone reads (NULL, "") as two empty texts:
+            # greatest() skips the NULL length
+            assert lev is None and jac is None
+        else:
+            assert (lev, jac) == native[(a, b)]
+            assert lev == kernels.levenshtein_similarity(texts[a], texts[b])
+            assert jac == kernels.jaccard_similarity(texts[a], texts[b])
+    assert got[("emoji", "emoji2")][0] < 1.0 and got[("blank", "empty")] == (0.0, 1.0)
 
 
 def test_duplicates_score_above_operating_point(spark, sigs):

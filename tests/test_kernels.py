@@ -37,6 +37,76 @@ class TestLevenshtein:
     def test_empty(self):
         assert kernels.levenshtein_distance("", "abc") == 3
 
+    @pytest.mark.parametrize("sub_batch_bytes", [None, 1 << 16])
+    def test_batched_equals_reference(self, monkeypatch, sub_batch_bytes):
+        """spark_udfs.levenshtein_distances (bit-parallel, one call per
+        batch) equals the dynamic program on every pair of one batch that
+        mixes lengths: empty, whitespace-only and identical texts,
+        non-ASCII BMP and supplementary-plane characters, patterns at and
+        across the 64-bit word edges and over 700 characters, either side
+        the longer; random texts and near copies (small distances). The
+        second run cuts the batch into sub-batches of a few pairs."""
+        import random
+
+        from poi_name_matching_spark.functions import spark_udfs
+
+        if sub_batch_bytes is not None:
+            monkeypatch.setattr(spark_udfs, "_LEV_SUB_BATCH_BYTES", sub_batch_bytes)
+        rng = random.Random(12)
+        alphabet = "ab c\tdé\u00a0中\U0001F600\U0001F355"
+
+        def text(n):
+            return "".join(rng.choice(alphabet) for _ in range(n))
+
+        def near(s):
+            out = list(s)
+            for _ in range(rng.randint(1, 6)):
+                i = rng.randint(0, len(out))
+                op = rng.randrange(3)
+                if op == 0 or not out:
+                    out.insert(i, rng.choice(alphabet))
+                elif op == 1:
+                    del out[min(i, len(out) - 1)]
+                else:
+                    out[min(i, len(out) - 1)] = rng.choice(alphabet)
+            return "".join(out)
+
+        lengths = (0, 1, 2, 63, 64, 65, 127, 128, 129, 700, 731)
+        pairs = [("", ""), ("   ", "\t \n"), (" ", ""), ("same", "same"), ("\U0001F600", "x")]
+        for la in lengths:
+            a = text(la)
+            pairs.append((a, a))
+            pairs.append((a, near(a)))
+            pairs += [(a, text(lb)) for lb in lengths]
+        rng.shuffle(pairs)
+        left, right = zip(*pairs)
+        got = spark_udfs.levenshtein_distances(left, right)
+        want = [kernels.levenshtein_distance(a, b) for a, b in pairs]
+        assert got.tolist() == want
+
+    def test_batch_columns_null_and_empty(self):
+        """The scoring UDF's per-batch levenshtein and jaccard columns:
+        NULL (NaN / None) when either text is NULL, 1.0 for two empty
+        texts, otherwise the reference kernels exactly."""
+        import pandas as pd
+
+        from poi_name_matching_spark.functions.spark_udfs import (
+            _jaccard_column,
+            _levenshtein_column,
+        )
+
+        left = pd.Series(["", None, "a b", "park \U0001F600 pizza", "x", None], dtype=object)
+        right = pd.Series(["", "a", None, "park pizza \U0001F600 ", "x y x", None], dtype=object)
+        lev = _levenshtein_column(left, right)
+        jac = _jaccard_column(left, right)
+        for i, (a, b) in enumerate(zip(left, right)):
+            if a is None or b is None:
+                assert math.isnan(lev[i]) and jac[i] is None
+            else:
+                assert lev[i] == kernels.levenshtein_similarity(a, b)
+                assert jac[i] == kernels.jaccard_similarity(a, b)
+        assert lev[0] == jac[0] == 1.0
+
 
 class TestJaro:
     def test_identical(self):
@@ -397,13 +467,14 @@ class TestEmbedder:
         assert got == pytest.approx(expected, abs=1e-6)
 
     def test_scoring_udf_refuses_native_kernels(self):
-        """The kernels with a native expression are computed JVM-side
-        only; asking the scoring UDF for one raises."""
+        """The kernel with a native expression (emb_cosine) is computed
+        JVM-side only; asking the scoring UDF for it, or for an unknown
+        kernel, raises."""
         from poi_name_matching_spark.functions.spark_udfs import (
             make_sim_scores_udf,
         )
 
-        for field in ("levenshtein", "jaccard", "emb_cosine", "nope"):
+        for field in ("emb_cosine", "nope"):
             with pytest.raises(ValueError, match="cannot compute"):
                 make_sim_scores_udf(None, None, HashEmbedder(), fields=["tfidf", field])
 
