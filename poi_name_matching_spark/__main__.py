@@ -88,14 +88,14 @@ def main(argv: list[str] | None = None) -> int:
     else:
         p.error("one of --input / --n-convs is required")
 
-    from poi_name_matching_spark.operators.scoring import ALL_KERNELS
+    from poi_name_matching_spark.operators.scoring import KERNELS
 
     presets = {
         "north": (
             "levenshtein", "jaccard", "jaro_winkler",
             "emb_cosine", "tfidf", "softtfidf",
         ),
-        "all": tuple(ALL_KERNELS),
+        "all": tuple(KERNELS),
     }
     kernels = presets.get(args.kernels) or tuple(args.kernels.split(","))
 

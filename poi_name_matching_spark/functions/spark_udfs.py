@@ -1,17 +1,15 @@
 """Spark bindings for the kernel library.
 
-Two tiers, chosen per SURVEY.md §2.7:
-
-* **Native Column expressions** where Catalyst has a built-in — these stay
-  inside WholeStageCodegen (embedding cosine, haversine, and the
-  levenshtein and whitespace-token expressions the contract queries use).
-* **Arrow-vectorized pandas UDFs** for the rest (canonical tokenizer
-  with stemming, embeddings, and the scoring suite). No per-row Python
-  UDFs anywhere. The scoring UDF computes levenshtein as one
-  bit-parallel edit distance per Arrow batch and jaccard from one token
-  set per distinct text, which costs less per pair than Spark's scalar
-  ``levenshtein`` and a per-pair regex split; jaro/jaro-winkler, cosine
-  and the tf-idf / soft-TFIDF family run per row.
+* **Arrow-vectorized pandas UDFs** (SURVEY.md §2.7) for the canonical
+  tokenizer with stemming, the embeddings ``ml.assemble_features``
+  reads, and the scoring suite: all nine kernels in one UDF pass. No
+  per-row Python UDFs anywhere. Per Arrow batch, levenshtein is one
+  bit-parallel edit distance over all its pairs, jaccard reads one
+  token set per distinct text and the embedding cosine one vector per
+  distinct token list; jaro/jaro-winkler, cosine and the tf-idf /
+  soft-TFIDF family run per row.
+* **Native Column expressions** for the contract queries only:
+  haversine, levenshtein and the whitespace-token split.
 
 The document-frequency map and embedder weights are shipped via
 ``SparkContext.broadcast`` (SURVEY.md §4.3) — never captured per-row.
@@ -51,10 +49,12 @@ def levenshtein_sim(c1: Column, c2: Column) -> Column:
     """K1 as a native expression: 1 - levenshtein/max(len); exact parity
     with ``character_based_func.py:15-34``. The contract queries
     ``k_char_kernels_pairs`` and ``score_block_pairs_lev`` use it; the
-    scoring UDF computes the same column per Arrow batch."""
+    scoring UDF computes the same column per Arrow batch. NULL when
+    either text is NULL: the test is on the distance, which is NULL
+    then, not on ``greatest``, which skips a NULL length."""
     dist = F.levenshtein(c1, c2)
     max_len = F.greatest(F.length(c1), F.length(c2))
-    return F.when(max_len == 0, F.lit(1.0)).otherwise(
+    return F.when(dist == 0, F.lit(1.0)).otherwise(
         F.lit(1.0) - dist.cast("double") / max_len.cast("double")
     )
 
@@ -87,21 +87,6 @@ def haversine_meters(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> 
     )
     c = 2 * F.atan2(F.sqrt(a), F.sqrt(F.lit(1.0) - a))
     return c * F.lit(6371.0 * 1000.0)
-
-
-def cosine_array(a: Column, b: Column) -> Column:
-    """Embedding cosine over two array<float|double> columns, JVM-side via
-    higher-order functions (K15 without leaving codegen)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n1 = F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
-    n2 = F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x)
-    return F.when((n1 == 0) | (n2 == 0), F.lit(0.0)).otherwise(
-        dot / (F.sqrt(n1) * F.sqrt(n2))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -697,11 +682,52 @@ def _jaccard_column(left: pd.Series, right: pd.Series) -> list:
     return out
 
 
-#: kernels with no native JVM expression: the fields ``make_sim_scores_udf``
-#: computes
-UDF_KERNELS = [
+def _emb_cosine_column(left: pd.Series, right: pd.Series, embedder) -> np.ndarray:
+    """K15 per Arrow batch over the two token columns. Each distinct
+    token list is embedded once and cast to float32, as
+    :func:`make_embed_udf` writes it (zeros for NULL or no tokens).
+    The cosine keeps the arithmetic of Spark's ``aggregate`` over
+    ``zip_with``: float32 component products summed in order in double
+    from 0.0, and 0.0 when either norm is 0."""
+    index: dict[tuple, int] = {}
+    vecs = []
+
+    def row(toks) -> int:
+        key = () if toks is None else tuple(toks)
+        i = index.get(key)
+        if i is None:
+            i = index[key] = len(vecs)
+            vecs.append(
+                embedder.embed_text("", tokens=list(key))
+                if key
+                else np.zeros(embedder.dim, dtype=np.float32)
+            )
+        return i
+
+    li = np.fromiter(map(row, left), dtype=np.intp, count=len(left))
+    ri = np.fromiter(map(row, right), dtype=np.intp, count=len(right))
+    v = np.array(vecs, dtype=np.float32).reshape(len(vecs), embedder.dim)
+
+    def fold(products: np.ndarray) -> np.ndarray:
+        # np.add.accumulate adds left to right, where sum() would pair;
+        # + 0.0 is the fold's start, which turns a -0.0 sum into 0.0
+        return np.add.accumulate(products.astype(np.float64), axis=1)[:, -1] + 0.0
+
+    norms = fold(v * v)
+    dot = fold(v[li] * v[ri])
+    n1, n2 = norms[li], norms[ri]
+    out = np.zeros(len(li))
+    ok = (n1 != 0) & (n2 != 0)
+    out[ok] = dot[ok] / (np.sqrt(n1[ok]) * np.sqrt(n2[ok]))
+    return out
+
+
+#: every kernel ``make_sim_scores_udf`` computes, in the scores stage's
+#: column order
+KERNELS = [
     "levenshtein",
     "jaccard",
+    "emb_cosine",
     "jaro",
     "jaro_winkler",
     "cosine",
@@ -709,7 +735,7 @@ UDF_KERNELS = [
     "softtfidf",
     "semantic_softtfidf",
 ]
-#: the UDF kernels computed per batch rather than per row
+#: the text kernels computed per batch rather than per row
 _BATCH_KERNELS = {"levenshtein": _levenshtein_column, "jaccard": _jaccard_column}
 
 
@@ -731,12 +757,12 @@ def make_sim_scores_udf(
     ``df_map_bc`` / ``corpus_size_bc`` are SparkContext broadcasts of the
     corpus document-frequency map (SURVEY.md A3) and distinct-doc count.
 
-    ``fields`` selects which of :data:`UDF_KERNELS` to compute; the
-    embedding cosine runs JVM-side in ``scoring.score_pairs`` and is
-    refused here. ``levenshtein`` and ``jaccard`` are computed once per
-    Arrow batch (:func:`levenshtein_distances` over all its pairs, one
-    token set per distinct text) and are NULL when either text is NULL;
-    the other kernels run per row and read a NULL text as empty.
+    ``fields`` selects which of :data:`KERNELS` to compute. Three are
+    computed once per Arrow batch: ``levenshtein`` and ``jaccard``
+    (:func:`levenshtein_distances` over all its pairs, one token set per
+    distinct text), NULL when either text is NULL, and ``emb_cosine``
+    (one embedding per distinct token list). The other kernels run per
+    row and read a NULL text as empty.
 
     ``softtfidf`` looks its winners up in the worker's
     :func:`jw_neighbours` table of the df map's terms; at a threshold of
@@ -744,12 +770,9 @@ def make_sim_scores_udf(
     Semantic soft-TFIDF keeps its own loop: its embedding gate can admit
     term pairs the table's character bound rejects.
     """
-    unknown = [f for f in fields if f not in UDF_KERNELS]
+    unknown = [f for f in fields if f not in KERNELS]
     if unknown:
-        raise ValueError(
-            f"make_sim_scores_udf cannot compute {unknown}; it computes "
-            f"{UDF_KERNELS}"
-        )
+        raise ValueError(f"unknown kernel(s) {unknown}; available: {KERNELS}")
     fields = list(fields)
     schema = StructType([StructField(f, DoubleType()) for f in fields])
     want = set(fields)
@@ -782,6 +805,8 @@ def make_sim_scores_udf(
         cols: dict[str, list] = {f: [0.0] * n for f in fields}
         for f in want & _BATCH_KERNELS.keys():
             cols[f] = _BATCH_KERNELS[f](left_text, right_text)
+        if "emb_cosine" in want:
+            cols["emb_cosine"] = _emb_cosine_column(left_tokens, right_tokens, embedder)
         for i in range(n):
             lt, rt = left_text.iloc[i] or "", right_text.iloc[i] or ""
             ltoks = list(left_tokens.iloc[i]) if left_tokens.iloc[i] is not None else []

@@ -10,11 +10,11 @@ one pass. Our stage is the latter, distributed:
   explode/groupBy and broadcast to executors — never recomputed per pair
   (the reference's restricted-softtfidf recomputes it per pair, an
   anti-pattern we must not port — SURVEY.md §4.2).
-* **Embeddings are computed once per signature** (distinct conv), not per
-  pair: a pandas-UDF projection on the signatures table, then carried
-  through the pair join; pair-level cosine is a native JVM higher-order
-  expression. The reference re-embeds per pair (``semantic_soft_tfidf.py:
-  92-93``) — same anti-pattern class.
+* **Embeddings are computed once per distinct token list of an Arrow
+  batch**, not per pair, inside the scoring UDF; the pairs arrive sorted
+  by right_id, so a right signature's pairs share one vector. The
+  reference re-embeds per pair (``semantic_soft_tfidf.py:92-93``) —
+  same anti-pattern class.
 * **Exact-match short-circuit**: the reference returns 1.0 from the
   tfidf/soft-TFIDF family when the two token lists are equal
   (``test_hybrid_func.py:58-60``) — and ONLY from that family; the
@@ -29,11 +29,11 @@ one pass. Our stage is the latter, distributed:
   signatures side is the big one; the joins are sort-merge with AQE, and
   the scoring itself is a narrow map afterwards.
 
-The one native (WholeStageCodegen) kernel is the embedding cosine. The
-others run in one Arrow-vectorized pandas UDF: levenshtein (a
-bit-parallel edit distance over each Arrow batch) and token-set jaccard
-(one token set per distinct text) per batch, then jaro, jaro-winkler,
-count cosine, tf-idf and the soft-TFIDF family per row.
+Every kernel runs in one Arrow-vectorized pandas UDF: levenshtein (a
+bit-parallel edit distance over each Arrow batch), token-set jaccard
+(one token set per distinct text) and the embedding cosine (one vector
+per distinct token list) per batch, then jaro, jaro-winkler, count
+cosine, tf-idf and the soft-TFIDF family per row.
 """
 
 from __future__ import annotations
@@ -45,18 +45,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.embedding import HashEmbedder
-from ..functions.spark_udfs import (
-    UDF_KERNELS,
-    cosine_array,
-    make_embed_udf,
-    make_sim_scores_udf,
-)
-
-#: kernels with a native JVM expression (stay in codegen)
-NATIVE_KERNELS = ["emb_cosine"]
-
-#: every kernel, in the scores stage's column order
-ALL_KERNELS = UDF_KERNELS[:2] + NATIVE_KERNELS + UDF_KERNELS[2:]
+from ..functions.spark_udfs import KERNELS, make_embed_udf, make_sim_scores_udf
 
 #: kernels whose formula consumes the corpus df map — only these make
 #: score_pairs pay for the df-map build (full-corpus dedup + driver
@@ -87,7 +76,7 @@ class ScoringConfig:
     0.4 (``semantic_soft_tfidf.py:324``) remains the operating point for
     name-like labeled pairs (parity tests)."""
 
-    kernels: tuple[str, ...] = tuple(ALL_KERNELS)
+    kernels: tuple[str, ...] = tuple(KERNELS)
     score_kernel: str = "tfidf"           # reference kernel suited to long signatures
     threshold: float = 0.425              # reference's evaluated tf-idf best-F1 threshold
     softtfidf_threshold: float = 0.9      # ml_similarity_metrics.py:61
@@ -206,17 +195,6 @@ def score_pairs(
     actually consumes it (:data:`DF_MAP_KERNELS`) — a char-kernels-only
     config pays no full-corpus dedup, no driver collect, no broadcast.
     """
-    unknown = [k for k in cfg.kernels if k not in ALL_KERNELS]
-    if unknown:
-        raise ValueError(
-            f"unknown kernel(s) {unknown}; available: {list(ALL_KERNELS)}"
-        )
-    if cfg.score_kernel not in cfg.kernels:
-        raise ValueError(
-            f"score_kernel {cfg.score_kernel!r} is not among the "
-            f"selected kernels {list(cfg.kernels)} — the score column "
-            "must be one of the computed kernel columns"
-        )
     if embedder is None:
         embedder = HashEmbedder(dim=cfg.embed_dim, seed=cfg.embed_seed)
     if df_map_bc is None or corpus_size_bc is None:
@@ -229,23 +207,32 @@ def score_pairs(
             # full-corpus df query and the broadcast entirely
             sc = spark.sparkContext
             df_map_bc, corpus_size_bc = sc.broadcast({}), sc.broadcast(0)
+    # the UDF refuses an unknown kernel, before the score_kernel check
+    suite = make_sim_scores_udf(
+        df_map_bc,
+        corpus_size_bc,
+        embedder,
+        softtfidf_threshold=cfg.softtfidf_threshold,
+        semantic_char_threshold=cfg.semantic_char_threshold,
+        semantic_threshold=cfg.semantic_threshold,
+        fields=list(cfg.kernels),
+    )
+    if cfg.score_kernel not in cfg.kernels:
+        raise ValueError(
+            f"score_kernel {cfg.score_kernel!r} is not among the "
+            f"selected kernels {list(cfg.kernels)} — the score column "
+            "must be one of the computed kernel columns"
+        )
 
-    need_emb = "emb_cosine" in cfg.kernels
-    sig = attach_embeddings(signatures, embedder) if need_emb else signatures
-    sig_cols = ["conv_id", "sig_text", "tokens"] + (["emb"] if need_emb else [])
-    sig = sig.select(*sig_cols)
-
-    left = sig.select(
+    left = signatures.select(
         F.col("conv_id").alias("left_id"),
         F.col("sig_text").alias("l_text"),
         F.col("tokens").alias("l_tokens"),
-        *([F.col("emb").alias("l_emb")] if need_emb else []),
     )
-    right = sig.select(
+    right = signatures.select(
         F.col("conv_id").alias("right_id"),
         F.col("sig_text").alias("r_text"),
         F.col("tokens").alias("r_tokens"),
-        *([F.col("emb").alias("r_emb")] if need_emb else []),
     )
     # the SECOND join is hinted sort-merge, whatever the kernels. Its
     # shuffle is what puts the UDF after an exchange, whose partitions
@@ -273,37 +260,12 @@ def score_pairs(
     # equal-token pairs, corrupting the ML feature matrix. Jaccard splits
     # the RAW text on whitespace, not the canonical normalizer
     # (token_based_func.py:150); the UDF splits each distinct text once.
-    kernel_cols = list(cfg.kernels)
-    udf_fields = [k for k in kernel_cols if k in UDF_KERNELS]
-    scored = joined
-    native_exprs: dict[str, F.Column] = {}
-    if "emb_cosine" in kernel_cols:
-        native_exprs["emb_cosine"] = cosine_array(F.col("l_emb"), F.col("r_emb"))
-
-    if udf_fields:
-        suite = make_sim_scores_udf(
-            df_map_bc,
-            corpus_size_bc,
-            embedder,
-            softtfidf_threshold=cfg.softtfidf_threshold,
-            semantic_char_threshold=cfg.semantic_char_threshold,
-            semantic_threshold=cfg.semantic_threshold,
-            fields=udf_fields,
-        )
-        scored = scored.withColumn(
-            "_s",
-            suite(
-                F.col("l_text"), F.col("r_text"), F.col("l_tokens"), F.col("r_tokens")
-            ),
-        )
-
-    select_cols = [F.col("left_id"), F.col("right_id")]
-    for k in kernel_cols:
-        if k in native_exprs:
-            select_cols.append(native_exprs[k].alias(k))
-        else:
-            select_cols.append(F.col(f"_s.{k}").alias(k))
-    out = scored.select(*select_cols)
+    scored = joined.withColumn(
+        "_s", suite(F.col("l_text"), F.col("r_text"), F.col("l_tokens"), F.col("r_tokens"))
+    )
+    out = scored.select(
+        "left_id", "right_id", *(F.col(f"_s.{k}").alias(k) for k in cfg.kernels)
+    )
     return out.withColumn("score", F.col(cfg.score_kernel))
 
 

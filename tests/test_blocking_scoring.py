@@ -184,16 +184,23 @@ def test_scoring_matches_pure_python(spark, sigs):
         assert r["score"] == pytest.approx(r["tfidf"], abs=1e-12)
 
 
-def test_batch_char_kernels_equal_native_expressions(spark):
-    """score_pairs' levenshtein and jaccard, computed per Arrow batch in
-    the scoring UDF, equal the native expressions they replaced with no
-    tolerance: levenshtein_sim (Spark's levenshtein over code points) and
-    the size(array_intersect)/size(array_union) Jaccard over the
-    whitespace split. A NULL text on either side gives NULL in both."""
+def test_batch_char_kernels_equal_native_expressions(spark, tmp_path):
+    """score_pairs' levenshtein, jaccard and emb_cosine, computed per
+    Arrow batch in the scoring UDF, equal the native expressions they
+    replaced with no tolerance: levenshtein_sim (Spark's levenshtein
+    over code points), the size(array_intersect)/size(array_union)
+    Jaccard over the whitespace split, and the zip_with/aggregate cosine
+    over attach_embeddings' array<float> column, for the default and two
+    file-backed embedders. A NULL text on either side gives NULL in the
+    first two, natively too; NULL or no tokens give an emb_cosine of 0."""
+    import numpy as np
+
+    from poi_name_matching_spark.functions.embedding import HashEmbedder
     from poi_name_matching_spark.functions.spark_udfs import (
         levenshtein_sim,
         whitespace_tokens,
     )
+    from poi_name_matching_spark.operators.scoring import attach_embeddings
 
     long_a = "north harbour cafe " * 40
     texts = {
@@ -216,41 +223,72 @@ def test_batch_char_kernels_equal_native_expressions(spark):
     pairs = spark.createDataFrame(
         [(a, b) for a in ids for b in ids], "left_id string, right_id string"
     )
-    cfg = ScoringConfig(kernels=("levenshtein", "jaccard"), score_kernel="levenshtein")
-    got = {
-        (r["left_id"], r["right_id"]): (r["levenshtein"], r["jaccard"])
-        for r in score_pairs(spark, pairs, sigs, cfg).collect()
-    }
+    cfg = ScoringConfig(
+        kernels=("levenshtein", "jaccard", "emb_cosine"), score_kernel="levenshtein"
+    )
+    path = tmp_path / "m.npz"
+    rng = np.random.default_rng(9)
+    np.savez(path, weights=rng.standard_normal((128, 12)).astype(np.float32))
+    # components spread over 12 decades: a double sum of their products
+    # then depends on its order, which must be the JVM fold's
+    wide = tmp_path / "wide.npz"
+    w = rng.standard_normal((128, 64)) * 10.0 ** rng.uniform(-6, 6, (128, 64))
+    np.savez(wide, weights=w.astype(np.float32))
 
     def toks(c):
         return F.array_distinct(whitespace_tokens(c))
 
     ltext, rtext = F.col("l.sig_text"), F.col("r.sig_text")
     union = F.size(F.array_union(toks(ltext), toks(rtext)))
-    jac = F.when(union == 0, F.lit(1.0)).otherwise(
+    jac_expr = F.when(union == 0, F.lit(1.0)).otherwise(
         F.size(F.array_intersect(toks(ltext), toks(rtext))).cast("double")
         / union.cast("double")
     )
-    native = {
-        (x["left_id"], x["right_id"]): (x["lev"], x["jac"])
-        for x in pairs.join(sigs.alias("l"), F.col("left_id") == F.col("l.conv_id"))
-        .join(sigs.alias("r"), F.col("right_id") == F.col("r.conv_id"))
-        .select(
-            "left_id", "right_id", levenshtein_sim(ltext, rtext).alias("lev"), jac.alias("jac")
-        )
-        .collect()
-    }
-    assert len(got) == len(ids) ** 2
-    for (a, b), (lev, jac) in got.items():
-        if "nul" in (a, b):
-            # levenshtein_sim alone reads (NULL, "") as two empty texts:
-            # greatest() skips the NULL length
-            assert lev is None and jac is None
-        else:
-            assert (lev, jac) == native[(a, b)]
-            assert lev == kernels.levenshtein_similarity(texts[a], texts[b])
-            assert jac == kernels.jaccard_similarity(texts[a], texts[b])
-    assert got[("emoji", "emoji2")][0] < 1.0 and got[("blank", "empty")] == (0.0, 1.0)
+    lemb, remb = F.col("l.emb"), F.col("r.emb")
+    dot = F.aggregate(
+        F.zip_with(lemb, remb, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+    n1 = F.aggregate(lemb, F.lit(0.0), lambda acc, x: acc + x * x)
+    n2 = F.aggregate(remb, F.lit(0.0), lambda acc, x: acc + x * x)
+    cos_expr = F.when((n1 == 0) | (n2 == 0), F.lit(0.0)).otherwise(
+        dot / (F.sqrt(n1) * F.sqrt(n2))
+    )
+    no_tokens = {"empty", "blank", "blank2", "nul"}
+    for embedder in (
+        HashEmbedder(dim=cfg.embed_dim, seed=cfg.embed_seed),
+        HashEmbedder.from_weights(str(path)),
+        HashEmbedder.from_weights(str(wide)),
+    ):
+        got = {
+            (r["left_id"], r["right_id"]): (r["levenshtein"], r["jaccard"], r["emb_cosine"])
+            for r in score_pairs(spark, pairs, sigs, cfg, embedder=embedder).collect()
+        }
+        esigs = attach_embeddings(sigs, embedder)
+        native = {
+            (x["left_id"], x["right_id"]): (x["lev"], x["jac"], x["cos"])
+            for x in pairs.join(esigs.alias("l"), F.col("left_id") == F.col("l.conv_id"))
+            .join(esigs.alias("r"), F.col("right_id") == F.col("r.conv_id"))
+            .select(
+                "left_id",
+                "right_id",
+                levenshtein_sim(ltext, rtext).alias("lev"),
+                jac_expr.alias("jac"),
+                cos_expr.alias("cos"),
+            )
+            .collect()
+        }
+        assert len(got) == len(ids) ** 2
+        for (a, b), (lev, jac, emb_cos) in got.items():
+            assert (lev, jac, emb_cos) == native[(a, b)]
+            if no_tokens & {a, b}:
+                assert emb_cos == 0.0
+            if "nul" in (a, b):
+                assert lev is None and jac is None and native[(a, b)][0] is None
+            else:
+                assert lev == kernels.levenshtein_similarity(texts[a], texts[b])
+                assert jac == kernels.jaccard_similarity(texts[a], texts[b])
+        assert got[("emoji", "emoji2")][0] < 1.0 and got[("blank", "empty")][:2] == (0.0, 1.0)
+        assert got[("emoji", "emoji2")][2] > 0.0 and got[("long_a", "long_b")][2] > 0.0
 
 
 def test_duplicates_score_above_operating_point(spark, sigs):

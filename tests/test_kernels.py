@@ -436,9 +436,9 @@ class TestEmbedder:
         assert pickle.loads(pickle.dumps(e3)).cache_key() == e3.cache_key()
 
     def test_from_weights_drives_score_pairs(self, spark, tmp_path):
-        """File-backed embedder through ``score_pairs``: the embedding
-        UDF and the native cosine give the driver-side emb_cosine on the
-        same weights."""
+        """File-backed embedder through ``score_pairs``: the scoring
+        UDF's cosine gives the driver-side emb_cosine on the same
+        weights."""
         import numpy as np
 
         from poi_name_matching_spark.operators.scoring import (
@@ -462,21 +462,18 @@ class TestEmbedder:
         expected = kernels.cosine_vec(
             *(np.asarray(emb.embed_text("", tokens=toks[c]), np.float64) for c in "ab")
         )
-        # the native cosine multiplies the float32 components in float32
+        # the scoring UDF multiplies the float32 components in float32
         # before summing in double
         assert got == pytest.approx(expected, abs=1e-6)
 
-    def test_scoring_udf_refuses_native_kernels(self):
-        """The kernel with a native expression (emb_cosine) is computed
-        JVM-side only; asking the scoring UDF for it, or for an unknown
-        kernel, raises."""
+    def test_scoring_udf_refuses_unknown_kernel(self):
+        """Asking the scoring UDF for a kernel it does not know raises."""
         from poi_name_matching_spark.functions.spark_udfs import (
             make_sim_scores_udf,
         )
 
-        for field in ("emb_cosine", "nope"):
-            with pytest.raises(ValueError, match="cannot compute"):
-                make_sim_scores_udf(None, None, HashEmbedder(), fields=["tfidf", field])
+        with pytest.raises(ValueError, match="unknown kernel"):
+            make_sim_scores_udf(None, None, HashEmbedder(), fields=["tfidf", "nope"])
 
 
 # ---------------------------------------------------------------------------

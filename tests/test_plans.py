@@ -76,3 +76,27 @@ def test_scoring_join_partitions_by_right_id(spark):
     ):
         cfg = ScoringConfig(kernels=kernels, score_kernel=kernels[1])
         assert "SortMergeJoin" in _formatted(score_pairs(spark, pairs, sigs, cfg)), kernels
+
+
+def test_scoring_plan_evaluates_one_python_udf(spark, tmp_path):
+    """The six-kernel scoring plan over stored signatures and pairs, as
+    a pipeline run scores them, has one Python evaluation: the scoring
+    UDF computes every kernel, emb_cosine included, so no embedding UDF
+    runs under either join side."""
+    from poi_name_matching_spark.data import transcripts_df
+    from poi_name_matching_spark.operators.blocking import block_keys, candidate_pairs
+    from poi_name_matching_spark.operators.scoring import ScoringConfig, score_pairs
+    from poi_name_matching_spark.operators.signatures import build_signatures
+
+    build_signatures(transcripts_df(spark, n_convs=60, seed=4)).write.parquet(
+        str(tmp_path / "sigs")
+    )
+    sigs = spark.read.parquet(str(tmp_path / "sigs"))
+    candidate_pairs(block_keys(sigs)).write.parquet(str(tmp_path / "pairs"))
+    pairs = spark.read.parquet(str(tmp_path / "pairs"))
+    kernels = ("levenshtein", "jaccard", "jaro_winkler", "emb_cosine", "tfidf", "softtfidf")
+    scores = score_pairs(spark, pairs, sigs, ScoringConfig(kernels=kernels))
+    plan = scores._jdf.queryExecution().explainString(
+        scores._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    )
+    assert plan.count("ArrowEvalPython") == 1, plan
