@@ -9,7 +9,7 @@
   distinct token list; jaro/jaro-winkler, cosine and the tf-idf /
   soft-TFIDF family run per row.
 * **Native Column expressions** for the contract queries only:
-  haversine, levenshtein and the whitespace-token split.
+  haversine and the whitespace-token split.
 
 The document-frequency map and embedder weights are shipped via
 ``SparkContext.broadcast`` (SURVEY.md §4.3) — never captured per-row.
@@ -43,20 +43,6 @@ from .tokenize import WS_CLASS, tokenize_name, tokenize_on_space
 # --------------------------------------------------------------------------
 # Native Column expressions (JVM, WholeStageCodegen)
 # --------------------------------------------------------------------------
-
-
-def levenshtein_sim(c1: Column, c2: Column) -> Column:
-    """K1 as a native expression: 1 - levenshtein/max(len); exact parity
-    with ``character_based_func.py:15-34``. The contract queries
-    ``k_char_kernels_pairs`` and ``score_block_pairs_lev`` use it; the
-    scoring UDF computes the same column per Arrow batch. NULL when
-    either text is NULL: the test is on the distance, which is NULL
-    then, not on ``greatest``, which skips a NULL length."""
-    dist = F.levenshtein(c1, c2)
-    max_len = F.greatest(F.length(c1), F.length(c2))
-    return F.when(dist == 0, F.lit(1.0)).otherwise(
-        F.lit(1.0) - dist.cast("double") / max_len.cast("double")
-    )
 
 
 def whitespace_tokens(c: Column) -> Column:
@@ -450,21 +436,6 @@ def normalize_tokens(texts: pd.Series) -> pd.Series:
 
 
 @pandas_udf(DoubleType())
-def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-    jw = kernels.jaro_winkler_similarity
-    return pd.Series(
-        [jw(a, b) if a is not None and b is not None else None for a, b in zip(s1, s2)],
-        dtype="float64",
-    )
-
-
-@pandas_udf(DoubleType())
-def cosine_count_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-    cc = kernels.cosine_count_similarity
-    return pd.Series([cc(a, b) for a, b in zip(s1, s2)], dtype="float64")
-
-
-@pandas_udf(DoubleType())
 def damerau_sim_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     """K2: OSA damerau-levenshtein similarity (character_based_func.py:
     37-58). Note: the DuckDB oracle's damerau_levenshtein is the FULL DL
@@ -639,9 +610,11 @@ def levenshtein_distances(left, right) -> np.ndarray:
 
 
 def _levenshtein_column(left: pd.Series, right: pd.Series) -> np.ndarray:
-    """K1 per Arrow batch: ``1 - d/max_len`` in double, in the order of
-    the native expression ``levenshtein_sim`` (so bit-identical to it),
-    1.0 for two empty texts and NULL (NaN) when either text is NULL."""
+    """K1 per Arrow batch: ``1 - d/max_len`` in double, 1.0 for two
+    empty texts and NULL (NaN) when either text is NULL. Bit-identical
+    to Spark's ``1 - levenshtein/greatest(length, length)`` over code
+    points, which ``tests/test_blocking_scoring.py::
+    test_batch_char_kernels_equal_native_expressions`` checks."""
     out = np.full(len(left), np.nan)
     ok = np.flatnonzero(left.notna().to_numpy() & right.notna().to_numpy())
     a, b = left.to_numpy()[ok], right.to_numpy()[ok]

@@ -22,12 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.spark_udfs import (
-    haversine_meters,
-    jaro_winkler_udf,
-    levenshtein_sim,
-    whitespace_tokens,
-)
+from .functions.spark_udfs import haversine_meters, whitespace_tokens
 from .functions.tokenize import WS_CLASS
 from .operators.signatures import build_signatures
 
@@ -126,6 +121,60 @@ def a4_count_vectorize(spark, sf_dir):
 # §2.7 Similarity kernels (relational form)
 # =====================================================================
 
+
+def _with_sim_scores(
+    pairs: DataFrame,
+    texts: tuple,
+    fields: list[str],
+    tokens: tuple | None = None,
+    corpus: DataFrame | None = None,
+    embedder=None,
+    **thresholds,
+) -> DataFrame:
+    """``pairs`` plus a struct column ``_s`` of ``fields``, computed by
+    the pipeline's scoring UDF (``spark_udfs.make_sim_scores_udf``) over
+    the two ``texts`` and ``tokens`` columns (names or Columns). Without
+    ``tokens`` both token columns are NULL: only the tf-idf family and
+    ``emb_cosine`` read them. The ``toks`` column of ``corpus`` gives
+    the tf-idf family its df map and corpus size; without a corpus the
+    map is empty and the size 0."""
+    from .functions.embedding import HashEmbedder
+    from .functions.kernels import build_document_frequency
+    from .functions.spark_udfs import make_sim_scores_udf
+
+    # CONTRACT-HARNESS ONLY: collect() mirrors the oracle's driver-side
+    # df map over the query's small corpus so both engines weight
+    # identically. The production path NEVER does this — it builds the
+    # map with scoring.broadcast_df_map (min_df/max_vocab caps); do not
+    # copy this shape into a pipeline.
+    docs = [list(r["toks"]) for r in corpus.collect()] if corpus is not None else []
+    sc = pairs.sparkSession.sparkContext
+    suite = make_sim_scores_udf(
+        sc.broadcast(build_document_frequency(docs)),
+        sc.broadcast(len(docs)),
+        embedder or HashEmbedder(),
+        fields=fields,
+        **thresholds,
+    )
+    null = F.lit(None).cast("array<string>")
+    return pairs.withColumn("_s", suite(*texts, *(tokens or (null, null))))
+
+
+def _part_name_pairs(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
+    """The distinct part names with their lower/whitespace tokens
+    ``toks``, and every pair of them with ``left_name < right_name``
+    and the two sides' tokens as ``lt``/``rt``."""
+    names = (
+        _t(spark, sf_dir, "part")
+        .select(F.col("p_name").alias("name"))
+        .distinct()
+        .withColumn("toks", whitespace_tokens(F.lower(F.trim(F.col("name")))))
+    )
+    a = names.select(F.col("name").alias("left_name"), F.col("toks").alias("lt"))
+    b = names.select(F.col("name").alias("right_name"), F.col("toks").alias("rt"))
+    return names, a.crossJoin(b).filter(F.col("left_name") < F.col("right_name"))
+
+
 _NATION_PAIRS_SQL = """
     SELECT a.n_name AS left_name, b.n_name AS right_name
     FROM nation a JOIN nation b ON a.n_nationkey < b.n_nationkey
@@ -158,37 +207,29 @@ def k_char_kernels_pairs(spark, sf_dir):
     k4_jaro_winkler_pairs rows so the registry stays within the driver's
     query budget — every kernel column is still hash-verified):
 
-    * ``lev_sim`` — normalized levenshtein, native expression
-      (character_based_func.py:15-34);
+    * ``lev_sim`` — normalized levenshtein, the scoring UDF's
+      ``levenshtein`` (character_based_func.py:15-34);
     * ``dl_sim`` — damerau-levenshtein similarity (OSA variant, marked
       unused by the reference at character_based_func.py:37-58); the
       pair set is verified OSA==DL so DuckDB's full-DL builtin is a
       valid oracle;
-    * ``jw_sim`` — jaro-winkler with NLTK semantics (p=0.1, max_l=4,
-      boost applied unconditionally — unlike DuckDB's >0.7-gated
-      builtin, so the oracle composes jaro_similarity + the explicit
-      prefix boost)."""
+    * ``jw_sim`` — the scoring UDF's ``jaro_winkler``, with NLTK
+      semantics (p=0.1, max_l=4, boost applied unconditionally — unlike
+      DuckDB's >0.7-gated builtin, so the oracle composes
+      jaro_similarity + the explicit prefix boost)."""
     from .functions.spark_udfs import damerau_sim_udf
 
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     a = n.select(F.col("n_nationkey").alias("ak"), F.col("n_name").alias("left_name"))
     b = n.select(F.col("n_nationkey").alias("bk"), F.col("n_name").alias("right_name"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("ak") < F.col("bk"))
-        .select(
-            "left_name",
-            "right_name",
-            _r6(levenshtein_sim(F.col("left_name"), F.col("right_name"))).alias(
-                "lev_sim"
-            ),
-            _r6(damerau_sim_udf(F.col("left_name"), F.col("right_name"))).alias(
-                "dl_sim"
-            ),
-            _r6(jaro_winkler_udf(F.col("left_name"), F.col("right_name"))).alias(
-                "jw_sim"
-            ),
-        )
+    left, right = F.col("left_name"), F.col("right_name")
+    pairs = a.crossJoin(b).filter(F.col("ak") < F.col("bk"))
+    return _with_sim_scores(pairs, (left, right), ["levenshtein", "jaro_winkler"]).select(
+        "left_name",
+        "right_name",
+        _r6(F.col("_s.levenshtein")).alias("lev_sim"),
+        _r6(damerau_sim_udf(left, right)).alias("dl_sim"),
+        _r6(F.col("_s.jaro_winkler")).alias("jw_sim"),
     )
 
 
@@ -225,21 +266,10 @@ def k6_count_cosine_pairs(spark, sf_dir):
     (token_based_func.py:174-222; CountVectorizer lowercase=False,
     token_pattern=\\S+ reduces to the pairwise formula) over distinct
     part-name pairs; oracle = token-count dot/norm arithmetic."""
-    from .functions.spark_udfs import cosine_count_udf
-
-    names = _t(spark, sf_dir, "part").select(F.col("p_name").alias("name")).distinct()
-    a = names.select(F.col("name").alias("left_name"))
-    b = names.select(F.col("name").alias("right_name"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("left_name") < F.col("right_name"))
-        .select(
-            "left_name",
-            "right_name",
-            _r6(cosine_count_udf(F.col("left_name"), F.col("right_name"))).alias(
-                "cosine"
-            ),
-        )
+    _, pairs = _part_name_pairs(spark, sf_dir)
+    texts = ("left_name", "right_name")
+    return _with_sim_scores(pairs, texts, ["cosine"]).select(
+        "left_name", "right_name", _r6(F.col("_s.cosine")).alias("cosine")
     )
 
 
@@ -259,19 +289,14 @@ def k5_jaccard_pairs(spark, sf_dir):
     tokens) over a banded document self-join (id distance <= 10 keeps the
     pair count linear)."""
     docs = _t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    toks = docs.select(
-        "doc_id", F.array_distinct(whitespace_tokens(F.col("text"))).alias("t")
-    )
-    a = toks.select(F.col("doc_id").alias("left_id"), F.col("t").alias("ta"))
-    b = toks.select(F.col("doc_id").alias("right_id"), F.col("t").alias("tb"))
-    joined = a.crossJoin(b).filter(
+    a = docs.select(F.col("doc_id").alias("left_id"), F.col("text").alias("ta"))
+    b = docs.select(F.col("doc_id").alias("right_id"), F.col("text").alias("tb"))
+    pairs = a.crossJoin(b).filter(
         (F.col("left_id") < F.col("right_id"))
         & (F.col("right_id") - F.col("left_id") <= 10)
     )
-    inter = F.size(F.array_intersect("ta", "tb"))
-    union = F.size(F.array_union("ta", "tb"))
-    return joined.select(
-        "left_id", "right_id", _r6(inter / union).alias("jaccard")
+    return _with_sim_scores(pairs, ("ta", "tb"), ["jaccard"]).select(
+        "left_id", "right_id", _r6(F.col("_s.jaccard")).alias("jaccard")
     )
 
 
@@ -406,8 +431,8 @@ def block_first_token_pairs(spark, sf_dir):
        FROM k a JOIN k b ON a.key = b.key AND a.conv_id < b.conv_id""",
 )
 def score_block_pairs_lev(spark, sf_dir):
-    """Blocking + native levenshtein scoring end-to-end (prefix-80 texts
-    keep the O(n·m) DP bounded identically in both engines)."""
+    """Blocking + the scoring UDF's levenshtein end-to-end (prefix-80
+    texts keep the O(n·m) DP bounded identically in both engines)."""
     sig = build_signatures(_doc_transcripts(spark, sf_dir), with_tokens=False)
     keyed = sig.select(
         "conv_id",
@@ -420,16 +445,10 @@ def score_block_pairs_lev(spark, sf_dir):
     b = keyed.select(
         F.col("conv_id").alias("right_id"), F.col("sig_text").alias("lb"), "key"
     )
-    la80 = F.substring(F.col("la"), 1, 80)
-    lb80 = F.substring(F.col("lb"), 1, 80)
-    return (
-        a.join(b, "key")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select(
-            "left_id",
-            "right_id",
-            _r6(levenshtein_sim(la80, lb80)).alias("lev_sim"),
-        )
+    pairs = a.join(b, "key").filter(F.col("left_id") < F.col("right_id"))
+    texts = (F.substring(F.col("la"), 1, 80), F.substring(F.col("lb"), 1, 80))
+    return _with_sim_scores(pairs, texts, ["levenshtein"]).select(
+        "left_id", "right_id", _r6(F.col("_s.levenshtein")).alias("lev_sim")
     )
 
 
@@ -597,38 +616,14 @@ def k8_softtfidf_pairs(spark, sf_dir):
     winner term_y, squared-idf denominators over the df-present union.
     Tokenizer here is lower+whitespace (SQL-expressible on both engines);
     the canonical stemmer path is pytest-covered (test_tokenize)."""
-    from .functions.embedding import HashEmbedder
-    from .functions.kernels import build_document_frequency
-    from .functions.spark_udfs import make_sim_scores_udf
-
-    names = (
-        _t(spark, sf_dir, "part")
-        .select(F.col("p_name").alias("name"))
-        .distinct()
-        .withColumn("toks", whitespace_tokens(F.lower(F.trim(F.col("name")))))
-    )
-    # CONTRACT-HARNESS ONLY: collect() mirrors the oracle's driver-side
-    # df-map over this 64-name corpus so both engines weight identically.
-    # The production path NEVER does this — it builds the map with
-    # scoring.broadcast_df_map (min_df/max_vocab caps); do not copy
-    # this shape into a pipeline.
-    rows = names.collect()
-    corpus = {r["name"]: list(r["toks"]) for r in rows}
-    df_map = build_document_frequency(list(corpus.values()))
-    sc = spark.sparkContext
-    suite = make_sim_scores_udf(
-        sc.broadcast(df_map),
-        sc.broadcast(len(corpus)),
-        HashEmbedder(),
+    names, pairs = _part_name_pairs(spark, sf_dir)
+    scored = _with_sim_scores(
+        pairs,
+        ("left_name", "right_name"),
+        ["tfidf", "softtfidf"],
+        tokens=("lt", "rt"),
+        corpus=names,
         softtfidf_threshold=0.7,
-        fields=["tfidf", "softtfidf"],
-    )
-    a = names.select(F.col("name").alias("left_name"), F.col("toks").alias("lt"))
-    b = names.select(F.col("name").alias("right_name"), F.col("toks").alias("rt"))
-    pairs = a.crossJoin(b).filter(F.col("left_name") < F.col("right_name"))
-    scored = pairs.withColumn(
-        "_s",
-        suite(F.col("left_name"), F.col("right_name"), F.col("lt"), F.col("rt")),
     )
     return scored.select(
         "left_name",
@@ -940,36 +935,17 @@ def k10_semantic_softtfidf_pairs(spark, sf_dir):
     hash-projection embedder path stays pytest-pinned
     (test_kernels::TestSemanticSoftTfIdf)."""
     from .functions.embedding import CharCountEmbedder
-    from .functions.kernels import build_document_frequency
-    from .functions.spark_udfs import make_sim_scores_udf
 
-    names = (
-        _t(spark, sf_dir, "part")
-        .select(F.col("p_name").alias("name"))
-        .distinct()
-        .withColumn("toks", whitespace_tokens(F.lower(F.trim(F.col("name")))))
-    )
-    # CONTRACT-HARNESS ONLY: collect() mirrors the oracle's driver-side
-    # df-map over this 64-name corpus so both engines weight identically.
-    # The production path NEVER does this — it builds the map with
-    # scoring.broadcast_df_map (min_df/max_vocab caps); do not copy
-    # this shape into a pipeline.
-    rows = names.collect()
-    corpus = {r["name"]: list(r["toks"]) for r in rows}
-    sc = spark.sparkContext
-    suite = make_sim_scores_udf(
-        sc.broadcast(build_document_frequency(list(corpus.values()))),
-        sc.broadcast(len(corpus)),
-        CharCountEmbedder(),
+    names, pairs = _part_name_pairs(spark, sf_dir)
+    scored = _with_sim_scores(
+        pairs,
+        ("left_name", "right_name"),
+        ["semantic_softtfidf"],
+        tokens=("lt", "rt"),
+        corpus=names,
+        embedder=CharCountEmbedder(),
         semantic_char_threshold=0.85,
         semantic_threshold=0.6,
-        fields=["semantic_softtfidf"],
-    )
-    a = names.select(F.col("name").alias("left_name"), F.col("toks").alias("lt"))
-    b = names.select(F.col("name").alias("right_name"), F.col("toks").alias("rt"))
-    pairs = a.crossJoin(b).filter(F.col("left_name") < F.col("right_name"))
-    scored = pairs.withColumn(
-        "_s", suite(F.col("left_name"), F.col("right_name"), F.col("lt"), F.col("rt"))
     )
     return scored.select(
         "left_name",

@@ -186,20 +186,19 @@ def test_scoring_matches_pure_python(spark, sigs):
 
 def test_batch_char_kernels_equal_native_expressions(spark, tmp_path):
     """score_pairs' levenshtein, jaccard and emb_cosine, computed per
-    Arrow batch in the scoring UDF, equal the native expressions they
-    replaced with no tolerance: levenshtein_sim (Spark's levenshtein
-    over code points), the size(array_intersect)/size(array_union)
-    Jaccard over the whitespace split, and the zip_with/aggregate cosine
-    over attach_embeddings' array<float> column, for the default and two
-    file-backed embedders. A NULL text on either side gives NULL in the
-    first two, natively too; NULL or no tokens give an emb_cosine of 0."""
+    Arrow batch in the scoring UDF, equal native Spark expressions with
+    no tolerance: 1 - levenshtein/greatest(length, length) (Spark's
+    levenshtein over code points, 1.0 at distance 0), the
+    size(array_intersect)/size(array_union) Jaccard over the whitespace
+    split, and the zip_with/aggregate cosine over attach_embeddings'
+    array<float> column, for the default and two file-backed embedders.
+    All three expressions are written here. A NULL text on either side
+    gives NULL in the first two, natively too; NULL or no tokens give an
+    emb_cosine of 0."""
     import numpy as np
 
     from poi_name_matching_spark.functions.embedding import HashEmbedder
-    from poi_name_matching_spark.functions.spark_udfs import (
-        levenshtein_sim,
-        whitespace_tokens,
-    )
+    from poi_name_matching_spark.functions.spark_udfs import whitespace_tokens
     from poi_name_matching_spark.operators.scoring import attach_embeddings
 
     long_a = "north harbour cafe " * 40
@@ -239,6 +238,11 @@ def test_batch_char_kernels_equal_native_expressions(spark, tmp_path):
         return F.array_distinct(whitespace_tokens(c))
 
     ltext, rtext = F.col("l.sig_text"), F.col("r.sig_text")
+    dist = F.levenshtein(ltext, rtext)
+    max_len = F.greatest(F.length(ltext), F.length(rtext))
+    lev_expr = F.when(dist == 0, F.lit(1.0)).otherwise(
+        F.lit(1.0) - dist.cast("double") / max_len.cast("double")
+    )
     union = F.size(F.array_union(toks(ltext), toks(rtext)))
     jac_expr = F.when(union == 0, F.lit(1.0)).otherwise(
         F.size(F.array_intersect(toks(ltext), toks(rtext))).cast("double")
@@ -271,7 +275,7 @@ def test_batch_char_kernels_equal_native_expressions(spark, tmp_path):
             .select(
                 "left_id",
                 "right_id",
-                levenshtein_sim(ltext, rtext).alias("lev"),
+                lev_expr.alias("lev"),
                 jac_expr.alias("jac"),
                 cos_expr.alias("cos"),
             )

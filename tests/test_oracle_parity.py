@@ -94,6 +94,33 @@ def test_registry_within_driver_cap_and_softtfidf_family_inside():
     assert set(ALL_QUERIES) == set(ORACLE)
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "k_char_kernels_pairs",
+        "k5_jaccard_pairs",
+        "k6_count_cosine_pairs",
+        "score_block_pairs_lev",
+        "k8_softtfidf_pairs",
+        "k10_semantic_softtfidf_pairs",
+    ],
+)
+def test_kernel_queries_run_the_scoring_udf(spark, name):
+    """The kernel columns of these contract queries come from the
+    pipeline's scoring UDF, so oracle parity checks the code that writes
+    every scores stage, not a second implementation beside it."""
+    plan = ALL_QUERIES[name](spark, SF_DIR)._jdf.queryExecution().analyzed().toString()
+    assert "sim_scores_udf" in plan
+    for twin in (
+        "levenshtein(",
+        "array_intersect(",
+        "array_union(",
+        "jaro_winkler_udf",
+        "cosine_count_udf",
+    ):
+        assert twin not in plan, f"{name}: {twin} in the analyzed plan"
+
+
 def test_registry_over_cap_raises_with_explicit_drop_list():
     """Adding a 51st query must FAIL LOUDLY at registration, naming
     exactly which tail queries would fall outside the driver's
