@@ -230,7 +230,10 @@ def incremental_components(
 def components(nodes: DataFrame, edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """components(conv_id, component_id) for every node in ``nodes``
     (singletons map to themselves). ``nodes`` must have column
-    ``conv_id``; ``edges`` columns ``src``/``dst``. Up to
+    ``conv_id`` and hold one row per ``conv_id``: the output has one row
+    per node row, and no dedup job is spent on it (every caller passes
+    a signatures stage's ids or an already-distinct node set);
+    ``edges`` columns ``src``/``dst``. Up to
     ``DRIVER_MAX_EDGES`` edges, the components are found on the driver;
     above it, by the star rounds."""
     # one collect: the sentinel row past the bound says "too big"
@@ -250,7 +253,6 @@ def components(nodes: DataFrame, edges: DataFrame, max_iter: int = 25) -> DataFr
         )
     return (
         nodes.select("conv_id")
-        .distinct()
         .join(mapping, "conv_id", "left")
         .select(
             "conv_id",

@@ -270,10 +270,32 @@ def score_pairs(
 
 
 @contextmanager
+def sql_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the scope, then restore each key
+    to what it was on entry, also when the body raises: a key that was
+    set gets its value back, a key that was not is unset, so the
+    session's own default applies again. Nested scopes restore in
+    order, so an inner exit puts back the outer scope's value.
+    Concurrent use from several *threads* of one session shares the SQL
+    conf by Spark's own design and is not supported here."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def udf_stage_parallelism(spark: SparkSession):
-    """Scope a small AQE advisory partition size around the ACTION that
-    materializes a UDF-heavy stage (the config is read at execution
-    time, so it must wrap the action, not the plan construction).
+    """A ``sql_conf`` scope of a small AQE advisory partition size,
+    around the ACTION that materializes a UDF-heavy stage (the config is
+    read at execution time, so it must wrap the action, not the plan
+    construction).
 
     Why: AQE's post-shuffle partition coalescing is BYTE-based and blind
     to per-row Python-UDF cost. The scoring stage's ~KB pair rows each
@@ -290,25 +312,13 @@ def udf_stage_parallelism(spark: SparkSession):
     scoring UDF runs in one task per job, since a traced run shows
     ``stage.scores.tasks`` equal to ``stage.scores.jobs``.
 
-    Nested scopes: each scope saves the value it finds and restores it on
-    exit, so an inner exit puts back the outer scope's advisory value and
-    the outermost exit puts back the session's own. Concurrent use from
-    multiple *threads* on one session shares the SQL conf by Spark's own
-    design and is not supported here.
+    Inside ``run_pipeline`` and ``incremental_update`` this scope nests
+    in the run's own ``sql_conf`` scope (interpreted execution and the
+    run's shuffle partitions, see ``plans/pipeline.py``).
     """
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    try:
-        saved = spark.conf.get(key)
-    except Exception:
-        saved = None
-    spark.conf.set(key, UDF_ADVISORY_BYTES)
-    try:
-        yield
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+    return sql_conf(
+        spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": UDF_ADVISORY_BYTES}
+    )
 
 
 def edges_from_scores(scores: DataFrame, threshold: float) -> DataFrame:

@@ -89,7 +89,7 @@ from ..operators.signatures import build_signatures
 # stage_fingerprint is not called here but stays a module attribute:
 # perfbench/tracer.py wraps it by name in this module
 from ..sources.checkpoint import StageCheckpoint, input_key, stage_fingerprint  # noqa: F401
-from .pipeline import STAGES, PipelineConfig, PipelineResult, component_count
+from .pipeline import STAGES, PipelineConfig, PipelineResult, component_count, run_confs
 
 
 def incremental_update(
@@ -108,11 +108,20 @@ def incremental_update(
     rewrites (the components stage every increment, the scores stage
     under ``rescore_all``) are corpus-sized, so unbounded retention
     would grow the checkpoint dir by O(corpus) per increment. ``None``
-    keeps everything."""
-    if cfg.shuffle_partitions:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(cfg.shuffle_partitions)
-        )
+    keeps everything.
+
+    The whole update runs inside the run's conf scope
+    (``pipeline.run_confs``), as a batch run does."""
+    with run_confs(spark, cfg):
+        return _incremental_update(spark, new_transcripts, cfg, rescore_all)
+
+
+def _incremental_update(
+    spark: SparkSession,
+    new_transcripts: DataFrame,
+    cfg: PipelineConfig,
+    rescore_all: bool,
+) -> PipelineResult:
     ckpt = StageCheckpoint(cfg.checkpoint_dir)
     for stage in STAGES:
         m = ckpt.read_manifest(stage)

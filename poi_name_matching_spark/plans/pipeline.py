@@ -45,6 +45,20 @@ cache hit; a rerun after a crash resumes at the first uncommitted chunk.
 The K−1 partial versions stay in the stage's history as retained
 versions (hard links, no bytes of their own) and count against
 ``expire_keep_last``.
+
+Interpreted execution: ``run_pipeline`` and ``incremental_update`` run
+inside one ``sql_conf`` scope (``run_confs``) that turns whole-stage
+code generation off, evaluates expressions interpreted (``RUN_CONFS``)
+and sets the configured shuffle partitions; on return or on an
+exception each conf gets back the session's value. Retunes and
+streaming epochs go through these two functions, so they run
+interpreted too. At benchmark scale the JVM's warm-up, not the data, is
+most of a run's CPU: with code generation Janino compiled 92 classes
+for a 600-conversation batch; interpreted, it compiles 2 and the JVM
+spends less CPU. Interpreted runs cost no more JVM CPU at 30,000
+conversations either (SCALE.md §"Interpreted execution").
+The DataFrames a run returns are plans over the checkpoint; the
+caller's own actions on them run under the session's confs.
 """
 
 from __future__ import annotations
@@ -68,12 +82,31 @@ from ..operators.scoring import (
     broadcast_df_map,
     edges_from_scores,
     score_pairs,
+    sql_conf,
     udf_stage_parallelism,
 )
 from ..operators.signatures import build_signatures
 from ..sources.checkpoint import StageCheckpoint, input_key, stage_fingerprint
 
 STAGES = ["signatures", "blocks", "candidate_pairs", "scores", "components"]
+
+#: SQL confs every ``run_pipeline`` and ``incremental_update`` runs
+#: under (see the module docstring): Spark's interpreted operators and
+#: expressions, with no whole-stage or per-expression code generation
+RUN_CONFS = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
+
+
+def run_confs(spark: SparkSession, cfg: PipelineConfig):
+    """The ``sql_conf`` scope of one run: ``RUN_CONFS`` plus the
+    configured shuffle partitions, all restored when the run returns or
+    raises."""
+    confs = dict(RUN_CONFS)
+    if cfg.shuffle_partitions:
+        confs["spark.sql.shuffle.partitions"] = str(cfg.shuffle_partitions)
+    return sql_conf(spark, confs)
 
 
 def component_count() -> dict:
@@ -208,8 +241,15 @@ class PipelineResult:
 def run_pipeline(
     spark: SparkSession, transcripts: DataFrame, cfg: PipelineConfig = PipelineConfig()
 ) -> PipelineResult:
-    if cfg.shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
+    """Run (or resume) the five stages into ``cfg.checkpoint_dir``
+    inside the run's conf scope (``run_confs``)."""
+    with run_confs(spark, cfg):
+        return _run_pipeline(spark, transcripts, cfg)
+
+
+def _run_pipeline(
+    spark: SparkSession, transcripts: DataFrame, cfg: PipelineConfig
+) -> PipelineResult:
     ckpt = StageCheckpoint(cfg.checkpoint_dir)
     cached: list[str] = []
     stats: dict = {}

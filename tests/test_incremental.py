@@ -897,6 +897,51 @@ def test_crash_window_leaves_pre_or_post_commit(
     assert _unnamed(root, stages) == {s: [] for s in stages}
 
 
+def test_runs_restore_the_session_confs(
+    spark, tmp_path, split, monkeypatch, increment_states
+):
+    """A run with ``shuffle_partitions`` set, and a commit that raises
+    inside its head-pointer commit, leave the session's shuffle
+    partitions and both codegen confs as they found them."""
+    import shutil
+
+    from poi_name_matching_spark.plans.pipeline import RUN_CONFS
+
+    _, part1, part2 = split
+    base, _, _ = increment_states
+    shutil.copytree(base, tmp_path / "ck")
+    cfg = PipelineConfig(checkpoint_dir=str(tmp_path / "ck"), shuffle_partitions=3)
+    keys = ["spark.sql.shuffle.partitions", *RUN_CONFS]
+    before = {k: spark.conf.get(k, None) for k in keys}
+    assert before["spark.sql.shuffle.partitions"] != "3"
+
+    run_pipeline(spark, part1, cfg)
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+    _inject(monkeypatch, "before_swap")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        incremental_update(spark, part2, cfg)
+    monkeypatch.undo()
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+
+def test_compiled_commit_writes_the_same_stages(
+    spark, tmp_path, split, monkeypatch, increment_states
+):
+    """One increment committed with code generation on (the run's conf
+    table emptied) writes the same five stages, by output fingerprint,
+    as the interpreted increment."""
+    import shutil
+
+    from poi_name_matching_spark.plans import pipeline
+
+    base, _, post = increment_states
+    shutil.copytree(base, tmp_path / "ck")
+    monkeypatch.setattr(pipeline, "RUN_CONFS", {})
+    incremental_update(spark, split[2], _cfg(tmp_path / "ck"))
+    assert _state(tmp_path / "ck", _STAGES) == post
+
+
 _KILL_CHILD = r"""
 import os, signal, sys
 

@@ -706,7 +706,7 @@ def test_cache_hits_and_retunes_run_within_the_job_budget(
 ):
     """Only stage writes (and the driver collects feeding them) run
     Spark jobs: a rerun that hits every stage runs none, and a threshold
-    retune — four cache hits and a components rebuild — runs at most 4."""
+    retune — four cache hits and a components rebuild — runs at most 3."""
     import shutil
 
     src, ckpt, first = file_run
@@ -724,10 +724,56 @@ def test_cache_hits_and_retunes_run_within_the_job_budget(
         lambda: run_pipeline(spark, transcripts, _small_cfg(tmp_path / "ckpt", 0.6))
     )
     assert retune.cached_stages == STAGE_ORDER[:4]
-    assert n_jobs <= 4
+    assert n_jobs <= 3
     comps = {r["conv_id"]: r["component_id"] for r in retune.components.collect()}
     assert retune.stats["n_components"] == len(set(comps.values()))
     assert retune.stats["max_block_size"] == first.stats["max_block_size"]
+
+
+def _compilations(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_pipeline_runs_interpreted(spark, tmp_path):
+    """A run executes on Spark's interpreted operators and expressions:
+    Janino compiles at most 2 generated classes for it, where a run with
+    code generation compiles dozens even on a warm code cache. This
+    also fails if a Spark upgrade stops honouring
+    ``spark.sql.codegen.factoryMode``, which Spark marks internal."""
+    from poi_name_matching_spark.data import generate_transcripts
+    from poi_name_matching_spark.data.transcripts import TRANSCRIPTS_SCHEMA
+
+    rows = generate_transcripts(n_convs=40, seed=6).rows
+    transcripts = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
+    before = _compilations(spark)
+    result = run_pipeline(spark, transcripts, _small_cfg(tmp_path / "ckpt"))
+    assert result.cached_stages == []
+    assert _compilations(spark) - before <= 2
+
+
+def test_compiled_run_writes_the_same_stages(spark, tmp_path, monkeypatch, file_run):
+    """A run with code generation on (the run's conf table emptied)
+    writes the same five stages, by output fingerprint, as the
+    interpreted ``file_run``."""
+    from poi_name_matching_spark.plans import pipeline
+    from poi_name_matching_spark.sources.checkpoint import StageCheckpoint
+
+    src, ckpt, _ = file_run
+    monkeypatch.setattr(pipeline, "RUN_CONFS", {})
+    before = _compilations(spark)
+    compiled = run_pipeline(
+        spark, spark.read.parquet(str(src)), _small_cfg(tmp_path / "ckpt")
+    )
+    assert compiled.cached_stages == []
+    assert _compilations(spark) - before > 2
+
+    def fingerprints(root):
+        ck = StageCheckpoint(root)
+        return {s: ck.read_manifest(s)["output_fingerprint"] for s in STAGE_ORDER}
+
+    assert fingerprints(tmp_path / "ckpt") == fingerprints(ckpt)
 
 
 def test_checkpoint_from_before_the_upgrade(spark, tmp_path, monkeypatch, file_run):
